@@ -131,7 +131,7 @@ class GraphRAFTEngine:
         retrieved = run_pipeline(
             self.spark, self.graph,
             questions=[(qid, question, names)],
-            ranker=self.ranker, generator=self.generator,
+            ranker=self.ranker,
             max_nodes=self.config.max_nodes, k=self.config.beam_width,
             patterns=self.config.patterns,
             specific_target_label=self.config.specific_target_label,

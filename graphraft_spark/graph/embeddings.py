@@ -5,10 +5,9 @@ feeds the ANN tiers (ops/similarity.py) and SemDeDup directly.
 
 Reference scope note: the reference consumes PRE-TRAINED text
 embeddings (stark_neo4j_loading.py:75-80 loads them; it never trains).
-This module is a north-star extension in the same class as the logreg
-quality-classifier trainer (ops/classifier.py) and the word-bigram LM
-trainer (ops/word_lm.py): the in-engine trainer for a model the
-pipeline otherwise imports.
+This module is a north-star extension in the same class as the
+word-bigram LM trainer (ops/word_lm.py): the in-engine trainer for a
+model the pipeline otherwise imports.
 
 Design — FULL-BATCH deterministic SGNS (Mikolov et al. 2013 semantics,
 Levy & Goldberg 2014 for why pair-weighted full-batch is sound):

@@ -1,6 +1,6 @@
 """Large-scale training-data pipeline operators (project north star):
 deduplication, decontamination, similarity search, text analysis,
-temporal joins, skew tools, multimodal plumbing — first-class
+temporal joins, sketches, multimodal plumbing — first-class
 components designed for the 100 TB regime.
 """
 
@@ -10,7 +10,6 @@ from graphraft_spark.ops import (  # noqa: F401
     multimodal,
     similarity,
     sketches,
-    skew,
     temporal,
     text_analysis,
 )

@@ -108,17 +108,6 @@ def signature_from_hashes(hs: Column, num_perm: int) -> Column:
                      for i in range(num_perm)])
 
 
-def minhash_signature(text: Column, num_perm: int = 16, k: int = 3,
-                      hash_fn=None) -> Column:
-    """ARRAY<BIGINT> of ``num_perm`` minhash values over k-shingles.
-
-    NOTE: prefer hashing shingles into a column first and calling
-    signature_from_hashes — inlining lets an optimizer duplicate the
-    per-shingle hash into every permutation lambda."""
-    hs = F.transform(shingles(text, k), hash_fn or _h60)
-    return signature_from_hashes(hs, num_perm)
-
-
 def lsh_bands(sig: Column, bands: int, rows: int) -> Column:
     """Split a signature into ``bands`` bands of ``rows`` and hash each:
     ARRAY<STRUCT<band INT, bucket BIGINT>>."""

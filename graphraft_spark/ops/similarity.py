@@ -567,8 +567,7 @@ def pca_project(vectors: DataFrame, mean: list, components: list,
                 out_col: str = "pca") -> DataFrame:
     """Project embeddings onto fitted components as a PURE CODEGEN
     expression (mean and components are literals baked into the plan —
-    zero Python at serve time, same native-inference story as the
-    quality classifier)."""
+    zero Python at serve time)."""
     centered = F.zip_with(
         F.col(emb_col).cast("array<double>"),
         F.array(*[F.lit(float(m)) for m in mean]),

@@ -40,12 +40,6 @@ def approx_quantiles(df: DataFrame, col: str, probs: list[float],
     return df.groupBy(*(by or [])).agg(agg)
 
 
-def hll_union_ok(relative_err: Column, rsd: float) -> Column:
-    """Predicate helper: is an observed relative error within the
-    sketch's configured bound (3 standard deviations)?"""
-    return F.abs(relative_err) <= 3 * rsd
-
-
 def _cms_hash(col: Column, row: Column, width: int) -> Column:
     """Row-salted engine-portable counter index: DuckDB replays it as
     ``('0x' || substr(md5(d || ':' || x), 1, 15))::BIGINT % width``."""

@@ -3,11 +3,9 @@ over a trusted corpus with plain aggregations, then score any corpus by
 mean transition log-probability under stupid backoff (Brants et al.
 2007, "Large Language Models in Machine Translation").
 
-This closes the loop on the CCNet perplexity filter (ops/perplexity.py):
-that operator *consumes* a reference LM through a broadcast seam; this
-module *trains* one at corpus scale — the whole recipe (train on
-trusted text, score the raw crawl, keep the low-perplexity band) runs
-in-engine with no driver-side model at all.
+This is the CCNet perplexity-filter recipe (train on trusted text,
+score the raw crawl, keep the low-perplexity band) run in-engine at
+corpus scale, with no driver-side model at all.
 
 Scale shape (the 100 TB read):
 
@@ -17,8 +15,8 @@ Scale shape (the 100 TB read):
 - scoring explodes each document's transitions and sort-merge-joins
   them against the bigram counts on the transition key (the classic
   exploded-tokens join — no per-executor model, so the LM may be far
-  larger than executor memory, which is exactly where the broadcast
-  seam of ops/perplexity.py stops scaling);
+  larger than executor memory, which is exactly where a broadcast
+  reference-LM seam stops scaling);
 - unigram counts and the (total, vocab) scalar are broadcast;
 - per-doc mean is one final map-side-combined aggregate on doc_id.
 

@@ -28,21 +28,8 @@ from graphraft_spark.patterns.enumerate import (
     enumerate_paths_batch,
     instantiate_queries,
 )
+from graphraft_spark.patterns.ir import PatternSpec
 from graphraft_spark.retrieve import budgeted_accumulate
-from graphraft_spark.search.text import norm_col
-
-
-def match_entity_names(graph: PropertyGraph, qa_entities: DataFrame,
-                       nfc: bool = False) -> DataFrame:
-    """Batch C1: (qid, entity) rows → (qid, matched node names), one
-    normalized-equality broadcast join for ALL questions at once."""
-    e = qa_entities.select("qid", norm_col(F.col("entity"), nfc).alias("k"))
-    n = graph.nodes.select(F.col("name"),
-                           norm_col(F.col("name"), nfc).alias("k"))
-    return (
-        F.broadcast(e).join(n, "k")
-        .select("qid", "name").distinct()
-    )
 
 
 def default_similarity(node_id: Column) -> Column:
@@ -52,12 +39,26 @@ def default_similarity(node_id: Column) -> Column:
     return ((node_id % 100000) * 7919 % 104729) / 104729.0
 
 
+def rank_candidates(ranker: QueryRanker, question: str,
+                    rows: Sequence[dict], k: int,
+                    ) -> list[tuple[dict, PatternSpec, int]]:
+    """Stage 3 for ONE question's signature rows: instantiate each
+    row's query, dedupe by query text (first row wins), rank the texts
+    and return the top-k as (row, spec, queryIdx).  Shared by the
+    driver loop of :func:`run_pipeline` and the executor-side groups of
+    :func:`rank_signatures`."""
+    by_text: dict[str, tuple[dict, PatternSpec]] = {}
+    for row, (spec, text) in zip(rows, instantiate_queries(rows)):
+        by_text.setdefault(text, (row, spec))
+    top = ranker.rank(question, list(by_text), k=k)
+    return [(*by_text[text], idx) for idx, text in enumerate(top)]
+
+
 def run_pipeline(
     spark: SparkSession,
     graph: PropertyGraph,
     questions: Sequence[tuple[int, str, Sequence[str]]],
     ranker: QueryRanker,
-    generator: AnswerGenerator,
     max_nodes: int = 20,
     k: int = 5,
     patterns: Sequence[str] = ("1hop", "2hop", "2path"),
@@ -102,16 +103,11 @@ def run_pipeline(
     per_q: dict[int, list[dict]] = {}
     for rec in recs:
         per_q.setdefault(int(rec["qid"]), []).append(rec)
-    spec_ids: dict[str, int] = {}
-    specs_by_id: dict[int, object] = {}
+    spec_ids: dict[PatternSpec, int] = {}
     assignments: list[tuple[int, int, int]] = []  # (sid, qid, queryIdx)
     for qid, rows in per_q.items():
-        pairs = instantiate_queries(rows)
-        by_text = {text: spec for spec, text in pairs}
-        top = ranker.rank(qtext[qid], [text for _, text in pairs], k=k)
-        for idx, text in enumerate(top):
-            sid = spec_ids.setdefault(text, len(spec_ids))
-            specs_by_id[sid] = by_text[text]
+        for _, spec, idx in rank_candidates(ranker, qtext[qid], rows, k):
+            sid = spec_ids.setdefault(spec, len(spec_ids))
             assignments.append((sid, qid, idx))
     if not assignments:
         return empty
@@ -119,7 +115,7 @@ def run_pipeline(
     # Stage 4: execute each DISTINCT spec once; broadcast-join the
     # (sid → qid, queryIdx) assignment to fan out per-question rows.
     executed = None
-    for sid, spec in specs_by_id.items():
+    for spec, sid in spec_ids.items():
         nodes = run_pattern_nodes(graph, spec, prop_cols).select(
             F.lit(sid).alias("sid"), "nodeId", "name", *prop_cols,
             F.lit(spec.text_pattern("")).alias("pattern"))
@@ -223,19 +219,12 @@ def rank_signatures(sigs: DataFrame, questions: DataFrame,
     def rank_group(pdf):
         import pandas as pd
 
-        from graphraft_spark.patterns.enumerate import instantiate_queries
-
         pdf = pdf.astype(object).where(pdf.notna(), None)
         rows = pdf.to_dict("records")
-        question = rows[0]["question"]
-        by_text = {}
-        for row, (_, text) in zip(rows, instantiate_queries(rows)):
-            by_text.setdefault(text, row)
-        top = ranker.rank(question, list(by_text), k=k)
-        out = [{"qid": by_text[t]["qid"],
-                **{c: by_text[t][c] for c in sig_cols},
+        out = [{"qid": row["qid"], **{c: row[c] for c in sig_cols},
                 "queryIdx": idx}
-               for idx, t in enumerate(top)]
+               for row, _, idx in rank_candidates(
+                   ranker, rows[0]["question"], rows, k)]
         return pd.DataFrame(out, columns=["qid"] + sig_cols + ["queryIdx"])
 
     return joined.groupBy("qid").applyInPandas(rank_group, schema=schema)
@@ -246,7 +235,6 @@ def run_pipeline_bulk(
     graph: PropertyGraph,
     questions: Sequence[tuple[int, str, Sequence[str]]],
     ranker: QueryRanker,
-    generator: AnswerGenerator,
     max_nodes: int = 20,
     k: int = 5,
     patterns: Sequence[str] = ("1hop", "2hop", "2path"),

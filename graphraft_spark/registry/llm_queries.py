@@ -384,7 +384,7 @@ def p_full_pipeline(spark, sf_dir):
     end; the trie-beam ranker rides the identical seam (f_rank_trie +
     pytest cover it)."""
     from graphraft_spark.graph import tpch_graph
-    from graphraft_spark.llm import EchoGenerator, LexicographicRanker
+    from graphraft_spark.llm import LexicographicRanker
     from graphraft_spark.pipeline import run_pipeline
 
     g = tpch_graph(spark, sf_dir)
@@ -394,7 +394,7 @@ def p_full_pipeline(spark, sf_dir):
             (1, "who supplies small ring?", ["small ring"]),
             (2, "what did customer 42 buy?", ["Customer#000000042"]),
         ],
-        ranker=LexicographicRanker(), generator=EchoGenerator(),
+        ranker=LexicographicRanker(),
         max_nodes=15, k=3, patterns=("1hop", "2hop"),
         prop_cols=("detail",))
     return out.select("qid", "nodeId", "name", "detail",
@@ -411,7 +411,7 @@ def p_pipeline_bulk(spark, sf_dir):
     of spec count.  Same oracle passing on both proves the two
     execution strategies are semantically identical."""
     from graphraft_spark.graph import tpch_graph
-    from graphraft_spark.llm import EchoGenerator, LexicographicRanker
+    from graphraft_spark.llm import LexicographicRanker
     from graphraft_spark.pipeline import run_pipeline_bulk
 
     g = tpch_graph(spark, sf_dir)
@@ -428,7 +428,7 @@ def p_pipeline_bulk(spark, sf_dir):
             (1, "who supplies small ring?", ["small ring"]),
             (2, "what did customer 42 buy?", ["Customer#000000042"]),
         ],
-        ranker=LexicographicRanker(), generator=EchoGenerator(),
+        ranker=LexicographicRanker(),
         max_nodes=15, k=3, patterns=("1hop", "2hop"),
         prop_cols=("detail",), persist_mode="local_checkpoint")
     return out.select("qid", "nodeId", "name", "detail",

@@ -240,14 +240,15 @@ def compact_text_index(spark, index_dir: str) -> None:
 # (app_id, realpath, size, mtime_ns) -> collected 1-row meta (static
 # index-layout constants: n_buckets).  The meta table is written once
 # at index build and never appended, so the stat-keyed memo saves a
-# footer read + a 1-row collect JOB per query construction.
+# footer read + a 1-row collect JOB per query construction.  Bounded
+# like pq_cache's handle memo.
 _META_MEMO: dict[tuple, object] = {}
 
 
 def _index_meta(spark, index_dir: str):
     import os
 
-    from graphraft_spark.sources.pq_cache import _app_id
+    from graphraft_spark.sources.pq_cache import MEMO_BOUND, _app_id
 
     p = f"{index_dir}/meta"
     try:
@@ -260,6 +261,8 @@ def _index_meta(spark, index_dir: str):
         return _META_MEMO[key]
     [meta] = spark.read.parquet(p).collect()
     if key is not None:
+        if len(_META_MEMO) > MEMO_BOUND:
+            _META_MEMO.clear()
         _META_MEMO[key] = meta
     return meta
 

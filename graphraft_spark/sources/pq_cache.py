@@ -12,10 +12,16 @@ This memo returns the SAME analyzed DataFrame handle for the same
 (session, file-identity) pair.  Nothing about the data is cached:
 
 * the DataFrame is lazy — every action still scans the parquet files;
-* the memo key carries the source fingerprint (size + mtime_ns, the
-  same invalidation contract as ``graph/tpch.source_fingerprint``), so
-  a regenerated/overwritten table gets a fresh handle — a stat() per
-  call, never a stale plan;
+* the memo key carries the source fingerprint (size + mtime_ns of the
+  TOP-LEVEL path only, the same invalidation contract as
+  ``graph/tpch.source_fingerprint``) — one stat() per call.  That is
+  safe for single files and for non-partitioned writers that replace
+  the whole directory (``mode("overwrite")``): the replacement moves
+  the directory's mtime, so the next call gets a fresh handle.  A
+  write that only changes files INSIDE a partition subdirectory (an
+  epoch-style append under ``partitionBy``) leaves the top-level stat
+  unchanged, so the memo keeps serving the old file listing — read
+  such directories with ``spark.read.parquet`` instead;
 * the key carries the JVM application id, so a new SparkSession never
   sees another session's (dead) plan handles.
 
@@ -32,6 +38,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 # (app_id, realpath, size, mtime_ns) -> DataFrame (lazy plan handle)
 _MEMO: dict[tuple, DataFrame] = {}
+# past this many entries a memo is cleared: bounds a long session's
+# dead fingerprints (every rewrite of a path leaves one behind)
+MEMO_BOUND = 512
 
 
 def _app_id(spark: SparkSession) -> str:
@@ -48,7 +57,8 @@ def _app_id(spark: SparkSession) -> str:
 
 
 def load_pq(spark: SparkSession, path: str) -> DataFrame:
-    """Memoized ``spark.read.parquet(path)`` — see module docstring."""
+    """Memoized ``spark.read.parquet(path)``, keyed on a stat of the
+    top-level path only — see module docstring for when that is safe."""
     try:
         st = os.stat(path)
         key = (_app_id(spark), os.path.realpath(path),
@@ -59,7 +69,7 @@ def load_pq(spark: SparkSession, path: str) -> DataFrame:
         return spark.read.parquet(path)
     df = _MEMO.get(key)
     if df is None:
-        if len(_MEMO) > 512:  # bound a long session's dead fingerprints
+        if len(_MEMO) > MEMO_BOUND:
             _MEMO.clear()
         df = spark.read.parquet(path)
         _MEMO[key] = df

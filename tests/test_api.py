@@ -1,6 +1,4 @@
-"""Facade + skew-utility tests."""
-
-from pyspark.sql import functions as F
+"""Facade tests."""
 
 
 def test_engine_run_end_to_end(spark, tiny_graph):
@@ -39,33 +37,6 @@ def test_mag_prime_presets():
     assert EngineConfig.mag().specific_target_label == "Paper"
     assert EngineConfig.mag().patterns == ("1hop", "2hop")
     assert EngineConfig.prime().patterns == ("1hop", "2hop", "2path")
-
-
-def test_salted_join_matches_plain(spark):
-    from graphraft_spark.ops.skew import salted_join
-
-    big = spark.range(0, 10000).select(
-        (F.col("id") % 5).alias("k"), F.col("id").alias("v"))
-    small = spark.createDataFrame([(i, f"d{i}") for i in range(5)],
-                                  "k bigint, d string")
-    plain = big.join(small, "k").groupBy("d").count().collect()
-    salted = salted_join(big, small, "k", salt_factor=4) \
-        .groupBy("d").count().collect()
-    assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))
-
-
-def test_salted_distinct_count_matches_plain(spark):
-    from graphraft_spark.ops.skew import salted_distinct_count, skew_profile
-
-    df = spark.range(0, 5000).select(
-        (F.col("id") % 3).alias("k"), (F.col("id") % 97).alias("v"))
-    want = {(r["k"], r["n"]) for r in
-            df.groupBy("k").agg(F.countDistinct("v").alias("n")).collect()}
-    got = {(r["k"], r["n_distinct"]) for r in
-           salted_distinct_count(df, "k", "v").collect()}
-    assert got == want
-    prof = skew_profile(df, "k").collect()
-    assert prof[0]["n"] >= prof[-1]["n"]
 
 
 def test_auto_nfc_matches_decomposed_names(spark):

@@ -12,20 +12,24 @@ its question's namespace), the node budget enforced per question, and
 broad coverage (most candidate-bearing questions retrieve something).
 """
 
+import os
+
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from tests.test_reference_replay import NER, QA, _build_slice, _load
 
+QA_VALID, NER_VALID = QA.format(split="valid"), NER.format(split="valid")
 
+
+@pytest.mark.skipif(
+    not (os.path.exists(QA_VALID) and os.path.exists(NER_VALID)),
+    reason=f"{QA_VALID} or {NER_VALID} absent")
 def test_full_pipeline_over_all_real_questions(spark):
     from graphraft_spark.graph.model import PropertyGraph
     from graphraft_spark.llm.ngram_lm import CharNgramLM, eos_tokenizer
-    from graphraft_spark.llm.protocols import (
-        EchoGenerator,
-        TrieConstrainedRanker,
-    )
+    from graphraft_spark.llm.protocols import TrieConstrainedRanker
     from graphraft_spark.pipeline import run_pipeline_bulk
 
     qa_rows = _load(QA.format(split="valid"))
@@ -58,7 +62,7 @@ def test_full_pipeline_over_all_real_questions(spark):
         for r in qa_rows]
     out = run_pipeline_bulk(
         spark, graph, questions=questions, ranker=ranker,
-        generator=EchoGenerator(), max_nodes=10, k=3,
+        max_nodes=10, k=3,
         patterns=("1hop", "2hop"), specific_target_label="Paper",
     ).persist()
 

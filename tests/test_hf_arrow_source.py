@@ -181,6 +181,7 @@ def test_write_dataset_dict_roundtrip(spark, tmp_path):
 GOLDEN = "/root/reference/mag-data/qa/valid"
 
 
+@pytest.mark.skipif(not os.path.isdir(GOLDEN), reason=f"{GOLDEN} absent")
 def test_golden_layout_parity_with_reference_save_to_disk(spark, tmp_path):
     """Pin the writer's byte layout against a REAL `datasets`
     save_to_disk artifact (VERDICT r5 item 2; the `datasets` library is

@@ -77,14 +77,15 @@ def test_supervised_ranker_order():
 
 def test_pipeline_end_to_end(spark, tiny_graph):
     from graphraft_spark.metrics import compute_metrics
-    from graphraft_spark.pipeline import (
-        answer_questions, match_entity_names, run_pipeline)
+    from graphraft_spark.pipeline import answer_questions, run_pipeline
+    from graphraft_spark.search.text import batch_match_entities
 
     # stage 1: entity matching (batch C1)
     ents = spark.createDataFrame(
         [(1, " ADA "), (1, "bob"), (2, "MIT")],
         "qid bigint, entity string")
-    matched = match_entity_names(tiny_graph, ents).collect()
+    matched = batch_match_entities(tiny_graph, ents) \
+        .select("qid", "name").distinct().collect()
     by_q = {}
     for r in matched:
         by_q.setdefault(r["qid"], []).append(r["name"])
@@ -95,7 +96,7 @@ def test_pipeline_end_to_end(spark, tiny_graph):
         spark, tiny_graph,
         questions=[(1, "what do Ada and Bob share?", by_q[1]),
                    (2, "who is at MIT?", by_q[2])],
-        ranker=LexicographicRanker(), generator=EchoGenerator(),
+        ranker=LexicographicRanker(),
         max_nodes=20, k=4)
     rows = retrieved.collect()
     assert {r["qid"] for r in rows} == {1, 2}
@@ -126,7 +127,7 @@ def test_budget_cap_in_pipeline(spark, tiny_graph):
     out = run_pipeline(
         spark, tiny_graph,
         questions=[(1, "q", ["Ada", "Bob", "MIT", "ML"])],
-        ranker=LexicographicRanker(), generator=EchoGenerator(),
+        ranker=LexicographicRanker(),
         max_nodes=3, k=8)
     # budget fires → at most max_nodes-1 kept (drop-the-crosser)
     assert out.count() <= 2

@@ -25,11 +25,11 @@ QUESTIONS = [
 @pytest.mark.parametrize("patterns", [("1hop", "2hop"),
                                       ("1hop", "2hop", "2path")])
 def test_bulk_pipeline_matches_driver_pipeline(spark, tiny_graph, patterns):
-    from graphraft_spark.llm import EchoGenerator, LexicographicRanker
+    from graphraft_spark.llm import LexicographicRanker
     from graphraft_spark.pipeline import run_pipeline, run_pipeline_bulk
 
     kw = dict(questions=QUESTIONS, ranker=LexicographicRanker(),
-              generator=EchoGenerator(), max_nodes=20, k=4,
+              max_nodes=20, k=4,
               patterns=patterns)
     a = run_pipeline(spark, tiny_graph, **kw)
     b = run_pipeline_bulk(spark, tiny_graph, **kw)
@@ -41,12 +41,11 @@ def test_bulk_pipeline_matches_driver_pipeline(spark, tiny_graph, patterns):
 def test_bulk_pipeline_trie_ranker_pickles_and_matches(spark, tiny_graph):
     """The default TrieConstrainedRanker must survive pickling to
     executors and rank identically to the driver loop."""
-    from graphraft_spark.llm import EchoGenerator
     from graphraft_spark.llm.protocols import TrieConstrainedRanker
     from graphraft_spark.pipeline import run_pipeline, run_pipeline_bulk
 
     kw = dict(questions=QUESTIONS[:2], ranker=TrieConstrainedRanker(),
-              generator=EchoGenerator(), max_nodes=10, k=2,
+              max_nodes=10, k=2,
               patterns=("1hop", "2hop"))
     a = run_pipeline(spark, tiny_graph, **kw)
     b = run_pipeline_bulk(spark, tiny_graph, **kw)

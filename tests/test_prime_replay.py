@@ -25,6 +25,7 @@ never exercises:
 """
 
 import json
+import os
 
 import pyarrow as pa
 import pytest
@@ -35,6 +36,14 @@ PRIME = "/root/reference/prime-data"
 QA = f"{PRIME}/qa/valid/data-00000-of-00001.arrow"
 NER = f"{PRIME}/qa_with_ner/valid/data-00000-of-00001.arrow"
 N_VALID = 2241
+PRIME_NER_INS = f"{PRIME}/ner_instructions.json"
+MAG_NER_INS = f"{os.path.dirname(PRIME)}/mag-data/ner_instructions.json"
+
+
+def _needs(*paths):
+    missing = [p for p in paths if not os.path.exists(p)]
+    return pytest.mark.skipif(bool(missing),
+                              reason=f"{', '.join(missing)} absent")
 
 
 def _load(path):
@@ -52,6 +61,7 @@ def ner_rows():
     return _load(NER)
 
 
+@_needs(QA, NER)
 def test_ner_split_extends_qa(qa_rows, ner_rows):
     """qa_with_ner = qa + predicted_entities and nothing else changed
     (the reference builds it with a pure ``.map`` append,
@@ -65,6 +75,7 @@ def test_ner_split_extends_qa(qa_rows, ner_rows):
         assert b["predicted_entities"], f"row {a['id']}: empty entity list"
 
 
+@_needs(NER)
 def test_unlabeled_parse_roundtrip_all_rows(ner_rows):
     """F3 on real data: the reference produced predicted_entities by
     splitting the LLM response on '|' (ner.py:68-72).  For every stored
@@ -83,6 +94,7 @@ def test_unlabeled_parse_roundtrip_all_rows(ner_rows):
         assert parsed == [("_Entity_", e) for e in ents]
 
 
+@_needs(PRIME_NER_INS)
 def test_prime_ner_prompt_build():
     """F1 on the real prime ner_instructions.json: labels is null
     (selecting the unlabeled path) and the built message list matches
@@ -111,6 +123,7 @@ def test_prime_ner_prompt_build():
     assert msgs == expected
 
 
+@_needs(MAG_NER_INS)
 def test_mag_instructions_select_labeled_mode():
     """The twin file on the MAG side must carry a label vocabulary
     (labels non-null selects _identify_labeled_entities) — pins that
@@ -122,6 +135,7 @@ def test_mag_instructions_select_labeled_mode():
     assert ins["labels"], "MAG must use the labeled path"
 
 
+@_needs(NER)
 def test_entity_match_label_null_batch(spark, ner_rows):
     """C1 in the '_Entity_' (label-null) mode over the REAL mention
     stream: corpus = the 4,033 distinct real entity strings as node
@@ -166,6 +180,7 @@ def test_entity_match_label_null_batch(spark, ner_rows):
     assert got == expected
 
 
+@_needs(NER)
 def test_entity_match_vector_fallback_real_strings(spark, ner_rows):
     """C2 on real mention strings: drop 25 real entities from the
     corpus so they zero-hit fulltext, give each a one-hot embedding
@@ -206,6 +221,7 @@ def test_entity_match_vector_fallback_real_strings(spark, ner_rows):
                    for j, d in enumerate(dropped)}
 
 
+@_needs(NER)
 def test_knn_ner_ablation_path_all_questions(spark, ner_rows):
     """C5 kNN-NER ablation replay shape (ablation notebook cells 6-7 /
     23-24): question embeddings -> k=2 nearest node names as

@@ -8,11 +8,19 @@ Python logic row-for-row on real data, (c) SURVEY's measured dataset
 stats hold.
 """
 
+import os
+
 import pyarrow as pa
 import pytest
 
 MAG_VALID = ("/root/reference/mag-data/qa_with_cypher_queries/valid/"
              "data-00000-of-00001.arrow")
+MAG_DATA = MAG_VALID.split("/qa_with_cypher_queries/")[0]
+MAG_QA = f"{MAG_DATA}/qa"
+MAG_CYPHER_VALID = f"{MAG_DATA}/qa_with_cypher_queries/valid"
+
+needs_mag_valid = pytest.mark.skipif(
+    not os.path.exists(MAG_VALID), reason=f"{MAG_VALID} absent")
 
 
 def _load(path):
@@ -25,6 +33,7 @@ def mag_valid():
     return _load(MAG_VALID)
 
 
+@needs_mag_valid
 def test_parse_roundtrip_all_real_queries(mag_valid):
     from graphraft_spark.patterns.cypher_parse import parse_cypher_query
 
@@ -56,6 +65,7 @@ def test_parse_roundtrip_all_real_queries(mag_valid):
     assert needs_escape < n * 0.01  # raw-inlined specials are rare
 
 
+@needs_mag_valid
 def test_survey_measured_stats(mag_valid):
     """BASELINE.md: 2,665 valid rows; mean ≈ 4.14 candidates, max 10."""
     counts = [len(r["cypher_queries"]) for r in mag_valid]
@@ -64,6 +74,7 @@ def test_survey_measured_stats(mag_valid):
     assert abs(sum(counts) / len(counts) - 4.14) < 0.01
 
 
+@needs_mag_valid
 def test_e5_e6_parity_on_real_data(spark, mag_valid):
     """Our sort_parallel_arrays + best_label_is_good vs verbatim ports of
     llm1.py:53-66 on all 2,665 real rows."""
@@ -109,6 +120,7 @@ def test_e5_e6_parity_on_real_data(spark, mag_valid):
     assert 0 < n_good_ref < len(rows)
 
 
+@needs_mag_valid
 def test_executable_specs_from_real_queries(spark, mag_valid, tiny_graph):
     """Parsed real-world specs compile to runnable plans on any graph
     with matching schema (labels differ — expect empty, not errors)."""
@@ -121,6 +133,9 @@ def test_executable_specs_from_real_queries(spark, mag_valid, tiny_graph):
         assert run_pattern(tiny_graph, spec).count() == 0
 
 
+@pytest.mark.skipif(
+    not (os.path.isdir(MAG_QA) and os.path.isdir(MAG_CYPHER_VALID)),
+    reason=f"{MAG_QA} or {MAG_CYPHER_VALID} absent")
 def test_hf_arrow_reader(spark):
     """read_hf_dataset loads the reference's save_to_disk layout into
     Spark with schema intact (the load_from_disk migration path)."""

@@ -52,6 +52,7 @@ Why the slice is *provably* faithful (no extra / missing signatures):
 """
 
 import collections
+import os
 
 import pyarrow as pa
 import pytest
@@ -163,7 +164,14 @@ def _build_slice(qa_rows, ner_by_id):
     return nodes, edges, gold, anchors, expected
 
 
-@pytest.fixture(scope="module", params=["valid", "test"])
+def _split(split):
+    paths = (QA.format(split=split), NER.format(split=split))
+    missing = [p for p in paths if not os.path.exists(p)]
+    return pytest.param(split, marks=pytest.mark.skipif(
+        bool(missing), reason=f"{', '.join(missing)} absent"))
+
+
+@pytest.fixture(scope="module", params=[_split("valid"), _split("test")])
 def replay(spark, request):
     from graphraft_spark.graph.model import PropertyGraph
     from graphraft_spark.patterns.enumerate import enumerate_paths_batch

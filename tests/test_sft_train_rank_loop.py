@@ -10,12 +10,16 @@ the same token_logprob/tokenizer seam, and ranking runs inside
 executors exactly as a real model would via the batch layer.
 """
 
+import os
+
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 QA_VALID = ("/root/reference/mag-data/qa_with_cypher_queries/valid/"
             "data-00000-of-00001.arrow")
+needs_qa = pytest.mark.skipif(not os.path.exists(QA_VALID),
+                              reason=f"{QA_VALID} absent")
 
 
 def _load(path):
@@ -33,6 +37,7 @@ def qa_df(spark):
         "hits array<bigint>, num_results array<bigint>, n_answers bigint")
 
 
+@needs_qa
 def test_sft_table_on_real_data_matches_reference_gate(spark, qa_df):
     """llm1_sft_table's internal E6 gate keeps exactly the reference's
     1,525/2,665 valid rows, and every completion is that row's E5-best
@@ -54,6 +59,7 @@ def test_sft_table_on_real_data_matches_reference_gate(spark, qa_df):
         assert row["question"] in row["prompt"]
 
 
+@needs_qa
 def test_trained_lm_ranks_real_candidates_distributed(spark, qa_df):
     """Train the char n-gram LM on the gated completions, then rank
     REAL candidate sets inside executors (rank_queries_batch): outputs

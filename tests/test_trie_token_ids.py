@@ -18,12 +18,14 @@ only opaque ids, exactly what an HF tokenizer would hand it.
 """
 
 import collections
+import os
 
 import pyarrow as pa
 import pytest
 
 QA = ("/root/reference/mag-data/qa_with_cypher_queries/valid/"
       "data-00000-of-00001.arrow")
+needs_qa = pytest.mark.skipif(not os.path.exists(QA), reason=f"{QA} absent")
 N_CANDS = 20
 N_MERGES = 120
 
@@ -99,6 +101,7 @@ def fixture():
     return cands, question, tok
 
 
+@needs_qa
 def test_fixture_has_real_merge_structure(fixture):
     """The trained tokenization must actually exhibit HF-like
     structure: multi-char tokens, tokens crossing word boundaries, a
@@ -120,6 +123,7 @@ def test_fixture_has_real_merge_structure(fixture):
         "merges must compress below char count"
 
 
+@needs_qa
 def test_only_verbatim_candidates_at_any_k(fixture):
     """logits_processor.py:25-31 invariant at id granularity: every
     ranked output is byte-verbatim one of the candidates."""
@@ -134,6 +138,7 @@ def test_only_verbatim_candidates_at_any_k(fixture):
         assert set(top) <= set(cands)
 
 
+@needs_qa
 def test_exhaustive_beam_equals_direct_ranking(fixture):
     """beam = #candidates makes the search exhaustive, so the result
     must equal ranking candidates directly by total sequence
@@ -154,6 +159,7 @@ def test_exhaustive_beam_equals_direct_ranking(fixture):
     assert ranker.rank(question, cands, k=len(cands)) == expected
 
 
+@needs_qa
 def test_steerable_scorer_selects_designated_candidate(fixture):
     """A scorer that rewards exactly one candidate's id path must
     surface that candidate top-1 — for every candidate in turn
@@ -173,6 +179,7 @@ def test_steerable_scorer_selects_designated_candidate(fixture):
         assert got == [target]
 
 
+@needs_qa
 def test_forced_eos_disambiguates_prefix_candidates(fixture):
     """sequence_ranker.py:22-24 appends the end token BEFORE building
     the trie, so a candidate that is a strict token-prefix of another

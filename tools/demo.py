@@ -34,7 +34,7 @@ def main() -> None:
 
     section("1. Graph QA: entities -> patterns -> budgeted retrieval")
     from graphraft_spark.graph import tpch_graph
-    from graphraft_spark.llm import EchoGenerator, LexicographicRanker
+    from graphraft_spark.llm import LexicographicRanker
     from graphraft_spark.pipeline import run_pipeline_bulk
 
     g = tpch_graph(spark, sf_dir)
@@ -43,7 +43,7 @@ def main() -> None:
         questions=[(1, "who supplies small ring?", ["small ring"]),
                    (2, "what did customer 42 buy?",
                     ["Customer#000000042"])],
-        ranker=LexicographicRanker(), generator=EchoGenerator(),
+        ranker=LexicographicRanker(),
         max_nodes=8, k=3, patterns=("1hop", "2hop"))
     out.select("qid", "nodeId", "name").show(8, truncate=False)
 

@@ -35,7 +35,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from graphraft_spark.graph import tpch_graph
-    from graphraft_spark.llm import EchoGenerator, LexicographicRanker
+    from graphraft_spark.llm import LexicographicRanker
     from graphraft_spark.pipeline import run_pipeline_bulk
     from graphraft_spark.session import get_spark
 
@@ -153,7 +153,7 @@ def main() -> None:
                 (1, "who supplies small ring?", ["small ring"]),
                 (2, "what did customer 42 buy?", ["Customer#000000042"]),
             ],
-            ranker=LexicographicRanker(), generator=EchoGenerator(),
+            ranker=LexicographicRanker(),
             max_nodes=15, k=3, patterns=("1hop", "2hop"),
             prop_cols=("detail",), persist_mode=mode)
         out.select("qid", "nodeId", "name", "detail",

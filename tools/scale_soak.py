@@ -340,7 +340,7 @@ def main() -> None:
                   g, a, patterns=("2hop",), approx_rsd=0.05)))
 
     # ---- pipeline ×N questions over the base graph ----
-    from graphraft_spark.llm import EchoGenerator, LexicographicRanker
+    from graphraft_spark.llm import LexicographicRanker
     from graphraft_spark.pipeline import run_pipeline_bulk
 
     for n in (FACTORS if want("p_pipeline_bulk") else ()):
@@ -353,7 +353,7 @@ def main() -> None:
         timed("p_pipeline_bulk", n,
               lambda qs=qs: _noop(run_pipeline_bulk(
                   spark, base, questions=qs,
-                  ranker=LexicographicRanker(), generator=EchoGenerator(),
+                  ranker=LexicographicRanker(),
                   max_nodes=15, k=3, patterns=("1hop", "2hop"),
                   prop_cols=("detail",),
                   persist_mode="local_checkpoint")))
