@@ -8,8 +8,15 @@ switch engines without relearning the flow:
 Every model call sits behind a pluggable seam (chat/encoder/ranker/
 generator) with deterministic defaults, mirroring graphraft.py's
 dataset-specific wiring (NER instructions, property lists, target-label
-pruning).  Batch pipelines should use graphraft_spark.pipeline directly;
-this facade is the interactive path.
+pruning).  Batch pipelines should use graphraft_spark.pipeline directly
+(``run_pipeline`` + ``answer_questions``, re-exported here); this facade
+is the interactive path.
+
+After entity matching a question costs two Spark actions: the
+enumeration collect (the ranker's input) and the retrieval collect
+(at most ``max_nodes - 1`` rows).  The ranker and the generator both
+run in-process on the driver, as the reference's local model calls do,
+and the returned retrieval frame is already materialized.
 """
 
 from __future__ import annotations
@@ -17,8 +24,9 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from graphraft_spark.graph.model import PropertyGraph
 from graphraft_spark.llm.ner_parse import (
@@ -33,6 +41,9 @@ from graphraft_spark.llm.protocols import (
 )
 from graphraft_spark.pipeline import answer_questions, run_pipeline
 from graphraft_spark.search.text import match_entities
+
+__all__ = ["EngineConfig", "GraphRAFTEngine", "answer_questions",
+           "match_entities", "run_pipeline"]
 
 
 @dataclass(frozen=True)
@@ -125,7 +136,15 @@ class GraphRAFTEngine:
 
     def run(self, question: str, qid: int = 0):
         """Full flow for one question; returns (retrieved DataFrame,
-        predicted answer names)."""
+        predicted answer names).
+
+        Two Spark actions after matching: ``run_pipeline`` collects the
+        enumerated signatures for the driver-side ranker, then the
+        budgeted retrieval is collected once.  The generator runs
+        in-process on those rows, in the ``(queryIdx, rank)``
+        consumption order ``answer_questions`` builds, and the returned
+        frame is a local relation over them: acting on it launches no
+        Spark job."""
         entities = self.extract_entities(question)
         names = self.match_nodes(entities)
         retrieved = run_pipeline(
@@ -136,11 +155,15 @@ class GraphRAFTEngine:
             patterns=self.config.patterns,
             specific_target_label=self.config.specific_target_label,
         )
-        qdf = self.spark.createDataFrame([(qid, question)],
-                                         "qid bigint, question string")
-        answered = answer_questions(
-            retrieved, qdf, self.generator,
-            add_more_answers=self.config.add_more_answers)
-        row = answered.select("predicted_answers").collect()
-        answers = row[0]["predicted_answers"] if row else []
-        return retrieved, list(answers)
+        rows = sorted(retrieved.collect(),
+                      key=lambda r: (r["queryIdx"], r["rank"]))
+        answers = self.generator.generate(
+            question, [{"name": r["name"]} for r in rows],
+            self.config.add_more_answers)
+        # an Arrow table becomes a LocalRelation; a list of Rows would be
+        # parallelized, and every action on it would launch a job again
+        table = pa.Table.from_pylist(
+            [r.asDict(recursive=True) for r in rows],
+            schema=to_arrow_schema(retrieved.schema))
+        return (self.spark.createDataFrame(table, retrieved.schema),
+                list(answers))

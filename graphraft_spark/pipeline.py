@@ -128,12 +128,16 @@ def run_pipeline(
                 sim(F.col("nodeId")).alias("similarity"), "pattern")
     )
 
-    # Stage 5: budgeted accumulation across all questions in one job;
-    # persist the ranked results — upstream is a union of pattern-join
-    # plans that must not re-execute per window pass
+    # Stage 5: budgeted accumulation across all questions in one job.
+    # No persist: the caller's single action plans the first-seen and
+    # provenance branches together, so the second branch reads every
+    # shuffle and broadcast of the pattern joins through ReusedExchange.
+    # Only the work above those exchanges (each spec's last join and
+    # dedup, the sid fan-out and the ranking window's own exchange; the
+    # branches prune different columns) runs twice, and nothing stays
+    # cached behind the returned frame.
     return budgeted_accumulate(results, max_nodes=max_nodes,
-                               prop_cols=("name",) + tuple(prop_cols),
-                               persist_inputs=True)
+                               prop_cols=("name",) + tuple(prop_cols))
 
 
 def answer_questions(retrieved: DataFrame, questions: DataFrame,

@@ -9,6 +9,26 @@ sys.path.insert(0, REPO)
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
+def _host_driver_mem() -> str | None:
+    """~40% of the host's memory, never above the session's 48g default:
+    the default heap outgrows a small host and gets the test JVM
+    OOM-killed.  None when the host total is unreadable."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kib = next(int(line.split()[1]) for line in fh
+                       if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return None
+    return f"{min(48 * 1024, kib * 2 // 5 // 1024)}m"
+
+
+# read by graphraft_spark.session at import, so set before any test
+# module imports it
+_DRIVER_MEM = _host_driver_mem()
+if _DRIVER_MEM is not None:
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _DRIVER_MEM)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from graphraft_spark.session import get_spark

@@ -29,6 +29,9 @@ def test_engine_unlabeled_and_no_chat(spark, tiny_graph):
     # no chat_fn → the question itself is the entity; 'Bob' matches
     retrieved, answers = engine.run("Bob")
     assert {r["name"] for r in retrieved.collect()} >= {"P-beta"}
+    # no entity matches: empty retrieval, generator sees no nodes
+    retrieved, answers = engine.run("Nobody")
+    assert retrieved.collect() == [] and answers == []
 
 
 def test_mag_prime_presets():
@@ -108,3 +111,73 @@ def test_frame_sized_entity_list_refused(spark, tiny_graph):
     engine = GraphRAFTEngine(spark, tiny_graph)
     with pytest.raises(ValueError, match="batch_match_entities"):
         engine.match_nodes([("_Entity_", f"e{i}") for i in range(33)])
+
+
+def _ada_mit_engine(spark, graph, add_more_answers=False):
+    from graphraft_spark.api import EngineConfig, GraphRAFTEngine
+
+    return GraphRAFTEngine(
+        spark, graph,
+        config=EngineConfig(max_nodes=20, beam_width=4,
+                            patterns=("1hop", "2hop"),
+                            ner_labels=("Author", "Institution"),
+                            add_more_answers=add_more_answers),
+        chat_fn=lambda q: "Author: Ada Institution: MIT")
+
+
+def test_engine_run_leaves_no_cached_rdd(spark, tiny_graph):
+    """engine.run persists nothing that outlives the question: a cached
+    retrieval input per call would grow the context's persistent RDDs
+    by one per question."""
+    jsc = spark.sparkContext._jsc
+    engine = _ada_mit_engine(spark, tiny_graph)
+    before = set(jsc.getPersistentRDDs().keys())
+    for qid in range(4):
+        engine.run("what has Ada written at MIT?", qid=qid)
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()
+
+
+def test_engine_run_matches_batch_stages(spark, tiny_graph):
+    """The driver-side generation sees the same rows in the same
+    (queryIdx, rank) order as the batch answer_questions stage."""
+    from graphraft_spark.pipeline import answer_questions, run_pipeline
+
+    question = "what has Ada written at MIT?"
+    cols = ("qid", "nodeId", "queryIdx", "rank", "patterns")
+
+    def key(rows):
+        return sorted(tuple(r[c] for c in cols) for r in rows)
+
+    engine = _ada_mit_engine(spark, tiny_graph)
+    names = engine.match_nodes(engine.extract_entities(question))
+    batch = run_pipeline(
+        spark, tiny_graph, questions=[(7, question, names)],
+        ranker=engine.ranker, max_nodes=20, k=4, patterns=("1hop", "2hop"))
+    qdf = spark.createDataFrame([(7, question)], "qid bigint, question string")
+    for more in (False, True):
+        want = answer_questions(batch, qdf, engine.generator,
+                                add_more_answers=more).collect()
+        engine = _ada_mit_engine(spark, tiny_graph, add_more_answers=more)
+        retrieved, answers = engine.run(question, qid=7)
+        assert answers == list(want[0]["predicted_answers"])
+        assert key(retrieved.collect()) == key(batch.collect())
+        # with add_more_answers the answers are every retrieved name, so
+        # comparing them pins the whole consumption order
+        n_names = len({r["name"] for r in retrieved.collect()})
+        assert len(answers) == (n_names if more else 3)
+
+
+def test_engine_run_returns_materialized_frame(spark, tiny_graph):
+    """The retrieval is collected once inside engine.run; acting on the
+    returned frame launches no Spark job."""
+    engine = _ada_mit_engine(spark, tiny_graph)
+    retrieved, _ = engine.run("what has Ada written at MIT?")
+    sc = spark.sparkContext
+    group = "engine-run-result"
+    sc.setJobGroup(group, group)
+    try:
+        rows = retrieved.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert rows
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
