@@ -66,16 +66,16 @@ HEADLINE = [
     "g_copurchase_pairs",
     # end-to-end flagships last; the curation verdict (its gram
     # explode is the heaviest allocator here) runs AFTER the pipeline
-    # flagship so it cannot pressure p_pipeline_bulk's heap (the
+    # flagship so it cannot pressure the pipeline's heap (the
     # rolling-features line moved to the light tier for the same
     # reason — mid-list insertion before the flagship measured a
-    # phantom +1s on p_pipeline_bulk in the first round-8 bench)
-    "p_pipeline_bulk",
+    # phantom +1s on the pipeline line in the first round-8 bench)
+    "p_full_pipeline",
     "p_curate_corpus",
     # round-9 addition: iterative graph analytics get a headline line so
     # a plan regression is visible between soaks; AFTER the flagships
-    # per the ordering rule (r8: mid-list insertions before
-    # p_pipeline_bulk measured a phantom +1.2 s on it)
+    # per the ordering rule (r8: mid-list insertions before the
+    # pipeline flagship measured a phantom +1.2 s on it)
     "g_hits_top",
     # round-10 additions (appended, same ordering rule): the two
     # heaviest fifth-wave promotions — fixed-source Brandes on the full
@@ -276,7 +276,7 @@ def main() -> None:
     # extra runs and report min-of-5 plus the median, and list the line
     # under "outliers" so the artifact carries its own adjudication.
     # ADAPTIVE WARMUP (r6): two fixed warmups under-warm the deep
-    # pipeline plans — p_pipeline_bulk JIT-settles over ~6 executions
+    # pipeline plans — the pipeline flagship JIT-settled over ~6 executions
     # (measured 22 -> 15 -> 7 -> 5.5 -> ~5s flat; ~134 generated
     # classes × C2 tiering), so a 2-warmup bench times the warming
     # tail and reads 2-3x the steady state a fleet job would see.

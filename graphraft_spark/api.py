@@ -24,9 +24,7 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
-import pyarrow as pa
 from pyspark.sql import SparkSession
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from graphraft_spark.graph.model import PropertyGraph
 from graphraft_spark.llm.ner_parse import (
@@ -39,7 +37,11 @@ from graphraft_spark.llm.protocols import (
     QueryRanker,
     TrieConstrainedRanker,
 )
-from graphraft_spark.pipeline import answer_questions, run_pipeline
+from graphraft_spark.pipeline import (
+    answer_questions,
+    local_frame,
+    run_pipeline,
+)
 from graphraft_spark.search.text import match_entities
 
 __all__ = ["EngineConfig", "GraphRAFTEngine", "answer_questions",
@@ -49,12 +51,11 @@ __all__ = ["EngineConfig", "GraphRAFTEngine", "answer_questions",
 @dataclass(frozen=True)
 class EngineConfig:
     """Reference defaults (BASELINE.md knobs): graphraft.py:37 max_nodes,
-    :79 beam width; retriever.py:25 ef; path_retriever patterns per
-    dataset (mag: 1hop/2hop + Paper pruning; prime: all three)."""
+    :79 beam width; path_retriever patterns per dataset (mag: 1hop/2hop
+    + Paper pruning; prime: all three)."""
 
     max_nodes: int = 20
     beam_width: int = 5
-    ef: int = 10_000
     patterns: tuple[str, ...] = ("1hop", "2hop", "2path")
     specific_target_label: str | None = None
     ner_labels: tuple[str, ...] | None = None  # None → unlabeled ('_Entity_')
@@ -160,10 +161,7 @@ class GraphRAFTEngine:
         answers = self.generator.generate(
             question, [{"name": r["name"]} for r in rows],
             self.config.add_more_answers)
-        # an Arrow table becomes a LocalRelation; a list of Rows would be
-        # parallelized, and every action on it would launch a job again
-        table = pa.Table.from_pylist(
-            [r.asDict(recursive=True) for r in rows],
-            schema=to_arrow_schema(retrieved.schema))
-        return (self.spark.createDataFrame(table, retrieved.schema),
+        return (local_frame(self.spark,
+                            [r.asDict(recursive=True) for r in rows],
+                            retrieved.schema),
                 list(answers))

@@ -93,7 +93,7 @@ class TrieConstrainedRanker:
                  tokenizer: Callable[[str], Sequence] | None = None):
         self.token_logprob = token_logprob or self._default_logprob
         # module-level default (not a lambda) keeps the ranker picklable
-        # for the distributed ranking stage (pipeline.rank_signatures)
+        # for executor-side ranking (llm.batch.rank_queries_batch)
         self.tokenize = tokenizer or _ws_tokenize
 
     @staticmethod

@@ -378,8 +378,8 @@ FROM p_ordered WHERE seen_order < 15
 def p_full_pipeline(spark, sf_dir):
     """End-to-end GraphRAFT.run() analog (graphraft.py:41-66) on the
     TPC-H graph: entity match → batch enumerate (ONE job for all
-    questions) → rank → execute top-k deduped patterns (one job) →
-    budgeted retrieval with node props.  The registered variant uses the
+    questions) → rank → execute the top-k specs as data (one join tree
+    per template) → budgeted retrieval with node props.  The registered variant uses the
     lexicographic ranker so the ranking stage is SQL-expressible end to
     end; the trie-beam ranker rides the identical seam (f_rank_trie +
     pytest cover it)."""
@@ -397,40 +397,6 @@ def p_full_pipeline(spark, sf_dir):
         ranker=LexicographicRanker(),
         max_nodes=15, k=3, patterns=("1hop", "2hop"),
         prop_cols=("detail",))
-    return out.select("qid", "nodeId", "name", "detail",
-                      F.round("similarity", 6).alias("similarity"))
-
-
-@register("p_pipeline_bulk", oracle=P_FULL_ORACLE, extra=True)  # demoted r11 (driver-green r7-r10); promoted r7: zero-collect flagship twin
-def p_pipeline_bulk(spark, sf_dir):
-    """Fully-distributed pipeline twin (run_pipeline_bulk): identical
-    inputs and oracle as p_full_pipeline, but stage 3 ranks via
-    applyInPandas inside executors and stage 4 executes ALL ranked
-    specs through one spec-as-data join tree per template
-    (run_patterns_bulk) — zero driver collects, plan size independent
-    of spec count.  Same oracle passing on both proves the two
-    execution strategies are semantically identical."""
-    from graphraft_spark.graph import tpch_graph
-    from graphraft_spark.llm import LexicographicRanker
-    from graphraft_spark.pipeline import run_pipeline_bulk
-
-    g = tpch_graph(spark, sf_dir)
-    # persist_mode='local_checkpoint': materializes the ranked frame AND
-    # truncates its lineage.  A/B probe (tools/probe_bulk_spike.py, 30
-    # reps each, BASELINE.md round-6 follow-up): 30/30 flat at
-    # 3.5-4.4 s vs 'persist' clustering 8-16 s excursions (executor-
-    # thread CPU burn re-reading/recomputing churned storage blocks) and
-    # a ~20% slower steady state.  'persist' stays the library default
-    # for fault-tolerant recompute on executor loss.
-    out = run_pipeline_bulk(
-        spark, g,
-        questions=[
-            (1, "who supplies small ring?", ["small ring"]),
-            (2, "what did customer 42 buy?", ["Customer#000000042"]),
-        ],
-        ranker=LexicographicRanker(),
-        max_nodes=15, k=3, patterns=("1hop", "2hop"),
-        prop_cols=("detail",), persist_mode="local_checkpoint")
     return out.select("qid", "nodeId", "name", "detail",
                       F.round("similarity", 6).alias("similarity"))
 

@@ -229,12 +229,7 @@ def r_retrieve_data(spark, sf_dir):
         candidates.count()
         _RETRIEVE_INPUT_CACHE[sf_dir] = (results, candidates)
     results, candidates = _RETRIEVE_INPUT_CACHE[sf_dir]
-    # persist_inputs=False: the inputs above are already memo-persisted,
-    # so the extra per-call ranked persist is pure overhead (measured
-    # 1.3-1.9 s vs 1.5-3.9 s at sf0.1) AND leaked one cached frame per
-    # execution — Catalyst exchange reuse covers the double scan
-    out = retrieve_data(results, candidates, MAX_NODES,
-                        prop_cols=("seg",), persist_inputs=False)
+    out = retrieve_data(results, candidates, MAX_NODES, prop_cols=("seg",))
     return out.select(
         "qid", "nodeId", F.round("similarity", 6).alias("similarity"), "seg",
         F.concat_ws("|", "patterns").alias("patterns"), "source")

@@ -51,9 +51,7 @@ def _ranked(results: DataFrame) -> DataFrame:
 
 def budgeted_accumulate(results: DataFrame, max_nodes: int,
                         pattern_rate: float = 1.0,
-                        prop_cols: tuple[str, ...] = (),
-                        persist_inputs: bool = False,
-                        persist_mode: str = "persist") -> DataFrame:
+                        prop_cols: tuple[str, ...] = ()) -> DataFrame:
     """D2+D3+D4: first-seen dedup + provenance accumulation + node-budget
     stop over per-question result streams.
 
@@ -62,25 +60,9 @@ def budgeted_accumulate(results: DataFrame, max_nodes: int,
     queryIdx, rank)`` where queryIdx/rank locate the first-seen row.
     """
     budget = math.ceil(pattern_rate * max_nodes)
-    # ranked feeds both the first-seen aggregation and the provenance
-    # scan; persist only when the upstream plan is expensive (pattern
-    # joins) — for cheap scans Catalyst's exchange reuse beats caching
     ranked = _ranked(results).select(
         _Q, "queryIdx", "rank", "nodeId", "similarity", "pattern",
         *prop_cols)
-    if persist_inputs:
-        if persist_mode == "local_checkpoint":
-            # materialize AND truncate lineage: downstream tasks carry a
-            # stub plan instead of the full union-of-pattern-join tree,
-            # shrinking the task binary the cached-results scans
-            # deserialize (the stage BASELINE.md's excursion capture
-            # attributes the p_pipeline_bulk spike to).  Trade-off: the
-            # blocks are not recomputable on executor loss — callers on
-            # long multi-tenant clusters should stay on 'persist'.
-            ranked = ranked.localCheckpoint(eager=True)
-        else:
-            ranked = ranked.persist()
-            ranked.count()  # eager: both downstream branches scan it
 
     # Fold the payload (similarity + props) into the min-struct: the
     # (queryIdx, rank) prefix is unique within each (qid, nodeId) group,
@@ -157,13 +139,11 @@ def vector_topup(candidates: DataFrame, kept: DataFrame, max_nodes: int,
 
 def retrieve_data(results: DataFrame, candidates: DataFrame,
                   max_nodes: int, pattern_rate: float = 1.0,
-                  prop_cols: tuple[str, ...] = (),
-                  persist_inputs: bool = False) -> DataFrame:
+                  prop_cols: tuple[str, ...] = ()) -> DataFrame:
     """D1-D7 end-to-end: budgeted pattern accumulation + vector top-up,
     unioned — per question, ≤ max_nodes-1 nodes whenever the budget
     fires, each carrying similarity, props, and provenance patterns."""
-    kept = budgeted_accumulate(results, max_nodes, pattern_rate, prop_cols,
-                               persist_inputs=persist_inputs)
+    kept = budgeted_accumulate(results, max_nodes, pattern_rate, prop_cols)
     up = vector_topup(candidates, kept, max_nodes, prop_cols)
     return (
         kept.select(_Q, "nodeId", "similarity", *prop_cols, "patterns",

@@ -1,11 +1,11 @@
-"""THE full-system integration on real data: run_pipeline_bulk over
-all 2,665 real mag valid questions (NER anchors) against the replay
-slice, with the char n-gram LM (trained on the split's gated SFT
-completions) driving distributed trie-constrained ranking.
+"""THE full-system integration on real data: run_pipeline over all
+2,665 real mag valid questions (NER anchors) against the replay slice,
+with the char n-gram LM (trained on the split's gated SFT completions)
+driving trie-constrained ranking.
 
 One chain exercises every pipeline stage at question scale:
-slice graph → batch enumeration → applyInPandas LM ranking (2,665
-groups) → spec-as-data bulk execution → qid-partitioned budgeted
+slice graph → batch enumeration → per-question LM ranking (2,665
+questions) → spec-as-data bulk execution → qid-partitioned budgeted
 retrieval.  Assertions target system-level properties no unit test
 covers: zero cross-question leakage (every retrieved node belongs to
 its question's namespace), the node budget enforced per question, and
@@ -30,7 +30,7 @@ def test_full_pipeline_over_all_real_questions(spark):
     from graphraft_spark.graph.model import PropertyGraph
     from graphraft_spark.llm.ngram_lm import CharNgramLM, eos_tokenizer
     from graphraft_spark.llm.protocols import TrieConstrainedRanker
-    from graphraft_spark.pipeline import run_pipeline_bulk
+    from graphraft_spark.pipeline import run_pipeline
 
     qa_rows = _load(QA.format(split="valid"))
     ner_by_id = {r["id"]: r for r in _load(NER.format(split="valid"))}
@@ -60,7 +60,7 @@ def test_full_pipeline_over_all_real_questions(spark):
          [f"{r['id']}|{e}" for e in
           dict.fromkeys(ner_by_id[r["id"]]["predicted_entities"])])
         for r in qa_rows]
-    out = run_pipeline_bulk(
+    out = run_pipeline(
         spark, graph, questions=questions, ranker=ranker,
         max_nodes=10, k=3,
         patterns=("1hop", "2hop"), specific_target_label="Paper",

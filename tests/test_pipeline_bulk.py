@@ -1,7 +1,7 @@
-"""Fully-distributed pipeline twin (run_pipeline_bulk): spec-as-data
-execution + applyInPandas ranking must produce EXACTLY what the
-driver-loop pipeline produces, with a plan that does not grow with the
-number of specs and no driver-side signature collect."""
+"""Spec-as-data pattern execution: ``run_pipeline`` runs its ranked
+specs through ``run_patterns_bulk`` (one join tree per template), so its
+output is pinned by golden rows and its plan does not grow with the
+number of ranked specs."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,34 +22,134 @@ QUESTIONS = [
 ]
 
 
-@pytest.mark.parametrize("patterns", [("1hop", "2hop"),
-                                      ("1hop", "2hop", "2path")])
-def test_bulk_pipeline_matches_driver_pipeline(spark, tiny_graph, patterns):
+# Provenance strings of the ranked specs: PatternSpec.text_pattern("").
+_P = {
+    "ada_inst":
+        '(x1:Author {name: "Ada"})-[r1:AFFILIATED_WITH]-'
+        '(x2:Institution {name: ""})',
+    "ada_inst_author":
+        '(x1:Author {name: "Ada"})-[r1:AFFILIATED_WITH]-(x2:Institution)'
+        '-[r2:AFFILIATED_WITH]-(x3:Author {name: ""})',
+    "ada_inst_bob":
+        '(x1:Author {name: "Ada"})-[r1:AFFILIATED_WITH]-'
+        '(x2:Institution {name: ""})-[r2:AFFILIATED_WITH]-'
+        '(x3:Author {name: "Bob"})',
+    "ada_paper": '(x1:Author {name: "Ada"})-[r1:WRITES]-(x2:Paper {name: ""})',
+    "ada_paper_cited":
+        '(x1:Author {name: "Ada"})-[r1:WRITES]-(x2:Paper)-[r2:CITES]-'
+        '(x3:Paper {name: ""})',
+    "bob_inst_author":
+        '(x1:Author {name: "Bob"})-[r1:AFFILIATED_WITH]-(x2:Institution)'
+        '-[r2:AFFILIATED_WITH]-(x3:Author {name: ""})',
+    "bob_paper": '(x1:Author {name: "Bob"})-[r1:WRITES]-(x2:Paper {name: ""})',
+    "mit_author":
+        '(x1:Institution {name: "MIT"})-[r1:AFFILIATED_WITH]-'
+        '(x2:Author {name: ""})',
+    "mit_author_paper":
+        '(x1:Institution {name: "MIT"})-[r1:AFFILIATED_WITH]-(x2:Author)'
+        '-[r2:WRITES]-(x3:Paper {name: ""})',
+}
+
+# (qid, nodeId, queryIdx, rank, similarity, name, pattern keys): the
+# retrieved rows of run_pipeline, captured when the per-spec union and
+# the executor-ranked twin still agreed on them.
+_LEX_1HOP_2HOP = [
+    (1, 3, 1, 1, 0.226842613, "Bob", ("ada_inst_author",)),
+    (1, 10, 2, 3, 0.756142043, "P-alpha", ("ada_paper", "ada_paper_cited")),
+    (1, 11, 2, 2, 0.831756247, "P-beta", ("ada_paper", "ada_paper_cited")),
+    (1, 12, 2, 1, 0.907370451, "P-gamma", ("ada_paper", "ada_paper_cited")),
+    (1, 20, 0, 1, 0.512284086, "MIT", ("ada_inst",)),
+    (2, 1, 0, 2, 0.075614204, "Ada", ("mit_author",)),
+    (2, 3, 0, 1, 0.226842613, "Bob", ("mit_author",)),
+    (2, 10, 1, 3, 0.756142043, "P-alpha", ("mit_author_paper",)),
+    (2, 11, 1, 2, 0.831756247, "P-beta", ("mit_author_paper",)),
+    (2, 13, 1, 1, 0.982984656, "P-delta", ("mit_author_paper",)),
+    (3, 3, 1, 1, 0.226842613, "Bob", ("ada_inst_author",)),
+    (3, 10, 2, 3, 0.756142043, "P-alpha", ("ada_paper", "ada_paper_cited")),
+    (3, 11, 2, 2, 0.831756247, "P-beta", ("ada_paper", "ada_paper_cited")),
+    (3, 12, 2, 1, 0.907370451, "P-gamma", ("ada_paper", "ada_paper_cited")),
+    (3, 20, 0, 1, 0.512284086, "MIT", ("ada_inst",)),
+]
+_LEX_ALL = [
+    (1, 3, 2, 1, 0.226842613, "Bob", ("ada_inst_author",)),
+    (1, 10, 3, 3, 0.756142043, "P-alpha", ("ada_paper",)),
+    (1, 11, 3, 2, 0.831756247, "P-beta", ("ada_paper",)),
+    (1, 12, 3, 1, 0.907370451, "P-gamma", ("ada_paper",)),
+    (1, 20, 0, 1, 0.512284086, "MIT", ("ada_inst", "ada_inst_bob")),
+    (2, 1, 0, 2, 0.075614204, "Ada", ("mit_author",)),
+    (2, 3, 0, 1, 0.226842613, "Bob", ("mit_author",)),
+    (2, 10, 1, 3, 0.756142043, "P-alpha", ("mit_author_paper",)),
+    (2, 11, 1, 2, 0.831756247, "P-beta", ("mit_author_paper",)),
+    (2, 13, 1, 1, 0.982984656, "P-delta", ("mit_author_paper",)),
+    (3, 3, 1, 1, 0.226842613, "Bob", ("ada_inst_author",)),
+    (3, 10, 2, 3, 0.756142043, "P-alpha", ("ada_paper", "ada_paper_cited")),
+    (3, 11, 2, 2, 0.831756247, "P-beta", ("ada_paper", "ada_paper_cited")),
+    (3, 12, 2, 1, 0.907370451, "P-gamma", ("ada_paper", "ada_paper_cited")),
+    (3, 20, 0, 1, 0.512284086, "MIT", ("ada_inst",)),
+]
+_TRIE = [
+    (1, 1, 0, 1, 0.075614204, "Ada", ("bob_inst_author",)),
+    (1, 11, 1, 2, 0.831756247, "P-beta", ("bob_paper",)),
+    (1, 13, 1, 1, 0.982984656, "P-delta", ("bob_paper",)),
+    (2, 1, 0, 2, 0.075614204, "Ada", ("mit_author",)),
+    (2, 3, 0, 1, 0.226842613, "Bob", ("mit_author",)),
+    (2, 10, 1, 3, 0.756142043, "P-alpha", ("mit_author_paper",)),
+    (2, 11, 1, 2, 0.831756247, "P-beta", ("mit_author_paper",)),
+    (2, 13, 1, 1, 0.982984656, "P-delta", ("mit_author_paper",)),
+]
+
+
+def _expand(golden):
+    return sorted(row[:6] + (tuple(sorted(_P[p] for p in row[6])),)
+                  for row in golden)
+
+
+@pytest.mark.parametrize("ranker,questions,k,max_nodes,patterns,golden", [
+    ("lex", QUESTIONS, 4, 20, ("1hop", "2hop"), _LEX_1HOP_2HOP),
+    ("lex", QUESTIONS, 4, 20, ("1hop", "2hop", "2path"), _LEX_ALL),
+    ("trie", QUESTIONS[:2], 2, 10, ("1hop", "2hop"), _TRIE),
+], ids=["lex-1hop-2hop", "lex-2path", "trie"])
+def test_run_pipeline_golden(spark, tiny_graph, ranker, questions, k,
+                             max_nodes, patterns, golden):
+    """Pipeline-level pin for all three templates (the p_full_pipeline
+    oracle covers only 1hop and 2hop), for the lexicographic and the
+    trie-constrained ranker."""
     from graphraft_spark.llm import LexicographicRanker
-    from graphraft_spark.pipeline import run_pipeline, run_pipeline_bulk
-
-    kw = dict(questions=QUESTIONS, ranker=LexicographicRanker(),
-              max_nodes=20, k=4,
-              patterns=patterns)
-    a = run_pipeline(spark, tiny_graph, **kw)
-    b = run_pipeline_bulk(spark, tiny_graph, **kw)
-    assert a.columns == b.columns
-    assert _collect_normalized(a) == _collect_normalized(b)
-    assert b.count() > 0
-
-
-def test_bulk_pipeline_trie_ranker_pickles_and_matches(spark, tiny_graph):
-    """The default TrieConstrainedRanker must survive pickling to
-    executors and rank identically to the driver loop."""
     from graphraft_spark.llm.protocols import TrieConstrainedRanker
-    from graphraft_spark.pipeline import run_pipeline, run_pipeline_bulk
+    from graphraft_spark.pipeline import run_pipeline
 
-    kw = dict(questions=QUESTIONS[:2], ranker=TrieConstrainedRanker(),
-              max_nodes=10, k=2,
-              patterns=("1hop", "2hop"))
-    a = run_pipeline(spark, tiny_graph, **kw)
-    b = run_pipeline_bulk(spark, tiny_graph, **kw)
-    assert _collect_normalized(a) == _collect_normalized(b)
+    rk = LexicographicRanker() if ranker == "lex" else TrieConstrainedRanker()
+    out = run_pipeline(spark, tiny_graph, questions=questions, ranker=rk,
+                       max_nodes=max_nodes, k=k, patterns=patterns)
+    assert out.columns == ["qid", "nodeId", "queryIdx", "rank",
+                           "similarity", "name", "patterns"]
+    assert _collect_normalized(out) == _expand(golden)
+
+
+def _plan_shape(df):
+    """(joins, leaf relations) in the optimized logical plan."""
+    lines = df._jdf.queryExecution().optimizedPlan().treeString().splitlines()
+    ops = [ln.lstrip(" :+-").split(" ")[0] for ln in lines]
+    joins = sum(op == "Join" for op in ops)
+    leaves = sum(op in ("LocalRelation", "LogicalRDD", "Relation",
+                        "InMemoryRelation") for op in ops)
+    return joins, leaves
+
+
+def test_run_pipeline_plan_size_constant_in_k(spark, tiny_graph):
+    """The ranked specs are data: raising k from 1 to 8 adds rows to the
+    spec frame, not join subtrees to the plan.  One template only:
+    Catalyst drops the join tree of a template no ranked spec uses, and
+    at k=1 every question's top spec is a 1hop one."""
+    from graphraft_spark.llm import LexicographicRanker
+    from graphraft_spark.pipeline import run_pipeline
+
+    def shape(k):
+        return _plan_shape(run_pipeline(
+            spark, tiny_graph, questions=QUESTIONS,
+            ranker=LexicographicRanker(), k=k, patterns=("1hop",)))
+
+    assert shape(1) == shape(8)
 
 
 def test_run_patterns_bulk_matches_per_spec_execution(spark, tiny_graph):

@@ -35,10 +35,10 @@ def main() -> None:
     section("1. Graph QA: entities -> patterns -> budgeted retrieval")
     from graphraft_spark.graph import tpch_graph
     from graphraft_spark.llm import LexicographicRanker
-    from graphraft_spark.pipeline import run_pipeline_bulk
+    from graphraft_spark.pipeline import run_pipeline
 
     g = tpch_graph(spark, sf_dir)
-    out = run_pipeline_bulk(
+    out = run_pipeline(
         spark, g,
         questions=[(1, "who supplies small ring?", ["small ring"]),
                    (2, "what did customer 42 buy?",

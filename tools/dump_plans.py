@@ -44,11 +44,10 @@ FLAGSHIPS = [
      "Supervised enumeration: single-DISTINCT aggregate (no Expand — "
      "two countDistinct aggregates would double every binding row "
      "before the shuffle; r5 rewrite measured 2.2x)."),
-    ("p_pipeline_bulk",
-     "Distributed pipeline: spec-as-data execution (the ranked spec "
-     "table broadcasts into ONE join tree per template) + "
-     "applyInPandas ranking — plan size independent of spec count, "
-     "zero driver collects."),
+    ("p_full_pipeline",
+     "Pipeline: spec-as-data execution (the driver-ranked spec table "
+     "is a local relation that broadcasts into ONE join tree per "
+     "template) — plan size independent of spec count."),
     ("q_top_supplier",
      "Q15 shape (promoted r10): the revenue aggregate is lazily "
      "localCheckpoint'd so the max branch and the filter branch share "

@@ -14,7 +14,7 @@ Flagships and their scaling axis:
 - d_minhash_lsh      — documents ×N via the persisted banding index
                        (build + probe-all-pairs, the bench-scale path)
 - d_span_dedup k=50  — documents ×N, rolling-hash window keys
-- p_pipeline_bulk    — questions ×N against the sf0.1 graph (the spec
+- p_full_pipeline    — questions ×N against the sf0.1 graph (the spec
                        fan-out axis; plan size must stay flat)
 
 Inputs are MATERIALIZED to .scratch parquet first so generation cost
@@ -23,7 +23,7 @@ on the cheapest line (factor 1 is still partially warmup-priced —
 compare the 10 → 50 slope, not 1 → 10).
 
 Usage: python tools/scale_soak.py [sf_dir] [task_prefix ...]
-(task prefixes: bm25, minhash, span, g_twohop, p_pipeline — run the
+(task prefixes: bm25, minhash, span, g_twohop, p_full — run the
 heavy families in separate processes so each gets a fresh JVM and its
 own wall-clock budget)
 """
@@ -341,22 +341,21 @@ def main() -> None:
 
     # ---- pipeline ×N questions over the base graph ----
     from graphraft_spark.llm import LexicographicRanker
-    from graphraft_spark.pipeline import run_pipeline_bulk
+    from graphraft_spark.pipeline import run_pipeline
 
-    for n in (FACTORS if want("p_pipeline_bulk") else ()):
+    for n in (FACTORS if want("p_full_pipeline") else ()):
         qs = []
         for c in range(n):
             qs.append((c * 10 + 1, "who supplies small ring?",
                        ["small ring"]))
             qs.append((c * 10 + 2, "what did customer 42 buy?",
                        ["Customer#000000042"]))
-        timed("p_pipeline_bulk", n,
-              lambda qs=qs: _noop(run_pipeline_bulk(
+        timed("p_full_pipeline", n,
+              lambda qs=qs: _noop(run_pipeline(
                   spark, base, questions=qs,
                   ranker=LexicographicRanker(),
                   max_nodes=15, k=3, patterns=("1hop", "2hop"),
-                  prop_cols=("detail",),
-                  persist_mode="local_checkpoint")))
+                  prop_cols=("detail",))))
 
     # Perceptual image dedup ×N (r12): corpus-size axis — every copy's
     # images are DISTINCT (the pixel formula folds the ×N-offset src id
