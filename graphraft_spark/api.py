@@ -37,12 +37,9 @@ from graphraft_spark.llm.protocols import (
     QueryRanker,
     TrieConstrainedRanker,
 )
-from graphraft_spark.pipeline import (
-    answer_questions,
-    local_frame,
-    run_pipeline,
-)
+from graphraft_spark.pipeline import answer_questions, run_pipeline
 from graphraft_spark.search.text import match_entities
+from graphraft_spark.session import local_frame
 
 __all__ = ["EngineConfig", "GraphRAFTEngine", "answer_questions",
            "match_entities", "run_pipeline"]

@@ -1,11 +1,20 @@
 """Pattern IR → DataFrame join plan.
 
-Each hop is one equi-join of the (lazy) undirected edge view onto the
-frontier, plus one join onto ``nodes`` for the next node's constraints.
-Catalyst picks the physical join; we hint ``broadcast`` for anchored
-node sets (they are a handful of rows — the reference's anchors are the
-entity names matched by NER).  All label/name filters are attached to
-the node scans so predicate pushdown reaches parquet.
+One chain builder, :func:`_chain`, turns every pattern into a plan: it
+joins the (lazy) undirected edge view onto the frontier and then the
+next position's node frame, hop by hop, and enforces Cypher
+relationship-uniqueness.  Catalyst picks the physical joins.  The entry
+points differ only in the first frame and the per-position predicates:
+
+* :func:`compile_pattern` (``run_pattern`` / ``run_pattern_nodes``): an
+  instantiated spec.  Label, name and type literals filter the scans,
+  so predicate pushdown reaches parquet; named node sets are a handful
+  of rows and get a ``broadcast`` hint.
+* ``patterns.enumerate``: the enumeration templates.  Anchors are a
+  literal ``name IN (...)`` filter (one question) or a join with a
+  ``(qid, name)`` frame (many questions).
+* :func:`run_patterns_bulk`: the broadcast spec table is the first
+  frame, and ``spec col IS NULL OR =`` residuals ride the hash joins.
 
 Scale: the plan is hop-count-many shuffles at worst; with edges bucketed
 by ``src`` the expansion joins co-locate and AQE's skew-join splitting
@@ -14,9 +23,11 @@ handles hub nodes.  No Python crosses into executors.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+from functools import reduce
 from itertools import combinations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from graphraft_spark.graph.model import PropertyGraph
@@ -24,20 +35,73 @@ from graphraft_spark.patterns.ir import PatternSpec
 
 NODE_ATTRS = ("nodeId", "label", "name")
 
+# The signature of an enumerated path and the spec of an instantiated
+# query: label{i} per node, type{j} per hop, name{i} per anchored node
+# (null where the template has no such position).
+SPEC_COLS = ("pattern", "label1", "name1", "type1", "label2", "type2",
+             "label3", "name3")
 
-def _node_frame(graph: PropertyGraph, spec_node, pos: int,
-                prop_cols: tuple[str, ...] = ()) -> DataFrame:
-    df = graph.nodes
-    if spec_node.label is not None:
-        df = df.filter(F.col("label") == spec_node.label)
-    if spec_node.name is not None:
-        df = df.filter(F.col("name") == spec_node.name)
-    if spec_node.names is not None:
-        df = df.filter(F.col("name").isin(list(spec_node.names)))
-    attrs = NODE_ATTRS + tuple(prop_cols)
-    sel = df.select(*[F.col(a).alias(f"x{pos + 1}_{a}") for a in attrs])
-    anchored = spec_node.name is not None or spec_node.names is not None
-    return F.broadcast(sel) if anchored else sel
+# template -> (node count, anchored positions, return position)
+TEMPLATES = {
+    "1hop": (2, (0,), 1),
+    "2hop": (3, (0,), 2),
+    "2path": (3, (0, 2), 1),
+}
+
+
+def templates(patterns: Sequence[str], op: str,
+              ) -> list[tuple[str, int, tuple[int, ...], int]]:
+    """``(pattern, node count, anchored positions, return position)``
+    per requested template; ``op`` names the caller in the error."""
+    if not patterns or any(p not in TEMPLATES for p in patterns):
+        raise ValueError(f"{op}: patterns must be a non-empty selection "
+                         f"of {tuple(TEMPLATES)}, got {patterns!r}")
+    return [(p, *TEMPLATES[p]) for p in patterns]
+
+
+def node_cols(pos: int, attrs: Sequence[str] = NODE_ATTRS) -> list[Column]:
+    """Node attributes aliased ``x{pos+1}_<attr>``: position ``pos``'s
+    node frame selects them."""
+    return [F.col(a).alias(f"x{pos + 1}_{a}") for a in attrs]
+
+
+def _and(cond: Column, extra: Column | None) -> Column:
+    return cond if extra is None else cond & extra
+
+
+def _chain(graph: PropertyGraph, frames: Sequence[DataFrame | None],
+          on: dict[str, Column] | None = None) -> DataFrame:
+    """Bindings of the chain ``(x1)-[r1]-(x2)-...``: ``frames[0]`` is the
+    first frame (it carries ``x1_*``), ``frames[p]`` the node frame of
+    position ``p`` (its columns are :func:`node_cols`).  A ``None``
+    frame skips that node join: ``x{p+1}_nodeId`` is the hop's ``dst``
+    and no other
+    ``x{p+1}_*`` column exists (its caller joins the attributes later).
+    ``on`` adds a join predicate per variable, ``"r{j}"`` on the hop's
+    edge join and ``"x{p}"`` on the node join.  Edges are
+    ``r{j}_edgeId/relType``; the rels of one MATCH are pairwise distinct
+    (Cypher relationship-uniqueness — exact where the reference relies
+    on a simple graph, SURVEY §7.2)."""
+    on = on or {}
+    plan = frames[0]
+    for j in range(1, len(frames)):
+        e = graph.undirected_edges.select(
+            F.col("edgeId").alias(f"r{j}_edgeId"),
+            F.col("src").alias(f"r{j}_src"),
+            F.col("dst").alias(f"r{j}_dst"),
+            F.col("relType").alias(f"r{j}_relType"))
+        plan = plan.join(e, _and(F.col(f"x{j}_nodeId") == F.col(f"r{j}_src"),
+                                 on.get(f"r{j}")))
+        if frames[j] is None:
+            plan = plan.withColumn(f"x{j + 1}_nodeId", F.col(f"r{j}_dst"))
+        else:
+            plan = plan.join(frames[j], _and(
+                F.col(f"r{j}_dst") == F.col(f"x{j + 1}_nodeId"),
+                on.get(f"x{j + 1}")))
+    for a, b in combinations(range(1, len(frames)), 2):
+        plan = plan.filter(F.col(f"r{a}_edgeId") != F.col(f"r{b}_edgeId"))
+    return plan.drop(*[c for c in plan.columns
+                       if c.endswith("_src") or c.endswith("_dst")])
 
 
 def compile_pattern(graph: PropertyGraph, spec: PatternSpec,
@@ -47,61 +111,6 @@ def compile_pattern(graph: PropertyGraph, spec: PatternSpec,
     projects configured node props into retrieved data, retriever.py:
     49-60) and r{j}_edgeId/relType for every position.  Unused prop
     columns are pruned by Catalyst, so widening is free."""
-    plan = _node_frame(graph, spec.nodes[0], 0, prop_cols)
-    edges = graph.undirected_edges
-    for j, rel in enumerate(spec.rels):
-        e = edges
-        if rel is not None:
-            e = e.filter(F.col("relType") == rel)
-        e = e.select(
-            F.col("edgeId").alias(f"r{j + 1}_edgeId"),
-            F.col("src").alias(f"r{j + 1}_src"),
-            F.col("dst").alias(f"r{j + 1}_dst"),
-            F.col("relType").alias(f"r{j + 1}_relType"),
-        )
-        plan = plan.join(e, plan[f"x{j + 1}_nodeId"] == e[f"r{j + 1}_src"])
-        nxt = _node_frame(graph, spec.nodes[j + 1], j + 1, prop_cols)
-        plan = plan.join(nxt, F.col(f"r{j + 1}_dst") == nxt[f"x{j + 2}_nodeId"])
-
-    # Cypher relationship-uniqueness: rels in one MATCH are pairwise
-    # distinct (exactness fix over the reference's simple-graph reliance,
-    # SURVEY §7.2).
-    for a, b in combinations(range(1, len(spec.rels) + 1), 2):
-        plan = plan.filter(F.col(f"r{a}_edgeId") != F.col(f"r{b}_edgeId"))
-    for a, b in spec.neq_pairs:
-        plan = plan.filter(F.col(f"x{a + 1}_nodeId") != F.col(f"x{b + 1}_nodeId"))
-    drop = [c for c in plan.columns if c.endswith("_src") or c.endswith("_dst")]
-    return plan.drop(*drop)
-
-
-def compile_pattern_batch(graph: PropertyGraph, spec: PatternSpec,
-                          anchors: DataFrame,
-                          anchor_positions: tuple[int, ...] = (0,),
-                          prop_cols: tuple[str, ...] = (),
-                          defer_target: bool = False) -> DataFrame:
-    """Batch variant of :func:`compile_pattern`: anchored positions join a
-    ``(qid, name)`` DataFrame instead of an inlined name list, and every
-    binding row carries its ``qid``.  This is how the pipeline enumerates
-    ALL questions in ONE Spark job (reference runs 7,993 training
-    questions through a per-question loop, llm1.py:83-87; at scale the
-    anchor frame stays tiny and broadcast while the graph side scales).
-
-    Position 0 must be anchored; additional anchored positions (the
-    2path template's terminal) are constrained to the SAME question's
-    anchor set via a qid-equality filter.
-
-    ``defer_target=True`` skips the node-attribute join at the FINAL
-    position when it is unanchored and unconstrained: the terminal hop's
-    edge ``dst`` becomes ``x{last}_nodeId`` directly and no
-    ``x{last}_label`` / ``x{last}_name`` columns are produced.  This is
-    the aggregate-early/decorate-late shape: the terminal node join is
-    the widest join of the plan (it runs on the FULL binding fan-out —
-    5.6M rows for two hub anchors at sf0.1, measured), while the caller
-    can dedupe bindings down to distinct (signature, target) pairs
-    first and decorate ~10x fewer rows.  Callers must re-join node
-    attributes themselves (enumerate_paths_batch does)."""
-    if 0 not in anchor_positions:
-        raise ValueError("position 0 must be an anchor position")
     attrs = NODE_ATTRS + tuple(prop_cols)
 
     def frame(pos: int) -> DataFrame:
@@ -109,49 +118,14 @@ def compile_pattern_batch(graph: PropertyGraph, spec: PatternSpec,
         df = graph.nodes
         if node.label is not None:
             df = df.filter(F.col("label") == node.label)
-        sel = [F.col(a).alias(f"x{pos + 1}_{a}") for a in attrs]
-        if pos in anchor_positions:
-            df = df.join(F.broadcast(anchors.select("qid", "name")), "name")
-            return F.broadcast(
-                df.select(F.col("qid").alias(f"x{pos + 1}_qid"), *sel))
-        return df.select(*sel)
+        if node.name is None:
+            return df.select(*node_cols(pos, attrs))
+        return F.broadcast(df.filter(F.col("name") == node.name)
+                           .select(*node_cols(pos, attrs)))
 
-    last = len(spec.nodes) - 1
-    plan = frame(0)
-    edges = graph.undirected_edges
-    for j, rel in enumerate(spec.rels):
-        e = edges
-        if rel is not None:
-            e = e.filter(F.col("relType") == rel)
-        e = e.select(
-            F.col("edgeId").alias(f"r{j + 1}_edgeId"),
-            F.col("src").alias(f"r{j + 1}_src"),
-            F.col("dst").alias(f"r{j + 1}_dst"),
-            F.col("relType").alias(f"r{j + 1}_relType"),
-        )
-        plan = plan.join(e, plan[f"x{j + 1}_nodeId"] == e[f"r{j + 1}_src"])
-        if (defer_target and j + 1 == last
-                and (j + 1) not in anchor_positions
-                and spec.nodes[j + 1].label is None):
-            # terminal node unconstrained: its id IS the hop's dst;
-            # label/name decoration is the caller's (post-dedupe) job
-            plan = plan.withColumn(f"x{j + 2}_nodeId",
-                                   F.col(f"r{j + 1}_dst"))
-            continue
-        nxt = frame(j + 1)
-        plan = plan.join(nxt, F.col(f"r{j + 1}_dst") == nxt[f"x{j + 2}_nodeId"])
-        if (j + 1) in anchor_positions:
-            plan = plan.filter(
-                F.col("x1_qid") == F.col(f"x{j + 2}_qid"))
-
-    for a, b in combinations(range(1, len(spec.rels) + 1), 2):
-        plan = plan.filter(F.col(f"r{a}_edgeId") != F.col(f"r{b}_edgeId"))
-    for a, b in spec.neq_pairs:
-        plan = plan.filter(F.col(f"x{a + 1}_nodeId") != F.col(f"x{b + 1}_nodeId"))
-    plan = plan.withColumn("qid", F.col("x1_qid"))
-    drop = [c for c in plan.columns
-            if c.endswith("_src") or c.endswith("_dst") or c.endswith("_qid")]
-    return plan.drop(*drop)
+    on = {f"r{j + 1}": F.col(f"r{j + 1}_relType") == rel
+          for j, rel in enumerate(spec.rels) if rel is not None}
+    return _chain(graph, [frame(p) for p in range(len(spec.nodes))], on)
 
 
 def run_pattern(graph: PropertyGraph, spec: PatternSpec) -> DataFrame:
@@ -183,20 +157,6 @@ def run_pattern_nodes(graph: PropertyGraph, spec: PatternSpec,
     )
 
 
-SPEC_COLS = ("pattern", "label1", "name1", "type1", "label2", "type2",
-             "label3", "name3")
-
-_BULK_SHAPES = {
-    # template -> (n_nodes, anchored positions {pos: name_col},
-    #              return position)
-    "1hop": (2, {0: "name1"}, 1),
-    "2hop": (3, {0: "name1"}, 2),
-    "2path": (3, {0: "name1", 2: "name3"}, 1),
-}
-_BULK_LABELS = ("label1", "label2", "label3")
-_BULK_TYPES = ("type1", "type2")
-
-
 def run_patterns_bulk(graph: PropertyGraph, specs: DataFrame,
                       prop_cols: tuple[str, ...] = (),
                       patterns: tuple[str, ...] = ("1hop", "2hop", "2path"),
@@ -217,9 +177,7 @@ def run_patterns_bulk(graph: PropertyGraph, specs: DataFrame,
     is scanned once per hop regardless of how many thousand specs
     execute; the residual label/type predicates ride the hash join as
     post-filters.  This is the batch analog of the reference's
-    per-query Neo4j loop (retriever.py:74-96) at the execution stage,
-    completing what enumerate_paths_batch does for the enumeration
-    stage.
+    per-query Neo4j loop (retriever.py:74-96) at the execution stage.
 
     Semantics match :func:`run_pattern` on the INSTANTIATED templates
     (ir.onehop/twohop/twopath): undirected hops, Cypher
@@ -227,46 +185,28 @@ def run_patterns_bulk(graph: PropertyGraph, specs: DataFrame,
     WHERE clauses, path_retriever.py:29-40 — ir.twohop docstring).
     """
     attrs = NODE_ATTRS + tuple(prop_cols)
-    out = None
-    for pat in patterns:
-        n_nodes, anchored, ret = _BULK_SHAPES[pat]
+    out = []
+    for pat, n_nodes, anchored, ret in templates(patterns,
+                                                 "run_patterns_bulk"):
         s = F.broadcast(
             specs.filter(F.col("pattern") == pat)
             .select(*[F.col(c).alias(f"s_{c}") for c in SPEC_COLS])
             .distinct())
-        plan = None
+        on = {}
         for pos in range(n_nodes):
-            node = graph.nodes.select(
-                *[F.col(a).alias(f"x{pos + 1}_{a}") for a in attrs])
-            lbl = F.col(f"s_{_BULK_LABELS[pos]}")
-            cond = lbl.isNull() | (F.col(f"x{pos + 1}_label") == lbl)
+            x, lbl = f"x{pos + 1}", F.col(f"s_label{pos + 1}")
+            on[x] = lbl.isNull() | (F.col(f"{x}_label") == lbl)
             if pos in anchored:
-                cond = cond & (F.col(f"x{pos + 1}_name")
-                               == F.col(f"s_{anchored[pos]}"))
-            if pos == 0:
-                plan = s.join(node, cond)
-                continue
-            e = graph.undirected_edges.select(
-                F.col("edgeId").alias(f"r{pos}_edgeId"),
-                F.col("src").alias(f"r{pos}_src"),
-                F.col("dst").alias(f"r{pos}_dst"),
-                F.col("relType").alias(f"r{pos}_relType"))
-            typ = F.col(f"s_{_BULK_TYPES[pos - 1]}")
-            plan = plan.join(
-                e, (F.col(f"x{pos}_nodeId") == F.col(f"r{pos}_src"))
-                & (typ.isNull() | (F.col(f"r{pos}_relType") == typ)))
-            plan = plan.join(node,
-                             (F.col(f"r{pos}_dst")
-                              == F.col(f"x{pos + 1}_nodeId")) & cond)
-        for a, b in combinations(range(1, n_nodes), 2):
-            plan = plan.filter(
-                F.col(f"r{a}_edgeId") != F.col(f"r{b}_edgeId"))
-        df = plan.select(
+                on[x] &= F.col(f"{x}_name") == F.col(f"s_name{pos + 1}")
+            if pos:
+                typ = F.col(f"s_type{pos}")
+                on[f"r{pos}"] = typ.isNull() | (F.col(f"r{pos}_relType") == typ)
+        frames = [graph.nodes.select(*node_cols(pos, attrs))
+                  for pos in range(n_nodes)]
+        frames[0] = s.join(frames[0], on.pop("x1"))
+        x = f"x{ret + 1}"
+        out.append(_chain(graph, frames, on).select(
             *[F.col(f"s_{c}").alias(c) for c in SPEC_COLS],
-            F.col(f"x{ret + 1}_nodeId").alias("nodeId"),
-            F.col(f"x{ret + 1}_label").alias("label"),
-            F.col(f"x{ret + 1}_name").alias("name"),
-            *[F.col(f"x{ret + 1}_{c}").alias(c) for c in prop_cols],
-        ).distinct()
-        out = df if out is None else out.unionByName(df)
-    return out
+            *[F.col(f"{x}_{a}").alias(a) for a in attrs],
+        ).distinct())
+    return reduce(DataFrame.unionByName, out)

@@ -12,60 +12,172 @@ single-label; the reference's ``labels(n)`` list reduces to this via
 ``set(labels) - {'_Entity_'}``, path_retriever.py:31).  Supervised mode
 adds ``correctCnt`` = #distinct targets that are gold answers
 (path_retriever.py:16).  ``specific_target_label`` keeps only signatures
-whose terminal node has that label — the *intended* semantics of the
+whose returned node has that label — the *intended* semantics of the
 reference's (buggy: label2 vs labels2) target_has_special_label,
 path_retriever.py:42-47 / SURVEY §7.6.
+
+One aggregate serves one question and many: :func:`enumerate_paths_batch`
+anchors on a ``(qid, name)`` frame, while :func:`enumerate_paths` and
+:func:`enumerate_pattern` anchor on a literal ``name IN (...)`` filter
+(so it reaches the node scan) and carry no ``qid``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from graphraft_spark.graph.model import PropertyGraph
-from graphraft_spark.patterns.compiler import compile_pattern
-from graphraft_spark.patterns.ir import NodeSpec, PatternSpec, onehop, twohop, twopath
+from graphraft_spark.patterns.compiler import (
+    SPEC_COLS,
+    _chain,
+    node_cols,
+    templates,
+)
+from graphraft_spark.patterns.ir import PatternSpec, onehop, twohop, twopath
+from graphraft_spark.session import local_frame
 
 PATTERNS = ("1hop", "2hop", "2path")
+_INSTANTIATE = {"1hop": onehop, "2hop": twohop, "2path": twopath}
 
 
-def _anchor(names: Sequence[str]) -> NodeSpec:
-    return NodeSpec(names=tuple(names))
+def _signature(n_nodes: int, anchored: tuple[int, ...],
+               ) -> list[tuple[str, str]]:
+    """Grouping keys of a template as (output column, binding column),
+    in SPEC_COLS order."""
+    src = {f"label{p + 1}": f"x{p + 1}_label" for p in range(n_nodes)}
+    src.update({f"type{j}": f"r{j}_relType" for j in range(1, n_nodes)})
+    src.update({f"name{p + 1}": f"x{p + 1}_name" for p in anchored})
+    return [(c, src[c]) for c in SPEC_COLS if c in src]
 
 
-def _spec_for(pattern: str, src_names: Sequence[str]) -> PatternSpec:
-    a = _anchor(src_names)
-    if pattern == "1hop":
-        return PatternSpec(nodes=(a, NodeSpec()), rels=(None,), return_index=1)
-    if pattern == "2hop":
-        return PatternSpec(
-            nodes=(a, NodeSpec(), NodeSpec()), rels=(None, None),
-            return_index=2, neq_pairs=((0, 2),),
-        )
-    if pattern == "2path":
-        return PatternSpec(
-            nodes=(a, NodeSpec(), a), rels=(None, None),
-            return_index=1, neq_pairs=((0, 2),),
-        )
-    raise ValueError(f"unknown pattern {pattern!r}")
+def _aggregate(graph: PropertyGraph, template: tuple,
+               anchor: Callable[[int], DataFrame], batch: bool,
+               gold: DataFrame | None, specific_target_label: str | None,
+               approx_rsd: float | None) -> DataFrame:
+    """One template's signature table: the grouping keys (``qid`` first
+    when ``batch``), ``totalCnt`` = count(DISTINCT target) (the implicit
+    Cypher aggregation B6) and, with ``gold`` (distinct rows of
+    ``g_nodeId``, plus ``g_qid`` in batch mode), ``correctCnt`` (B7).
+    ``anchor(pos)`` is the node frame of an anchored position; in batch
+    mode it carries ``x{pos+1}_qid``."""
+    _, n_nodes, anchored, ret = template
+    last = n_nodes - 1
+    # aggregate-early / decorate-late: the terminal node join is the
+    # widest join of the plan (it runs on the full binding fan-out), but
+    # the terminal contributes only its LABEL to the signature, a
+    # function of the target id — so dedupe bindings to distinct
+    # (signature-prefix, target) pairs FIRST and join node attributes
+    # onto the ~10x smaller result.  Not when the terminal is anchored,
+    # when specific_target_label filters it (the filter must reach the
+    # node join below the distinct), or under HLL (no distinct shuffle:
+    # the label is a group key of the raw bindings).
+    defer = (last not in anchored and approx_rsd is None
+             and (specific_target_label is None or ret != last))
+    frames = [anchor(p) if p in anchored
+              else None if defer and p == last
+              else graph.nodes.select(*node_cols(p)) for p in range(n_nodes)]
+    on = {f"x{p + 1}": F.col("x1_qid") == F.col(f"x{p + 1}_qid")
+          for p in anchored[1:] if batch}
+    bindings = _chain(graph, frames, on)
+    if n_nodes == 3:  # tgt <> src1 (2hop), a <> b (2path)
+        bindings = bindings.filter(F.col("x1_nodeId") != F.col("x3_nodeId"))
+
+    sig = _signature(n_nodes, anchored)
+    if batch:
+        sig = [("qid", "x1_qid")] + sig
+    key_names = [o for o, _ in sig]
+    tgt = F.col(f"x{ret + 1}_nodeId")
+
+    def gold_of(qid, target):
+        cond = target == F.col("g_nodeId")
+        return (qid == F.col("g_qid")) & cond if batch else cond
+
+    if approx_rsd is not None:
+        # the hub-scale path: HyperLogLog++ total over the raw bindings
+        # (a fixed-size mergeable partial per signature); correctCnt is
+        # the single exact distinct aggregate, so still no Expand
+        aggs = [F.approx_count_distinct(tgt, approx_rsd).alias("totalCnt")]
+        if gold is not None:
+            bindings = bindings.join(F.broadcast(gold),
+                                     gold_of(F.col("x1_qid"), tgt), "left")
+            aggs.append(F.countDistinct("g_nodeId").alias("correctCnt"))
+        df = bindings.groupBy(*[F.col(s).alias(o) for o, s in sig]).agg(*aggs)
+    else:
+        # one DISTINCT over (keys, target), then plain counts: exact,
+        # and two countDistinct aggregates would plan an Expand
+        # (doubling every binding row before the shuffle)
+        avail = set(bindings.columns)
+        d = bindings.select(*[F.col(s).alias(o) for o, s in sig if s in avail],
+                            tgt.alias("_tgt")).distinct()
+        aggs = [F.count("*").alias("totalCnt")]
+        if gold is not None:
+            # gold is per-(qid, target), a function of the dedupe key:
+            # joining it after the distinct is exact and much smaller
+            # (gold rows are distinct, so none fans the frame out)
+            d = d.join(F.broadcast(gold),
+                       gold_of(F.col("qid"), F.col("_tgt")), "left")
+            aggs.append(F.count(F.when(F.col("g_nodeId").isNotNull(), 1))
+                        .alias("correctCnt"))
+        post = [(o, s) for o, s in sig if s not in avail]
+        if post:
+            # deferred terminal (= the target): inner join, the graph is
+            # validated and every edge dst is a node
+            d = d.join(graph.nodes.select(
+                F.col("nodeId").alias("_tgt"),
+                *[F.col(s.split("_", 1)[1]).alias(o) for o, s in post]),
+                "_tgt")
+        # rows are distinct on (keys, target), so count(*) per key set
+        # IS count(DISTINCT target)
+        df = d.groupBy(*key_names).agg(*aggs)
+    if specific_target_label is not None:
+        df = df.filter(F.col(f"label{ret + 1}") == specific_target_label)
+    return df
 
 
-_SIGNATURES = {
-    # grouping keys per template, as (output_name, binding_column)
-    "1hop": (("label1", "x1_label"), ("name1", "x1_name"),
-             ("type1", "r1_relType"), ("label2", "x2_label")),
-    "2hop": (("label1", "x1_label"), ("name1", "x1_name"),
-             ("type1", "r1_relType"), ("label2", "x2_label"),
-             ("type2", "r2_relType"), ("label3", "x3_label")),
-    "2path": (("label1", "x1_label"), ("name1", "x1_name"),
-              ("type1", "r1_relType"), ("label2", "x2_label"),
-              ("type2", "r2_relType"), ("label3", "x3_label"),
-              ("name3", "x3_name")),
-}
-_TARGET = {"1hop": "x2", "2hop": "x3", "2path": "x2"}
-_TERMINAL_LABEL = {"1hop": "label2", "2hop": "label3", "2path": "label2"}
+def _enumerate(graph: PropertyGraph, patterns: Sequence[str], op: str,
+               anchor: Callable[[int], DataFrame], batch: bool,
+               gold: DataFrame | None, specific_target_label: str | None,
+               approx_rsd: float | None) -> DataFrame:
+    """All templates unioned into one signature table with a ``pattern``
+    column; signature columns a template lacks are null-padded so the
+    union is schema-stable."""
+    cols = ((["qid"] if batch else []) + list(SPEC_COLS) + ["totalCnt"]
+            + (["correctCnt"] if gold is not None else []))
+    out = []
+    for template in templates(patterns, op):
+        df = _aggregate(graph, template, anchor, batch, gold,
+                        specific_target_label, approx_rsd)
+        # ONE select pads the missing signature columns and stamps the
+        # pattern tag — a withColumn per column is a full DataFrame
+        # round-trip each (~14 ms of driver latency on a slow-py4j
+        # host) for the identical plan
+        have = set(df.columns)
+        out.append(df.select(*[
+            F.lit(template[0]).alias("pattern") if c == "pattern"
+            else (F.col(c) if c in have
+                  else F.lit(None).cast("string").alias(c))
+            for c in cols]))
+    return reduce(DataFrame.unionByName, out)
+
+
+def _literal_anchor(graph: PropertyGraph, names: Sequence[str],
+                    ) -> Callable[[int], DataFrame]:
+    nodes = graph.nodes.filter(F.col("name").isin(list(names)))
+    return lambda pos: F.broadcast(nodes.select(*node_cols(pos)))
+
+
+def _gold_ids(graph: PropertyGraph, tgt_ids: Sequence[int] | None,
+              ) -> DataFrame | None:
+    """``tgt_ids`` as a one-question gold frame ``(g_nodeId)``."""
+    return None if tgt_ids is None else local_frame(
+        graph.nodes.sparkSession,
+        [{"g_nodeId": i} for i in dict.fromkeys(map(int, tgt_ids))],
+        StructType([StructField("g_nodeId", LongType())]))
 
 
 def enumerate_pattern(graph: PropertyGraph, pattern: str,
@@ -74,76 +186,21 @@ def enumerate_pattern(graph: PropertyGraph, pattern: str,
     """One template → signature table with ``totalCnt`` (grouped
     count(DISTINCT tgt), the implicit Cypher aggregation B6) and, when
     ``tgt_ids`` is given (supervised training mode), ``correctCnt`` (B7)."""
-    bindings = compile_pattern(graph, _spec_for(pattern, src_names))
-    keys = [F.col(src).alias(out) for out, src in _SIGNATURES[pattern]]
-    tgt = F.col(f"{_TARGET[pattern]}_nodeId")
-    if tgt_ids is None:
-        return bindings.groupBy(*keys).agg(
-            F.countDistinct(tgt).alias("totalCnt"))
-    # supervised: two countDistinct aggregates would plan an Expand
-    # (doubling every binding row before the shuffle); one DISTINCT over
-    # (keys, tgt, is_gold) then plain counts is exact — is_gold is
-    # functionally determined by tgt — and measured 2.2x faster at sf0.1
-    key_names = [out for out, _ in _SIGNATURES[pattern]]
-    d = bindings.select(
-        *keys, tgt.alias("_tgt"),
-        tgt.isin([int(i) for i in tgt_ids]).alias("_gold")).distinct()
-    return d.groupBy(*key_names).agg(
-        F.count("*").alias("totalCnt"),
-        F.count(F.when(F.col("_gold"), 1)).alias("correctCnt"))
+    (template,) = templates([pattern], "enumerate_pattern")
+    return _aggregate(graph, template, _literal_anchor(graph, src_names),
+                      False, _gold_ids(graph, tgt_ids), None, None)
 
 
 def enumerate_paths(graph: PropertyGraph, src_names: Sequence[str],
                     patterns: Sequence[str] = PATTERNS,
                     tgt_ids: Sequence[int] | None = None,
                     specific_target_label: str | None = None) -> DataFrame:
-    """All templates, unioned into one signature table with a ``pattern``
-    column — the DataFrame analog of PathRetriever.retrieve_paths
-    (path_retriever.py:49-64).  Missing signature columns (shorter
-    templates) are null-padded so the union is schema-stable."""
-    all_cols = ["pattern", "label1", "name1", "type1", "label2", "type2",
-                "label3", "name3", "totalCnt"]
-    if tgt_ids is not None:
-        all_cols.append("correctCnt")
-    out = None
-    for pattern in patterns:
-        df = enumerate_pattern(graph, pattern, src_names, tgt_ids)
-        # ONE select pads the missing signature columns and stamps the
-        # pattern tag — a withColumn per column is a full DataFrame
-        # round-trip each (~14 ms of driver latency on a slow-py4j
-        # host) for the identical plan
-        have = set(df.columns)
-        df = df.select(*[
-            F.lit(pattern).alias("pattern") if c == "pattern"
-            else (F.col(c) if c in have
-                  else F.lit(None).cast("string").alias(c))
-            for c in all_cols])
-        if specific_target_label is not None:
-            df = df.filter(
-                F.col(_TERMINAL_LABEL[pattern]) == specific_target_label
-            )
-        out = df if out is None else out.unionByName(df)
-    return out
-
-
-_ANCHOR_POSITIONS = {"1hop": (0,), "2hop": (0,), "2path": (0, 2)}
-
-
-def _batch_spec_for(pattern: str) -> PatternSpec:
-    """Template spec with UNCONSTRAINED anchor nodes — the anchor names
-    come from the (qid, name) DataFrame in the batch compile."""
-    if pattern == "1hop":
-        return PatternSpec(nodes=(NodeSpec(), NodeSpec()), rels=(None,),
-                           return_index=1)
-    if pattern == "2hop":
-        return PatternSpec(nodes=(NodeSpec(), NodeSpec(), NodeSpec()),
-                           rels=(None, None), return_index=2,
-                           neq_pairs=((0, 2),))
-    if pattern == "2path":
-        return PatternSpec(nodes=(NodeSpec(), NodeSpec(), NodeSpec()),
-                           rels=(None, None), return_index=1,
-                           neq_pairs=((0, 2),))
-    raise ValueError(f"unknown pattern {pattern!r}")
+    """All templates for one question's anchors, unioned into one
+    signature table with a ``pattern`` column — the DataFrame analog of
+    PathRetriever.retrieve_paths (path_retriever.py:49-64)."""
+    return _enumerate(graph, patterns, "enumerate_paths",
+                      _literal_anchor(graph, src_names), False,
+                      _gold_ids(graph, tgt_ids), specific_target_label, None)
 
 
 def enumerate_paths_batch(graph: PropertyGraph, anchors: DataFrame,
@@ -156,6 +213,8 @@ def enumerate_paths_batch(graph: PropertyGraph, anchors: DataFrame,
     table.  One Spark job enumerates every question (vs the reference's
     per-question Cypher round-trips, llm1.py:83-87).  ``gold`` is an
     optional ``(qid, nodeId)`` frame for supervised ``correctCnt``.
+    The 2path template's second anchor is constrained to the SAME
+    question's anchor set.
 
     ``approx_rsd`` switches ``totalCnt`` to HyperLogLog++
     (``approx_count_distinct`` at that relative standard deviation) —
@@ -166,123 +225,30 @@ def enumerate_paths_batch(graph: PropertyGraph, anchors: DataFrame,
     E5's ``num_results`` SORT key (llm1.py:53-58), so a few-percent
     error is semantically benign; ``correctCnt`` (the gate numerator)
     stays EXACT — gold matches are few."""
-    from graphraft_spark.patterns.compiler import compile_pattern_batch
+    a = F.broadcast(anchors.select("qid", "name"))
 
-    all_cols = ["qid", "pattern", "label1", "name1", "type1", "label2",
-                "type2", "label3", "name3", "totalCnt"]
+    def anchor(pos: int) -> DataFrame:
+        return F.broadcast(graph.nodes.join(a, "name").select(
+            F.col("qid").alias(f"x{pos + 1}_qid"), *node_cols(pos)))
+
     if gold is not None:
-        all_cols.append("correctCnt")
-    out = None
-    for pattern in patterns:
-        # aggregate-early / decorate-late: the terminal node join is the
-        # widest join of the plan (it runs on the full binding fan-out),
-        # but the terminal node contributes only its LABEL to the
-        # signature and its label is a function of the target id — so
-        # dedupe bindings to distinct (signature-prefix, target) pairs
-        # FIRST and join node attributes onto the ~10x smaller result.
-        # (The exact paths do this; the HLL path aggregates the raw
-        # bindings without a distinct shuffle, so it still needs the
-        # terminal label as a group key and keeps the eager join.)
-        defer = approx_rsd is None
-        bindings = compile_pattern_batch(
-            graph, _batch_spec_for(pattern), anchors,
-            anchor_positions=_ANCHOR_POSITIONS[pattern],
-            defer_target=defer)
-        avail = set(bindings.columns)
-        pre = [(o, s) for o, s in _SIGNATURES[pattern] if s in avail]
-        post = [(o, s) for o, s in _SIGNATURES[pattern] if s not in avail]
-        keys = [F.col("qid")] + [F.col(src).alias(out_name)
-                                 for out_name, src in _SIGNATURES[pattern]]
-        key_names = ["qid"] + [o for o, _ in _SIGNATURES[pattern]]
-        tgt = F.col(f"{_TARGET[pattern]}_nodeId")
-
-        def decorate(d):
-            """Join deferred terminal-node attrs (inner: the graph is
-            validated, every edge dst is a node) onto the deduped frame."""
-            if not post:
-                return d
-            dec = graph.nodes.select(
-                F.col("nodeId").alias("_tgt"),
-                *[F.col(s.split("_", 1)[1]).alias(o) for o, s in post])
-            return d.join(dec, "_tgt")
-
-        if gold is None and approx_rsd is not None:
-            df = bindings.groupBy(*keys).agg(
-                F.approx_count_distinct(tgt, approx_rsd).alias("totalCnt"))
-        elif gold is None:
-            d = bindings.select(
-                "qid", *[F.col(s).alias(o) for o, s in pre],
-                tgt.alias("_tgt")).distinct()
-            # rows are distinct on (keys-prefix, _tgt) and the joined
-            # attrs are functions of _tgt, so count(*) per full key set
-            # IS countDistinct(target)
-            df = decorate(d).groupBy(*key_names).agg(
-                F.count("*").alias("totalCnt"))
-        elif approx_rsd is not None:
-            g = gold.select(F.col("qid").alias("g_qid"),
-                            F.col("nodeId").alias("g_nodeId"))
-            bindings = bindings.join(
-                F.broadcast(g),
-                (F.col("qid") == F.col("g_qid")) & (tgt == F.col("g_nodeId")),
-                "left")
-            # HLL total + single exact distinct (gold) — one distinct
-            # aggregate, so still no Expand
-            df = bindings.groupBy(*keys).agg(
-                F.approx_count_distinct(tgt, approx_rsd).alias("totalCnt"),
-                F.countDistinct("g_nodeId").alias("correctCnt"))
-        else:
-            # single-DISTINCT supervised aggregate (no Expand) — see
-            # enumerate_pattern; (qid, keys, tgt) determines is_gold.
-            # Dedupe first, then broadcast-join gold onto the deduped
-            # frame (gold is per-(qid, target) — a function of the
-            # dedupe key, so joining after is exact and much smaller).
-            d = bindings.select(
-                "qid", *[F.col(s).alias(o) for o, s in pre],
-                tgt.alias("_tgt")).distinct()
-            # distinct: a duplicated gold row must not fan out the
-            # already-deduped (signature, target) frame
-            g = gold.select(F.col("qid").alias("g_qid"),
-                            F.col("nodeId").alias("g_nodeId")).distinct()
-            d = d.join(
-                F.broadcast(g),
-                (F.col("qid") == F.col("g_qid"))
-                & (F.col("_tgt") == F.col("g_nodeId")), "left")
-            df = decorate(d).groupBy(*key_names).agg(
-                F.count("*").alias("totalCnt"),
-                F.count(F.when(F.col("g_nodeId").isNotNull(), 1))
-                .alias("correctCnt"))
-        # ONE select pads + stamps (see enumerate_paths: a withColumn
-        # per column is a full DataFrame round-trip for the same plan)
-        have = set(df.columns)
-        df = df.select(*[
-            F.lit(pattern).alias("pattern") if c == "pattern"
-            else (F.col(c) if c in have
-                  else F.lit(None).cast("string").alias(c))
-            for c in all_cols])
-        if specific_target_label is not None:
-            df = df.filter(
-                F.col(_TERMINAL_LABEL[pattern]) == specific_target_label)
-        out = df if out is None else out.unionByName(df)
-    return out
+        # a duplicated gold row must not fan out the deduped frame
+        gold = gold.select(F.col("qid").alias("g_qid"),
+                           F.col("nodeId").alias("g_nodeId")).distinct()
+    return _enumerate(graph, patterns, "enumerate_paths_batch", anchor,
+                      True, gold, specific_target_label, approx_rsd)
 
 
 def instantiate_queries(rows: Sequence[dict]) -> list[tuple[PatternSpec, str]]:
     """Signature rows → (PatternSpec, cypher_text) pairs — the structured
     replacement for create_query's f-string rendering
-    (path_retriever.py:29-40)."""
+    (path_retriever.py:29-40).  The ir constructors take a template's
+    signature columns in SPEC_COLS order."""
     out: list[tuple[PatternSpec, str]] = []
     for rec in rows:
-        p = rec["pattern"]
-        if p == "1hop":
-            spec = onehop(rec["label1"], rec["name1"], rec["type1"], rec["label2"])
-        elif p == "2hop":
-            spec = twohop(rec["label1"], rec["name1"], rec["type1"],
-                          rec["label2"], rec["type2"], rec["label3"])
-        elif p == "2path":
-            spec = twopath(rec["label1"], rec["name1"], rec["type1"],
-                           rec["label2"], rec["type2"], rec["label3"],
-                           rec["name3"])
-        else:
-            raise ValueError(f"unknown pattern {p!r}")
+        (pattern, n_nodes, anchored, _), = templates([rec["pattern"]],
+                                                    "instantiate_queries")
+        spec = _INSTANTIATE[pattern](
+            *[rec[c] for c, _ in _signature(n_nodes, anchored)])
         out.append((spec, spec.cypher()))
     return out

@@ -12,20 +12,19 @@ bind many nodes, and all semantics are multi-binding, SURVEY §7.3) and
 every relationship may constrain its type.  Traversal is undirected, as
 everywhere in the reference (path_retriever.py:5,8,12).  Cypher
 relationship-uniqueness (all rels in a MATCH pairwise distinct) is part
-of the IR semantics; node-inequality constraints (Cypher WHERE a <> b)
-are explicit in ``neq_pairs``.
+of the IR semantics.  Instantiated queries carry no node-inequality
+(Cypher WHERE a <> b): the reference drops it (``twohop``).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
 class NodeSpec:
     label: str | None = None
     name: str | None = None
-    names: tuple[str, ...] | None = None  # name IN (...) — enumeration anchors
 
     def cypher(self, var: str) -> str:
         lbl = f":{self.label}" if self.label else ""
@@ -45,17 +44,12 @@ class PatternSpec:
     nodes: tuple[NodeSpec, ...]
     rels: tuple[str | None, ...]
     return_index: int
-    neq_pairs: tuple[tuple[int, int], ...] = field(default=())
 
     def __post_init__(self):
         if len(self.rels) != len(self.nodes) - 1:
             raise ValueError("rels must have len(nodes) - 1 entries")
         if not (0 <= self.return_index < len(self.nodes)):
             raise ValueError("return_index out of range")
-
-    @property
-    def num_hops(self) -> int:
-        return len(self.rels)
 
     def cypher(self) -> str:
         """Render to Cypher text (prompt-parity format of

@@ -18,10 +18,8 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -32,8 +30,9 @@ from pyspark.sql.types import (
 
 from graphraft_spark.graph.model import PropertyGraph
 from graphraft_spark.llm.protocols import AnswerGenerator, QueryRanker
-# run_pattern_nodes is re-exported: it is the per-spec reference
-# execution, and tracing harnesses wrap it here by name
+# run_pattern_nodes is not called here: it stays importable from this
+# module because perfbench's tracer wraps it by name, and tests check
+# run_patterns_bulk against it as the per-spec reference
 from graphraft_spark.patterns.compiler import (  # noqa: F401
     SPEC_COLS,
     run_pattern_nodes,
@@ -44,6 +43,7 @@ from graphraft_spark.patterns.enumerate import (
     instantiate_queries,
 )
 from graphraft_spark.retrieve import budgeted_accumulate
+from graphraft_spark.session import local_frame
 
 _RANKED_SCHEMA = StructType(
     [StructField("qid", LongType())]
@@ -56,16 +56,6 @@ def default_similarity(node_id: Column) -> Column:
     configured (tests/oracles); production passes cosine over a real
     embedding column (retriever.py:59)."""
     return ((node_id % 100000) * 7919 % 104729) / 104729.0
-
-
-def local_frame(spark: SparkSession, rows: Sequence[dict],
-                schema: StructType) -> DataFrame:
-    """Driver-side rows as a DataFrame that Spark plans as a
-    LocalRelation: an Arrow table's rows sit inline in the plan, while
-    a Python list would be parallelized and every action on it would
-    launch a job."""
-    table = pa.Table.from_pylist(list(rows), schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema)
 
 
 def rank_candidates(ranker: QueryRanker, question: str,

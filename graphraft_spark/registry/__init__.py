@@ -165,8 +165,9 @@ PRIORITY = [
     # decorrelated Q2/Q21 shapes, the deterministic-sampling family's
     # first driver rows (hash split + temperature-weighted source mix),
     # paragraph-level dedup, and the metrics macro-average
-    # re-promotion.  Slots from p_pipeline_bulk (driver-green r7-r10;
-    # p_full_pipeline + p_curate_corpus keep the family),
+    # re-promotion.  Slots from the bulk pipeline line (driver-green
+    # r7-r10; since merged into p_full_pipeline, which with
+    # p_curate_corpus keeps the family),
     # s_fuzzy_entity_match (green r8-r10; ER stays oracle-backed
     # extra), t_c4_clean (green r8-r10; text keeps quality/tfidf +
     # incoming temperature mix), f_dpo_pairs (green r8-r10; preference

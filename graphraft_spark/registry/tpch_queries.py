@@ -139,7 +139,7 @@ def q_market_volume(spark, sf_dir):
 
 
 @register(
-    "q_orders_without_lineitems", extra=True,  # demoted r7: anti-join shape; slot to p_pipeline_bulk
+    "q_orders_without_lineitems", extra=True,  # demoted r7: anti-join shape; slot to the bulk pipeline (now p_full_pipeline)
     oracle="""
 SELECT o.o_orderstatus, COUNT(*) AS n
 FROM orders o

@@ -9,8 +9,12 @@ Python interop for the few places Python crosses into executors.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 DEFAULT_CONFS: dict[str, str] = {
     # Adaptive query execution: runtime shuffle-partition coalescing,
@@ -26,7 +30,8 @@ DEFAULT_CONFS: dict[str, str] = {
     # the pattern pipeline — a plan that only exists because the bench
     # corpus is small (at 100 TB those relations can never broadcast),
     # whose multi-second hash-relation rebuilds were the residual
-    # p_pipeline_bulk variance (measured: min 5.1s / median 5.8s at
+    # variance of the pattern pipeline, p_full_pipeline's code path
+    # today (measured on its bulk line: min 5.1s / median 5.8s at
     # 8 MB vs 5.5-15s at 64 MB; every graph/retrieval headline got
     # equal or faster).  Genuinely-small sides still broadcast: dims
     # fit in 8 MB statically, and AQE's dynamic join selection
@@ -51,11 +56,11 @@ DEFAULT_CONFS: dict[str, str] = {
     # so EVERY execution cyclically evicted and re-Janino-compiled the
     # entire plan (~134 compiles/run measured via CodegenMetrics), and
     # 32 task threads piling onto cold generated classes produced the
-    # intermittent 2-4x wall spikes BENCH_r05 recorded on
-    # p_pipeline_bulk.  5000 entries holds the whole query suite's
-    # generated classes (metaspace cost only); measured: compiles/run
-    # drop to 0 after warmup, steady-state wall 4.5s -> 3.4s at
-    # sf0.001.  Same effect on real executors at cluster scale — this
+    # intermittent 2-4x wall spikes BENCH_r05 recorded on the bulk
+    # pattern pipeline (now p_full_pipeline).  5000 entries holds the
+    # whole query suite's generated classes (metaspace cost only);
+    # measured: compiles/run drop to 0 after warmup, steady-state wall
+    # 4.5s -> 3.4s at sf0.001.  Same effect on real executors at cluster scale — this
     # cache is per-JVM.
     "spark.sql.codegen.cache.maxEntries": "5000",
     # ...and the JIT code cache must hold the compiled forms: the JVM
@@ -92,3 +97,13 @@ def get_spark(app_name: str = "graphraft-spark", master: str | None = None,
 
 def sf_dir(default: str = "/root/testdata/sf0.1") -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", default)
+
+
+def local_frame(spark: SparkSession, rows: Sequence[dict],
+                schema: StructType) -> DataFrame:
+    """Driver-side rows as a DataFrame that Spark plans as a
+    LocalRelation: an Arrow table's rows sit inline in the plan, while
+    a Python list would be parallelized and every action on it would
+    launch a job."""
+    table = pa.Table.from_pylist(list(rows), schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

@@ -1,6 +1,7 @@
 """Golden tests for the pattern engine on the hand-built fixture graph
 (FIXTURES.md §4 golden queries 1-4)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from graphraft_spark.patterns import onehop, twohop, twopath
@@ -153,45 +154,119 @@ def test_primary_label(spark):
     assert got == ["Paper", "Author"]
 
 
-def test_batch_enumeration_matches_single(spark, tiny_graph):
-    """enumerate_paths_batch for one question == enumerate_paths with
-    the same anchors, for every template including the 2-anchor 2path."""
+# two questions sharing the anchor "Ada": Bob and P-alpha have a common
+# neighbour (P-beta), so a qid leak would pair them in a 2path row
+TWO_Q = {1: ["Ada", "Bob"], 2: ["Ada", "P-alpha"]}
+TWO_Q_GOLD = {1: [11], 2: [10, 12]}
+
+
+def _two_q_frames(spark):
+    anchors = spark.createDataFrame(
+        [(q, n) for q, names in TWO_Q.items() for n in names],
+        "qid bigint, name string")
+    gold = spark.createDataFrame(
+        [(q, i) for q, ids in TWO_Q_GOLD.items() for i in ids],
+        "qid bigint, nodeId bigint")
+    return anchors, gold
+
+
+def _sig_rows(rows):
+    return sorted(tuple(r[c] for c in r.__fields__ if c != "qid")
+                  for r in rows)
+
+
+def test_batch_questions_do_not_bleed(spark, tiny_graph):
+    """Each question's rows of a two-question batch equal the
+    one-question enumeration: no 2path pairs anchors of different
+    questions, and correctCnt counts only the question's own gold."""
     from graphraft_spark.patterns.enumerate import (
         enumerate_paths, enumerate_paths_batch)
 
-    names = ["Ada", "Bob"]
-    single = enumerate_paths(tiny_graph, names).collect()
-    anchors = spark.createDataFrame([(7, n) for n in names],
-                                    "qid bigint, name string")
-    batch = enumerate_paths_batch(tiny_graph, anchors).collect()
-    assert all(r["qid"] == 7 for r in batch)
-    key = lambda r: tuple((r[c] or "") for c in  # noqa: E731
-                          ("pattern", "label1", "name1", "type1", "label2",
-                           "type2", "label3", "name3")) + (r["totalCnt"],)
-    assert sorted(map(key, single)) == sorted(map(key, batch))
-    assert len(batch) > 0
+    anchors, gold = _two_q_frames(spark)
+    batch_df = enumerate_paths_batch(tiny_graph, anchors, gold=gold)
+    assert "Expand" not in \
+        batch_df._jdf.queryExecution().executedPlan().toString()
+    batch = batch_df.collect()
+    for q, names in TWO_Q.items():
+        mine = [r for r in batch if r["qid"] == q]
+        single = enumerate_paths(tiny_graph, names,
+                                 tgt_ids=TWO_Q_GOLD[q]).collect()
+        assert mine and _sig_rows(mine) == _sig_rows(single), q
+        for r in mine:
+            if r["pattern"] == "2path":
+                assert {r["name1"], r["name3"]} <= set(names), r
+    writes = {r["qid"]: r["correctCnt"] for r in batch
+              if (r["pattern"], r["name1"], r["type1"])
+              == ("1hop", "Ada", "WRITES")}
+    # Ada wrote papers 10, 11 and 12
+    assert writes == {1: 1, 2: 2}
 
 
-def test_batch_supervised_correct_counts(spark, tiny_graph):
-    """Batch supervised mode: per-question gold frames produce the same
-    correctCnt as the single-question tgt_ids path."""
-    from graphraft_spark.patterns.enumerate import (
-        enumerate_pattern, enumerate_paths_batch)
+_TARGET_LABEL_COL = {"1hop": "label2", "2hop": "label3", "2path": "label2"}
 
-    gold_ids = [10, 11]  # Papers P-alpha, P-beta
-    single = {(r["name1"], r["type1"], r["label2"]):
-              (r["totalCnt"], r["correctCnt"])
-              for r in enumerate_pattern(tiny_graph, "1hop", ["Ada"],
-                                         tgt_ids=gold_ids).collect()}
-    anchors = spark.createDataFrame([(3, "Ada")], "qid bigint, name string")
-    gold = spark.createDataFrame([(3, i) for i in gold_ids],
-                                 "qid bigint, nodeId bigint")
-    batch = {(r["name1"], r["type1"], r["label2"]):
-             (r["totalCnt"], r["correctCnt"])
-             for r in enumerate_paths_batch(
-                 tiny_graph, anchors, patterns=("1hop",),
-                 gold=gold).collect()}
-    assert single == batch and single
+
+@pytest.mark.parametrize("pattern", ["1hop", "2hop", "2path"])
+def test_batch_specific_target_label(spark, tiny_graph, pattern):
+    """Pruning on the returned node's label (the middle node for 2path)
+    equals the unpruned enumeration filtered on that label."""
+    from graphraft_spark.patterns.enumerate import enumerate_paths_batch
+
+    anchors, gold = _two_q_frames(spark)
+    pruned = enumerate_paths_batch(
+        tiny_graph, anchors, patterns=(pattern,), gold=gold,
+        specific_target_label="Paper").collect()
+    full = enumerate_paths_batch(tiny_graph, anchors, patterns=(pattern,),
+                                 gold=gold).collect()
+    col = _TARGET_LABEL_COL[pattern]
+    want = [r for r in full if r[col] == "Paper"]
+    assert want and len(want) < len(full)
+    assert sorted(map(tuple, pruned)) == sorted(map(tuple, want))
+
+
+def _engine_run(spark, graph, patterns):
+    from graphraft_spark.api import EngineConfig, GraphRAFTEngine
+
+    GraphRAFTEngine(spark, graph,
+                    config=EngineConfig(patterns=patterns)).run("Bob")
+
+
+def _bulk(spark, graph, patterns):
+    from graphraft_spark.patterns.compiler import SPEC_COLS, run_patterns_bulk
+
+    specs = spark.createDataFrame(
+        [("1hop", "Author", "Bob", "WRITES", "Paper", None, None, None)],
+        ", ".join(f"{c} string" for c in SPEC_COLS))
+    run_patterns_bulk(graph, specs, patterns=patterns)
+
+
+def _enum(spark, graph, patterns):
+    from graphraft_spark.patterns.enumerate import enumerate_paths
+
+    enumerate_paths(graph, ["Bob"], patterns=patterns)
+
+
+def _enum_batch(spark, graph, patterns):
+    from graphraft_spark.patterns.enumerate import enumerate_paths_batch
+
+    enumerate_paths_batch(graph, spark.createDataFrame(
+        [(1, "Bob")], "qid bigint, name string"), patterns=patterns)
+
+
+@pytest.mark.parametrize("patterns", [(), ("1hop", "3hop")],
+                         ids=["empty", "unknown"])
+@pytest.mark.parametrize("call, op", [
+    (_enum, "enumerate_paths"),
+    (_enum_batch, "enumerate_paths_batch"),
+    (_bulk, "run_patterns_bulk"),
+    (_engine_run, "enumerate_paths_batch"),
+], ids=["enumerate_paths", "enumerate_paths_batch", "run_patterns_bulk",
+        "engine_run"])
+def test_bad_patterns_rejected(spark, tiny_graph, call, op, patterns):
+    """An empty or unknown template selection is a ValueError naming
+    the operator and the allowed templates, not a None frame."""
+    with pytest.raises(ValueError, match=op) as err:
+        call(spark, tiny_graph, patterns)
+    assert "'1hop', '2hop', '2path'" in str(err.value)
 
 
 def test_enumerate_batch_approx_mode(spark, tiny_graph):

@@ -23,8 +23,9 @@ FLAGSHIPS = [
      "(8x16-bit buckets) - never all-pairs; exact Hamming verify."),
     ("g_twohop_enum",
      "Anchors broadcast; two expansion joins over the pre-reversed "
-     "undirected parquet; edge-uniqueness filters; map-side partial "
-     "countDistinct — one exchange carries partially-deduped rows."),
+     "undirected parquet; edge-uniqueness filters; bindings deduped to "
+     "(signature prefix, target) before the terminal node's label is "
+     "joined on, then a plain count per signature."),
     ("g_pattern_exec_2hop",
      "Instantiated pattern: anchor name filter PUSHED into the "
      "label-partitioned node parquet scan; broadcast joins only."),
