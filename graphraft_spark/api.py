@@ -16,7 +16,11 @@ After entity matching a question costs two Spark actions: the
 enumeration collect (the ranker's input) and the retrieval collect
 (at most ``max_nodes - 1`` rows).  The ranker and the generator both
 run in-process on the driver, as the reference's local model calls do,
-and the returned retrieval frame is already materialized.
+and the returned retrieval frame is already materialized.  Every frame
+the driver builds on the way (anchors, ranked specs, the result) is an
+Arrow-backed local relation, so the online path starts no Python
+process: no Python daemon or worker is forked for a question.  (NFC
+matching on a non-ASCII graph is the exception: it runs a pandas UDF.)
 """
 
 from __future__ import annotations

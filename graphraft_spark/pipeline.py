@@ -21,6 +21,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    DataType,
     IntegerType,
     LongType,
     StringType,
@@ -45,6 +46,8 @@ from graphraft_spark.patterns.enumerate import (
 from graphraft_spark.retrieve import budgeted_accumulate
 from graphraft_spark.session import local_frame
 
+_ANCHOR_SCHEMA = StructType([StructField("qid", LongType()),
+                             StructField("name", StringType())])
 _RANKED_SCHEMA = StructType(
     [StructField("qid", LongType())]
     + [StructField(c, StringType()) for c in SPEC_COLS]
@@ -71,6 +74,15 @@ def rank_candidates(ranker: QueryRanker, question: str,
     return [(by_text[text], idx) for idx, text in enumerate(top)]
 
 
+def _empty(spark: SparkSession, prop_cols: tuple[str, ...]) -> DataFrame:
+    """run_pipeline's result schema with no rows."""
+    return local_frame(spark, [], DataType.fromDDL(
+        "qid bigint, nodeId bigint, queryIdx int, rank int, "
+        "similarity double, name string, "
+        + "".join(f"{c} string, " for c in prop_cols)
+        + "patterns array<string>"))
+
+
 def run_pipeline(
     spark: SparkSession,
     graph: PropertyGraph,
@@ -89,27 +101,25 @@ def run_pipeline(
     provenance-carrying.
 
     Job shape is O(1) Spark jobs per STAGE, independent of question
-    count: one batch enumeration job over a (qid, name) anchor frame,
-    ONE driver collect of the aggregated signature table (the ranker
-    seam input — the reference feeds these to a constrained-beam LLM,
-    llm1.py:83-87), then one execution+accumulation job over the ranked
-    (qid, <spec cols>, queryIdx) rows as a local frame: each template's
-    join tree executes every distinct spec, and a broadcast null-safe
-    join on the spec columns fans the results back out to questions.
+    count: one batch enumeration job over a local (qid, name) anchor
+    frame, ONE driver collect of the aggregated signature table (the
+    ranker seam input — the reference feeds these to a constrained-beam
+    LLM, llm1.py:83-87), then one execution+accumulation job over the
+    ranked (qid, <spec cols>, queryIdx) rows as a local frame: each
+    template's join tree executes every distinct spec, and a broadcast
+    null-safe join on the spec columns fans the results back out to
+    questions.  Both driver-built frames are Arrow-backed local
+    relations, so no Python worker starts.
     """
     sim = similarity or default_similarity
 
     # Stage 2: enumerate ALL questions in one job.
-    anchor_rows = [(int(qid), str(n)) for qid, _, src_names in questions
-                   for n in src_names]
-    empty = spark.createDataFrame(
-        [], "qid bigint, nodeId bigint, queryIdx int, rank int, "
-            "similarity double, name string, "
-            + "".join(f"{c} string, " for c in prop_cols)
-            + "patterns array<string>")
+    anchor_rows = [{"qid": int(qid), "name": str(n)}
+                   for qid, _, src_names in questions for n in src_names]
     if not anchor_rows:
-        return empty
-    anchors = spark.createDataFrame(anchor_rows, "qid bigint, name string")
+        return _empty(spark, prop_cols)
+    # a LocalRelation: no Python RDD to broadcast, so no Python worker
+    anchors = local_frame(spark, anchor_rows, _ANCHOR_SCHEMA)
     sigs = enumerate_paths_batch(graph, anchors, patterns=patterns,
                                  specific_target_label=specific_target_label)
     recs = [r.asDict() for r in sigs.collect()]  # the ONE driver collect
@@ -124,7 +134,7 @@ def run_pipeline(
         for qid, rows in per_q.items()
         for row, idx in rank_candidates(ranker, qtext[qid], rows, k)]
     if not ranked_rows:
-        return empty
+        return _empty(spark, prop_cols)
 
     # Stage 4: the ranked specs are data.  run_patterns_bulk runs each
     # distinct spec once inside its template's join tree; the broadcast
@@ -153,12 +163,10 @@ def run_pipeline(
     )
 
     # Stage 5: budgeted accumulation across all questions in one job.
-    # No persist: the caller's single action plans the first-seen and
-    # provenance branches together, so the second branch reads every
-    # shuffle and broadcast of the pattern joins through ReusedExchange.
-    # Only the work above those exchanges (each template's last join and
-    # dedup, the fan-out join and the ranking window's own exchange; the
-    # branches prune different columns) runs twice, and nothing stays
+    # budgeted_accumulate reads `results` once (one aggregate per node
+    # carries both the first-seen row and the provenance), so the
+    # pattern joins, the fan-out join and the ranking window each run
+    # once in the caller's single action.  No persist: nothing stays
     # cached behind the returned frame.
     return budgeted_accumulate(results, max_nodes=max_nodes,
                                prop_cols=("name",) + tuple(prop_cols))

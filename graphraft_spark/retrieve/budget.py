@@ -31,6 +31,14 @@ sequential loop:
   *first*, then already-found ids are excluded (retriever.py:14-17);
   the same stop rule at rate 1 ⇒ the final set has at most
   ``max_nodes - 1`` nodes whenever the budget fires.
+
+``budgeted_accumulate`` derives all of that in one pass over its input:
+one ``groupBy(qid, nodeId)`` yields each node's first-seen row and its
+occurrences sorted by (queryIdx, rank); one window over ``qid`` numbers
+the nodes by first appearance (``seen_order``) and finds the crossing
+row; the kept nodes' occurrence lists are cut to the rows strictly
+before it.  ``results`` is referenced once in the plan, so whatever
+computes it (the pipeline's pattern joins) runs once.
 """
 
 from __future__ import annotations
@@ -53,63 +61,55 @@ def budgeted_accumulate(results: DataFrame, max_nodes: int,
                         pattern_rate: float = 1.0,
                         prop_cols: tuple[str, ...] = ()) -> DataFrame:
     """D2+D3+D4: first-seen dedup + provenance accumulation + node-budget
-    stop over per-question result streams.
+    stop over per-question result streams, in one pass over ``results``.
 
     Returns one row per kept node:
-    ``(qid, nodeId, similarity, <props...>, patterns ARRAY<STRING>,
-    queryIdx, rank)`` where queryIdx/rank locate the first-seen row.
+    ``(qid, nodeId, queryIdx, rank, similarity, <props...>,
+    patterns ARRAY<STRING>)`` where queryIdx/rank locate the first-seen
+    row and patterns are in consumption order.
     """
     budget = math.ceil(pattern_rate * max_nodes)
-    ranked = _ranked(results).select(
-        _Q, "queryIdx", "rank", "nodeId", "similarity", "pattern",
-        *prop_cols)
+    ranked = _ranked(results)
 
-    # Fold the payload (similarity + props) into the min-struct: the
-    # (queryIdx, rank) prefix is unique within each (qid, nodeId) group,
-    # so the winning struct IS the first-seen row and its payload values
-    # are selected by construction — exact even when a caller supplies
-    # per-row-varying props (retriever.py:82-86 semantics).  F.first in
-    # an aggregation is non-deterministic and was only safe by accident.
-    first = (
+    # One aggregate per (qid, nodeId) holds both sides of the node.  The
+    # (queryIdx, rank) prefix is unique within each group, so the
+    # min-struct IS the first-seen row and its payload (similarity +
+    # props) is selected by construction — exact even when a caller
+    # supplies per-row-varying props (retriever.py:82-86 semantics).
+    # The sorted list is every occurrence's pattern in consumption order.
+    nodes = (
         ranked.groupBy(_Q, "nodeId")
         .agg(F.min(F.struct("queryIdx", "rank", "similarity",
-                            *prop_cols)).alias("fp"))
+                            *prop_cols)).alias("fp"),
+             F.array_sort(F.collect_list(
+                 F.struct("queryIdx", "rank", "pattern"))).alias("pp"))
         .select(_Q, "nodeId", F.col("fp.queryIdx").alias("queryIdx"),
                 F.col("fp.rank").alias("rank"),
                 F.col("fp.similarity").alias("similarity"),
-                *[F.col(f"fp.{c}").alias(c) for c in prop_cols])
+                *[F.col(f"fp.{c}").alias(c) for c in prop_cols], "pp")
     )
-    w_seen = Window.partitionBy(_Q).orderBy("queryIdx", "rank")
-    first = first.select("*", F.row_number().over(w_seen).alias("seen_order"))
+    # seen_order and the crossing row (the B-th first-seen row, null if
+    # the budget never fires) share the qid partitioning and its sort.
+    seen = Window.partitionBy(_Q).orderBy("queryIdx", "rank")
+    nodes = nodes.select("*", F.row_number().over(seen).alias("seen_order"))
+    crossing = F.max(F.when(F.col("seen_order") == budget,
+                            F.struct("queryIdx", "rank"))
+                     ).over(Window.partitionBy(_Q))
+    nodes = nodes.select("*", crossing.alias("cross"))
 
-    # the crossing row per qid (None if the budget never fires)
-    crossing = (
-        first.filter(F.col("seen_order") == budget)
-        .select(_Q, F.col("queryIdx").alias("cross_q"),
-                F.col("rank").alias("cross_r"))
-    )
-    kept = (
-        first.filter(F.col("seen_order") < budget)
-        .drop("seen_order")
-    )
+    # kept nodes: first seen strictly before the crossing row; their
+    # provenance: occurrences strictly before it
+    def consumed(x: Column) -> Column:
+        cq, cr = F.col("cross.queryIdx"), F.col("cross.rank")
+        return (F.col("cross").isNull() | (x["queryIdx"] < cq)
+                | ((x["queryIdx"] == cq) & (x["rank"] < cr)))
 
-    # provenance: every consumed row (strictly before the crossing row)
-    # whose node was kept, patterns in consumption order
-    consumed = ranked.join(crossing, _Q, "left").filter(
-        F.col("cross_q").isNull()
-        | (F.col("queryIdx") < F.col("cross_q"))
-        | ((F.col("queryIdx") == F.col("cross_q"))
-           & (F.col("rank") < F.col("cross_r")))
+    return (
+        nodes.filter(F.col("seen_order") < budget)
+        .select(_Q, "nodeId", "queryIdx", "rank", "similarity", *prop_cols,
+                F.transform(F.filter("pp", consumed),
+                            lambda x: x["pattern"]).alias("patterns"))
     )
-    patterns = (
-        consumed.groupBy(_Q, "nodeId")
-        .agg(F.array_sort(
-            F.collect_list(F.struct("queryIdx", "rank", "pattern"))
-        ).alias("pp"))
-        .select(_Q, "nodeId",
-                F.transform("pp", lambda x: x["pattern"]).alias("patterns"))
-    )
-    return kept.join(patterns, [_Q, "nodeId"])
 
 
 def vector_topup(candidates: DataFrame, kept: DataFrame, max_nodes: int,

@@ -56,6 +56,16 @@ def test_budget_crosser_mid_query_cuts_provenance(spark):
     assert out[0]["patterns"] == ["p0"]
 
 
+def test_budget_reads_its_input_once(spark):
+    """First-seen rows and provenance come from one aggregate, so the
+    optimized plan references the input once: whatever computes the
+    results (the pipeline's pattern joins) runs once."""
+    out = budgeted_accumulate(_results(spark), max_nodes=4,
+                              pattern_rate=0.5)
+    leaves = out._jdf.queryExecution().optimizedPlan().collectLeaves()
+    assert leaves.size() == 1, leaves.toString()
+
+
 def test_vector_topup_exclusion_and_cap(spark):
     kept = budgeted_accumulate(_results(spark), max_nodes=4)
     cands = spark.createDataFrame(

@@ -152,6 +152,42 @@ def test_run_pipeline_plan_size_constant_in_k(spark, tiny_graph):
     assert shape(1) == shape(8)
 
 
+def _leaf_classes(df):
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [leaves.apply(i).getClass().getSimpleName()
+            for i in range(leaves.size())]
+
+
+def test_run_pipeline_driver_frames_are_local(spark, tiny_graph,
+                                              monkeypatch):
+    """The anchors handed to the enumeration, and the empty result, are
+    Arrow-backed LocalRelations: a parallelized Python list would plan
+    as a LogicalRDD, whose first action starts Python workers."""
+    from graphraft_spark import pipeline
+    from graphraft_spark.llm import LexicographicRanker
+
+    seen = []
+
+    def spy(graph, anchors, **kw):
+        seen.append(anchors)
+        return enumerate_paths_batch(graph, anchors, **kw)
+
+    enumerate_paths_batch = pipeline.enumerate_paths_batch
+    monkeypatch.setattr(pipeline, "enumerate_paths_batch", spy)
+    pipeline.run_pipeline(spark, tiny_graph, questions=QUESTIONS[:1],
+                          ranker=LexicographicRanker(), k=1,
+                          patterns=("1hop",))
+    assert [_leaf_classes(a) for a in seen] == [["LocalRelation"]]
+
+    empty = pipeline.run_pipeline(
+        spark, tiny_graph, questions=[(1, "nobody?", [])],
+        ranker=LexicographicRanker(), prop_cols=("detail",))
+    assert _leaf_classes(empty) == ["LocalRelation"]
+    assert empty.columns == ["qid", "nodeId", "queryIdx", "rank",
+                             "similarity", "name", "detail", "patterns"]
+    assert empty.collect() == []
+
+
 def test_run_patterns_bulk_matches_per_spec_execution(spark, tiny_graph):
     """One broadcast join tree per template == run_pattern_nodes looped
     over every spec, across all three templates."""

@@ -1,5 +1,6 @@
-"""tools/plan_audit.py: the duplicated-reference counter itself (no
-Spark — the full-catalog sweep runs as a round gate, not in pytest)."""
+"""tools/plan_audit.py: the duplicated-reference counter itself, and
+the allowances of the retrieval queries (the full-catalog sweep runs as
+a standalone gate, not in pytest)."""
 
 import os
 import sys
@@ -120,3 +121,29 @@ def test_leaf_rdd_rerefs_not_counted_as_rescans(spark):
     rdds = [i for i, _ in leaves if i and i.startswith("rdd:")]
     assert len(rdds) == 2 and rdds[0] == rdds[1]
     assert dup_count_leaves(leaves) == 0
+
+
+def test_retrieval_allowances_are_exact(spark):
+    """The ALLOWED entries of the queries that run budgeted_accumulate
+    are their reviewed counts, not ceilings: at sf0.001 each optimized
+    plan has exactly that many duplicated base-relation references, so
+    a branch that re-reads the pattern results fails here, not only in
+    the standalone sweep.  Plans are built, not executed (the query
+    functions themselves still run their own setup actions: the
+    pipeline's enumeration collect, r_retrieve_data's input persist)."""
+    from conftest import SF_SMOKE
+    from plan_audit import ALLOWED, dup_count_leaves, leaf_identities
+
+    from graphraft_spark import registry
+
+    registry.load_all()
+    lookup = dict(registry.EXTRA_QUERIES)
+    lookup.update(registry.QUERIES)
+    names = ("p_full_pipeline", "r_budget_accumulate", "r_retrieve_data",
+             "m_retrieval_eval")
+    got = {}
+    for name in names:
+        plan = lookup[name](spark, SF_SMOKE)._jdf \
+            .queryExecution().optimizedPlan()
+        got[name] = dup_count_leaves(leaf_identities(plan))
+    assert got == {name: ALLOWED[name] for name in names}

@@ -9,6 +9,7 @@ disconnected nodes), not in volume.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -108,6 +109,62 @@ def test_budget_monotonicity_and_dedup(spark, rows, budget_small):
     assert len(small_nodes) == len(set(small_nodes))  # dedup
     assert len(small_nodes) < budget_small            # strict cap
     assert set(small_nodes) <= {r["nodeId"] for r in large}
+
+
+def _sequential_budget(rows, max_nodes, pattern_rate):
+    """retriever.py:71-90 as a loop: per qid, consume rows in (queryIdx,
+    similarity DESC, nodeId) order, first-seen wins, re-encounters
+    append their pattern flat, and the row that brings the distinct
+    count to B = ceil(pattern_rate * max_nodes) stops consumption and
+    its node is dropped."""
+    import math
+
+    budget = math.ceil(pattern_rate * max_nodes)
+    out = set()
+    for qid in sorted({r[0] for r in rows}):
+        stream = sorted((r for r in rows if r[0] == qid),
+                        key=lambda r: (r[1], -r[3], r[2]))
+        rank, data = {}, {}
+        for _, q, node, sim, pat in stream:
+            rank[q] = rank.get(q, 0) + 1
+            if node in data:
+                data[node][3].append(pat)
+                continue
+            data[node] = [q, rank[q], sim, [pat]]
+            if len(data) >= budget:
+                del data[node]
+                break
+        out |= {(qid, node, q, rk, sim, tuple(pats))
+                for node, (q, rk, sim, pats) in data.items()}
+    return out
+
+
+@pytest.mark.parametrize("pattern_rate", [0.5, 1.0])
+@settings(**SETTINGS)
+@given(rows=st.lists(
+    st.tuples(st.integers(1, 3),      # qid
+              st.integers(0, 2),      # queryIdx
+              st.integers(0, 7),      # nodeId
+              st.integers(0, 9)),     # similarity basis (ties happen)
+    min_size=1, max_size=30, unique_by=lambda r: r[:3]),
+    max_nodes=st.integers(1, 7))
+def test_budget_matches_sequential_consumption(spark, rows, max_nodes,
+                                               pattern_rate):
+    """budgeted_accumulate == the reference's consumption loop, row for
+    row: kept nodes, their first-seen (queryIdx, rank, similarity) and
+    their patterns in consumption order, across several questions."""
+    from graphraft_spark.retrieve.budget import budgeted_accumulate
+
+    rows = [(qid, q, n, s / 10.0, f"p{qid}.{q}.{n}")
+            for qid, q, n, s in rows]
+    df = spark.createDataFrame(
+        rows, "qid bigint, queryIdx int, nodeId bigint, similarity double, "
+              "pattern string")
+    got = {(r["qid"], r["nodeId"], r["queryIdx"], r["rank"],
+            r["similarity"], tuple(r["patterns"]))
+           for r in budgeted_accumulate(
+               df, max_nodes, pattern_rate=pattern_rate).collect()}
+    assert got == _sequential_budget(rows, max_nodes, pattern_rate)
 
 
 @settings(**SETTINGS)

@@ -64,14 +64,21 @@ ALLOWED: dict[str, int] = {
     "s_entity_match_fallback": 2,
     # walks/triangles/adamic: duplication fixed round 10 via lazy
     # checkpoints — 0 duplicated refs expected (ratchet).
-    # retrieval/pipeline: qid frames and prop dims are tiny broadcast
-    # tables consumed by several budget stages.
-    "m_retrieval_eval": 6, "p_full_pipeline": 2, "p_curate_corpus": 3,
-    "r_budget_accumulate": 5, "r_negative_samples": 1,
-    # r_retrieve_data: 10 refs to ONE localCheckpointed ranked frame
-    # (cached partitions, not parquet re-scans) — 9 under subset keying,
-    # which now also attributes the pruned 4-col vector-top-up read
-    "r_retrieve_data": 9, "r_token_budget": 1,
+    # retrieval: budgeted_accumulate reads its input once.  The fixture
+    # results read customer once per query stream (q0 ∪ q1: 1);
+    # m_retrieval_eval adds the gold-label read of customer (2).
+    "m_retrieval_eval": 2, "p_curate_corpus": 3,
+    "r_budget_accumulate": 1, "r_negative_samples": 1,
+    # p_full_pipeline: ONE copy of the 1hop + 2hop join trees — 5 nodes
+    # reads (x1,x2 | x1,x2,x3: 4), 3 undirected reads (r1 | r1,r2: 2)
+    # and the broadcast spec table once per template (1): the
+    # multi-hop shape g_pattern_exec_2hop is allowed 3 for, per template.
+    "p_full_pipeline": 7,
+    # r_retrieve_data: the persisted results frame is read once per
+    # consumer of the kept rows (the pattern branch, the top-up
+    # exclusion, the kept count), and subset keying merges the pruned
+    # 4-col read of the persisted candidates into that group (3)
+    "r_retrieve_data": 3, "r_token_budget": 1,
     "r_token_budget_exact": 9, "e_entity_resolution": 5,
     # OLAP shapes where the second reference IS the semantics
     # (set ops, nation pairs both directions, semi+main).
