@@ -12,15 +12,17 @@ pruning).  Batch pipelines should use graphraft_spark.pipeline directly
 (``run_pipeline`` + ``answer_questions``, re-exported here); this facade
 is the interactive path.
 
-After entity matching a question costs two Spark actions: the
-enumeration collect (the ranker's input) and the retrieval collect
+Entity matching is one Spark action for all of a question's entities
+(an encoder's vector fallback adds one).  After it a question costs two:
+the enumeration collect (the ranker's input) and the retrieval collect
 (at most ``max_nodes - 1`` rows).  The ranker and the generator both
 run in-process on the driver, as the reference's local model calls do,
 and the returned retrieval frame is already materialized.  Every frame
-the driver builds on the way (anchors, ranked specs, the result) is an
-Arrow-backed local relation, so the online path starts no Python
-process: no Python daemon or worker is forked for a question.  (NFC
-matching on a non-ASCII graph is the exception: it runs a pandas UDF.)
+the driver builds on the way (entities, anchors, ranked specs, the
+result) is an Arrow-backed local relation, so the online path starts
+no Python process: no Python daemon or worker is forked for a
+question.  (NFC matching on a non-ASCII graph is the exception: it
+runs a pandas UDF.)
 """
 
 from __future__ import annotations
@@ -42,7 +44,7 @@ from graphraft_spark.llm.protocols import (
     TrieConstrainedRanker,
 )
 from graphraft_spark.pipeline import answer_questions, run_pipeline
-from graphraft_spark.search.text import match_entities
+from graphraft_spark.search.text import has_non_ascii_names, match_entities
 from graphraft_spark.session import local_frame
 
 __all__ = ["EngineConfig", "GraphRAFTEngine", "answer_questions",
@@ -111,19 +113,10 @@ class GraphRAFTEngine:
 
     def match_nodes(self, entities: Sequence[tuple[str, str]]) -> list[str]:
         """Stage 3 (ner.py:95-120): normalized-equality match with vector
-        fallback when an encoder is plugged in.  NFC auto-enables on
-        non-ASCII data (config.nfc=None) — probed once per engine.
-
-        ``match_entities`` runs one small Spark job per entity — the
-        single-question REPL shape.  A question yields a handful of
-        entities (ner.py's LLM emits 1-4); anything frame-sized here
-        means a batch pipeline is misrouted through the per-question
-        API, so refuse and point at the set-based twin."""
-        if len(entities) > 32:
-            raise ValueError(
-                f"{len(entities)} entities through the per-question path "
-                "(one Spark job each); use batch_match_entities for "
-                "frame-sized entity lists")
+        fallback when an encoder is plugged in, each within the entity's
+        label: one Spark action for all entities, plus one for the
+        fallback.  NFC auto-enables on non-ASCII data (config.nfc=None)
+        — probed once per engine."""
         return match_entities(self.spark, self.graph, entities,
                               encoder=self.encoder, nfc=self._nfc())
 
@@ -131,8 +124,6 @@ class GraphRAFTEngine:
         if self.config.nfc is not None:
             return self.config.nfc
         if self._nfc_auto is None:
-            from graphraft_spark.search.text import has_non_ascii_names
-
             self._nfc_auto = has_non_ascii_names(self.graph.nodes)
         return self._nfc_auto
 

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from graphraft_spark.graph import GRAPH_ORACLE_CTE, tpch_graph
 from graphraft_spark.registry import register
-from graphraft_spark.search.text import fulltext_match
+from graphraft_spark.search.text import batch_match_entities
 from graphraft_spark.search.vector import dot_col
 from graphraft_spark.sources.pq_cache import load_pq
 
@@ -47,7 +47,9 @@ def s_fulltext_match(spark, sf_dir):
     """C1: normalized-equality entity match (ner.py:111-113) — case-folded,
     trimmed; multi-binding name collapses to one DISTINCT row."""
     g = tpch_graph(spark, sf_dir)
-    return fulltext_match(g.nodes, "  SMALL Ring ")
+    ents = spark.createDataFrame([(1, "  SMALL Ring ")],
+                                 "qid int, entity string")
+    return batch_match_entities(g, ents).select("name").distinct()
 
 
 @register(
@@ -221,7 +223,6 @@ def s_entity_match_fallback(spark, sf_dir):
     in one join; zero-hit entities fall back to vector KNN top-1 over
     (pseudo) name embeddings (ner.py:95-120 set-based)."""
     from graphraft_spark.graph.model import PropertyGraph
-    from graphraft_spark.search.text import batch_match_entities
 
     g = tpch_graph(spark, sf_dir)
     g2 = PropertyGraph(

@@ -1,4 +1,4 @@
-from graphraft_spark.search.text import fulltext_match, match_entities
+from graphraft_spark.search.text import match_entities
 from graphraft_spark.search.vector import (
     cosine_col,
     dot_col,
@@ -8,7 +8,6 @@ from graphraft_spark.search.vector import (
 )
 
 __all__ = [
-    "fulltext_match",
     "match_entities",
     "cosine_col",
     "dot_col",

@@ -24,6 +24,8 @@ No explode, no corpus-sized shuffle, no Python.
 
 from __future__ import annotations
 
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -240,31 +242,20 @@ def compact_text_index(spark, index_dir: str) -> None:
 # (app_id, realpath, size, mtime_ns) -> collected 1-row meta (static
 # index-layout constants: n_buckets).  The meta table is written once
 # at index build and never appended, so the stat-keyed memo saves a
-# footer read + a 1-row collect JOB per query construction.  Bounded
-# like pq_cache's handle memo.
-_META_MEMO: dict[tuple, object] = {}
+# footer read + a 1-row collect JOB per query construction.
+_META_MEMO: OrderedDict[tuple, object] = OrderedDict()
 
 
 def _index_meta(spark, index_dir: str):
-    import os
-
-    from graphraft_spark.sources.pq_cache import MEMO_BOUND, _app_id
+    from graphraft_spark.sources.pq_cache import stat_memo
 
     p = f"{index_dir}/meta"
-    try:
-        st = os.stat(p)
-        key = (_app_id(spark), os.path.realpath(p),
-               st.st_size, st.st_mtime_ns)
-    except OSError:
-        key = None
-    if key is not None and key in _META_MEMO:
-        return _META_MEMO[key]
-    [meta] = spark.read.parquet(p).collect()
-    if key is not None:
-        if len(_META_MEMO) > MEMO_BOUND:
-            _META_MEMO.clear()
-        _META_MEMO[key] = meta
-    return meta
+
+    def read():
+        [meta] = spark.read.parquet(p).collect()
+        return meta
+
+    return stat_memo(_META_MEMO, spark, p, read)
 
 
 def bm25_query_indexed(spark, index_dir: str, query_terms: list[str],

@@ -7,6 +7,11 @@ The index is only a candidate generator, so the exact semantics is a
 normalized-equality join — which is what we run, letting Catalyst pick
 a broadcast hash join for the tiny entity list.
 
+``batch_match_entities`` is the one matcher: fulltext hits, then a
+vector top-1 fallback for the entities with none, each restricted to
+the entity's label.  ``match_entities`` is its one-question call, a
+single collect however many entities the question names.
+
 Unicode NFC has no native Spark expression; ASCII-only data needs only
 ``lower(trim(...))``.  ``nfc_normalize`` upgrades matching to true NFC
 via an Arrow-batched pandas UDF when requested (kept off the default
@@ -18,11 +23,17 @@ from __future__ import annotations
 import pandas as pd
 
 from collections.abc import Sequence
+from dataclasses import replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from graphraft_spark.graph.model import PropertyGraph
+from graphraft_spark.session import local_frame
+
+# one question's entities: qid is the entity's position in the list
+_ENTITIES = "qid int, entity string, label string"
 
 
 def norm_col(c: Column, nfc: bool = False) -> Column:
@@ -59,101 +70,87 @@ def has_non_ascii_names(nodes: DataFrame) -> bool:
             .limit(1).count() > 0)
 
 
-def fulltext_match(nodes: DataFrame, query_string: str,
-                   label: str | None = None, nfc: bool = False) -> DataFrame:
-    """C1: all node names equal to ``query_string`` under normalization,
-    optionally restricted to a label ('_Entity_' = no restriction,
-    ner.py:95-114).  Returns DISTINCT names (the reference extends
-    ``node_names`` with every hit)."""
-    df = nodes
-    if label is not None and label != "_Entity_":
-        df = df.filter(F.col("label") == label)
-    return (
-        df.filter(norm_col(F.col("name"), nfc) == norm_col(F.lit(query_string), nfc))
-        .select("name")
-        .distinct()
-    )
-
-
 def match_entities(spark: SparkSession, graph: PropertyGraph,
                    entities: Sequence[tuple[str, str]],
-                   encoder=None, k: int = 100, nfc: bool = False) -> list[str]:
-    """C1+C2: the reference's _match_labeled_entities loop (ner.py:95-120):
-    per (label, string) entity, fulltext-match; on zero hits fall back to
-    vector search over name embeddings, LIMIT 1.
+                   encoder=None, nfc: bool = False) -> list[str]:
+    """C1+C2 for one question: :func:`batch_match_entities` over its
+    (label, string) entities, as names in entity order (ner.py:95-120
+    extends ``node_names`` entity by entity).
 
-    ``encoder`` is the pluggable text-embedding seam (the reference calls
-    genai.vector.encode/OpenAI); tests pass a deterministic function.
-    Entity lists are tiny (1-4 per question) so this drives one small
-    Spark job per entity — batch pipelines should use the set-based
-    operators directly.
+    The entities are an Arrow-backed local relation, so matching forks
+    no Python worker, and one collect answers every entity.  ``encoder``
+    is the pluggable text-embedding seam (the reference calls
+    genai.vector.encode/OpenAI); it sees only the entities with zero
+    fulltext hits, whose vector fallback is a second collect.
     """
-    names: list[str] = []
-    for label, string in entities:
-        hits = [r["name"] for r in
-                fulltext_match(graph.nodes, string, label, nfc).collect()]
-        if hits:
-            names.extend(hits)
-            continue
-        if encoder is None:
-            continue
-        from graphraft_spark.search.vector import knn
+    if not entities:
+        return []
+    rows = [{"qid": i, "entity": s, "label": label}
+            for i, (label, s) in enumerate(entities)]
+    labels = {r["label"] for r in rows}
+    if not labels & {None, "_Entity_"}:
+        # a literal label list prunes a label-partitioned node scan;
+        # the label join condition alone cannot
+        graph = replace(graph, nodes=graph.nodes.filter(
+            F.col("label").isin(*labels)))
+    found: dict[int, list[str]] = {}
 
-        emb = encoder(string)
-        cand = graph.nodes if label in (None, "_Entity_") else (
-            graph.nodes.filter(F.col("label") == label))
-        top = knn(cand, "nameEmbedding", emb, k=k).limit(1)
-        names.extend(r["name"] for r in top.select("name").collect())
-    return names
+    def collect(ents: DataFrame, **emb_cols) -> None:
+        for r in batch_match_entities(graph, ents, nfc=nfc,
+                                      **emb_cols).collect():
+            found.setdefault(r["qid"], []).append(r["name"])
+
+    collect(local_frame(spark, rows, StructType.fromDDL(_ENTITIES)))
+    missing = [r for r in rows if r["qid"] not in found]
+    if encoder is not None and missing:
+        embedded = [dict(r, emb=[float(x) for x in encoder(r["entity"])])
+                    for r in missing]
+        schema = StructType.fromDDL(_ENTITIES + ", emb array<double>")
+        collect(local_frame(spark, embedded, schema),
+                name_emb_col="nameEmbedding", entity_emb_col="emb")
+    return [n for i in range(len(rows)) for n in sorted(found.get(i, []))]
 
 
 def batch_match_entities(graph, entities: "DataFrame",
                          name_emb_col: str | None = None,
                          entity_emb_col: str | None = None,
-                         nfc: bool | None = False,
-                         knn_via: str = "brute",
-                         knn_opts: dict | None = None) -> "DataFrame":
+                         nfc: bool = False) -> "DataFrame":
     """Set-based C1+C2 for MANY entities at once (the batch shape of
     _match_labeled_entities, ner.py:95-120): one normalized-equality
     join for fulltext hits; entities with zero hits fall back to vector
-    KNN top-1 over node name embeddings (when embedding columns are
+    top-1 over node name embeddings (when embedding columns are
     supplied).  Returns (qid, entity, name, matched_by).
 
-    ``nfc=None`` auto-enables true Unicode NFC matching when the graph's
-    names contain non-ASCII (the reference always NFC-normalizes,
-    ner.py:111-113; we keep it off ASCII data so oracle SQL stays
-    expressible — SURVEY §7.7).
+    An optional ``label`` column of ``entities`` restricts both the
+    fulltext hits and the fallback candidates to nodes of that label;
+    a null label or ``'_Entity_'`` matches any label (ner.py:95-114).
 
-    ``knn_via`` routes the vector fallback:
-
-    - ``"brute"`` (default, exact): broadcast the unmatched entities
-      (tiny by contract — they are the zero-hit remainder of a question
-      batch) against every node name embedding.  Right up to corpora
-      where a full name scan per batch is acceptable.
-    - ``"srp"``: SRP-LSH multiprobe (ops/similarity.py:srp_lsh_topk)
-      — hashes names into 2^bits buckets and probes only the entity's
-      bucket + Hamming-1 neighbors.  Approximate (an empty probe set
-      yields no fallback row for that entity).  ``knn_opts``:
-      ``bits`` (default 8), ``seed``.
-    - ``"ivf"``: partition-pruned probe of a PRE-BUILT IVF index over
-      (name, embedding) rows (ops/similarity.py:ivf_search_pruned) —
-      the 100 TB shape: per-entity scan cost is nprobe/k of the corpus.
-      ``knn_opts``: ``index_dir`` (required; build with
-      ivf_assign + save_ivf_index using id_col='name'), ``nprobe``.
+    The fallback is exact: the unmatched entities (tiny by contract —
+    the zero-hit remainder of a question batch) are broadcast against
+    every node name embedding, ranked by dot product with ties broken
+    by name.  Ingest L2-normalizes embeddings, so this ranks as the
+    reference's cosine index does.
     """
-    if nfc is None:
-        nfc = has_non_ascii_names(graph.nodes)
     from pyspark.sql import Window
 
     from graphraft_spark.search.vector import dot_col
 
-    opts = dict(knn_opts or {})
+    labeled = "label" in entities.columns
     e = entities.select("qid", "entity",
-                        norm_col(F.col("entity"), nfc).alias("k"))
+                        norm_col(F.col("entity"), nfc).alias("k"),
+                        *(["label"] if labeled else []))
+    nlabel = [F.col("label").alias("nlabel")] if labeled else []
     n = graph.nodes.select(
-        "name", norm_col(F.col("name"), nfc).alias("k"),
-        *( [F.col(name_emb_col)] if name_emb_col else [] ))
-    hits = (F.broadcast(e).join(n.select("name", "k"), "k")
+        "name", norm_col(F.col("name"), nfc).alias("k"), *nlabel)
+
+    def in_label(df: DataFrame) -> DataFrame:
+        if not labeled:
+            return df
+        return df.filter(F.col("label").isNull()
+                         | (F.col("label") == "_Entity_")
+                         | (F.col("label") == F.col("nlabel")))
+
+    hits = (in_label(F.broadcast(e).join(n, "k"))
             .select("qid", "entity", "name",
                     F.lit("fulltext").alias("matched_by"))
             .distinct())
@@ -167,48 +164,16 @@ def batch_match_entities(graph, entities: "DataFrame",
                ["qid", "entity"], "left_anti")
         .join(entities.select("qid", "entity", entity_emb_col),
               ["qid", "entity"]))
-    if knn_via == "brute":
-        scored = (missing.crossJoin(n.select("name", name_emb_col))
-                  .withColumn("sim", dot_col(F.col(entity_emb_col),
-                                             F.col(name_emb_col))))
-        w = Window.partitionBy("qid", "entity").orderBy(
-            F.desc("sim"), F.asc("name"))
-        fallback = (scored.withColumn("rn", F.row_number().over(w))
-                    .filter(F.col("rn") == 1)
-                    .select("qid", "entity", "name",
-                            F.lit("vector").alias("matched_by")))
-        return hits.unionByName(fallback)
-    # ANN tiers share a surrogate struct key so (qid, entity) survives
-    # the single-key contract of the similarity operators.
-    q = missing.select(F.struct("qid", "entity").alias("ekey"),
-                       F.col(entity_emb_col).alias("q_emb"))
-    if knn_via == "srp":
-        from graphraft_spark.ops.similarity import srp_lsh_topk
-
-        first = graph.nodes.select(name_emb_col).first()
-        dim = len(first[0]) if first else 0
-        top = srp_lsh_topk(
-            n.select("name", name_emb_col), q, k=1, dim=dim,
-            bits=opts.get("bits", 8), seed=opts.get("seed", 7),
-            id_col="name", emb_col=name_emb_col,
-            qid_col="ekey", qemb_col="q_emb")
-    elif knn_via == "ivf":
-        from graphraft_spark.ops.similarity import ivf_search_pruned
-
-        # the saved index has its own column names (id/emb as written
-        # by save_ivf_index), independent of the graph's name_emb_col
-        top = ivf_search_pruned(
-            entities.sparkSession, opts["index_dir"], q, k=1,
-            nprobe=opts.get("nprobe", 2), qid_col="ekey",
-            qemb_col="q_emb", id_col=opts.get("id_col", "name"),
-            emb_col=opts.get("emb_col", "embedding"))
-    else:
-        raise ValueError(f"unknown knn_via {knn_via!r} "
-                         "(expected 'brute' | 'srp' | 'ivf')")
-    id_out = "name" if knn_via == "srp" else opts.get("id_col", "name")
-    fallback = top.select(
-        F.col("ekey.qid").alias("qid"), F.col("ekey.entity").alias("entity"),
-        F.col(id_out).alias("name"), F.lit("vector").alias("matched_by"))
+    cand = graph.nodes.select("name", *nlabel, name_emb_col)
+    scored = (in_label(missing.crossJoin(cand))
+              .withColumn("sim", dot_col(F.col(entity_emb_col),
+                                         F.col(name_emb_col))))
+    w = Window.partitionBy("qid", "entity").orderBy(
+        F.desc("sim"), F.asc("name"))
+    fallback = (scored.withColumn("rn", F.row_number().over(w))
+                .filter(F.col("rn") == 1)
+                .select("qid", "entity", "name",
+                        F.lit("vector").alias("matched_by")))
     return hits.unionByName(fallback)
 
 
@@ -219,7 +184,7 @@ def fuzzy_match_entities(nodes: DataFrame, entities: DataFrame,
                          nfc: bool = False) -> DataFrame:
     """C1 fuzzy extension: every node name within Levenshtein distance
     ``max_dist`` of each entity, under the same normalization as
-    :func:`fulltext_match` — the typo-tolerant tier between exact
+    :func:`batch_match_entities` — the typo-tolerant tier between exact
     fulltext equality and the vector fallback (the reference's NER
     output is LLM-generated and misspells entities; ner.py:95-120 then
     finds nothing and pays the vector search).

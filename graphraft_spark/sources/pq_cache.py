@@ -33,13 +33,16 @@ distinct attribute ids can still call ``spark.read.parquet`` directly.
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 # (app_id, realpath, size, mtime_ns) -> DataFrame (lazy plan handle)
-_MEMO: dict[tuple, DataFrame] = {}
-# past this many entries a memo is cleared: bounds a long session's
-# dead fingerprints (every rewrite of a path leaves one behind)
+_MEMO: OrderedDict[tuple, DataFrame] = OrderedDict()
+# past this many entries a memo evicts its least-recently-used one:
+# bounds a long session's dead fingerprints (every rewrite of a path
+# leaves one behind) without dropping the handles still in use
 MEMO_BOUND = 512
 
 
@@ -56,21 +59,29 @@ def _app_id(spark: SparkSession) -> str:
     return app
 
 
-def load_pq(spark: SparkSession, path: str) -> DataFrame:
-    """Memoized ``spark.read.parquet(path)``, keyed on a stat of the
-    top-level path only — see module docstring for when that is safe."""
+def stat_memo(memo: OrderedDict, spark: SparkSession, path: str,
+              build: Callable[[], object]):
+    """``build()`` memoized in ``memo`` under the stat key of ``path``
+    (application id, real path, size, mtime_ns), holding at most
+    ``MEMO_BOUND`` entries in least-recently-used order.  A path that
+    cannot be stat'ed is built on every call, uncached."""
     try:
         st = os.stat(path)
-        key = (_app_id(spark), os.path.realpath(path),
-               st.st_size, st.st_mtime_ns)
     except OSError:
-        # absent path (or non-posix source): fall through to the plain
-        # reader so the caller gets Spark's own error semantics
-        return spark.read.parquet(path)
-    df = _MEMO.get(key)
-    if df is None:
-        if len(_MEMO) > MEMO_BOUND:
-            _MEMO.clear()
-        df = spark.read.parquet(path)
-        _MEMO[key] = df
-    return df
+        return build()
+    key = (_app_id(spark), os.path.realpath(path),
+           st.st_size, st.st_mtime_ns)
+    if key in memo:
+        memo.move_to_end(key)
+        return memo[key]
+    value = memo[key] = build()
+    if len(memo) > MEMO_BOUND:
+        memo.popitem(last=False)
+    return value
+
+
+def load_pq(spark: SparkSession, path: str) -> DataFrame:
+    """Memoized ``spark.read.parquet(path)``, keyed on a stat of the
+    top-level path only — see module docstring for when that is safe.
+    An absent path gets Spark's own error from the plain reader."""
+    return stat_memo(_MEMO, spark, path, lambda: spark.read.parquet(path))

@@ -79,38 +79,96 @@ def test_auto_nfc_stays_off_for_ascii_graphs(spark, tiny_graph):
 def test_batch_match_is_one_job_regardless_of_entity_count(spark, tiny_graph):
     """Pin the batch shape (VERDICT r4 item 7): batch_match_entities
     drives a CONSTANT number of Spark jobs however many entities it
-    gets — the per-entity loop in match_entities must never be the
-    batch path."""
-    from graphraft_spark.search.text import batch_match_entities
+    gets, and so does match_entities, its one-question call."""
+    from graphraft_spark.search import text
 
-    def jobs_for(n_entities):
-        ents = spark.createDataFrame(
-            [(i, "Ada" if i % 2 else "MIT") for i in range(n_entities)],
-            "qid bigint, entity string")
+    def jobs(group, action):
         sc = spark.sparkContext
-        group = f"match-{n_entities}"
         sc.setJobGroup(group, group)
         try:
-            batch_match_entities(tiny_graph, ents).collect()
+            action()
         finally:
             sc.setJobGroup(None, None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    few, many = jobs_for(3), jobs_for(60)
+    def batch(n_entities):
+        ents = spark.createDataFrame(
+            [(i, "Ada" if i % 2 else "MIT") for i in range(n_entities)],
+            "qid bigint, entity string")
+        return jobs(f"match-{n_entities}",
+                    text.batch_match_entities(tiny_graph, ents).collect)
+
+    def question(n_entities):
+        ents = [("Author", "Ada") if i % 2 else ("_Entity_", "MIT")
+                for i in range(n_entities)]
+        return jobs(f"question-{n_entities}",
+                    lambda: text.match_entities(spark, tiny_graph, ents))
+
+    few, many = batch(3), batch(60)
     assert few == many, (few, many)
+    one, eight = question(1), question(8)
+    assert one == eight, (one, eight)
 
 
-def test_frame_sized_entity_list_refused(spark, tiny_graph):
-    """The per-question path runs one Spark job per entity; a
-    frame-sized list means a batch pipeline is misrouted (VERDICT r5:
-    api.py must assert, batch_match_entities is the batch twin)."""
-    import pytest
+def test_entity_label_restricts_matches(spark, tmp_path, monkeypatch):
+    """One normalized name under two labels: a labeled entity matches
+    only its label's node, in the fulltext hits and in the vector
+    fallback; '_Entity_' or a null label matches both (ner.py:95-114).
+    A question whose entities are all labeled scans only those labels'
+    partitions of a label-partitioned node table."""
+    from graphraft_spark.api import EngineConfig, GraphRAFTEngine
+    from graphraft_spark.graph.model import PropertyGraph
+    from graphraft_spark.search import text
 
-    from graphraft_spark.api import GraphRAFTEngine
+    path = str(tmp_path / "nodes")
+    spark.createDataFrame(
+        [(1, "Author", "Mercury", [1.0, 0.0]),
+         (2, "Planet", "MERCURY", [0.0, 1.0])],
+        "nodeId bigint, label string, name string, "
+        "nameEmbedding array<double>").write.partitionBy("label").parquet(path)
+    g = PropertyGraph(
+        nodes=spark.read.parquet(path),
+        edges=spark.createDataFrame([(1, 2, "NAMED_AFTER")],
+                                    "src bigint, dst bigint, relType string"))
+    ents = spark.createDataFrame(
+        [(1, "mercury", "Author", [1.0, 0.0]),
+         (2, "mercury", "Planet", [1.0, 0.0]),
+         (3, "mercury", "_Entity_", [1.0, 0.0]),
+         (4, "mercury", None, [1.0, 0.0]),
+         # nearest name is the Author's, but only Planets are candidates
+         (5, "venus", "Planet", [1.0, 0.0])],
+        "qid int, entity string, label string, qemb array<double>")
+    got = {}
+    for r in text.batch_match_entities(g, ents, name_emb_col="nameEmbedding",
+                                       entity_emb_col="qemb").collect():
+        got.setdefault(r["qid"], set()).add((r["name"], r["matched_by"]))
+    both = {("Mercury", "fulltext"), ("MERCURY", "fulltext")}
+    assert got == {1: {("Mercury", "fulltext")},
+                   2: {("MERCURY", "fulltext")},
+                   3: both, 4: both,
+                   5: {("MERCURY", "vector")}}
 
-    engine = GraphRAFTEngine(spark, tiny_graph)
-    with pytest.raises(ValueError, match="batch_match_entities"):
-        engine.match_nodes([("_Entity_", f"e{i}") for i in range(33)])
+    scans, batch = [], text.batch_match_entities
+
+    def spy(graph, ents, **kw):
+        plan = graph.nodes._jdf.queryExecution().executedPlan().toString()
+        scans.append(plan[plan.index("PartitionFilters"):].split("]")[0])
+        return batch(graph, ents, **kw)
+
+    monkeypatch.setattr(text, "batch_match_entities", spy)
+    engine = GraphRAFTEngine(
+        spark, g,
+        config=EngineConfig(patterns=("1hop",),
+                            ner_labels=("Author", "Planet")),
+        chat_fn=lambda q: "Planet: mercury",
+        encoder=lambda s: [1.0, 0.0])
+    assert engine.match_nodes(engine.extract_entities("q")) == ["MERCURY"]
+    assert "= Planet)" in scans[-1]
+    assert engine.match_nodes([("Author", "mercury")]) == ["Mercury"]
+    assert engine.match_nodes([("_Entity_", "mercury")]) == [
+        "MERCURY", "Mercury"]
+    assert scans[-1] == "PartitionFilters: ["
+    assert engine.match_nodes([("Planet", "venus")]) == ["MERCURY"]
 
 
 def _ada_mit_engine(spark, graph, add_more_answers=False):

@@ -238,20 +238,24 @@ def test_compaction_preserves_results(corpus, tmp_path):
 
 
 def test_snapshot_meta_memo_is_bounded(corpus, tmp_path, monkeypatch):
-    """The snapshot-mode meta memo is cleared past the pq_cache bound,
-    so a long session of rebuilt indexes cannot grow it without limit,
-    and a query after the clear still reads the right meta."""
+    """The snapshot-mode meta memo holds at most the pq_cache bound: a
+    new index's meta evicts the least-recently-used entry, so a long
+    session of rebuilt indexes cannot grow it without limit, and the
+    query still reads the right meta."""
+    from collections import OrderedDict
+
     from graphraft_spark.search import bm25
     from graphraft_spark.sources.pq_cache import MEMO_BOUND
 
     idx = str(tmp_path / "bm25_idx_memo")
     bm25.build_text_index(corpus, idx, n_buckets=8)
-    memo = {("dead", i): None for i in range(MEMO_BOUND + 1)}
+    memo = OrderedDict((("dead", i), None) for i in range(MEMO_BOUND))
     monkeypatch.setattr(bm25, "_META_MEMO", memo)
     spark = corpus.sparkSession
     direct = bm25.bm25_topk(corpus, ["spark"], k=5).collect()
     indexed = bm25.bm25_query_indexed(spark, idx, ["spark"], k=5,
                                       snapshot=True).collect()
-    assert len(memo) == 1
+    assert len(memo) == MEMO_BOUND
+    assert ("dead", 0) not in memo and ("dead", 1) in memo
     assert [(r.doc_id, r.bm25) for r in direct] == \
         [(r.doc_id, r.bm25) for r in indexed]

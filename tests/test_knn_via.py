@@ -1,99 +1,49 @@
-"""batch_match_entities vector-fallback routing (knn_via seam):
-the brute path must broadcast the unmatched-entity side, and the ANN
-tiers (SRP-LSH, partition-pruned IVF) must agree with brute top-1 on
-well-separated embeddings.  Reference surface: ner.py:95-120 (vector
-fallback after zero fulltext hits)."""
+"""batch_match_entities vector fallback: the exact top-1 must broadcast
+the unmatched-entity side and find each misspelling's nearest name.
+Reference surface: ner.py:95-120 (vector fallback after zero fulltext
+hits)."""
 
 import pytest
-
-from pyspark.sql import functions as F
 
 from graphraft_spark.graph.model import PropertyGraph
 from graphraft_spark.search.text import batch_match_entities
 
 
+def _one_hot(i):
+    v = [0.05] * 8
+    v[i % 8] = 1.0
+    return v
+
+
 @pytest.fixture(scope="module")
 def emb_graph(spark):
     """Nodes with near-one-hot 8-dim name embeddings: every name's
-    nearest neighbor is unambiguous, so exact and approximate KNN
-    agree."""
-    def one_hot(i):
-        v = [0.05] * 8
-        v[i % 8] = 1.0
-        return v
-
+    nearest neighbor is unambiguous."""
     names = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
     nodes = spark.createDataFrame(
-        [(i, "Thing", n, one_hot(i)) for i, n in enumerate(names)],
+        [(i, "Thing", n, _one_hot(i)) for i, n in enumerate(names)],
         "nodeId bigint, label string, name string, nemb array<double>")
     edges = spark.createDataFrame(
         [(0, 1, "REL")], "src bigint, dst bigint, relType string")
     return PropertyGraph(nodes=nodes, edges=edges)
 
 
-def _entities(spark):
-    # "beta" fulltext-matches; the misspellings only vector-match.
-    def one_hot(i):
-        v = [0.05] * 8
-        v[i % 8] = 1.0
-        return v
-
-    return spark.createDataFrame(
-        [(1, "beta", one_hot(1)),
-         (1, "gamma-ish", one_hot(2)),
-         (2, "deltaX", one_hot(3))],
-        "qid int, entity string, qemb array<double>")
-
-
-def _result_map(df):
-    return {(r["qid"], r["entity"]): (r["name"], r["matched_by"])
-            for r in df.collect()}
-
-
 def test_brute_fallback_broadcasts_missing_side(spark, emb_graph):
-    out = batch_match_entities(emb_graph, _entities(spark),
+    # "beta" fulltext-matches; the misspellings only vector-match.
+    ents = spark.createDataFrame(
+        [(1, "beta", _one_hot(1)),
+         (1, "gamma-ish", _one_hot(2)),
+         (2, "deltaX", _one_hot(3))],
+        "qid int, entity string, qemb array<double>")
+    out = batch_match_entities(emb_graph, ents,
                                name_emb_col="nemb", entity_emb_col="qemb")
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the crossJoin of (tiny) missing entities against node embeddings
     # must be a broadcast nested-loop, never a shuffled cartesian
     assert "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan
-
-
-def test_srp_agrees_with_brute(spark, emb_graph):
-    ents = _entities(spark)
-    brute = _result_map(batch_match_entities(
-        emb_graph, ents, name_emb_col="nemb", entity_emb_col="qemb"))
-    srp = _result_map(batch_match_entities(
-        emb_graph, ents, name_emb_col="nemb", entity_emb_col="qemb",
-        knn_via="srp", knn_opts={"bits": 4}))
-    assert brute[(1, "beta")] == ("beta", "fulltext")
-    assert brute[(1, "gamma-ish")] == ("gamma", "vector")
-    assert brute[(2, "deltaX")] == ("delta", "vector")
-    assert srp == brute
-
-
-def test_ivf_agrees_with_brute_and_prunes(spark, emb_graph, tmp_path):
-    from graphraft_spark.ops.similarity import (
-        ivf_assign, ivf_centroids_kmeans, save_ivf_index)
-
-    vecs = emb_graph.nodes.select("name", F.col("nemb").alias("embedding"))
-    cents = ivf_centroids_kmeans(vecs, k=3, iters=3, id_col="name")
-    assigned = ivf_assign(vecs, cents, id_col="name")
-    idx = str(tmp_path / "name_ivf")
-    save_ivf_index(assigned, cents, idx)
-
-    ents = _entities(spark)
-    brute = _result_map(batch_match_entities(
-        emb_graph, ents, name_emb_col="nemb", entity_emb_col="qemb"))
-    ivf = _result_map(batch_match_entities(
-        emb_graph, ents, name_emb_col="nemb", entity_emb_col="qemb",
-        knn_via="ivf", knn_opts={"index_dir": idx, "nprobe": 3}))
-    assert ivf == brute
-
-
-def test_unknown_knn_via_rejected(spark, emb_graph):
-    with pytest.raises(ValueError, match="knn_via"):
-        batch_match_entities(
-            emb_graph, _entities(spark), name_emb_col="nemb",
-            entity_emb_col="qemb", knn_via="hnsw").collect()
+    assert {(r["qid"], r["entity"]): (r["name"], r["matched_by"])
+            for r in out.collect()} == {
+        (1, "beta"): ("beta", "fulltext"),
+        (1, "gamma-ish"): ("gamma", "vector"),
+        (2, "deltaX"): ("delta", "vector")}

@@ -249,20 +249,30 @@ def test_langid_and_quality_ranges(spark):
 
 
 def test_fulltext_match_and_entity_fallback(spark, tiny_graph):
-    from graphraft_spark.search.text import fulltext_match, match_entities
+    """match_entities: normalized fulltext hits (the two Ada authors
+    collapse to one name), then the vector top-1 only for the entities
+    with no hit, within their label and with ties broken by name."""
+    from graphraft_spark.search.text import match_entities
 
-    hits = fulltext_match(tiny_graph.nodes, "  ADA ").collect()
-    assert {r["name"] for r in hits} == {"Ada"}
-
-    # attach a tiny deterministic name embedding for the fallback path
-    emb = F.array(*[(F.col("nodeId") % (i + 2)).cast("double")
-                    for i in range(4)])
+    # unit-norm name embeddings: MIT along x, every other node along y
+    emb = F.when(F.col("nodeId") == 20, F.array(F.lit(1.0), F.lit(0.0))) \
+        .otherwise(F.array(F.lit(0.0), F.lit(1.0)))
     g2 = type(tiny_graph)(nodes=tiny_graph.nodes.withColumn(
         "nameEmbedding", emb), edges=tiny_graph.edges)
+    vecs = {"zzz-no-such": [0.8, 0.6],     # MIT scores 0.8, the rest 0.6
+            "no-such-paper": [0.0, 1.0]}   # the four papers tie at 1.0
+    seen = []
+
+    def encoder(s):
+        seen.append(s)
+        return vecs[s]
+
     names = match_entities(
-        spark, g2, [("Author", "Ada"), ("_Entity_", "zzz-no-such")],
-        encoder=lambda s: [1.0, 0.0, 0.0, 0.0])
-    assert "Ada" in names and len(names) >= 2  # fallback returned top-1
+        spark, g2, [("Author", "  ADA "), ("_Entity_", "zzz-no-such"),
+                    ("Paper", "no-such-paper")],
+        encoder=encoder)
+    assert names == ["Ada", "MIT", "P-alpha"]
+    assert seen == ["zzz-no-such", "no-such-paper"]
 
 
 def test_stateful_sessionize_stream_matches_batch(spark, tmp_path):

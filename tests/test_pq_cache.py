@@ -59,3 +59,22 @@ def test_missing_path_falls_through_to_spark_error(spark, tmp_path):
         raised = True
     assert raised
     assert not os.path.exists(p)
+
+
+def test_hot_handle_survives_bound_overflow(spark, tmp_path, monkeypatch):
+    """Past MEMO_BOUND the memo evicts its least-recently-used entry:
+    a handle touched between misses outlives any number of them."""
+    from collections import OrderedDict
+
+    from graphraft_spark.sources import pq_cache
+
+    monkeypatch.setattr(pq_cache, "_MEMO", OrderedDict())
+    monkeypatch.setattr(pq_cache, "MEMO_BOUND", 2)
+    paths = [str(tmp_path / f"t{i}") for i in range(4)]
+    for p in paths:
+        _write(spark, p, [1])
+    hot = load_pq(spark, paths[0])
+    for p in paths[1:]:
+        load_pq(spark, p)
+        assert load_pq(spark, paths[0]) is hot
+        assert len(pq_cache._MEMO) <= 2

@@ -87,7 +87,7 @@ BNLJ_OK = {
 # media decode, per-group sequential algorithms
 PYTHON_OK_PREFIXES = ("f_", "mm_", "p_", "st_sessionize", "ann_mmr")
 PYTHON_OK = {
-    "s_fulltext_match", "s_entity_match_fallback", "t_bpe_tokenize",
+    "t_bpe_tokenize",
     "ann_bruteforce_scaled", "ann_ivf_kmeans_search",
     # PNG/WAV/AVI encode + decode/resample through the media codec
     # seam; the hash/banding/verify stages after it are pure JVM
