@@ -14,15 +14,16 @@ is the interactive path.
 
 Entity matching is one Spark action for all of a question's entities
 (an encoder's vector fallback adds one).  After it a question costs two:
-the enumeration collect (the ranker's input) and the retrieval collect
-(at most ``max_nodes - 1`` rows).  The ranker and the generator both
-run in-process on the driver, as the reference's local model calls do,
-and the returned retrieval frame is already materialized.  Every frame
-the driver builds on the way (entities, anchors, ranked specs, the
-result) is an Arrow-backed local relation, so the online path starts
-no Python process: no Python daemon or worker is forked for a
-question.  (NFC matching on a non-ASCII graph is the exception: it
-runs a pandas UDF.)
+the enumeration collect (the ranker's input, which also carries each
+signature's first ``max_nodes`` targets, so no ranked query is executed
+again) and the retrieval collect (at most ``max_nodes - 1`` rows).  The
+ranker and the generator both run in-process on the driver, as the
+reference's local model calls do, and the returned retrieval frame is
+already materialized.  Every frame the driver builds on the way
+(entities, anchors, the ranked queries' targets, the result) is an
+Arrow-backed local relation, so the online path starts no Python
+process: no Python daemon or worker is forked for a question.  (NFC
+matching on a non-ASCII graph is the exception: it runs a pandas UDF.)
 """
 
 from __future__ import annotations
@@ -45,7 +46,6 @@ from graphraft_spark.llm.protocols import (
 )
 from graphraft_spark.pipeline import answer_questions, run_pipeline
 from graphraft_spark.search.text import has_non_ascii_names, match_entities
-from graphraft_spark.session import local_frame
 
 __all__ = ["EngineConfig", "GraphRAFTEngine", "answer_questions",
            "match_entities", "run_pipeline"]
@@ -81,8 +81,9 @@ class EngineConfig:
 
 class GraphRAFTEngine:
     """Stages (graphraft.py:41-66): extract entities → match to node
-    names → enumerate candidate patterns → rank → execute top-k →
-    budgeted retrieval → generate answers."""
+    names → enumerate candidate patterns, with each one's first targets
+    → rank → budgeted retrieval over the top-k patterns' targets →
+    generate answers."""
 
     def __init__(self, spark: SparkSession, graph: PropertyGraph,
                  config: EngineConfig | None = None,
@@ -131,13 +132,14 @@ class GraphRAFTEngine:
         """Full flow for one question; returns (retrieved DataFrame,
         predicted answer names).
 
-        Two Spark actions after matching: ``run_pipeline`` collects the
-        enumerated signatures for the driver-side ranker, then the
-        budgeted retrieval is collected once.  The generator runs
-        in-process on those rows, in the ``(queryIdx, rank)``
-        consumption order ``answer_questions`` builds, and the returned
-        frame is a local relation over them: acting on it launches no
-        Spark job."""
+        Two Spark actions after matching, both inside ``run_pipeline``:
+        the enumerated signatures are collected for the driver-side
+        ranker, then the budgeted retrieval over the ranked signatures'
+        targets.  The generator runs in-process on the retrieved rows,
+        in the ``(queryIdx, rank)`` consumption order
+        ``answer_questions`` builds, and the returned frame is
+        ``run_pipeline``'s local relation over them: acting on it
+        launches no Spark job."""
         entities = self.extract_entities(question)
         names = self.match_nodes(entities)
         retrieved = run_pipeline(
@@ -148,12 +150,7 @@ class GraphRAFTEngine:
             patterns=self.config.patterns,
             specific_target_label=self.config.specific_target_label,
         )
-        rows = sorted(retrieved.collect(),
-                      key=lambda r: (r["queryIdx"], r["rank"]))
         answers = self.generator.generate(
-            question, [{"name": r["name"]} for r in rows],
+            question, [{"name": r["name"]} for r in retrieved.collect()],
             self.config.add_more_answers)
-        return (local_frame(self.spark,
-                            [r.asDict(recursive=True) for r in rows],
-                            retrieved.schema),
-                list(answers))
+        return retrieved, list(answers)

@@ -12,9 +12,8 @@ points differ only in the first frame and the per-position predicates:
   of rows and get a ``broadcast`` hint.
 * ``patterns.enumerate``: the enumeration templates.  Anchors are a
   literal ``name IN (...)`` filter (one question) or a join with a
-  ``(qid, name)`` frame (many questions).
-* :func:`run_patterns_bulk`: the broadcast spec table is the first
-  frame, and ``spec col IS NULL OR =`` residuals ride the hash joins.
+  ``(qid, name)`` frame (many questions).  The pipeline executes its
+  ranked queries from these bindings, not from a second plan.
 
 Scale: the plan is hop-count-many shuffles at worst; with edges bucketed
 by ``src`` the expansion joins co-locate and AQE's skew-join splitting
@@ -24,7 +23,6 @@ handles hub nodes.  No Python crosses into executors.
 from __future__ import annotations
 
 from collections.abc import Sequence
-from functools import reduce
 from itertools import combinations
 
 from pyspark.sql import Column, DataFrame
@@ -155,58 +153,3 @@ def run_pattern_nodes(graph: PropertyGraph, spec: PatternSpec,
         )
         .distinct()
     )
-
-
-def run_patterns_bulk(graph: PropertyGraph, specs: DataFrame,
-                      prop_cols: tuple[str, ...] = (),
-                      patterns: tuple[str, ...] = ("1hop", "2hop", "2path"),
-                      ) -> DataFrame:
-    """Execute MANY instantiated patterns in ONE plan per template —
-    spec-as-DATA instead of spec-as-plan.
-
-    ``specs`` carries one row per instantiated query with the signature
-    columns :data:`SPEC_COLS` (null where the template doesn't use
-    them); label/type columns may also be null meaning "unconstrained".
-    Output: the spec columns + the DISTINCT return-position node per
-    spec (nodeId, label, name, <prop_cols...>).
-
-    Scale rationale: ``run_pattern`` per spec unions one join subtree
-    per instantiated query — plan size and compile time grow O(#specs),
-    and every subtree re-scans the edge table.  Here the (tiny) spec
-    table broadcasts into a single join tree per template, so the graph
-    is scanned once per hop regardless of how many thousand specs
-    execute; the residual label/type predicates ride the hash join as
-    post-filters.  This is the batch analog of the reference's
-    per-query Neo4j loop (retriever.py:74-96) at the execution stage.
-
-    Semantics match :func:`run_pattern` on the INSTANTIATED templates
-    (ir.onehop/twohop/twopath): undirected hops, Cypher
-    relationship-uniqueness, NO node-inequality (create_query drops the
-    WHERE clauses, path_retriever.py:29-40 — ir.twohop docstring).
-    """
-    attrs = NODE_ATTRS + tuple(prop_cols)
-    out = []
-    for pat, n_nodes, anchored, ret in templates(patterns,
-                                                 "run_patterns_bulk"):
-        s = F.broadcast(
-            specs.filter(F.col("pattern") == pat)
-            .select(*[F.col(c).alias(f"s_{c}") for c in SPEC_COLS])
-            .distinct())
-        on = {}
-        for pos in range(n_nodes):
-            x, lbl = f"x{pos + 1}", F.col(f"s_label{pos + 1}")
-            on[x] = lbl.isNull() | (F.col(f"{x}_label") == lbl)
-            if pos in anchored:
-                on[x] &= F.col(f"{x}_name") == F.col(f"s_name{pos + 1}")
-            if pos:
-                typ = F.col(f"s_type{pos}")
-                on[f"r{pos}"] = typ.isNull() | (F.col(f"r{pos}_relType") == typ)
-        frames = [graph.nodes.select(*node_cols(pos, attrs))
-                  for pos in range(n_nodes)]
-        frames[0] = s.join(frames[0], on.pop("x1"))
-        x = f"x{ret + 1}"
-        out.append(_chain(graph, frames, on).select(
-            *[F.col(f"s_{c}").alias(c) for c in SPEC_COLS],
-            *[F.col(f"{x}_{a}").alias(a) for a in attrs],
-        ).distinct())
-    return reduce(DataFrame.unionByName, out)

@@ -19,20 +19,25 @@ path_retriever.py:42-47 / SURVEY §7.6.
 One aggregate serves one question and many: :func:`enumerate_paths_batch`
 anchors on a ``(qid, name)`` frame, while :func:`enumerate_paths` and
 :func:`enumerate_pattern` anchor on a literal ``name IN (...)`` filter
-(so it reaches the node scan) and carry no ``qid``.
+(so it reaches the node scan) and carry no ``qid``.  The batch call can
+also carry each signature's first B targets (:class:`Targets`), so the
+pipeline's budgeted retrieval reads them instead of executing the
+ranked queries: one traversal per question.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from graphraft_spark.graph.model import PropertyGraph
 from graphraft_spark.patterns.compiler import (
+    NODE_ATTRS,
     SPEC_COLS,
     _chain,
     node_cols,
@@ -55,16 +60,37 @@ def _signature(n_nodes: int, anchored: tuple[int, ...],
     return [(c, src[c]) for c in SPEC_COLS if c in src]
 
 
+@dataclass(frozen=True)
+class Targets:
+    """Ask the signature table for a ``targets`` column: each
+    signature's first ``limit`` targets in the budget's consumption
+    order, ``(similarity DESC, nodeId ASC)``, as structs ``(nodeId,
+    similarity, name, <prop_cols...>)``.  ``similarity`` maps the
+    ``nodeId`` column to the ranking score."""
+
+    limit: int
+    similarity: Callable[[Column], Column]
+    prop_cols: tuple[str, ...] = ()
+
+
 def _aggregate(graph: PropertyGraph, template: tuple,
                anchor: Callable[[int], DataFrame], batch: bool,
                gold: DataFrame | None, specific_target_label: str | None,
-               approx_rsd: float | None) -> DataFrame:
+               approx_rsd: float | None,
+               targets: Targets | None = None) -> DataFrame:
     """One template's signature table: the grouping keys (``qid`` first
     when ``batch``), ``totalCnt`` = count(DISTINCT target) (the implicit
     Cypher aggregation B6) and, with ``gold`` (distinct rows of
-    ``g_nodeId``, plus ``g_qid`` in batch mode), ``correctCnt`` (B7).
+    ``g_nodeId``, plus ``g_qid`` in batch mode), ``correctCnt`` (B7);
+    with ``targets``, also the ``targets`` column (see :class:`Targets`).
     ``anchor(pos)`` is the node frame of an anchored position; in batch
-    mode it carries ``x{pos+1}_qid``."""
+    mode it carries ``x{pos+1}_qid``.
+
+    The counts obey the template's node inequality (``x1 <> x3``); the
+    ``targets`` do not, because an instantiated query has no WHERE
+    clause (``ir.twohop``).  So the inequality is a per-target flag,
+    not a filter on the bindings: a target counts when one of its
+    bindings passes it, and a signature no target passes is dropped."""
     _, n_nodes, anchored, ret = template
     last = n_nodes - 1
     # aggregate-early / decorate-late: the terminal node join is the
@@ -78,29 +104,41 @@ def _aggregate(graph: PropertyGraph, template: tuple,
     # the label is a group key of the raw bindings).
     defer = (last not in anchored and approx_rsd is None
              and (specific_target_label is None or ret != last))
+    # the targets' payload rides the return position's node frame
+    props = targets.prop_cols if targets is not None else ()
+    payload = ("name", *props) if targets is not None else ()
     frames = [anchor(p) if p in anchored
               else None if defer and p == last
-              else graph.nodes.select(*node_cols(p)) for p in range(n_nodes)]
+              else graph.nodes.select(*node_cols(
+                  p, NODE_ATTRS + (props if p == ret else ())))
+              for p in range(n_nodes)]
     on = {f"x{p + 1}": F.col("x1_qid") == F.col(f"x{p + 1}_qid")
           for p in anchored[1:] if batch}
     bindings = _chain(graph, frames, on)
-    if n_nodes == 3:  # tgt <> src1 (2hop), a <> b (2path)
-        bindings = bindings.filter(F.col("x1_nodeId") != F.col("x3_nodeId"))
+    # tgt <> src1 (2hop), a <> b (2path)
+    ne = (F.col("x1_nodeId") != F.col("x3_nodeId") if n_nodes == 3
+          else F.lit(True))
 
     sig = _signature(n_nodes, anchored)
     if batch:
         sig = [("qid", "x1_qid")] + sig
     key_names = [o for o, _ in sig]
     tgt = F.col(f"x{ret + 1}_nodeId")
+    # functions of the target, so grouping on them is grouping on it
+    carried = [(f"_t_{a}", f"x{ret + 1}_{a}") for a in payload]
 
     def gold_of(qid, target):
         cond = target == F.col("g_nodeId")
         return (qid == F.col("g_qid")) & cond if batch else cond
 
     if approx_rsd is not None:
+        if targets is not None:
+            raise ValueError("enumerate_paths_batch: targets needs the "
+                             "exact count (approx_rsd=None)")
         # the hub-scale path: HyperLogLog++ total over the raw bindings
         # (a fixed-size mergeable partial per signature); correctCnt is
         # the single exact distinct aggregate, so still no Expand
+        bindings = bindings.filter(ne)
         aggs = [F.approx_count_distinct(tgt, approx_rsd).alias("totalCnt")]
         if gold is not None:
             bindings = bindings.join(F.broadcast(gold),
@@ -108,32 +146,51 @@ def _aggregate(graph: PropertyGraph, template: tuple,
             aggs.append(F.countDistinct("g_nodeId").alias("correctCnt"))
         df = bindings.groupBy(*[F.col(s).alias(o) for o, s in sig]).agg(*aggs)
     else:
-        # one DISTINCT over (keys, target), then plain counts: exact,
-        # and two countDistinct aggregates would plan an Expand
-        # (doubling every binding row before the shuffle)
+        # one grouping over (keys, target) carrying the inequality flag,
+        # then plain counts: exact, and two countDistinct aggregates
+        # would plan an Expand (doubling every binding row before the
+        # shuffle)
         avail = set(bindings.columns)
-        d = bindings.select(*[F.col(s).alias(o) for o, s in sig if s in avail],
-                            tgt.alias("_tgt")).distinct()
-        aggs = [F.count("*").alias("totalCnt")]
+        d = (bindings.groupBy(*[F.col(s).alias(o) for o, s in sig + carried
+                                if s in avail], tgt.alias("_tgt"))
+             .agg(F.max(ne).alias("_ok")))
+        ok = F.col("_ok")
+        aggs = [F.count(F.when(ok, 1)).alias("totalCnt")]
         if gold is not None:
             # gold is per-(qid, target), a function of the dedupe key:
             # joining it after the distinct is exact and much smaller
             # (gold rows are distinct, so none fans the frame out)
             d = d.join(F.broadcast(gold),
                        gold_of(F.col("qid"), F.col("_tgt")), "left")
-            aggs.append(F.count(F.when(F.col("g_nodeId").isNotNull(), 1))
-                        .alias("correctCnt"))
-        post = [(o, s) for o, s in sig if s not in avail]
-        if post:
-            # deferred terminal (= the target): inner join, the graph is
-            # validated and every edge dst is a node
+            aggs.append(F.count(F.when(ok & F.col("g_nodeId").isNotNull(),
+                                       1)).alias("correctCnt"))
+        # a deferred terminal (= the target) gets its label and payload
+        # after the distinct.  Inner join: the graph is validated and
+        # every edge dst is a node
+        attrs = [(o, s.split("_", 1)[1]) for o, s in sig + carried
+                 if s not in avail]
+        if attrs:
             d = d.join(graph.nodes.select(
                 F.col("nodeId").alias("_tgt"),
-                *[F.col(s.split("_", 1)[1]).alias(o) for o, s in post]),
-                "_tgt")
-        # rows are distinct on (keys, target), so count(*) per key set
+                *[F.col(a).alias(o) for o, a in attrs]), "_tgt")
+        if targets is not None:
+            # the first `limit` targets of each signature in consumption
+            # order; the window shares the aggregate's partitioning
+            sim = targets.similarity(F.col("_tgt"))
+            first = F.row_number().over(Window.partitionBy(*key_names)
+                                        .orderBy(sim.desc(), F.col("_tgt")))
+            d = d.select("*", sim.alias("_sim"), first.alias("_first"))
+            aggs.append(F.collect_list(F.when(
+                F.col("_first") <= targets.limit,
+                F.struct(F.col("_tgt").alias("nodeId"),
+                         F.col("_sim").alias("similarity"),
+                         *[F.col(o).alias(a) for (o, _), a
+                           in zip(carried, payload)]))
+            ).alias("targets"))
+        # rows are distinct on (keys, target), so a count per key set
         # IS count(DISTINCT target)
-        df = d.groupBy(*key_names).agg(*aggs)
+        df = (d.groupBy(*key_names).agg(*aggs)
+              .filter(F.col("totalCnt") > 0))
     if specific_target_label is not None:
         df = df.filter(F.col(f"label{ret + 1}") == specific_target_label)
     return df
@@ -142,16 +199,18 @@ def _aggregate(graph: PropertyGraph, template: tuple,
 def _enumerate(graph: PropertyGraph, patterns: Sequence[str], op: str,
                anchor: Callable[[int], DataFrame], batch: bool,
                gold: DataFrame | None, specific_target_label: str | None,
-               approx_rsd: float | None) -> DataFrame:
+               approx_rsd: float | None,
+               targets: Targets | None = None) -> DataFrame:
     """All templates unioned into one signature table with a ``pattern``
     column; signature columns a template lacks are null-padded so the
     union is schema-stable."""
     cols = ((["qid"] if batch else []) + list(SPEC_COLS) + ["totalCnt"]
-            + (["correctCnt"] if gold is not None else []))
+            + (["correctCnt"] if gold is not None else [])
+            + (["targets"] if targets is not None else []))
     out = []
     for template in templates(patterns, op):
         df = _aggregate(graph, template, anchor, batch, gold,
-                        specific_target_label, approx_rsd)
+                        specific_target_label, approx_rsd, targets)
         # ONE select pads the missing signature columns and stamps the
         # pattern tag — a withColumn per column is a full DataFrame
         # round-trip each (~14 ms of driver latency on a slow-py4j
@@ -207,7 +266,8 @@ def enumerate_paths_batch(graph: PropertyGraph, anchors: DataFrame,
                           patterns: Sequence[str] = PATTERNS,
                           gold: DataFrame | None = None,
                           specific_target_label: str | None = None,
-                          approx_rsd: float | None = None) -> DataFrame:
+                          approx_rsd: float | None = None,
+                          targets: Targets | None = None) -> DataFrame:
     """All templates for ALL questions in one plan: ``anchors`` is a
     ``(qid, name)`` frame; output adds a ``qid`` column to the signature
     table.  One Spark job enumerates every question (vs the reference's
@@ -215,6 +275,19 @@ def enumerate_paths_batch(graph: PropertyGraph, anchors: DataFrame,
     optional ``(qid, nodeId)`` frame for supervised ``correctCnt``.
     The 2path template's second anchor is constrained to the SAME
     question's anchor set.
+
+    ``targets`` adds each signature's first B targets (:class:`Targets`),
+    which are exactly the rows of its instantiated query that a node
+    budget of B can consume, so the pipeline executes no query.  Before
+    the budget's crossing row at most B-1 distinct nodes have been seen,
+    and one query's rows are all distinct nodes: a query's crossing row
+    is among its first B rows, or the query has fewer than B rows.  No
+    row after a query's B-th is consumed, so truncating at B is exact.
+    A signature's targets are the query's rows because the query's
+    anchors are every node of its ``name1`` (and ``name3``), the
+    question's anchors of that name, and it has no node inequality
+    (labels and relationship types are non-null, so each signature
+    column of the query is a literal constraint).
 
     ``approx_rsd`` switches ``totalCnt`` to HyperLogLog++
     (``approx_count_distinct`` at that relative standard deviation) —
@@ -236,7 +309,8 @@ def enumerate_paths_batch(graph: PropertyGraph, anchors: DataFrame,
         gold = gold.select(F.col("qid").alias("g_qid"),
                            F.col("nodeId").alias("g_nodeId")).distinct()
     return _enumerate(graph, patterns, "enumerate_paths_batch", anchor,
-                      True, gold, specific_target_label, approx_rsd)
+                      True, gold, specific_target_label, approx_rsd,
+                      targets)
 
 
 def instantiate_queries(rows: Sequence[dict]) -> list[tuple[PatternSpec, str]]:

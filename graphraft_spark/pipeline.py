@@ -7,11 +7,13 @@ GraphRAFT.run() (reference graphraft.py:41-66):
 
 Stage boundaries mirror the reference's: enumerated candidate *queries*
 surface at the driver (they are the ranker's input — the reference
-feeds them to a constrained-beam LLM), everything row-scale stays in
-DataFrames.  The ranked specs of all questions go back to Spark as
-data: stage 4 is one join tree per template (``run_patterns_bulk``),
-however many specs were ranked, so the plan does not grow with k or
-with the question count, and Spark parallelizes across questions.
+feeds them to a constrained-beam LLM).  Each question's neighbourhood
+is traversed once: the enumeration that counts every signature's
+targets also carries its first B targets, which are all the rows of
+its instantiated query that a node budget of B can consume
+(``enumerate_paths_batch``).  So stage 4 executes no query: the ranked
+signatures' targets become the budget's input on the driver, at most
+k·B rows per question.
 """
 
 from __future__ import annotations
@@ -32,26 +34,19 @@ from pyspark.sql.types import (
 from graphraft_spark.graph.model import PropertyGraph
 from graphraft_spark.llm.protocols import AnswerGenerator, QueryRanker
 # run_pattern_nodes is not called here: it stays importable from this
-# module because perfbench's tracer wraps it by name, and tests check
-# run_patterns_bulk against it as the per-spec reference
-from graphraft_spark.patterns.compiler import (  # noqa: F401
-    SPEC_COLS,
-    run_pattern_nodes,
-    run_patterns_bulk,
-)
+# module because perfbench's tracer wraps it by name
+from graphraft_spark.patterns.compiler import run_pattern_nodes  # noqa: F401
 from graphraft_spark.patterns.enumerate import (
+    Targets,
     enumerate_paths_batch,
     instantiate_queries,
 )
+from graphraft_spark.patterns.ir import PatternSpec
 from graphraft_spark.retrieve import budgeted_accumulate
 from graphraft_spark.session import local_frame
 
 _ANCHOR_SCHEMA = StructType([StructField("qid", LongType()),
                              StructField("name", StringType())])
-_RANKED_SCHEMA = StructType(
-    [StructField("qid", LongType())]
-    + [StructField(c, StringType()) for c in SPEC_COLS]
-    + [StructField("queryIdx", IntegerType())])
 
 
 def default_similarity(node_id: Column) -> Column:
@@ -63,15 +58,15 @@ def default_similarity(node_id: Column) -> Column:
 
 def rank_candidates(ranker: QueryRanker, question: str,
                     rows: Sequence[dict], k: int,
-                    ) -> list[tuple[dict, int]]:
+                    ) -> list[tuple[dict, PatternSpec, int]]:
     """Stage 3 for ONE question's signature rows: instantiate each
     row's query, dedupe by query text (first row wins), rank the texts
-    and return the top-k as (signature row, queryIdx)."""
-    by_text: dict[str, dict] = {}
-    for row, (_, text) in zip(rows, instantiate_queries(rows)):
-        by_text.setdefault(text, row)
+    and return the top-k as (signature row, spec, queryIdx)."""
+    by_text: dict[str, tuple[dict, PatternSpec]] = {}
+    for row, (spec, text) in zip(rows, instantiate_queries(rows)):
+        by_text.setdefault(text, (row, spec))
     top = ranker.rank(question, list(by_text), k=k)
-    return [(by_text[text], idx) for idx, text in enumerate(top)]
+    return [(*by_text[text], idx) for idx, text in enumerate(top)]
 
 
 def _empty(spark: SparkSession, prop_cols: tuple[str, ...]) -> DataFrame:
@@ -96,23 +91,21 @@ def run_pipeline(
     prop_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """questions: (qid, question_text, matched_src_names).  Returns
-    (qid, nodeId, name, <props...>, similarity, patterns, queryIdx) —
-    the retrieved node set per question, budget-capped,
-    provenance-carrying.
+    (qid, nodeId, queryIdx, rank, similarity, name, <props...>,
+    patterns) — the retrieved node set per question, budget-capped,
+    provenance-carrying — as a local frame over collected rows, in
+    ``(qid, queryIdx, rank)`` consumption order.
 
-    Job shape is O(1) Spark jobs per STAGE, independent of question
-    count: one batch enumeration job over a local (qid, name) anchor
-    frame, ONE driver collect of the aggregated signature table (the
-    ranker seam input — the reference feeds these to a constrained-beam
-    LLM, llm1.py:83-87), then one execution+accumulation job over the
-    ranked (qid, <spec cols>, queryIdx) rows as a local frame: each
-    template's join tree executes every distinct spec, and a broadcast
-    null-safe join on the spec columns fans the results back out to
-    questions.  Both driver-built frames are Arrow-backed local
-    relations, so no Python worker starts.
+    Two Spark actions, however many questions: the batch enumeration
+    over a local (qid, name) anchor frame is collected for the driver's
+    ranker (the reference feeds these signatures to a constrained-beam
+    LLM, llm1.py:83-87); it also carries each signature's first
+    ``max_nodes`` targets.  The ranked signatures' targets, at most
+    k·max_nodes rows per question, form the budget's input as a local
+    frame, and the budgeted retrieval is the second collect.  Every
+    driver-built frame is an Arrow-backed local relation, so no Python
+    worker starts.
     """
-    sim = similarity or default_similarity
-
     # Stage 2: enumerate ALL questions in one job.
     anchor_rows = [{"qid": int(qid), "name": str(n)}
                    for qid, _, src_names in questions for n in src_names]
@@ -120,56 +113,43 @@ def run_pipeline(
         return _empty(spark, prop_cols)
     # a LocalRelation: no Python RDD to broadcast, so no Python worker
     anchors = local_frame(spark, anchor_rows, _ANCHOR_SCHEMA)
-    sigs = enumerate_paths_batch(graph, anchors, patterns=patterns,
-                                 specific_target_label=specific_target_label)
-    recs = [r.asDict() for r in sigs.collect()]  # the ONE driver collect
+    # the budget below runs at pattern_rate 1, so B = max_nodes
+    sigs = enumerate_paths_batch(
+        graph, anchors, patterns=patterns,
+        specific_target_label=specific_target_label,
+        targets=Targets(max_nodes, similarity or default_similarity,
+                        tuple(prop_cols)))
+    recs = [r.asDict(recursive=True) for r in sigs.collect()]
 
     # Stage 3 (driver-side, small): per question instantiate + rank.
     qtext = {int(qid): text for qid, text, _ in questions}
     per_q: dict[int, list[dict]] = {}
     for rec in recs:
         per_q.setdefault(int(rec["qid"]), []).append(rec)
-    ranked_rows = [
-        {"qid": qid, **{c: row[c] for c in SPEC_COLS}, "queryIdx": idx}
-        for qid, rows in per_q.items()
-        for row, idx in rank_candidates(ranker, qtext[qid], rows, k)]
-    if not ranked_rows:
-        return _empty(spark, prop_cols)
 
-    # Stage 4: the ranked specs are data.  run_patterns_bulk runs each
-    # distinct spec once inside its template's join tree; the broadcast
-    # join on the spec columns (null-safe: a template leaves some
-    # unused) fans the rows out to every (qid, queryIdx) that ranked it.
-    ranked = local_frame(spark, ranked_rows, _RANKED_SCHEMA)
-    executed = run_patterns_bulk(
-        graph, ranked, prop_cols, patterns=tuple(patterns),
-    ).withColumn("pstr", text_pattern_col())
-    # both sides derive from `ranked`: alias them so the fan-out join
-    # is not an ambiguous self-join
-    ex, rk = executed.alias("ex"), ranked.alias("rk")
-    cond = None
-    for c in SPEC_COLS:
-        eq = F.col(f"ex.{c}").eqNullSafe(F.col(f"rk.{c}"))
-        cond = eq if cond is None else cond & eq
-    results = (
-        ex.join(F.broadcast(rk), cond)
-        .select(F.col("rk.qid").alias("qid"),
-                F.col("rk.queryIdx").alias("queryIdx"),
-                F.col("ex.nodeId").alias("nodeId"),
-                F.col("ex.name").alias("name"),
-                *[F.col(f"ex.{c}").alias(c) for c in prop_cols],
-                sim(F.col("ex.nodeId")).alias("similarity"),
-                F.col("ex.pstr").alias("pattern"))
-    )
+    # Stage 4: a ranked query's rows are its signature's targets, and
+    # its provenance string is the spec's rendering (retriever.py:9-12).
+    results = [
+        {"qid": qid, "queryIdx": idx, **t, "pattern": spec.text_pattern("")}
+        for qid, rows in per_q.items()
+        for row, spec, idx in rank_candidates(ranker, qtext[qid], rows, k)
+        for t in row["targets"]]
+    if not results:
+        return _empty(spark, prop_cols)
+    target = sigs.schema["targets"].dataType.elementType
+    schema = StructType([StructField("qid", LongType()),
+                         StructField("queryIdx", IntegerType()),
+                         *target.fields,
+                         StructField("pattern", StringType())])
 
     # Stage 5: budgeted accumulation across all questions in one job.
-    # budgeted_accumulate reads `results` once (one aggregate per node
-    # carries both the first-seen row and the provenance), so the
-    # pattern joins, the fan-out join and the ranking window each run
-    # once in the caller's single action.  No persist: nothing stays
-    # cached behind the returned frame.
-    return budgeted_accumulate(results, max_nodes=max_nodes,
+    kept = budgeted_accumulate(local_frame(spark, results, schema),
+                               max_nodes=max_nodes,
                                prop_cols=("name",) + tuple(prop_cols))
+    rows = sorted(kept.collect(),
+                  key=lambda r: (r["qid"], r["queryIdx"], r["rank"]))
+    return local_frame(spark, [r.asDict(recursive=True) for r in rows],
+                       kept.schema)
 
 
 def answer_questions(retrieved: DataFrame, questions: DataFrame,
@@ -215,8 +195,9 @@ def _rel_txt(var: str, typ: Column) -> Column:
 
 def text_pattern_col() -> Column:
     """Native provenance string — PatternSpec.text_pattern("") built from
-    the signature columns (retriever.py:9-12 'pattern' provenance), so
-    stage 4 needs no per-spec Python rendering."""
+    the signature columns (retriever.py:9-12 'pattern' provenance), for
+    frames of signatures that never reach the driver (perfbench's
+    ``train_sft`` export builds its query texts with it)."""
     l1, t1, l2 = F.col("label1"), F.col("type1"), F.col("label2")
     t2, l3 = F.col("type2"), F.col("label3")
     n1 = _esc_name(F.col("name1"))

@@ -378,8 +378,9 @@ FROM p_ordered WHERE seen_order < 15
 def p_full_pipeline(spark, sf_dir):
     """End-to-end GraphRAFT.run() analog (graphraft.py:41-66) on the
     TPC-H graph: entity match → batch enumerate (ONE job for all
-    questions) → rank → execute the top-k specs as data (one join tree
-    per template) → budgeted retrieval with node props.  The registered variant uses the
+    questions), carrying each signature's first max_nodes targets →
+    rank → budgeted retrieval over the top-k signatures' targets, with
+    node props.  The registered variant uses the
     lexicographic ranker so the ranking stage is SQL-expressible end to
     end; the trie-beam ranker rides the identical seam (f_rank_trie +
     pytest cover it)."""

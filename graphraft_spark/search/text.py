@@ -93,12 +93,14 @@ def match_entities(spark: SparkSession, graph: PropertyGraph,
         # the label join condition alone cannot
         graph = replace(graph, nodes=graph.nodes.filter(
             F.col("label").isin(*labels)))
-    found: dict[int, list[str]] = {}
+    found: dict[int, set[str]] = {}
 
     def collect(ents: DataFrame, **emb_cols) -> None:
-        for r in batch_match_entities(graph, ents, nfc=nfc,
-                                      **emb_cols).collect():
-            found.setdefault(r["qid"], []).append(r["name"])
+        # multi-binding names (two nodes, one name) repeat a hit; the
+        # set drops them here, so the collect plans no distinct shuffle
+        for r in _match(graph, ents, nfc=nfc, distinct=False,
+                        **emb_cols).collect():
+            found.setdefault(r["qid"], set()).add(r["name"])
 
     collect(local_frame(spark, rows, StructType.fromDDL(_ENTITIES)))
     missing = [r for r in rows if r["qid"] not in found]
@@ -108,7 +110,7 @@ def match_entities(spark: SparkSession, graph: PropertyGraph,
         schema = StructType.fromDDL(_ENTITIES + ", emb array<double>")
         collect(local_frame(spark, embedded, schema),
                 name_emb_col="nameEmbedding", entity_emb_col="emb")
-    return [n for i in range(len(rows)) for n in sorted(found.get(i, []))]
+    return [n for i in range(len(rows)) for n in sorted(found.get(i, ()))]
 
 
 def batch_match_entities(graph, entities: "DataFrame",
@@ -131,6 +133,15 @@ def batch_match_entities(graph, entities: "DataFrame",
     by name.  Ingest L2-normalizes embeddings, so this ranks as the
     reference's cosine index does.
     """
+    return _match(graph, entities, name_emb_col=name_emb_col,
+                  entity_emb_col=entity_emb_col, nfc=nfc, distinct=True)
+
+
+def _match(graph, entities: DataFrame, name_emb_col: str | None = None,
+           entity_emb_col: str | None = None, nfc: bool = False, *,
+           distinct: bool) -> DataFrame:
+    """:func:`batch_match_entities`; without ``distinct``, a name bound
+    to several nodes is one fulltext row per node."""
     from pyspark.sql import Window
 
     from graphraft_spark.search.vector import dot_col
@@ -152,8 +163,9 @@ def batch_match_entities(graph, entities: "DataFrame",
 
     hits = (in_label(F.broadcast(e).join(n, "k"))
             .select("qid", "entity", "name",
-                    F.lit("fulltext").alias("matched_by"))
-            .distinct())
+                    F.lit("fulltext").alias("matched_by")))
+    if distinct:
+        hits = hits.distinct()
     if not (name_emb_col and entity_emb_col):
         return hits
     # tiny by contract (zero-hit remainder), but after two joins its

@@ -110,6 +110,30 @@ def test_batch_match_is_one_job_regardless_of_entity_count(spark, tiny_graph):
     assert one == eight, (one, eight)
 
 
+def test_question_match_dedupes_on_the_driver(spark, tiny_graph,
+                                              monkeypatch):
+    """match_entities drops the repeat hit of a name bound to two nodes
+    (the two Ada authors) on the driver, so its collect plans no
+    aggregate; batch_match_entities stays distinct."""
+    from graphraft_spark.search import text
+
+    plans, match = [], text._match
+
+    def spy(graph, ents, **kw):
+        plans.append(match(graph, ents, **kw))
+        return plans[-1]
+
+    monkeypatch.setattr(text, "_match", spy)
+    assert text.match_entities(spark, tiny_graph,
+                               [("Author", "Ada"), ("_Entity_", "MIT")]
+                               ) == ["Ada", "MIT"]
+    plan = plans[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert "Aggregate" not in plan, plan
+    ents = spark.createDataFrame([(0, "Ada")], "qid bigint, entity string")
+    assert [r["name"] for r in
+            text.batch_match_entities(tiny_graph, ents).collect()] == ["Ada"]
+
+
 def test_entity_label_restricts_matches(spark, tmp_path, monkeypatch):
     """One normalized name under two labels: a labeled entity matches
     only its label's node, in the fulltext hits and in the vector
@@ -148,14 +172,14 @@ def test_entity_label_restricts_matches(spark, tmp_path, monkeypatch):
                    3: both, 4: both,
                    5: {("MERCURY", "vector")}}
 
-    scans, batch = [], text.batch_match_entities
+    scans, match = [], text._match
 
     def spy(graph, ents, **kw):
         plan = graph.nodes._jdf.queryExecution().executedPlan().toString()
         scans.append(plan[plan.index("PartitionFilters"):].split("]")[0])
-        return batch(graph, ents, **kw)
+        return match(graph, ents, **kw)
 
-    monkeypatch.setattr(text, "batch_match_entities", spy)
+    monkeypatch.setattr(text, "_match", spy)
     engine = GraphRAFTEngine(
         spark, g,
         config=EngineConfig(patterns=("1hop",),

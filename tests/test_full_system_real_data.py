@@ -5,8 +5,8 @@ driving trie-constrained ranking.
 
 One chain exercises every pipeline stage at question scale:
 slice graph → batch enumeration → per-question LM ranking (2,665
-questions) → spec-as-data bulk execution → qid-partitioned budgeted
-retrieval.  Assertions target system-level properties no unit test
+questions) → the ranked signatures' targets, carried by the
+enumeration → qid-partitioned budgeted retrieval.  Assertions target system-level properties no unit test
 covers: zero cross-question leakage (every retrieved node belongs to
 its question's namespace), the node budget enforced per question, and
 broad coverage (most candidate-bearing questions retrieve something).

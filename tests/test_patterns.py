@@ -230,15 +230,6 @@ def _engine_run(spark, graph, patterns):
                     config=EngineConfig(patterns=patterns)).run("Bob")
 
 
-def _bulk(spark, graph, patterns):
-    from graphraft_spark.patterns.compiler import SPEC_COLS, run_patterns_bulk
-
-    specs = spark.createDataFrame(
-        [("1hop", "Author", "Bob", "WRITES", "Paper", None, None, None)],
-        ", ".join(f"{c} string" for c in SPEC_COLS))
-    run_patterns_bulk(graph, specs, patterns=patterns)
-
-
 def _enum(spark, graph, patterns):
     from graphraft_spark.patterns.enumerate import enumerate_paths
 
@@ -257,10 +248,8 @@ def _enum_batch(spark, graph, patterns):
 @pytest.mark.parametrize("call, op", [
     (_enum, "enumerate_paths"),
     (_enum_batch, "enumerate_paths_batch"),
-    (_bulk, "run_patterns_bulk"),
     (_engine_run, "enumerate_paths_batch"),
-], ids=["enumerate_paths", "enumerate_paths_batch", "run_patterns_bulk",
-        "engine_run"])
+], ids=["enumerate_paths", "enumerate_paths_batch", "engine_run"])
 def test_bad_patterns_rejected(spark, tiny_graph, call, op, patterns):
     """An empty or unknown template selection is a ValueError naming
     the operator and the allowed templates, not a None frame."""

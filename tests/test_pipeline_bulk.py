@@ -1,10 +1,9 @@
-"""Spec-as-data pattern execution: ``run_pipeline`` runs its ranked
-specs through ``run_patterns_bulk`` (one join tree per template), so its
-output is pinned by golden rows and its plan does not grow with the
-number of ranked specs."""
+"""The batch pipeline: ``run_pipeline`` retrieves each ranked query's
+rows from the targets its enumeration carries, so its output is pinned
+by golden rows and its plan does not grow with the number of ranked
+specs."""
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _collect_normalized(df):
@@ -136,20 +135,31 @@ def _plan_shape(df):
     return joins, leaves
 
 
-def test_run_pipeline_plan_size_constant_in_k(spark, tiny_graph):
-    """The ranked specs are data: raising k from 1 to 8 adds rows to the
-    spec frame, not join subtrees to the plan.  One template only:
-    Catalyst drops the join tree of a template no ranked spec uses, and
-    at k=1 every question's top spec is a 1hop one."""
+def test_run_pipeline_plan_size_constant_in_k(spark, tiny_graph,
+                                              monkeypatch):
+    """The ranked queries are data: raising k from 1 to 8 adds rows to
+    the budget's input, not join subtrees to its plan.  The budget reads
+    one local relation of the ranked signatures' targets, and the
+    result is a local relation too."""
+    from graphraft_spark import pipeline
     from graphraft_spark.llm import LexicographicRanker
-    from graphraft_spark.pipeline import run_pipeline
 
-    def shape(k):
-        return _plan_shape(run_pipeline(
+    budget_inputs = []
+
+    def spy(results, **kw):
+        budget_inputs.append(results)
+        return budgeted_accumulate(results, **kw)
+
+    budgeted_accumulate = pipeline.budgeted_accumulate
+    monkeypatch.setattr(pipeline, "budgeted_accumulate", spy)
+
+    def shapes(k):
+        out = pipeline.run_pipeline(
             spark, tiny_graph, questions=QUESTIONS,
-            ranker=LexicographicRanker(), k=k, patterns=("1hop",)))
+            ranker=LexicographicRanker(), k=k)
+        return _plan_shape(budget_inputs[-1]), _plan_shape(out)
 
-    assert shape(1) == shape(8)
+    assert shapes(1) == shapes(8) == ((0, 1), (0, 1))
 
 
 def _leaf_classes(df):
@@ -186,67 +196,6 @@ def test_run_pipeline_driver_frames_are_local(spark, tiny_graph,
     assert empty.columns == ["qid", "nodeId", "queryIdx", "rank",
                              "similarity", "name", "detail", "patterns"]
     assert empty.collect() == []
-
-
-def test_run_patterns_bulk_matches_per_spec_execution(spark, tiny_graph):
-    """One broadcast join tree per template == run_pattern_nodes looped
-    over every spec, across all three templates."""
-    from graphraft_spark.patterns.compiler import (
-        SPEC_COLS,
-        run_pattern_nodes,
-        run_patterns_bulk,
-    )
-    from graphraft_spark.patterns.ir import onehop, twohop, twopath
-
-    cases = [
-        ("1hop", onehop("Author", "Ada", "WRITES", "Paper"),
-         ("1hop", "Author", "Ada", "WRITES", "Paper", None, None, None)),
-        ("1hop", onehop("Institution", "MIT", "AFFILIATED_WITH", "Author"),
-         ("1hop", "Institution", "MIT", "AFFILIATED_WITH", "Author",
-          None, None, None)),
-        ("2hop", twohop("Author", "Ada", "WRITES", "Paper", "CITES",
-                        "Paper"),
-         ("2hop", "Author", "Ada", "WRITES", "Paper", "CITES", "Paper",
-          None)),
-        ("2hop", twohop("Institution", "MIT", "AFFILIATED_WITH", "Author",
-                        "WRITES", "Paper"),
-         ("2hop", "Institution", "MIT", "AFFILIATED_WITH", "Author",
-          "WRITES", "Paper", None)),
-        ("2path", twopath("Author", "Ada", "WRITES", "Paper", "WRITES",
-                          "Author", "Bob"),
-         ("2path", "Author", "Ada", "WRITES", "Paper", "WRITES", "Author",
-          "Bob")),
-    ]
-    specs = spark.createDataFrame(
-        [row for _, _, row in cases],
-        ", ".join(f"{c} string" for c in SPEC_COLS))
-    bulk = run_patterns_bulk(tiny_graph, specs).collect()
-    got = {}
-    for r in bulk:
-        key = tuple(r[c] for c in SPEC_COLS)
-        got.setdefault(key, set()).add((r["nodeId"], r["label"], r["name"]))
-    for _, spec, key in cases:
-        want = {(r["nodeId"], r["label"], r["name"])
-                for r in run_pattern_nodes(tiny_graph, spec).collect()}
-        assert got.get(key, set()) == want, key
-    assert set(got) == {key for _, _, key in cases}
-
-
-def test_bulk_plan_size_constant_in_spec_count(spark, tiny_graph):
-    """run_pattern-per-spec unions O(#specs) join subtrees; the bulk
-    plan must stay one join tree however many specs execute."""
-    from graphraft_spark.patterns.compiler import SPEC_COLS, run_patterns_bulk
-
-    def plan_len(n_specs):
-        specs = spark.createDataFrame(
-            [("1hop", "Author", f"name{i}", "WRITES", "Paper",
-              None, None, None) for i in range(n_specs)],
-            ", ".join(f"{c} string" for c in SPEC_COLS))
-        df = run_patterns_bulk(tiny_graph, specs, patterns=("1hop",))
-        return len(df._jdf.queryExecution().optimizedPlan().toString())
-
-    small, large = plan_len(2), plan_len(200)
-    assert large < small * 2, (small, large)
 
 
 def test_text_pattern_col_matches_ir_renderer(spark):

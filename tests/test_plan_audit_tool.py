@@ -130,7 +130,8 @@ def test_retrieval_allowances_are_exact(spark):
     a branch that re-reads the pattern results fails here, not only in
     the standalone sweep.  Plans are built, not executed (the query
     functions themselves still run their own setup actions: the
-    pipeline's enumeration collect, r_retrieve_data's input persist)."""
+    pipeline's enumeration and budget collects, r_retrieve_data's input
+    persist)."""
     from conftest import SF_SMOKE
     from plan_audit import ALLOWED, dup_count_leaves, leaf_identities
 

@@ -123,25 +123,6 @@ def test_text_features_stay_jvm_side_no_shuffle(spark):
     assert "Exchange" not in p
 
 
-def test_bulk_pattern_execution_broadcasts_specs_no_cartesian(spark, graph):
-    """run_patterns_bulk: the spec table must ride broadcast hash joins
-    (the label/type predicates are residual filters on the equi keys),
-    never a nested-loop or cartesian plan, however many specs execute."""
-    from graphraft_spark.patterns.compiler import SPEC_COLS, run_patterns_bulk
-
-    specs = spark.createDataFrame(
-        [("1hop", "Nation", f"NATION_{i}", "SUPP_IN", "Supplier",
-          None, None, None) for i in range(40)]
-        + [("2hop", "Nation", f"NATION_{i}", "SUPP_IN", "Supplier",
-            "SUPPLIES", "Part", None) for i in range(40)],
-        ", ".join(f"{c} string" for c in SPEC_COLS))
-    p = physical(run_patterns_bulk(graph, specs,
-                                   patterns=("1hop", "2hop")))
-    assert "BroadcastHashJoin" in p
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-
-
 def test_no_cartesian_anywhere_bnlj_only_in_knn_family(spark):
     """Sweep every PRIMARY query's physical plan: CartesianProduct is
     banned outright; BroadcastNestedLoopJoin is legitimate ONLY where a

@@ -10,8 +10,9 @@ disconnected nodes), not in volume.
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 SETTINGS = dict(max_examples=8, deadline=None,
                 suppress_health_check=[HealthCheck.function_scoped_fixture])
@@ -167,6 +168,98 @@ def test_budget_matches_sequential_consumption(spark, rows, max_nodes,
     assert got == _sequential_budget(rows, max_nodes, pattern_rate)
 
 
+_SIMILARITY = {
+    # (Spark column of nodeId, Python twin); ties are resolved by nodeId
+    "mod3": (lambda c: (c % 3) / 3.0, lambda n: (n % 3) / 3.0),
+    "const": (lambda c: F.lit(0.5), lambda n: 0.5),
+}
+
+
+@pytest.mark.parametrize("sim", sorted(_SIMILARITY))
+@settings(**dict(SETTINGS, max_examples=6))
+@given(edges=st.lists(
+           st.tuples(st.integers(0, 7), st.integers(0, 7),
+                     st.sampled_from(["A", "B"])),
+           min_size=1, max_size=14),
+       loop=st.integers(0, 7),
+       anchors=st.lists(
+           st.lists(st.sampled_from(["n0", "n1", "n2"]), min_size=1,
+                    max_size=2, unique=True),
+           min_size=1, max_size=2),
+       max_nodes=st.integers(1, 4), k=st.integers(1, 3))
+# a query with more targets than the budget, all tied under "const":
+# (M n1)-[A]-(M) reaches 1, 3, 5 and 7, and B = 2 keeps only the
+# lowest nodeIds' rows
+@example(edges=[(1, 3, "A"), (1, 5, "A"), (1, 7, "A")], loop=0,
+         anchors=[["n1"]], max_nodes=2, k=1)
+# the 2hop query from node 1 returns 1 itself over the parallel edges:
+# the enumeration's count skips it (x1 <> x3), the query does not
+@example(edges=[(1, 3, "A"), (5, 3, "A")], loop=0, anchors=[["n1"]],
+         max_nodes=3, k=2)
+def test_pipeline_matches_per_query_replay(spark, sim, edges, loop, anchors,
+                                           max_nodes, k):
+    """run_pipeline == retriever.py:71-90 replayed over each ranked
+    query's own rows (run_pattern_nodes, one query at a time), on random
+    multigraphs: a parallel edge and a self-loop in every example, names
+    shared across nodes and labels.  The enumeration's truncated
+    targets must consume exactly what the executed queries would."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql.types import StructType
+
+    from graphraft_spark.graph.model import PropertyGraph
+    from graphraft_spark.llm import LexicographicRanker
+    from graphraft_spark.patterns.compiler import run_pattern_nodes
+    from graphraft_spark.patterns.cypher_parse import parse_cypher_query
+    from graphraft_spark.pipeline import run_pipeline
+    from graphraft_spark.session import local_frame
+
+    edges = edges + edges[:1] + [(loop, loop, "A")]
+    node_ids = sorted({n for s, d, _ in edges for n in (s, d)})
+    # local relations: a parallelized list would add a job per scan
+    g = PropertyGraph(
+        nodes=local_frame(spark, [
+            {"nodeId": n, "label": "LM"[n % 2], "name": f"n{n % 3}",
+             "detail": f"d{n}"} for n in node_ids], StructType.fromDDL(
+            "nodeId bigint, label string, name string, detail string")),
+        edges=local_frame(spark, [
+            {"edgeId": i, "src": s, "dst": d, "relType": t}
+            for i, (s, d, t) in enumerate(edges)], StructType.fromDDL(
+            "edgeId bigint, src bigint, dst bigint, relType string")))
+    questions = [(qid, f"q{qid}", names)
+                 for qid, names in enumerate(anchors, 1)]
+    ranked: dict[str, list[str]] = {}
+
+    class Recording(LexicographicRanker):
+        def rank(self, question, candidates, k=5):
+            ranked[question] = super().rank(question, candidates, k)
+            return ranked[question]
+
+    spark_sim, py_sim = _SIMILARITY[sim]
+    got = run_pipeline(spark, g, questions, Recording(), max_nodes=max_nodes,
+                       k=k, similarity=spark_sim,
+                       prop_cols=("detail",)).collect()
+    assert all(r["detail"] == f"d{r['nodeId']}" for r in got)
+
+    # each ranked query executes on its own; one collect for all of them
+    specs = {(qid, idx): parse_cypher_query(query, escaped=True)
+             for qid, text, _ in questions
+             for idx, query in enumerate(ranked.get(text, []))}
+    rows = []
+    if specs:
+        per_query = [run_pattern_nodes(g, spec).select(
+                         F.lit(qid).alias("qid"), F.lit(idx).alias("idx"),
+                         "nodeId")
+                     for (qid, idx), spec in specs.items()]
+        rows = [(r["qid"], r["idx"], r["nodeId"], py_sim(r["nodeId"]),
+                 specs[r["qid"], r["idx"]].text_pattern(""))
+                for r in reduce(DataFrame.unionByName, per_query).collect()]
+    assert ({(r["qid"], r["nodeId"], r["queryIdx"], r["rank"],
+              r["similarity"], tuple(r["patterns"])) for r in got}
+            == _sequential_budget(rows, max_nodes, 1.0))
+
+
 @settings(**SETTINGS)
 @given(texts=st.lists(
     st.text(alphabet="ab ", min_size=1, max_size=30), min_size=1,
@@ -291,49 +384,3 @@ def test_pack_bins_scalable_property(spark, sizes, budget, parts):
     got = {(r.doc_id, r.bin_id) for r in pack_bins_scalable(
         df, budget, "sz", partitions=parts).collect()}
     assert got == want
-
-
-@settings(**SETTINGS)
-@given(edges=edge_lists, data=st.data())
-def test_bulk_execution_matches_per_spec_on_random_graphs(spark, edges, data):
-    """run_patterns_bulk == run_pattern_nodes looped, on random multi-
-    edge graphs (self-loops, shared names, both labels ambiguous) and
-    random instantiated specs of every template."""
-    from graphraft_spark.patterns.compiler import (
-        SPEC_COLS,
-        run_pattern_nodes,
-        run_patterns_bulk,
-    )
-    from graphraft_spark.patterns.ir import onehop, twohop, twopath
-
-    _, g = _graph_from(spark, edges)
-    names = st.sampled_from(["n0", "n1", "n2"])
-    rels = st.sampled_from(["A", "B"])
-    cases = []
-    for _ in range(data.draw(st.integers(2, 4))):
-        kind = data.draw(st.sampled_from(["1hop", "2hop", "2path"]))
-        n1, t1 = data.draw(names), data.draw(rels)
-        if kind == "1hop":
-            spec = onehop("N", n1, t1, "N")
-            row = ("1hop", "N", n1, t1, "N", None, None, None)
-        elif kind == "2hop":
-            t2 = data.draw(rels)
-            spec = twohop("N", n1, t1, "N", t2, "N")
-            row = ("2hop", "N", n1, t1, "N", t2, "N", None)
-        else:
-            t2, n3 = data.draw(rels), data.draw(names)
-            spec = twopath("N", n1, t1, "N", t2, "N", n3)
-            row = ("2path", "N", n1, t1, "N", t2, "N", n3)
-        cases.append((spec, row))
-
-    specs_df = spark.createDataFrame(
-        [row for _, row in cases],
-        ", ".join(f"{c} string" for c in SPEC_COLS))
-    got = {}
-    for r in run_patterns_bulk(g, specs_df).collect():
-        key = tuple(r[c] for c in SPEC_COLS)
-        got.setdefault(key, set()).add(r["nodeId"])
-    for spec, row in cases:
-        want = {r["nodeId"]
-                for r in run_pattern_nodes(g, spec).collect()}
-        assert got.get(row, set()) == want, row

@@ -46,9 +46,9 @@ FLAGSHIPS = [
      "two countDistinct aggregates would double every binding row "
      "before the shuffle; r5 rewrite measured 2.2x)."),
     ("p_full_pipeline",
-     "Pipeline: spec-as-data execution (the driver-ranked spec table "
-     "is a local relation that broadcasts into ONE join tree per "
-     "template) — plan size independent of spec count."),
+     "Pipeline: the enumeration carries each signature's first "
+     "max_nodes targets, so the ranked queries are never re-executed; "
+     "the result is a local relation over the collected budget."),
     ("q_top_supplier",
      "Q15 shape (promoted r10): the revenue aggregate is lazily "
      "localCheckpoint'd so the max branch and the filter branch share "

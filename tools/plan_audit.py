@@ -69,11 +69,10 @@ ALLOWED: dict[str, int] = {
     # m_retrieval_eval adds the gold-label read of customer (2).
     "m_retrieval_eval": 2, "p_curate_corpus": 3,
     "r_budget_accumulate": 1, "r_negative_samples": 1,
-    # p_full_pipeline: ONE copy of the 1hop + 2hop join trees — 5 nodes
-    # reads (x1,x2 | x1,x2,x3: 4), 3 undirected reads (r1 | r1,r2: 2)
-    # and the broadcast spec table once per template (1): the
-    # multi-hop shape g_pattern_exec_2hop is allowed 3 for, per template.
-    "p_full_pipeline": 7,
+    # p_full_pipeline: 0 — run_pipeline returns a local relation over
+    # its collected rows, and its budget reads the ranked queries'
+    # targets from the enumeration instead of re-running the joins.
+    "p_full_pipeline": 0,
     # r_retrieve_data: the persisted results frame is read once per
     # consumer of the kept rows (the pattern branch, the top-up
     # exclusion, the kept count), and subset keying merges the pruned

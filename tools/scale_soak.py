@@ -14,8 +14,9 @@ Flagships and their scaling axis:
 - d_minhash_lsh      — documents ×N via the persisted banding index
                        (build + probe-all-pairs, the bench-scale path)
 - d_span_dedup k=50  — documents ×N, rolling-hash window keys
-- p_full_pipeline    — questions ×N against the sf0.1 graph (the spec
-                       fan-out axis; plan size must stay flat)
+- p_full_pipeline    — questions ×N against the sf0.1 graph (the
+                       question axis: one enumeration and one budget
+                       collect however many questions)
 
 Inputs are MATERIALIZED to .scratch parquet first so generation cost
 never rides the timed run; factors ascend so JVM/codegen warmup lands
