@@ -1,19 +1,22 @@
 """Pattern IR → DataFrame join plan.
 
-One chain builder, :func:`_chain`, turns every pattern into a plan: it
-joins the (lazy) undirected edge view onto the frontier and then the
-next position's node frame, hop by hop, and enforces Cypher
-relationship-uniqueness.  Catalyst picks the physical joins.  The entry
-points differ only in the first frame and the per-position predicates:
+One hop step, :func:`_hop`, builds every pattern's plan: it joins the
+(lazy) undirected edge view onto the frontier and then the next
+position's node frame, and enforces Cypher relationship-uniqueness;
+:func:`_chain` applies it hop by hop.  Catalyst picks the physical
+joins.  The entry points differ only in the first frame and the
+per-position predicates:
 
 * :func:`compile_pattern` (``run_pattern`` / ``run_pattern_nodes``): an
   instantiated spec.  Label, name and type literals filter the scans,
   so predicate pushdown reaches parquet; named node sets are a handful
   of rows and get a ``broadcast`` hint.
-* ``patterns.enumerate``: the enumeration templates.  Anchors are a
-  literal ``name IN (...)`` filter (one question) or a join with a
-  ``(qid, name)`` frame (many questions).  The pipeline executes its
-  ranked queries from these bindings, not from a second plan.
+* ``patterns.enumerate``: every enumeration template from one chain.
+  Anchors are a literal ``name IN (...)`` filter (one question) or a
+  join with a ``(qid, name)`` frame (many questions); the second hop is
+  optional (:func:`_hop` with ``how="left"``) when a one-hop template
+  reads the same bindings.  The pipeline reads its ranked queries'
+  rows from these bindings, not from a second plan.
 
 Scale: the plan is hop-count-many shuffles at worst; with edges bucketed
 by ``src`` the expansion joins co-locate and AQE's skew-join splitting
@@ -23,7 +26,7 @@ handles hub nodes.  No Python crosses into executors.
 from __future__ import annotations
 
 from collections.abc import Sequence
-from itertools import combinations
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -67,37 +70,41 @@ def _and(cond: Column, extra: Column | None) -> Column:
     return cond if extra is None else cond & extra
 
 
+def _hop(graph: PropertyGraph, plan: DataFrame, j: int,
+         frame: DataFrame | None, on: dict[str, Column],
+         how: str = "inner") -> DataFrame:
+    """Hop ``j``: join edge ``r{j}`` onto ``x{j}``, then ``frame`` (a
+    node frame, columns :func:`node_cols`) at ``x{j+1}``; a ``None``
+    frame makes ``x{j+1}_nodeId`` the hop's ``dst`` and binds no other
+    ``x{j+1}_*`` column.  ``on`` adds a join predicate per variable,
+    ``"r{j}"`` or ``"x{j+1}"``.  The rels of one MATCH are pairwise
+    distinct (Cypher relationship-uniqueness, SURVEY §7.2), in the edge
+    join's ON clause: with ``how="left"`` (an optional hop) a binding
+    the hop cannot extend keeps one row with null hop columns."""
+    e = graph.undirected_edges.select(
+        F.col("edgeId").alias(f"r{j}_edgeId"),
+        F.col("src").alias(f"r{j}_src"),
+        F.col("dst").alias(f"r{j}_dst"),
+        F.col("relType").alias(f"r{j}_relType"))
+    cond = F.col(f"x{j}_nodeId") == F.col(f"r{j}_src")
+    for i in range(1, j):
+        cond = cond & (F.col(f"r{i}_edgeId") != F.col(f"r{j}_edgeId"))
+    plan = plan.join(e, _and(cond, on.get(f"r{j}")), how)
+    if frame is None:
+        return plan.withColumn(f"x{j + 1}_nodeId", F.col(f"r{j}_dst"))
+    return plan.join(frame, _and(
+        F.col(f"r{j}_dst") == F.col(f"x{j + 1}_nodeId"),
+        on.get(f"x{j + 1}")), how)
+
+
 def _chain(graph: PropertyGraph, frames: Sequence[DataFrame | None],
           on: dict[str, Column] | None = None) -> DataFrame:
     """Bindings of the chain ``(x1)-[r1]-(x2)-...``: ``frames[0]`` is the
     first frame (it carries ``x1_*``), ``frames[p]`` the node frame of
-    position ``p`` (its columns are :func:`node_cols`).  A ``None``
-    frame skips that node join: ``x{p+1}_nodeId`` is the hop's ``dst``
-    and no other
-    ``x{p+1}_*`` column exists (its caller joins the attributes later).
-    ``on`` adds a join predicate per variable, ``"r{j}"`` on the hop's
-    edge join and ``"x{p}"`` on the node join.  Edges are
-    ``r{j}_edgeId/relType``; the rels of one MATCH are pairwise distinct
-    (Cypher relationship-uniqueness — exact where the reference relies
-    on a simple graph, SURVEY §7.2)."""
-    on = on or {}
-    plan = frames[0]
-    for j in range(1, len(frames)):
-        e = graph.undirected_edges.select(
-            F.col("edgeId").alias(f"r{j}_edgeId"),
-            F.col("src").alias(f"r{j}_src"),
-            F.col("dst").alias(f"r{j}_dst"),
-            F.col("relType").alias(f"r{j}_relType"))
-        plan = plan.join(e, _and(F.col(f"x{j}_nodeId") == F.col(f"r{j}_src"),
-                                 on.get(f"r{j}")))
-        if frames[j] is None:
-            plan = plan.withColumn(f"x{j + 1}_nodeId", F.col(f"r{j}_dst"))
-        else:
-            plan = plan.join(frames[j], _and(
-                F.col(f"r{j}_dst") == F.col(f"x{j + 1}_nodeId"),
-                on.get(f"x{j + 1}")))
-    for a, b in combinations(range(1, len(frames)), 2):
-        plan = plan.filter(F.col(f"r{a}_edgeId") != F.col(f"r{b}_edgeId"))
+    position ``p``, joined hop by hop (:func:`_hop`).  Edges are
+    ``r{j}_edgeId/relType``."""
+    plan = reduce(lambda p, j: _hop(graph, p, j, frames[j], on or {}),
+                  range(1, len(frames)), frames[0])
     return plan.drop(*[c for c in plan.columns
                        if c.endswith("_src") or c.endswith("_dst")])
 

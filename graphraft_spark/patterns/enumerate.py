@@ -16,20 +16,25 @@ whose returned node has that label — the *intended* semantics of the
 reference's (buggy: label2 vs labels2) target_has_special_label,
 path_retriever.py:42-47 / SURVEY §7.6.
 
-One aggregate serves one question and many: :func:`enumerate_paths_batch`
-anchors on a ``(qid, name)`` frame, while :func:`enumerate_paths` and
-:func:`enumerate_pattern` anchor on a literal ``name IN (...)`` filter
-(so it reaches the node scan) and carry no ``qid``.  The batch call can
-also carry each signature's first B targets (:class:`Targets`), so the
-pipeline's budgeted retrieval reads them instead of executing the
-ranked queries: one traversal per question.
+One binding chain and one aggregate serve every template, for one
+question and many: ``anchor(x1) ⋈ r1 ⋈ x2``, then an optional ``⋈ r2``
+(2hop, 2path) and an optional join to the question's anchors at ``x3``
+(2path).  Each binding row emits the signature row of every template it
+reaches; a 1hop row repeated by the ``r2`` fan-out is harmless, as the
+aggregate first dedupes ``(keys, target)`` pairs.
+:func:`enumerate_paths_batch` anchors on a ``(qid, name)`` frame, while
+:func:`enumerate_paths` and :func:`enumerate_pattern` anchor on a
+literal ``name IN (...)`` filter (so it reaches the node scan) and carry
+no ``qid``.  The batch call can also carry each signature's first B
+targets (:class:`Targets`), so the pipeline's budgeted retrieval reads
+them instead of executing the ranked queries: one traversal per
+question.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -37,9 +42,9 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from graphraft_spark.graph.model import PropertyGraph
 from graphraft_spark.patterns.compiler import (
-    NODE_ATTRS,
     SPEC_COLS,
-    _chain,
+    TEMPLATES,
+    _hop,
     node_cols,
     templates,
 )
@@ -73,127 +78,30 @@ class Targets:
     prop_cols: tuple[str, ...] = ()
 
 
-def _aggregate(graph: PropertyGraph, template: tuple,
-               anchor: Callable[[int], DataFrame], batch: bool,
-               gold: DataFrame | None, specific_target_label: str | None,
-               approx_rsd: float | None,
-               targets: Targets | None = None) -> DataFrame:
-    """One template's signature table: the grouping keys (``qid`` first
-    when ``batch``), ``totalCnt`` = count(DISTINCT target) (the implicit
-    Cypher aggregation B6) and, with ``gold`` (distinct rows of
-    ``g_nodeId``, plus ``g_qid`` in batch mode), ``correctCnt`` (B7);
-    with ``targets``, also the ``targets`` column (see :class:`Targets`).
-    ``anchor(pos)`` is the node frame of an anchored position; in batch
-    mode it carries ``x{pos+1}_qid``.
-
-    The counts obey the template's node inequality (``x1 <> x3``); the
-    ``targets`` do not, because an instantiated query has no WHERE
-    clause (``ir.twohop``).  So the inequality is a per-target flag,
-    not a filter on the bindings: a target counts when one of its
-    bindings passes it, and a signature no target passes is dropped."""
-    _, n_nodes, anchored, ret = template
-    last = n_nodes - 1
-    # aggregate-early / decorate-late: the terminal node join is the
-    # widest join of the plan (it runs on the full binding fan-out), but
-    # the terminal contributes only its LABEL to the signature, a
-    # function of the target id — so dedupe bindings to distinct
-    # (signature-prefix, target) pairs FIRST and join node attributes
-    # onto the ~10x smaller result.  Not when the terminal is anchored,
-    # when specific_target_label filters it (the filter must reach the
-    # node join below the distinct), or under HLL (no distinct shuffle:
-    # the label is a group key of the raw bindings).
-    defer = (last not in anchored and approx_rsd is None
-             and (specific_target_label is None or ret != last))
-    # the targets' payload rides the return position's node frame
-    props = targets.prop_cols if targets is not None else ()
-    payload = ("name", *props) if targets is not None else ()
-    frames = [anchor(p) if p in anchored
-              else None if defer and p == last
-              else graph.nodes.select(*node_cols(
-                  p, NODE_ATTRS + (props if p == ret else ())))
-              for p in range(n_nodes)]
-    on = {f"x{p + 1}": F.col("x1_qid") == F.col(f"x{p + 1}_qid")
-          for p in anchored[1:] if batch}
-    bindings = _chain(graph, frames, on)
-    # tgt <> src1 (2hop), a <> b (2path)
-    ne = (F.col("x1_nodeId") != F.col("x3_nodeId") if n_nodes == 3
-          else F.lit(True))
-
-    sig = _signature(n_nodes, anchored)
-    if batch:
-        sig = [("qid", "x1_qid")] + sig
-    key_names = [o for o, _ in sig]
-    tgt = F.col(f"x{ret + 1}_nodeId")
-    # functions of the target, so grouping on them is grouping on it
-    carried = [(f"_t_{a}", f"x{ret + 1}_{a}") for a in payload]
-
-    def gold_of(qid, target):
-        cond = target == F.col("g_nodeId")
-        return (qid == F.col("g_qid")) & cond if batch else cond
-
-    if approx_rsd is not None:
-        if targets is not None:
-            raise ValueError("enumerate_paths_batch: targets needs the "
-                             "exact count (approx_rsd=None)")
-        # the hub-scale path: HyperLogLog++ total over the raw bindings
-        # (a fixed-size mergeable partial per signature); correctCnt is
-        # the single exact distinct aggregate, so still no Expand
-        bindings = bindings.filter(ne)
-        aggs = [F.approx_count_distinct(tgt, approx_rsd).alias("totalCnt")]
-        if gold is not None:
-            bindings = bindings.join(F.broadcast(gold),
-                                     gold_of(F.col("x1_qid"), tgt), "left")
-            aggs.append(F.countDistinct("g_nodeId").alias("correctCnt"))
-        df = bindings.groupBy(*[F.col(s).alias(o) for o, s in sig]).agg(*aggs)
-    else:
-        # one grouping over (keys, target) carrying the inequality flag,
-        # then plain counts: exact, and two countDistinct aggregates
-        # would plan an Expand (doubling every binding row before the
-        # shuffle)
-        avail = set(bindings.columns)
-        d = (bindings.groupBy(*[F.col(s).alias(o) for o, s in sig + carried
-                                if s in avail], tgt.alias("_tgt"))
-             .agg(F.max(ne).alias("_ok")))
-        ok = F.col("_ok")
-        aggs = [F.count(F.when(ok, 1)).alias("totalCnt")]
-        if gold is not None:
-            # gold is per-(qid, target), a function of the dedupe key:
-            # joining it after the distinct is exact and much smaller
-            # (gold rows are distinct, so none fans the frame out)
-            d = d.join(F.broadcast(gold),
-                       gold_of(F.col("qid"), F.col("_tgt")), "left")
-            aggs.append(F.count(F.when(ok & F.col("g_nodeId").isNotNull(),
-                                       1)).alias("correctCnt"))
-        # a deferred terminal (= the target) gets its label and payload
-        # after the distinct.  Inner join: the graph is validated and
-        # every edge dst is a node
-        attrs = [(o, s.split("_", 1)[1]) for o, s in sig + carried
-                 if s not in avail]
-        if attrs:
-            d = d.join(graph.nodes.select(
-                F.col("nodeId").alias("_tgt"),
-                *[F.col(a).alias(o) for o, a in attrs]), "_tgt")
-        if targets is not None:
-            # the first `limit` targets of each signature in consumption
-            # order; the window shares the aggregate's partitioning
-            sim = targets.similarity(F.col("_tgt"))
-            first = F.row_number().over(Window.partitionBy(*key_names)
-                                        .orderBy(sim.desc(), F.col("_tgt")))
-            d = d.select("*", sim.alias("_sim"), first.alias("_first"))
-            aggs.append(F.collect_list(F.when(
-                F.col("_first") <= targets.limit,
-                F.struct(F.col("_tgt").alias("nodeId"),
-                         F.col("_sim").alias("similarity"),
-                         *[F.col(o).alias(a) for (o, _), a
-                           in zip(carried, payload)]))
-            ).alias("targets"))
-        # rows are distinct on (keys, target), so a count per key set
-        # IS count(DISTINCT target)
-        df = (d.groupBy(*key_names).agg(*aggs)
-              .filter(F.col("totalCnt") > 0))
-    if specific_target_label is not None:
-        df = df.filter(F.col(f"label{ret + 1}") == specific_target_label)
-    return df
+def _emit(template: tuple, returned: str | None) -> tuple[Column, bool]:
+    """A template's signature row of one binding of the chain, a struct
+    ``(pattern, SPEC_COLS..., _tgt, _ne)`` with the node inequality as
+    ``_ne`` (``x1 <> x3``); null when the binding does not reach the
+    template (no ``r2``, or no anchor at ``x3``) or its returned node's
+    label is not ``returned``.  Also whether the returned node is free:
+    2hop's terminal is ``r2``'s ``dst``, labelled after grouping."""
+    pattern, n_nodes, anchored, ret = template
+    free = n_nodes == 3 and 2 not in anchored
+    null = F.lit(None).cast("string")
+    bound = {"x3_nodeId": F.col("r2_dst"), "x3_label": null} if free else {}
+    col = lambda src: bound.get(src, F.col(src))  # noqa: E731
+    sig = dict(_signature(n_nodes, anchored))
+    x3 = col("x3_nodeId") if n_nodes == 3 else None
+    reached = F.lit(True) if x3 is None else x3.isNotNull()
+    if returned is not None and not free:
+        reached = reached & (col(f"x{ret + 1}_label") == returned)
+    return F.when(reached, F.struct(
+        F.lit(pattern).alias("pattern"),
+        *[(col(sig[c]) if c in sig else null).alias(c)
+          for c in SPEC_COLS[1:]],
+        col(f"x{ret + 1}_nodeId").alias("_tgt"),
+        (F.lit(True) if x3 is None else F.col("x1_nodeId") != x3)
+        .alias("_ne"))), free
 
 
 def _enumerate(graph: PropertyGraph, patterns: Sequence[str], op: str,
@@ -201,27 +109,113 @@ def _enumerate(graph: PropertyGraph, patterns: Sequence[str], op: str,
                gold: DataFrame | None, specific_target_label: str | None,
                approx_rsd: float | None,
                targets: Targets | None = None) -> DataFrame:
-    """All templates unioned into one signature table with a ``pattern``
-    column; signature columns a template lacks are null-padded so the
-    union is schema-stable."""
-    cols = ((["qid"] if batch else []) + list(SPEC_COLS) + ["totalCnt"]
-            + (["correctCnt"] if gold is not None else [])
-            + (["targets"] if targets is not None else []))
-    out = []
-    for template in templates(patterns, op):
-        df = _aggregate(graph, template, anchor, batch, gold,
-                        specific_target_label, approx_rsd, targets)
-        # ONE select pads the missing signature columns and stamps the
-        # pattern tag — a withColumn per column is a full DataFrame
-        # round-trip each (~14 ms of driver latency on a slow-py4j
-        # host) for the identical plan
-        have = set(df.columns)
-        out.append(df.select(*[
-            F.lit(template[0]).alias("pattern") if c == "pattern"
-            else (F.col(c) if c in have
-                  else F.lit(None).cast("string").alias(c))
-            for c in cols]))
-    return reduce(DataFrame.unionByName, out)
+    """The signature table of every requested template: the grouping
+    keys (``qid`` first when ``batch``, then SPEC_COLS with a
+    ``pattern`` tag and null columns a template lacks), ``totalCnt`` =
+    count(DISTINCT target) (the implicit Cypher aggregation B6) and,
+    with ``gold`` (distinct rows of ``g_nodeId``, plus ``g_qid`` in
+    batch mode), ``correctCnt`` (B7); with ``targets``, also the
+    ``targets`` column (see :class:`Targets`).  ``anchor(pos)`` is the
+    node frame of an anchored position; in batch mode it carries
+    ``x{pos+1}_qid``.
+
+    ``r2`` (``r1 <> r2`` in its ON clause) and the anchors at ``x3``
+    are left joins when a shallower template reads the same bindings,
+    so a binding that stops at ``x2`` still yields its 1hop row.
+
+    The counts obey the template's node inequality (``x1 <> x3``); the
+    ``targets`` do not, because an instantiated query has no WHERE
+    clause (``ir.twohop``).  So the inequality is a per-target flag,
+    not a filter on the bindings: a target counts when one of its
+    bindings passes it, and a signature no target passes is dropped."""
+    tmpl = templates(patterns, op)
+    if approx_rsd is not None and targets is not None:
+        raise ValueError("enumerate_paths_batch: targets needs the "
+                         "exact count (approx_rsd=None)")
+    plan = _hop(graph, anchor(0), 1,
+                graph.nodes.select(*node_cols(1, ("nodeId", "label"))), {})
+    if max(n for _, n, _, _ in tmpl) == 3:
+        two_path = any(2 in anc for _, _, anc, _ in tmpl)
+        on = {"x3": F.col("x1_qid") == F.col("x3_qid")} if batch else {}
+        plan = _hop(graph, plan, 2, anchor(2) if two_path else None, on,
+                    "inner" if len(tmpl) == 1 else "left")
+    emitted = [_emit(t, specific_target_label) for t in tmpl]
+    late = [t[0] for t, (_, free) in zip(tmpl, emitted) if free]
+    rows = plan.select(
+        *([F.col("x1_qid").alias("qid")] if batch else []),
+        F.inline(F.filter(F.array(*[e for e, _ in emitted]),
+                          lambda r: r.isNotNull())))
+
+    key_names = (["qid"] if batch else []) + list(SPEC_COLS)
+    payload = ("name", *targets.prop_cols) if targets is not None else ()
+
+    def decorate(d: DataFrame) -> DataFrame:
+        # the target's payload and 2hop's terminal label, functions of
+        # the target.  Inner join: the graph is validated and every
+        # edge dst is a node
+        if not late and not payload:
+            return d
+        d = d.join(graph.nodes.select(
+            F.col("nodeId").alias("_tgt"),
+            *([F.col("label").alias("_tlabel")] if late else []),
+            *[F.col(a).alias(f"_t_{a}") for a in payload]), "_tgt")
+        if not late:
+            return d
+        d = d.withColumn("label3", F.when(F.col("pattern").isin(late),
+                                          F.col("_tlabel"))
+                         .otherwise(F.col("label3")))
+        if specific_target_label is None:
+            return d
+        return d.filter(~F.col("pattern").isin(late)
+                        | (F.col("label3") == specific_target_label))
+
+    def with_gold(d: DataFrame) -> DataFrame:
+        # gold is per-(qid, target); distinct rows, so none fans out
+        cond = F.col("_tgt") == F.col("g_nodeId")
+        if batch:
+            cond = cond & (F.col("qid") == F.col("g_qid"))
+        return d.join(F.broadcast(gold), cond, "left")
+
+    if approx_rsd is not None:
+        # the hub-scale path: HyperLogLog++ total over the raw rows (a
+        # fixed-size mergeable partial per signature), so the terminal
+        # label joins before grouping; correctCnt is the single exact
+        # distinct aggregate, so still no Expand
+        d = decorate(rows.filter(F.col("_ne")))
+        aggs = [F.approx_count_distinct("_tgt", approx_rsd).alias("totalCnt")]
+        if gold is not None:
+            d = with_gold(d)
+            aggs.append(F.countDistinct("g_nodeId").alias("correctCnt"))
+        return d.groupBy(*key_names).agg(*aggs)
+
+    # aggregate-early / decorate-late: one grouping over (keys, target)
+    # with the inequality flag shrinks the fan-out before the target
+    # join, then plain counts (two countDistinct would plan an Expand)
+    d = rows.groupBy(*key_names, "_tgt").agg(F.max("_ne").alias("_ok"))
+    ok = F.col("_ok")
+    aggs = [F.count(F.when(ok, 1)).alias("totalCnt")]
+    if gold is not None:
+        d = with_gold(d)
+        aggs.append(F.count(F.when(ok & F.col("g_nodeId").isNotNull(),
+                                   1)).alias("correctCnt"))
+    d = decorate(d)
+    if targets is not None:
+        # the first `limit` targets of each signature in consumption
+        # order; the window shares the final aggregate's exchange
+        sim = targets.similarity(F.col("_tgt"))
+        first = F.row_number().over(Window.partitionBy(*key_names)
+                                    .orderBy(sim.desc(), F.col("_tgt")))
+        d = d.select("*", sim.alias("_sim"), first.alias("_first"))
+        aggs.append(F.collect_list(F.when(
+            F.col("_first") <= targets.limit,
+            F.struct(F.col("_tgt").alias("nodeId"),
+                     F.col("_sim").alias("similarity"),
+                     *[F.col(f"_t_{a}").alias(a) for a in payload]))
+        ).alias("targets"))
+    # rows are distinct on (keys, target), so a count per key set IS
+    # count(DISTINCT target)
+    return (d.groupBy(*key_names).agg(*aggs)
+            .filter(F.col("totalCnt") > 0))
 
 
 def _literal_anchor(graph: PropertyGraph, names: Sequence[str],
@@ -245,17 +239,19 @@ def enumerate_pattern(graph: PropertyGraph, pattern: str,
     """One template → signature table with ``totalCnt`` (grouped
     count(DISTINCT tgt), the implicit Cypher aggregation B6) and, when
     ``tgt_ids`` is given (supervised training mode), ``correctCnt`` (B7)."""
-    (template,) = templates([pattern], "enumerate_pattern")
-    return _aggregate(graph, template, _literal_anchor(graph, src_names),
-                      False, _gold_ids(graph, tgt_ids), None, None)
+    df = _enumerate(graph, [pattern], "enumerate_pattern",
+                    _literal_anchor(graph, src_names), False,
+                    _gold_ids(graph, tgt_ids), None, None)
+    return df.drop(*[c for c in SPEC_COLS if c not in dict(
+        _signature(*TEMPLATES[pattern][:2]))])
 
 
 def enumerate_paths(graph: PropertyGraph, src_names: Sequence[str],
                     patterns: Sequence[str] = PATTERNS,
                     tgt_ids: Sequence[int] | None = None,
                     specific_target_label: str | None = None) -> DataFrame:
-    """All templates for one question's anchors, unioned into one
-    signature table with a ``pattern`` column — the DataFrame analog of
+    """All templates for one question's anchors in one signature table
+    with a ``pattern`` column — the DataFrame analog of
     PathRetriever.retrieve_paths (path_retriever.py:49-64)."""
     return _enumerate(graph, patterns, "enumerate_paths",
                       _literal_anchor(graph, src_names), False,

@@ -77,6 +77,14 @@ DEFAULT_CONFS: dict[str, str] = {
     # tolerate events.parquet storing ts as TIMESTAMP(NANOS) (some
     # driver rounds): read as INT64 nanos; load_events adapts either way
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # lower()/upper() under UTF8_BINARY use the JVM's case mapping, as
+    # the JVM-hosted reference's Cypher toLower does, not ICU's: the
+    # first ICU case mapping in a JVM initializes ICU, ~1.25 s of one
+    # cold online question's ~1.7 s entity-match collect (4-core host;
+    # `spark.range(1).select(lower(lit("ABC")))` cold: 1.42 s with ICU,
+    # 0.10 s without).  tests/test_session.py pins lower() to Python's
+    # str.lower() on the non-ASCII special cases.
+    "spark.sql.icu.caseMappings.enabled": "false",
     "spark.ui.enabled": "false",
 }
 

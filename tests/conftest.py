@@ -45,9 +45,19 @@ def tiny_graph(spark):
 
     nodes: 1-3 Author, 10-13 Paper, 20 Institution, 30 FieldOfStudy
     """
-    from graphraft_spark.graph.model import PropertyGraph
+    from pyspark.sql.types import StructType
 
-    nodes = spark.createDataFrame(
+    from graphraft_spark.graph.model import PropertyGraph
+    from graphraft_spark.session import local_frame
+
+    def frame(rows, ddl):
+        # a local relation: a parallelized list would plan an RDD scan
+        # whose every action starts Python workers
+        schema = StructType.fromDDL(ddl)
+        return local_frame(spark, [dict(zip(schema.names, r)) for r in rows],
+                           schema)
+
+    nodes = frame(
         [
             (1, "Author", "Ada"),
             (2, "Author", "Ada"),        # duplicate name (multi-binding)
@@ -61,7 +71,7 @@ def tiny_graph(spark):
         ],
         "nodeId bigint, label string, name string",
     )
-    edges = spark.createDataFrame(
+    edges = frame(
         [
             (100, 1, 10, "WRITES"),
             (101, 1, 11, "WRITES"),

@@ -35,6 +35,40 @@ def test_anchored_twohop_broadcasts_and_pushes_name_filter(spark, graph):
         "anchor name filter must reach the parquet scan"
 
 
+def test_enumeration_collect_job_count(spark, graph):
+    """One two-anchor enumerate_paths_batch collect with targets, as
+    the pipeline runs it for an online question, launches at most 9
+    Spark jobs at sf0.001: 6 broadcasts (the anchor names, the x1 and
+    x3 anchor nodes, x2's nodes, r2's edges, the target nodes), the map
+    stages of the (keys, target) grouping and of the window/final
+    grouping, and the result stage.  A template with a chain of its
+    own adds jobs here."""
+    from pyspark.sql.types import StructType
+
+    from graphraft_spark.patterns.enumerate import (
+        Targets,
+        enumerate_paths_batch,
+    )
+    from graphraft_spark.pipeline import default_similarity
+    from graphraft_spark.session import local_frame
+
+    anchors = local_frame(
+        spark, [{"qid": 1, "name": "Customer#000000042"},
+                {"qid": 1, "name": "Supplier#000000007"}],
+        StructType.fromDDL("qid bigint, name string"))
+    df = enumerate_paths_batch(graph, anchors,
+                               targets=Targets(20, default_similarity))
+    sc, group = spark.sparkContext, "enumeration-job-count"
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    # the two anchors share no neighbour, so no 2path row
+    assert {r["pattern"] for r in rows} == {"1hop", "2hop"}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 9
+
+
 def test_node_scan_prunes_columns(spark, graph):
     """A projection that only needs nodeId/label must not read name or
     detail from parquet."""

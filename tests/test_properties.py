@@ -24,16 +24,26 @@ edge_lists = st.lists(
     min_size=1, max_size=14, unique=True)
 
 
-def _graph_from(spark, edges):
+def _graph_from(spark, edges, labels="N", detail=False):
+    """The graph of ``edges``: node n is named ``n{n % 3}`` (shared
+    names) and labelled ``labels[n % len(labels)]``; with ``detail``,
+    nodes also carry a ``detail`` column ``d{n}``.  Local relations: a
+    parallelized list would add a job per scan."""
+    from pyspark.sql.types import StructType
+
     from graphraft_spark.graph.model import PropertyGraph
+    from graphraft_spark.session import local_frame
 
     node_ids = sorted({n for s, d, _ in edges for n in (s, d)})
-    nodes = spark.createDataFrame(
-        [(n, "N", f"n{n % 3}") for n in node_ids],  # shared names: n0/n1/n2
-        "nodeId bigint, label string, name string")
-    edf = spark.createDataFrame(
-        [(i, s, d, t) for i, (s, d, t) in enumerate(edges)],
-        "edgeId bigint, src bigint, dst bigint, relType string")
+    nodes = local_frame(spark, [
+        {"nodeId": n, "label": labels[n % len(labels)], "name": f"n{n % 3}",
+         **({"detail": f"d{n}"} if detail else {})} for n in node_ids],
+        StructType.fromDDL("nodeId bigint, label string, name string"
+                           + (", detail string" if detail else "")))
+    edf = local_frame(spark, [
+        {"edgeId": i, "src": s, "dst": d, "relType": t}
+        for i, (s, d, t) in enumerate(edges)], StructType.fromDDL(
+        "edgeId bigint, src bigint, dst bigint, relType string"))
     return node_ids, PropertyGraph(nodes=nodes, edges=edf)
 
 
@@ -86,6 +96,114 @@ def test_twohop_excludes_reused_edge_and_src(spark, edges):
                             per_sig.setdefault(("n0", t1, t2), set()).add(tgt)
     want_total = sum(len(v) for v in per_sig.values())
     assert got_total == want_total
+
+
+def _enumerate_brute(edges, labels, anchors, gold, patterns, limit, sim):
+    """path_retriever.py's three templates as Python loops over the
+    undirected multigraph (one adjacency entry per binding direction,
+    so a self-loop binds twice with one edgeId): per signature,
+    ``totalCnt`` / ``correctCnt`` over the targets some binding of
+    which passes the node inequality, and the first ``limit`` targets
+    in ``(similarity DESC, nodeId)`` order, inequality or not."""
+    adj: dict[int, list[tuple[int, int, str]]] = {}
+    for i, (s, d, t) in enumerate(edges):
+        adj.setdefault(s, []).append((i, d, t))
+        adj.setdefault(d, []).append((i, s, t))
+    lab = lambda n: labels[n % len(labels)]
+    name = lambda n: f"n{n % 3}"
+    found: dict[tuple, dict[int, bool]] = {}
+
+    def bind(key, tgt, ne):
+        seen = found.setdefault(key, {})
+        seen[tgt] = seen.get(tgt, False) or ne
+
+    for qid, names in anchors.items():
+        mine = [n for n in adj if name(n) in names]
+        for a in mine:
+            for e1, m, t1 in adj[a]:
+                if "1hop" in patterns:
+                    bind((qid, "1hop", lab(a), name(a), t1, lab(m), None,
+                          None, None), m, True)
+                for e2, c, t2 in adj[m]:
+                    if e2 == e1:
+                        continue
+                    if "2hop" in patterns:
+                        bind((qid, "2hop", lab(a), name(a), t1, lab(m), t2,
+                              lab(c), None), c, a != c)
+                    if "2path" in patterns and c in mine:
+                        bind((qid, "2path", lab(a), name(a), t1, lab(m), t2,
+                              lab(c), name(c)), m, a != c)
+    out = {}
+    for key, tgts in found.items():
+        ok = {t for t, ne in tgts.items() if ne}
+        if ok:
+            first = sorted(tgts, key=lambda n: (-sim(n), n))[:limit]
+            out[key] = (len(ok), len(ok & gold.get(key[0], set())),
+                        [(n, sim(n), name(n)) for n in first])
+    return out
+
+
+@pytest.mark.parametrize("patterns", [("1hop",), ("2hop",), ("2path",),
+                                      ("1hop", "2hop", "2path")],
+                         ids=["1hop", "2hop", "2path", "all"])
+@settings(**dict(SETTINGS, max_examples=5))
+@given(edges=st.lists(
+           st.tuples(st.integers(0, 7), st.integers(0, 7),
+                     st.sampled_from(["A", "B"])),
+           min_size=1, max_size=14),
+       loop=st.integers(0, 7),
+       anchors=st.lists(
+           st.lists(st.sampled_from(["n0", "n1", "n2"]), min_size=1,
+                    max_size=2, unique=True),
+           min_size=1, max_size=2),
+       gold=st.sets(st.integers(0, 7), max_size=4),
+       limit=st.integers(1, 4))
+# the 2hop signature from node 1 reaches 5 and, over the parallel
+# edges, 1 itself: a target of the query that the count skips
+@example(edges=[(1, 3, "A"), (5, 3, "A")], loop=0, anchors=[["n1"]],
+         gold={5}, limit=3)
+def test_enumeration_matches_bruteforce(spark, patterns, edges, loop,
+                                        anchors, gold, limit):
+    """enumerate_paths_batch with gold and targets == the Python
+    enumerator, for every template alone and all three together, on
+    random multigraphs: a parallel edge and a self-loop in every
+    example, names shared across nodes, two labels, two questions
+    whose 2path pairs must not cross."""
+    from pyspark.sql.types import StructType
+
+    from graphraft_spark.patterns.enumerate import (
+        Targets,
+        enumerate_paths_batch,
+    )
+    from graphraft_spark.session import local_frame
+
+    spark_sim, py_sim = _SIMILARITY["mod3"]
+    edges = edges + edges[:1] + [(loop, loop, "A")]
+    _, g = _graph_from(spark, edges, labels="LM")
+    by_q = dict(enumerate(anchors, 1))
+    gold_q = {qid: {n for n in gold if n % len(by_q) == qid - 1}
+              for qid in by_q}
+    got = enumerate_paths_batch(
+        g,
+        local_frame(spark, [{"qid": q, "name": n}
+                            for q, names in by_q.items() for n in names],
+                    StructType.fromDDL("qid bigint, name string")),
+        patterns=patterns,
+        gold=local_frame(spark, [{"qid": q, "nodeId": n}
+                                 for q, ns in gold_q.items() for n in ns],
+                         StructType.fromDDL("qid bigint, nodeId bigint")),
+        targets=Targets(limit, spark_sim)).collect()
+    keys = ("qid", "pattern", "label1", "name1", "type1", "label2",
+            "type2", "label3", "name3")
+    assert {tuple(r[c] for c in keys): (
+                r["totalCnt"], r["correctCnt"],
+                sorted(((t["nodeId"], t["similarity"], t["name"])
+                        for t in r["targets"]),
+                       key=lambda t: (-t[1], t[0])))
+            for r in got} == _enumerate_brute(
+        edges, "LM", {q: set(ns) for q, ns in by_q.items()}, gold_q,
+        patterns, limit, py_sim)
+    assert len(got) == len({tuple(r[c] for c in keys) for r in got})
 
 
 @settings(**SETTINGS)
@@ -206,27 +324,14 @@ def test_pipeline_matches_per_query_replay(spark, sim, edges, loop, anchors,
     from functools import reduce
 
     from pyspark.sql import DataFrame
-    from pyspark.sql.types import StructType
 
-    from graphraft_spark.graph.model import PropertyGraph
     from graphraft_spark.llm import LexicographicRanker
     from graphraft_spark.patterns.compiler import run_pattern_nodes
     from graphraft_spark.patterns.cypher_parse import parse_cypher_query
     from graphraft_spark.pipeline import run_pipeline
-    from graphraft_spark.session import local_frame
 
-    edges = edges + edges[:1] + [(loop, loop, "A")]
-    node_ids = sorted({n for s, d, _ in edges for n in (s, d)})
-    # local relations: a parallelized list would add a job per scan
-    g = PropertyGraph(
-        nodes=local_frame(spark, [
-            {"nodeId": n, "label": "LM"[n % 2], "name": f"n{n % 3}",
-             "detail": f"d{n}"} for n in node_ids], StructType.fromDDL(
-            "nodeId bigint, label string, name string, detail string")),
-        edges=local_frame(spark, [
-            {"edgeId": i, "src": s, "dst": d, "relType": t}
-            for i, (s, d, t) in enumerate(edges)], StructType.fromDDL(
-            "edgeId bigint, src bigint, dst bigint, relType string")))
+    _, g = _graph_from(spark, edges + edges[:1] + [(loop, loop, "A")],
+                       labels="LM", detail=True)
     questions = [(qid, f"q{qid}", names)
                  for qid, names in enumerate(anchors, 1)]
     ranked: dict[str, list[str]] = {}

@@ -56,7 +56,7 @@ ALLOWED: dict[str, int] = {
     # multi-reference; edges come from the pruned .graph_cache parquet.
     "g_degree_top": 1,
     # g_betweenness_top: 0 since r13 (per-round frames keyed-cached).
-    "g_enum_all_pruned": 6, "g_khop_sample": 2, "g_onehop_enum": 1,
+    "g_enum_all_pruned": 3, "g_khop_sample": 2, "g_onehop_enum": 1,
     "g_pattern_exec_1hop_multibind": 1, "g_pattern_exec_2hop": 3,
     "g_sql_onehop": 1, "g_supervised_enum": 1, "g_twohop_enum": 3,
     "g_twopath_enum": 3, "g_copurchase_pairs": 1,
