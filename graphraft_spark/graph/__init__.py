@@ -1,6 +1,4 @@
 from graphraft_spark.graph.model import PropertyGraph
 from graphraft_spark.graph.tpch import GRAPH_ORACLE_CTE, load_tables, tpch_graph
-from graphraft_spark.graph.views import register_graph_views, register_table_views
 
-__all__ = ["PropertyGraph", "GRAPH_ORACLE_CTE", "load_tables", "tpch_graph",
-           "register_graph_views", "register_table_views"]
+__all__ = ["PropertyGraph", "GRAPH_ORACLE_CTE", "load_tables", "tpch_graph"]

@@ -394,27 +394,3 @@ def train_sgns(pairs: DataFrame, dim: int = 16, epochs: int = 3,
                        .alias("emb"))
                .localCheckpoint(eager=False))
     return emb
-
-
-def node2vec_embeddings(edges: DataFrame, dim: int = 16,
-                        walk_length: int = 4, window: int = 2,
-                        epochs: int = 3, lr: float = 0.05,
-                        negatives: int = 2, seed: str = "emb0",
-                        src_col: str = "src",
-                        dst_col: str = "dst",
-                        neg_distribution: str = "uniform") -> DataFrame:
-    """DeepWalk end-to-end: one deterministic walk per node →
-    skip-gram pairs → SGNS → (node, emb).  Nodes with no out-edges
-    still embed (they appear as contexts or get init-only vectors)."""
-    from graphraft_spark.graph.sampling import random_walks, skipgram_pairs
-
-    starts = (edges.select(F.col(src_col).alias("n"))
-              .unionByName(edges.select(F.col(dst_col).alias("n")))
-              .distinct()
-              .select(F.col("n").alias("walk_id"), F.col("n")))
-    walks = random_walks(edges, starts, length=walk_length,
-                         seed=seed, src_col=src_col, dst_col=dst_col)
-    pairs = skipgram_pairs(walks, window=window)
-    return train_sgns(pairs, dim=dim, epochs=epochs, lr=lr,
-                      negatives=negatives, seed=seed,
-                      neg_distribution=neg_distribution)

@@ -96,35 +96,3 @@ def build_graph(raw_nodes: DataFrame, raw_edges: DataFrame,
     if validate:
         g.validate()
     return g
-
-
-def upsert_by_key(base: DataFrame, delta: DataFrame,
-                  key: str) -> DataFrame:
-    """MERGE-by-id across RUNS (the reference re-MERGEs every load,
-    stark_neo4j_loading.py:20-61 — later SETs win): delta rows replace
-    base rows sharing ``key``; new keys append.  One union + max-struct
-    aggregation — a single shuffle on the key, no join, scales to any
-    base size."""
-    cols = base.columns
-    if set(cols) != set(delta.columns):
-        raise ValueError(f"schema mismatch: {cols} vs {delta.columns}")
-    tagged = (base.select(*cols).withColumn("_pri", F.lit(0))
-              .unionByName(delta.select(*cols).withColumn("_pri", F.lit(1))))
-    payload = [c for c in cols if c != key]
-    return (
-        tagged.groupBy(key)
-        .agg(F.max(F.struct("_pri", *payload)).alias("_row"))
-        .select(key, *[F.col(f"_row.{c}").alias(c) for c in payload])
-    )
-
-
-def upsert_graph(base: PropertyGraph, delta: PropertyGraph) -> PropertyGraph:
-    """Batch graph MERGE: nodes upserted by nodeId (delta wins), edges
-    by edgeId.  This is the compaction-style batch path; continuously
-    arriving changes should instead land in the streaming delta log
-    (streaming/graph_updates.py) whose merge-on-read view costs
-    O(batch) per trigger instead of a full-table rewrite."""
-    return PropertyGraph(
-        nodes=upsert_by_key(base.nodes, delta.nodes, "nodeId"),
-        edges=upsert_by_key(base.edges, delta.edges, "edgeId"),
-    )

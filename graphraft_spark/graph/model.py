@@ -116,38 +116,3 @@ class PropertyGraph:
             nodes=spark.read.parquet(f"{path}/nodes"),
             edges=spark.read.parquet(f"{path}/edges"),
         )
-
-
-def primary_label(labels: "Column") -> "Column":
-    """B9 (path_retriever.py:31): reduce a Cypher labels() list to the
-    type label — drop the catch-all '_Entity_' role and take the first
-    remaining label.  Engine-side nodes carry a single ``label`` column;
-    this helper exists for ingesting multi-label sources."""
-    return F.filter(labels, lambda x: x != "_Entity_")[0]
-
-
-def write_bucketed(graph: PropertyGraph, db_prefix: str,
-                   buckets: int = 32) -> None:
-    """Persist the graph as BUCKETED tables (saveAsTable; bucket key =
-    join key): expansion joins against ``{prefix}_undirected`` bucketed
-    by ``src`` are shuffle-free on the edge side — the on-cluster analog
-    of materialize_undirected's in-memory partitioning."""
-    graph.nodes.write.mode("overwrite").format("parquet") \
-        .bucketBy(buckets, "nodeId").sortBy("nodeId") \
-        .saveAsTable(f"{db_prefix}_nodes")
-    graph.edges.write.mode("overwrite").format("parquet") \
-        .bucketBy(buckets, "src").sortBy("src") \
-        .saveAsTable(f"{db_prefix}_edges")
-    graph.undirected_edges.write.mode("overwrite").format("parquet") \
-        .bucketBy(buckets, "src").sortBy("src") \
-        .saveAsTable(f"{db_prefix}_undirected")
-
-
-def read_bucketed(spark, db_prefix: str) -> PropertyGraph:
-    """Read a write_bucketed graph; the undirected table carries its
-    bucketing metadata, so hop joins reuse it without an Exchange."""
-    return PropertyGraph(
-        nodes=spark.table(f"{db_prefix}_nodes"),
-        edges=spark.table(f"{db_prefix}_edges"),
-        undirected=spark.table(f"{db_prefix}_undirected"),
-    )

@@ -3,7 +3,6 @@ from graphraft_spark.llm.protocols import (
     EchoGenerator,
     LexicographicRanker,
     QueryRanker,
-    SupervisedOrderRanker,
     TrieConstrainedRanker,
 )
 from graphraft_spark.llm.ner_parse import (
@@ -27,7 +26,6 @@ __all__ = [
     "EchoGenerator",
     "LexicographicRanker",
     "QueryRanker",
-    "SupervisedOrderRanker",
     "TrieConstrainedRanker",
     "parse_labeled_entities",
     "parse_unlabeled_entities",

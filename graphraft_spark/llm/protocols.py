@@ -49,25 +49,6 @@ class LexicographicRanker:
         return sorted(candidates)[: min(k, len(candidates))]
 
 
-class SupervisedOrderRanker:
-    """Ranks by the supervised signal the LLM1 is trained toward
-    (llm1.py:53-58): hits DESC, num_results ASC, stable.  ``scores``
-    maps candidate → (hits, num_results)."""
-
-    def __init__(self, scores: dict[str, tuple[int, int]]):
-        self.scores = scores
-
-    def rank(self, question, candidates, k=5):
-        def key(i_c):
-            i, c = i_c
-            h, n = self.scores.get(c, (-1, 1 << 30))
-            return (-h, n, i)
-
-        ordered = [c for _, c in
-                   sorted(enumerate(candidates), key=lambda ic: key(ic))]
-        return ordered[: min(k, len(candidates))]
-
-
 class TrieConstrainedRanker:
     """Trie-constrained beam ranking with a pluggable token scorer —
     the engine-side analog of SequenceRanker.rank_sequences

@@ -85,13 +85,6 @@ def _h60(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint") % P
 
 
-def xxhash60(s: Column) -> Column:
-    """Fast JVM-intrinsic hash (production default at scale): any uniform
-    hash family gives the same minhash/simhash semantics; only oracle
-    parity needs the portable md5 variant."""
-    return F.pmod(F.xxhash64(s), F.lit(P))
-
-
 def signature_from_hashes(hs: Column, num_perm: int) -> Column:
     """Minhash signature over pre-hashed shingles.  Permutation i:
     (a_i·h + b_i) mod P with a_i = 2i+1, b_i = 104729·i.
@@ -120,22 +113,6 @@ def lsh_bands(sig: Column, bands: int, rows: int) -> Column:
                 lambda v: v.cast("string")))).alias("bucket"),
         ),
     )
-
-
-def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id", num_perm: int = 16,
-                           bands: int = 4, k: int = 3,
-                           hash_fn=None,
-                           max_bucket_size: int | str | None = None) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b): docs sharing ≥1 LSH band
-    bucket.  Explode bands → shuffle by (band, bucket) → within-bucket
-    self-join — pairwise cost bounded by bucket sizes, never all-pairs."""
-    hashed = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(shingles(F.col(text_col), k),
-                    hash_fn or _h60).alias("hs"),
-    )
-    return candidates_from_hashes(hashed, num_perm, bands, max_bucket_size)
 
 
 def candidates_from_hashes(hashed: DataFrame, num_perm: int, bands: int,
@@ -195,30 +172,6 @@ class LshIndex(NamedTuple):
     capped: DataFrame          # (band, bucket, id, root) hot-bucket members
     star: DataFrame | None     # O(B) star edges replacing capped cliques
     frames: tuple              # persisted frames backing the index
-
-
-def lsh_tune(threshold: float, num_perm: int) -> tuple[int, int]:
-    """Pick (bands, rows) for a target Jaccard threshold: among the
-    divisor splits ``bands × rows = num_perm``, choose the one whose
-    S-curve midpoint ``(1/bands)^(1/rows)`` — the similarity at which
-    collision probability ``1-(1-s^rows)^bands`` crosses ~50% — lands
-    closest to ``threshold`` (Leskovec, Rajaraman & Ullman, MMDS ch.3).
-
-    Driver-side pure function; pair with :func:`adaptive_bucket_cap`
-    (work budget) to plan a dedup campaign: ``lsh_tune`` sets the
-    recall/precision knee, the cap bounds the verification bill."""
-    if not 0.0 < threshold < 1.0:
-        raise ValueError(f"threshold must be in (0, 1), got {threshold}")
-    best = None
-    for bands in range(1, num_perm + 1):
-        if num_perm % bands:
-            continue
-        rows = num_perm // bands
-        mid = (1.0 / bands) ** (1.0 / rows)
-        cand = (abs(mid - threshold), bands, rows)
-        if best is None or cand < best:
-            best = cand
-    return best[1], best[2]
 
 
 def adaptive_bucket_cap(hist: dict[int, int], bands: int,
@@ -594,7 +547,8 @@ def minhash_lsh_dedup_hashed(hs: DataFrame, num_perm: int = 16,
     narrows the pair-side arrays to INT to halve the candidate-join
     shuffle bytes, which is lossless exactly for that domain; raw
     64-bit hashes would wrap silently and corrupt Jaccard scores —
-    re-hash them mod P (see ``xxhash60``) before calling."""
+    re-hash them mod P (e.g. ``F.pmod(F.xxhash64(s), F.lit(P))``)
+    before calling."""
     return _lsh_verified_pairs(
         hs, _verify_arrs32(hs),
         num_perm, bands, threshold, max_bucket_size, repair_capped,
@@ -657,7 +611,7 @@ def embedding_neardup(df: DataFrame, emb_col: str = "embedding",
     (≤ ``UNBUCKETED_NEARDUP_MAX_ROWS``); above the gate it raises
     rather than silently planning an O(n²) join.  At scale pass a
     cluster assignment (:func:`graphraft_spark.ops.similarity.ivf_assign`)
-    or use :func:`embedding_neardup_srp`, which needs no label column.
+    or an SRP bucket (:func:`graphraft_spark.ops.similarity.srp_signature`).
     """
     from graphraft_spark.search.vector import dot_col
 
@@ -668,8 +622,8 @@ def embedding_neardup(df: DataFrame, emb_col: str = "embedding",
                 f"embedding_neardup without bucket_col is an all-pairs "
                 f"cartesian join; refusing on {n} rows "
                 f"(> {UNBUCKETED_NEARDUP_MAX_ROWS}).  Pass bucket_col "
-                f"(e.g. an ivf_assign centroid_id) or use "
-                f"embedding_neardup_srp for label-free blocking.")
+                f"(e.g. an ivf_assign centroid_id or an srp_signature "
+                f"bucket).")
 
     cols = [F.col(id_col).alias("id"), F.col(emb_col).alias("e")]
     if bucket_col:
@@ -696,9 +650,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     Iterative min-label propagation; each round is one shuffle-join +
     aggregate.  Dedup graphs converge in a handful of rounds —
     star-linked buckets have diameter ≤ 4 by construction — and the
-    loop stops as soon as a round changes nothing.  (At larger
-    diameters switch to the large-star/small-star alternation; same
-    per-round plan shape.)
+    loop stops as soon as a round changes nothing; a graph of larger
+    diameter needs a larger ``max_iter``.
 
     Lineage is TRUNCATED each round with localCheckpoint, not just
     persisted: under persist alone the logical plan still accumulates
@@ -743,131 +696,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
-            "(graph diameter exceeds the iteration budget) — use "
-            "connected_components_bistar, which needs O(log n) rounds "
-            "for any diameter, or raise max_iter")
-    sizes = labels.groupBy("comp").agg(F.count("*").alias("cluster_size"))
-    return labels.join(sizes, "comp").select("id", "comp", "cluster_size")
-
-
-def embedding_neardup_srp(df: DataFrame, dim: int,
-                          emb_col: str = "embedding",
-                          id_col: str = "vec_id", bits: int = 12,
-                          seed: int = 7, multiprobe: bool = True,
-                          threshold: float = 0.95) -> DataFrame:
-    """Embedding near-dup WITHOUT a label/cluster column: block by
-    signed-random-projection LSH buckets, pair only within (probed)
-    buckets, verify with exact cosine — the corpus-scale alternative to
-    :func:`embedding_neardup`'s caller-supplied buckets when no natural
-    key exists.
-
-    Multiprobe pairs each vector's bucket against its ``bits``
-    Hamming-1 neighbors too, recovering pairs that straddle one
-    hyperplane (the dominant SRP miss mode at high cosine).  Identical
-    vectors always collide (recall 1.0 for exact dups); for
-    threshold≈0.95, per-bit collision probability is
-    1 − arccos(0.95)/π ≈ 0.9, so a 12-bit single-probe finds ≈ 0.9^12 ≈
-    28% and Hamming-1 multiprobe ≈ 0.28·(1+12·0.11) ≈ 66%; stack seeds
-    (union over 2-3 signatures) when the residual matters.  Precision
-    is exact — the cosine verify keeps only true pairs.
-
-    Scale: signature = one narrow scan (no training pass); the
-    self-join shuffles on the bucket id; at 100 TB write the corpus
-    partitionBy(bucket) once so probes are co-located reads."""
-    from graphraft_spark.ops.similarity import srp_hyperplanes, srp_signature
-    from graphraft_spark.search.vector import dot_col
-
-    planes = srp_hyperplanes(dim, bits, seed)
-    s = df.select(F.col(id_col).alias("id"), F.col(emb_col).alias("e"),
-                  srp_signature(emb_col, planes).alias("bk")).persist()
-    s.count()  # both sides of the probe join scan this
-    if multiprobe:
-        probe_list = F.array(
-            F.col("bk"), *[F.expr(f"bk ^ {1 << i}") for i in range(bits)])
-    else:
-        probe_list = F.array(F.col("bk"))
-    probing = s.select(
-        "id", "e", F.explode(probe_list).alias("bk")
-    ).withColumn("bk", F.col("bk").cast("bigint"))
-    pairs = (
-        probing.alias("a")
-        .join(s.alias("b"),
-              (F.col("a.bk") == F.col("b.bk"))
-              & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.col("a.e").alias("ea"), F.col("b.e").alias("eb"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    out = (
-        pairs.withColumn("cosine", dot_col(F.col("ea"), F.col("eb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-        # truncate lineage so `s` can be unpersisted here instead of
-        # leaking cached blocks across calls in a long-lived session
-        # (mirrors _lsh_verified_pairs' cleanup)
-        .localCheckpoint(eager=True)
-    )
-    s.unpersist()
-    return out
-
-
-def connected_components_bistar(pairs: DataFrame,
-                                max_iter: int = 25) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    O(log n) rounds for ANY diameter, vs the min-label propagation's
-    diameter-many rounds.  Use this for graphs that may contain long
-    chains; :func:`connected_components` stays the cheaper choice for
-    dedup graphs whose star-linked buckets bound the diameter.
-
-    Each round is two grouped-min + join passes over the edge list,
-    lineage-truncated like the propagation loop.  Convergence = the
-    (larger→smaller oriented) edge set is unchanged — at that point the
-    graph is a star forest rooted at each component's min id."""
-    e = (pairs.select(F.greatest("id_a", "id_b").alias("u"),
-                      F.least("id_a", "id_b").alias("v"))
-         .filter(F.col("u") != F.col("v"))
-         .distinct().localCheckpoint(eager=True))
-    for _ in range(max_iter):
-        # large-star: connect every strictly-larger neighbor to the
-        # node's root (min over neighborhood ∪ self)
-        und = e.unionByName(e.select(F.col("v").alias("u"),
-                                     F.col("u").alias("v")))
-        mn = und.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m"))
-        ls = (und.join(mn, "u").filter(F.col("v") > F.col("u"))
-              .select(F.col("v").alias("u"), F.col("m").alias("v"))
-              .filter(F.col("u") != F.col("v")).distinct())
-        # small-star: orient to smaller, connect all ≤ neighbors + self
-        # to the root
-        mn2 = ls.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m"))
-        joined = ls.join(mn2, "u")
-        ss = (joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
-              .unionByName(joined.select("u", F.col("m").alias("v")))
-              .filter(F.col("u") != F.col("v")).distinct()
-              .select(F.greatest("u", "v").alias("u"),
-                      F.least("u", "v").alias("v"))
-              ).localCheckpoint(eager=False)
-        # full counts (no limit): the convergence scan doubles as the
-        # complete materialization of the checkpointed round — an
-        # early-stopping limit would leave it partially computed
-        changed = ss.exceptAll(e).count() + e.exceptAll(ss).count()
-        e = ss
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components_bistar did not converge in {max_iter} "
-            "rounds — pathological input or max_iter set far below "
-            "O(log n); raise max_iter (labels from a non-fixpoint edge "
-            "set would be corrupt, so refusing)")
-    labels = (e.select(F.col("u").alias("id"), F.col("v").alias("comp"))
-              .unionByName(e.select(F.col("v").alias("id"),
-                                    F.col("v").alias("comp")))
-              .distinct())
-    # a converged star forest has one row per non-root node; roots map
-    # to themselves via the second branch
+            "(graph diameter exceeds the iteration budget) — raise "
+            "max_iter")
     sizes = labels.groupBy("comp").agg(F.count("*").alias("cluster_size"))
     return labels.join(sizes, "comp").select("id", "comp", "cluster_size")
 

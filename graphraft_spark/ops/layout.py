@@ -95,15 +95,3 @@ def with_zorder_key(df: DataFrame, cols: list[str], bits: int = 16,
                     out_col: str = "zkey") -> DataFrame:
     return df.withColumn(out_col,
                          zorder_key([F.col(c) for c in cols], bits))
-
-
-def write_zordered(df: DataFrame, path: str, cols: list[str],
-                   num_files: int, bits: int = 16) -> None:
-    """Cluster + write: range-partition on the Morton key and sort
-    within partitions, so every output file carries tight min/max
-    ranges on ALL interleaved columns — the OPTIMIZE ZORDER BY shape."""
-    keyed = with_zorder_key(df, cols, bits)
-    (keyed.repartitionByRange(num_files, "zkey")
-     .sortWithinPartitions("zkey")
-     .drop("zkey")
-     .write.mode("overwrite").parquet(path))

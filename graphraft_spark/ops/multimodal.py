@@ -120,45 +120,3 @@ def synth_media_from_documents(docs: DataFrame) -> DataFrame:
         F.when(kind == "video", F.col("n_chars") * 10)
          .when(kind == "audio", F.col("n_chars") * 5).alias("duration_ms"),
     )
-
-
-def chunk_payload(media: DataFrame, chunk_bytes: int = 1 << 20,
-                  id_col: str = "media_id",
-                  payload_col: str = "payload") -> DataFrame:
-    """Split large binary payloads into fixed-size chunks
-    (id, chunk_idx, n_chunks, chunk) — the shuffle-friendliness
-    primitive for blob columns: a 500 MB video row would blow past
-    shuffle frame and page limits, chunked rows stream through any
-    exchange.  Pure native expressions on BINARY (substr/length);
-    no Python, no codec."""
-    n = F.greatest(
-        F.ceil(F.length(F.col(payload_col)) / F.lit(chunk_bytes)),
-        F.lit(1)).cast("int")
-    return (
-        media.select(
-            F.col(id_col), n.alias("n_chunks"),
-            F.explode(F.sequence(F.lit(0), n - 1)).alias("chunk_idx"),
-            F.col(payload_col))
-        .select(
-            id_col, "chunk_idx", "n_chunks",
-            F.expr(f"substr({payload_col}, chunk_idx * {chunk_bytes} + 1, "
-                   f"{chunk_bytes})").alias("chunk"))
-    )
-
-
-def reassemble_payload(chunks: DataFrame, id_col: str = "media_id") -> DataFrame:
-    """Inverse of :func:`chunk_payload`: order-safe binary concat per id
-    (collect chunk structs, sort by index, fold with concat).  One
-    shuffle by id; the sort is per-row over that row's own chunks."""
-    return (
-        chunks.groupBy(id_col)
-        .agg(F.array_sort(F.collect_list(
-            F.struct("chunk_idx", "chunk"))).alias("parts"))
-        .select(
-            id_col,
-            F.aggregate(
-                F.col("parts"),
-                F.lit(b""),
-                lambda acc, p: F.concat(acc, p["chunk"]),
-            ).alias("payload"))
-    )

@@ -145,11 +145,7 @@ def pq_search(codes: DataFrame, codebooks: list[list[list[float]]],
     driver, O(|Q|·m·k_codes) floats, broadcast in the closure), then a
     scan of the codes with per-partition partial top-k — output
     ``(qid, vec_id, dist2, rank)``, shuffle carries partitions·|Q|·k
-    rows.
-
-    If ``codes`` already carries a ``qid`` column (a per-query pruned
-    candidate frame, e.g. from :func:`ivfpq_search`), each row is
-    scored ONLY against its own query's table."""
+    rows."""
     import numpy as np
 
     from pyspark.sql import Window
@@ -167,7 +163,6 @@ def pq_search(codes: DataFrame, codebooks: list[list[list[float]]],
         luts[r[qid_col]] = np.stack([
             ((books[j] - qv[j * sub:(j + 1) * sub][None, :]) ** 2).sum(axis=1)
             for j in range(m)])
-    per_row_qid = qid_col in codes.columns
 
     def kernel(batches):
         import pandas as pd
@@ -175,21 +170,17 @@ def pq_search(codes: DataFrame, codebooks: list[list[list[float]]],
         for pdf in batches:
             if not len(pdf):
                 continue
+            codes_arr = np.stack(pdf["code"].map(
+                lambda b: np.frombuffer(b, dtype="uint8")).to_numpy())
+            ids = pdf[id_col].to_numpy()
             out_qid, out_id, out_d = [], [], []
-            groups = (pdf.groupby(qid_col) if per_row_qid
-                      else [(None, pdf)] )
-            for gq, gdf in groups:
-                codes_arr = np.stack(gdf["code"].map(
-                    lambda b: np.frombuffer(b, dtype="uint8")).to_numpy())
-                targets = ([(gq, luts[gq])] if per_row_qid
-                           else [(q, luts[q]) for q in qids])
-                for q, lut in targets:
-                    # gather: dist2[i] = sum_j lut[j, code[i, j]]
-                    d = lut[np.arange(m)[None, :], codes_arr].sum(axis=1)
-                    top = np.argsort(d, kind="stable")[:k]
-                    out_qid += [q] * len(top)
-                    out_id += list(gdf[id_col].to_numpy()[top])
-                    out_d += list(d[top])
+            for q in qids:
+                # gather: dist2[i] = sum_j lut[j, code[i, j]]
+                d = luts[q][np.arange(m)[None, :], codes_arr].sum(axis=1)
+                top = np.argsort(d, kind="stable")[:k]
+                out_qid += [q] * len(top)
+                out_id += list(ids[top])
+                out_d += list(d[top])
             yield pd.DataFrame({qid_col: out_qid, id_col: out_id,
                                 "dist2": out_d})
 
@@ -198,36 +189,6 @@ def pq_search(codes: DataFrame, codebooks: list[list[list[float]]],
     w = Window.partitionBy(qid_col).orderBy(F.asc("dist2"), F.asc(id_col))
     return (partial.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))
-
-
-def ivfpq_search(assigned_codes: DataFrame,
-                 centroids: DataFrame,
-                 codebooks: list[list[list[float]]],
-                 queries: DataFrame, k: int, nprobe: int = 2,
-                 id_col: str = "vec_id", qid_col: str = "qid",
-                 q_emb_col: str = "q_emb") -> DataFrame:
-    """IVF × PQ (the FAISS-style composition): coarse centroids prune
-    WHICH codes are scanned (``nprobe`` cells per query), PQ codes
-    shrink WHAT is scanned (m bytes per vector).  ``assigned_codes`` =
-    ``pq_encode`` output joined with its ``ivf_assign`` centroid_id —
-    at 100 TB this table is written partitionBy(centroid_id), so a
-    probe reads nprobe partitions of byte codes and nothing else."""
-    from graphraft_spark.ops.similarity import dot_col
-    from pyspark.sql import Window
-
-    qc = (queries.crossJoin(F.broadcast(centroids))
-          .withColumn("cscore", dot_col(F.col(q_emb_col), F.col("c_emb"))))
-    wq = Window.partitionBy(qid_col).orderBy(F.desc("cscore"),
-                                             F.asc("centroid_id"))
-    probes = (qc.withColumn("rn", F.row_number().over(wq))
-              .filter(F.col("rn") <= nprobe)
-              .select(qid_col, "centroid_id").distinct())
-    pruned = assigned_codes.join(F.broadcast(probes), "centroid_id")
-    # the pruned frame carries qid: each row scores ONLY against the
-    # query that probed its cell
-    return pq_search(pruned.select(qid_col, id_col, "code"), codebooks,
-                     queries, k, id_col=id_col, qid_col=qid_col,
-                     q_emb_col=q_emb_col)
 
 
 def rerank_exact(candidates: DataFrame, vectors: DataFrame,

@@ -333,110 +333,6 @@ def srp_lsh_topk(vectors: DataFrame, queries: DataFrame, k: int,
     )
 
 
-def save_ivf_index(assigned: DataFrame, centroids: DataFrame,
-                   index_dir: str) -> None:
-    """Persist an IVF index: vectors partitioned BY CENTROID on disk
-    plus the centroid table.  This is the serving layout at scale — a
-    probe touches only its centroids' partitions (partition pruning at
-    the parquet source, asserted in tests), so per-query scan cost is
-    corpus_size·nprobe/k instead of the full corpus.
-
-    Layout is ``centroid_id=X/epoch=N`` — the SAME directory depth
-    ivf_index_append writes, so a bulk-built index accepts streaming
-    appends afterwards (mixed depths break partition discovery).  The
-    bulk load is epoch 0."""
-    (assigned.withColumn("epoch", F.lit(0))
-     .write.mode("overwrite").partitionBy("centroid_id", "epoch")
-     .parquet(f"{index_dir}/vectors"))
-    centroids.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-
-
-def load_ivf_index(spark, index_dir: str):
-    """(assigned, centroids) read back from a saved index."""
-    return (spark.read.parquet(f"{index_dir}/vectors"),
-            spark.read.parquet(f"{index_dir}/centroids"))
-
-
-def ivf_search_pruned(spark, index_dir: str, queries: DataFrame, k: int,
-                      nprobe: int = 4, qid_col: str = "qid",
-                      qemb_col: str = "q_emb",
-                      id_col: str = "vec_id",
-                      emb_col: str = "embedding") -> DataFrame:
-    """Search a SAVED index with static partition pruning: the probed
-    centroid ids are computed first (tiny — |Q|·nprobe rows, collected
-    once) and pushed into the scan as an IN filter on the partition
-    column, so only the probed directories are listed and read.  The
-    per-query candidate restriction then joins on (centroid_id, qid)."""
-    assigned, centroids = load_ivf_index(spark, index_dir)
-    qc = (
-        queries.crossJoin(F.broadcast(centroids))
-        .withColumn("cscore", dot_col(F.col(qemb_col), F.col("c_emb")))
-    )
-    wq = Window.partitionBy(qid_col).orderBy(F.desc("cscore"),
-                                             F.asc("centroid_id"))
-    probes_plan = (
-        qc.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select(qid_col, qemb_col, "centroid_id")
-    )
-    # collect ONCE (|Q|·nprobe rows — queries are the small side by
-    # contract) and rebuild the probe frame locally: the centroid-
-    # scoring job would otherwise run twice, once for the id collect
-    # and again when the returned plan executes
-    probe_rows = probes_plan.collect()
-    probed_cids = sorted({int(r["centroid_id"]) for r in probe_rows})
-    probes = spark.createDataFrame(probe_rows, probes_plan.schema)
-    pruned = assigned.filter(F.col("centroid_id").isin(probed_cids))
-    w = Window.partitionBy(qid_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        pruned.join(F.broadcast(probes), "centroid_id")
-        .withColumn("score", dot_col(F.col(emb_col), F.col(qemb_col)))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(qid_col, id_col, "score", "rn")
-    )
-
-
-def ivf_index_append(batch: DataFrame, centroids: DataFrame,
-                     index_dir: str, epoch_id: int,
-                     id_col: str = "vec_id",
-                     emb_col: str = "embedding") -> None:
-    """Append one micro-batch of vectors to a saved IVF index: assign
-    against the FROZEN centroid table (broadcast, one scan) and land
-    the rows under their centroid partitions in the batch's own
-    ``epoch=N`` subdirectory — a replayed epoch overwrites itself, so
-    ingestion is idempotent under at-least-once delivery (same
-    delta-log discipline as the incremental graph and dedup index).
-    Centroids drift under sustained ingest; retrain offline and rewrite
-    the index when assignment quality degrades — the standard IVF
-    operating procedure.  When appending to a bulk-built index
-    (save_ivf_index writes its load as epoch 0), use epoch ids ≥ 1."""
-    assigned = ivf_assign(batch, centroids, id_col, emb_col)
-    (assigned.withColumn("epoch", F.lit(int(epoch_id)))
-     .write.mode("overwrite")
-     .partitionBy("centroid_id", "epoch")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(f"{index_dir}/vectors"))
-
-
-def stream_ivf_ingest(vec_stream: DataFrame, centroids: DataFrame,
-                      index_dir: str, id_col: str = "vec_id",
-                      emb_col: str = "embedding") -> None:
-    """Continuously ingest a vector stream into a saved IVF index
-    (availableNow: drain then stop).  Write the centroid table first if
-    the index is new; searches via ivf_search_pruned see every epoch
-    ingested so far (partition discovery merges them)."""
-    centroids.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    q = (
-        vec_stream.writeStream
-        .foreachBatch(lambda b, e: ivf_index_append(
-            b, centroids, index_dir, e, id_col, emb_col))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def mmr_rerank(candidates: DataFrame, k: int, lam: float = 0.5,
                qid_col: str = "qid", id_col: str = "vec_id",
                emb_col: str = "embedding",
@@ -579,33 +475,3 @@ def pca_project(vectors: DataFrame, mean: list, components: list,
             F.zip_with(centered, c, lambda x, w: x * w),
             F.lit(0.0), lambda acc, v: acc + v))
     return vectors.withColumn(out_col, F.array(*outs))
-
-
-def compact_ivf_index(spark, index_dir: str) -> None:
-    """Fold every ingested epoch of a saved IVF index back into epoch 0
-    — the maintenance twin of search/bm25.py:compact_text_index (many
-    small epoch directories slow partition discovery; compaction
-    restores one well-sized file set per centroid).
-
-    Vector rows are immutable (an epoch replay overwrites itself at
-    ingest), so compaction is a straight rewrite clustered by
-    centroid_id; the rewrite stages into a sibling directory and swaps
-    in with renames so a concurrent ivf_search_pruned never sees a
-    partial index.  Centroids are untouched — retraining is a separate
-    (offline) decision."""
-    import os
-    import shutil
-
-    staged = f"{index_dir}/.compact"
-    shutil.rmtree(staged, ignore_errors=True)
-    (spark.read.parquet(f"{index_dir}/vectors")
-     .withColumn("epoch", F.lit(0))
-     .repartition("centroid_id")
-     .write.partitionBy("centroid_id", "epoch").mode("overwrite")
-     .parquet(f"{staged}/vectors"))
-    old = f"{index_dir}/vectors.old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(f"{index_dir}/vectors", old)
-    os.rename(f"{staged}/vectors", f"{index_dir}/vectors")
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(staged, ignore_errors=True)

@@ -1,43 +1,15 @@
-"""Approximate aggregation sketches — the scale substitutes for exact
-distinct counts and quantiles (documents-table profiling at 100 TB runs
-on sketches, with the exact operators as the small-scale oracle).
-
-Engine-native implementations (JVM, mergeable partial aggregates):
-
-* ``approx_distinct``  — HyperLogLog++ (`approx_count_distinct`),
-  relative error configurable (default 5%, tunable to 0.01).
-* ``approx_quantiles`` — Greenwald-Khanna (`percentile_approx`),
-  accuracy = 1/relativeError rank error.
-
-Sketch outputs are NOT bit-portable across engines, so these are
-pytest-gated against their exact twins with the documented tolerance
-instead of DuckDB hash-match (the exact twins ARE oracle-checked:
-countDistinct everywhere, q_price_percentiles).
+"""Mergeable frequency sketches: count-min (approximate counts) and
+Bloom filters (approximate membership).  Both index their counters
+with md5 arithmetic, so every build and probe is bit-portable and
+DuckDB-oracle-checkable; both merge by a per-slot sum or OR.
+(Spark's own HLL and Greenwald-Khanna sketches are
+``F.approx_count_distinct`` and ``F.percentile_approx``.)
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def approx_distinct(df: DataFrame, col: str, rsd: float = 0.05,
-                    by: list[str] | None = None) -> DataFrame:
-    """HLL++ distinct count (± rsd relative standard deviation); one
-    scan, mergeable partials — no exact-distinct shuffle of the keys."""
-    agg = F.approx_count_distinct(col, rsd).alias(f"approx_{col}")
-    return df.groupBy(*(by or [])).agg(agg)
-
-
-def approx_quantiles(df: DataFrame, col: str, probs: list[float],
-                     accuracy: int = 10_000,
-                     by: list[str] | None = None) -> DataFrame:
-    """Greenwald-Khanna quantiles at the given probabilities; rank error
-    ≤ 1/accuracy of the partition size."""
-    agg = F.percentile_approx(
-        col, F.array(*[F.lit(p) for p in probs]), accuracy
-    ).alias(f"q_{col}")
-    return df.groupBy(*(by or [])).agg(agg)
 
 
 def _cms_hash(col: Column, row: Column, width: int) -> Column:
@@ -56,8 +28,8 @@ def cms_build(df: DataFrame, col: str, depth: int = 4,
     ``depth`` hash rows of ``width`` slots — ≤ depth·width rows no
     matter how many distinct values the input holds.
 
-    Unlike HLL/GK above, this one IS bit-portable (md5 counter
-    indexing), so the full build→probe path is DuckDB-oracle-checkable.
+    md5 counter indexing makes the full build→probe path
+    DuckDB-oracle-checkable.
     Mergeability is trivial: sketches of two corpus shards combine by
     summing ``cnt`` on (row, slot) — see :func:`cms_merge` — which is
     also the map-side partial aggregation Spark already applies, so

@@ -267,40 +267,6 @@ def scrub_pii(text: Column, email_token: str = "<EMAIL>",
     return F.regexp_replace(out, LONG_NUMBER_RE, number_token)
 
 
-def pack_bins_greedy(df, budget: int, size_col: str,
-                     order_col: str = "doc_id", shard_col: str | None = None,
-                     out_col: str = "bin_id"):
-    """EXACT greedy context-window packing: documents in deterministic
-    order open a new bin whenever adding the next one would exceed the
-    budget (an oversized document gets a bin of its own).  Per-row state
-    runs in an Arrow-batched ``applyInPandas`` per shard — at scale,
-    pass ``shard_col`` so each shard packs independently and no global
-    ordering is required (bin ids are per-shard)."""
-    from pyspark.sql import functions as FF
-
-    def pack(pdf):
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        bins = []
-        cur, used = 0, 0
-        for s in pdf[size_col]:
-            if used > 0 and used + s > budget:
-                cur, used = cur + 1, 0
-            bins.append(cur)
-            used += s
-        pdf[out_col] = bins
-        return pdf
-
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in df.schema.fields) + f", {out_col} bigint"
-    key = FF.col(shard_col) if shard_col else FF.lit(0)
-    return (
-        df.withColumn("_shard", key)
-        .groupBy("_shard")
-        .applyInPandas(lambda pdf: pack(pdf.drop(columns=["_shard"])),
-                       schema=schema)
-    )
-
-
 def bigrams_all(text: Column) -> Column:
     """ALL word 2-grams in order (no dedup — repetition measurement
     needs multiplicities, unlike the dedup shingles)."""
@@ -400,27 +366,11 @@ def pack_bins_scalable(df, budget: int, size_col: str,
     )
 
 
-def mix_rates(counts: dict[str, int], tau: float,
-              target_total: int) -> dict[str, float]:
-    """Temperature-based source mixing (the multilingual-corpus recipe:
-    sample source s with probability ∝ n_s^(1/τ); τ>1 upweights small
-    sources, τ=1 is proportional).  Given observed per-source counts
-    (a tiny groupBy().count() collect), return the per-source KEEP RATE
-    that yields ≈``target_total`` rows in expectation, capped at 1 —
-    driver-side arithmetic on |sources| numbers, never row data."""
-    if tau <= 0:
-        raise ValueError("tau must be > 0")
-    weights = {s: n ** (1.0 / tau) for s, n in counts.items() if n > 0}
-    z = sum(weights.values())
-    return {s: min(1.0, target_total * w / z / counts[s])
-            for s, w in weights.items()}
-
-
 def temperature_mix(df, rates: dict[str, float],
                     source_col: str = "source", key_col: str = "doc_id",
                     salt: str = "mix"):
-    """Deterministic hash-thinning to the per-source rates from
-    :func:`mix_rates`: keep a row iff its portable key hash falls under
+    """Deterministic hash-thinning to caller-given per-source keep
+    rates: keep a row iff its portable key hash falls under
     rate·2^20.  Reproducible across runs/partitionings/engines (same
     md5 arithmetic as data/ops.hash_split — expressible in a DuckDB
     oracle), one scan, no shuffle, no RNG."""

@@ -526,7 +526,7 @@ def st_curation_flags(spark, sf_dir):
     Deterministic per-row output means this streaming execution is
     fully ORACLE-CHECKED (same flags CTE as p_curate_corpus); the
     stateful stages (dedup, decontamination) have their own streaming
-    twins (dedup_events_stream, d_stream_neardup)."""
+    twin (d_stream_neardup)."""
     from graphraft_spark.ops.text_analysis import (c4_doc_gate,
                                                    gopher_rules,
                                                    predicted_lang_rounded)

@@ -395,9 +395,9 @@ WHERE h < t
 def t_temperature_mix(spark, sf_dir):
     """Deterministic source-mixing by hash-thinning: each source keeps
     rate (i+1)/20 of its documents, reproducibly (portable md5 — no
-    RNG), one scan, no shuffle.  The τ-weighted rate derivation
-    (mix_rates) is driver-side arithmetic, unit-tested; this query
-    pins the thinning operator itself against the oracle."""
+    RNG), one scan, no shuffle.  The rates are caller policy (e.g.
+    τ-weighted source mixing); this query pins the thinning operator
+    itself against the oracle."""
     from graphraft_spark.ops.text_analysis import temperature_mix
 
     d = load_pq(spark, f"{sf_dir}/documents.parquet")

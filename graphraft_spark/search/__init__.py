@@ -3,7 +3,6 @@ from graphraft_spark.search.vector import (
     cosine_col,
     dot_col,
     knn,
-    knn_excluding,
     l2_normalize_col,
 )
 
@@ -12,6 +11,5 @@ __all__ = [
     "cosine_col",
     "dot_col",
     "knn",
-    "knn_excluding",
     "l2_normalize_col",
 ]

@@ -133,14 +133,13 @@ def build_text_index(docs: DataFrame, index_dir: str,
                      n_buckets: int = 64) -> None:
     """Persist an inverted index: postings (term, id, tf, dl)
     partitioned by (term bucket, epoch), plus additive per-epoch corpus
-    stats.  The bulk load lands as epoch 0; streaming appends use
-    :func:`text_index_append` with epoch ids ≥ 1.
+    stats.  The build writes epoch 0; :func:`bm25_query_indexed` reads
+    every epoch directory under the index.
 
     This is the 100 TB retrieval shape — the per-query scan of
     :func:`bm25_scores` amortizes into one build (an explode + one
     count shuffle), and every query afterwards reads ONLY the postings
-    partitions its terms hash to (partition pruning, same owned-
-    artifact pattern as the IVF vector index in ops/similarity.py).
+    partitions its terms hash to (partition pruning).
     Document length is denormalized into the postings so scoring never
     joins a corpus-sized doclen table.
     """
@@ -159,90 +158,10 @@ def build_text_index(docs: DataFrame, index_dir: str,
         .write.mode("overwrite").parquet(f"{index_dir}/meta")
 
 
-def text_index_append(batch: DataFrame, index_dir: str, epoch_id: int,
-                      text_col: str = "text",
-                      id_col: str = "doc_id") -> None:
-    """Append one micro-batch of documents to a saved inverted index:
-    the batch's postings land under their (bucket, epoch=N) partitions
-    and its stats row under epoch=N, both with dynamic partition
-    overwrite — a replayed epoch overwrites itself, so ingestion is
-    idempotent under at-least-once delivery (the same delta-log
-    discipline as the IVF / incremental-graph / dedup indexes).  The
-    corpus is append-only by contract: re-ingesting a document in a
-    NEW epoch would double-count it."""
-    [meta] = batch.sparkSession.read.parquet(
-        f"{index_dir}/meta").collect()
-    postings = _postings_of(batch, text_col, id_col, meta.n_buckets) \
-        .withColumn("epoch", F.lit(int(epoch_id)))
-    (postings.write.mode("overwrite")
-     .partitionBy("bucket", "epoch")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(f"{index_dir}/postings"))
-    (_stats_of(batch, text_col)
-     .withColumn("epoch", F.lit(int(epoch_id)))
-     .write.mode("overwrite").partitionBy("epoch")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(f"{index_dir}/stats"))
-
-
-def stream_text_ingest(doc_stream: DataFrame, index_dir: str,
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> None:
-    """Continuously ingest a document stream into a saved inverted
-    index (availableNow: drain then stop).  Queries via
-    :func:`bm25_query_indexed` see every epoch ingested so far —
-    partition discovery merges them, and the additive stats rows keep
-    N/avgdl exact.  Bulk-build first (epoch 0); stream epochs are
-    offset to ≥ 1."""
-    q = (doc_stream.writeStream
-         .foreachBatch(lambda b, e: text_index_append(
-             b, index_dir, int(e) + 1, text_col, id_col))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-
-
-def compact_text_index(spark, index_dir: str) -> None:
-    """Fold every streamed epoch back into a single epoch 0 — the
-    maintenance step after sustained ingest (many small epoch
-    directories slow partition discovery and file listing; compaction
-    restores one well-sized file set per bucket).  Same merge-on-read →
-    compaction discipline as the incremental graph index.
-
-    Postings rows are per (doc, term) and the corpus is append-only, so
-    compaction is a straight rewrite (no re-aggregation); stats rows
-    are additive and collapse by summing.  The rewrite stages into a
-    sibling directory and swaps in with renames, so a reader never sees
-    a partial index."""
-    import os
-    import shutil
-
-    staged = f"{index_dir}/.compact"
-    shutil.rmtree(staged, ignore_errors=True)
-    (spark.read.parquet(f"{index_dir}/postings")
-     .withColumn("epoch", F.lit(0))
-     .repartition("bucket")
-     .write.partitionBy("bucket", "epoch").mode("overwrite")
-     .parquet(f"{staged}/postings"))
-    (spark.read.parquet(f"{index_dir}/stats")
-     .agg(F.sum("n_docs").alias("n_docs"),
-          F.sum("sum_dl").alias("sum_dl"))
-     .withColumn("epoch", F.lit(0))
-     .write.partitionBy("epoch").mode("overwrite")
-     .parquet(f"{staged}/stats"))
-    for part in ("postings", "stats"):
-        old = f"{index_dir}/{part}.old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(f"{index_dir}/{part}", old)
-        os.rename(f"{staged}/{part}", f"{index_dir}/{part}")
-        shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(staged, ignore_errors=True)
-
-
-# (app_id, realpath, size, mtime_ns) -> collected 1-row meta (static
+# (app_id, realpath, tree fingerprint) -> collected 1-row meta (static
 # index-layout constants: n_buckets).  The meta table is written once
-# at index build and never appended, so the stat-keyed memo saves a
-# footer read + a 1-row collect JOB per query construction.
+# at index build, so the memo saves a footer read + a 1-row collect
+# JOB per query construction.
 _META_MEMO: OrderedDict[tuple, object] = OrderedDict()
 
 
@@ -270,13 +189,10 @@ def bm25_query_indexed(spark, index_dir: str, query_terms: list[str],
     themselves (a term's posting count IS its df), so no separate df
     table has to stay in sync.
 
-    ``snapshot=True`` treats the index as an IMMUTABLE published
-    snapshot (the serving contract: a built, compacted index that is
-    swapped — never appended — under readers): postings/stats table
-    handles are memoized via load_pq, skipping the per-query
-    footer/listing cost.  Leave False for an index under concurrent
-    ``text_index_append``/compaction, where new epoch directories must
-    be re-listed on every query."""
+    ``snapshot=True`` memoizes the meta row and the postings/stats
+    table handles via load_pq, skipping the per-query footer/listing
+    cost; the memo is keyed on each table's tree fingerprint, so a
+    rebuilt index gets fresh handles."""
     if not query_terms or len(query_terms) > 64:
         raise ValueError("query_terms must be a non-empty list of at "
                          f"most 64 terms, got {len(query_terms)}")

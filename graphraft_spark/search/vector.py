@@ -10,7 +10,7 @@ partition pruning) lives in graphraft_spark.ops.similarity and shares
 this API.
 
 Similarity math stays JVM-side (``zip_with`` + ``aggregate`` — whole-stage
-codegen) for oracle-checkable paths; ``cosine_pandas`` is the Arrow/numpy
+codegen) for oracle-checkable paths; ``dot_pandas`` is the Arrow/numpy
 fast path for wide embeddings in benchmarks.
 """
 
@@ -72,23 +72,6 @@ def knn(df: DataFrame, emb_col: str, q: Sequence[float], k: int,
     return scored.orderBy(*order).limit(k)
 
 
-def knn_excluding(df: DataFrame, emb_col: str, q: Sequence[float], ef: int,
-                  exclude_ids: DataFrame | Sequence[int],
-                  id_col: str = "nodeId", cosine: bool = True) -> DataFrame:
-    """C4: the reference's vector top-up query (retriever.py:14-17) —
-    top-``ef`` FIRST, then exclude already-found ids (the WHERE applies
-    to the index's yield, so excluded hits reduce the returned count).
-    Exclusion is a broadcast left-anti join."""
-    top = knn(df, emb_col, q, ef, id_col=id_col, cosine=cosine)
-    if isinstance(exclude_ids, DataFrame):
-        ex = exclude_ids
-    else:
-        ex = top.sparkSession.createDataFrame(
-            [(int(i),) for i in exclude_ids], f"{id_col} bigint")
-    return top.join(F.broadcast(ex.select(id_col).distinct()),
-                    id_col, "left_anti")
-
-
 def knn_pseudo_entities(graph, questions: DataFrame, k: int = 2,
                         name_emb_col: str = "nameEmbedding",
                         qemb_col: str = "q_emb") -> DataFrame:
@@ -117,27 +100,9 @@ def knn_pseudo_entities(graph, questions: DataFrame, k: int = 2,
     return top.select("qid", F.col("vec_id").alias("name"), "rn")
 
 
-# Arrow/numpy fast paths for wide embeddings (bench, not oracle).
+# Arrow/numpy fast path for wide embeddings (bench, not oracle).
 # pandas_udf construction needs an active SparkSession (the return-type
-# DDL is parsed by the JVM), so the udfs are built lazily at first call.
-
-
-def cosine_pandas(q: Sequence[float]):
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    qv = np.asarray(q, dtype="float64")
-    qn = np.linalg.norm(qv)
-
-    @pandas_udf("double")
-    def _cos(col: pd.Series) -> pd.Series:
-        m = np.stack(col.to_numpy())
-        sims = (m @ qv) / (np.linalg.norm(m, axis=1) * qn)
-        return pd.Series(sims)
-
-    return _cos
-
-
+# DDL is parsed by the JVM), so the udf is built lazily at first call.
 _DOT_UDF = None
 
 

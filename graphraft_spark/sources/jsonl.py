@@ -10,11 +10,9 @@ Scale rules encoded here:
   a DDL string / StructType, or use the documents-table default.
 * **Corrupt lines are quarantined, not fatal.**  The default read uses
   DROPMALFORMED (bad lines skipped in the parser, no second scan);
-  :func:`corrupt_lines` is the audit view; ``strict=True`` switches to
-  FAILFAST for pipelines that prefer to die loudly.  (Spark 4 refuses
-  scans that read ONLY the internal ``_corrupt_record`` column, so the
-  quarantine view parses a plain text scan with ``from_json`` instead
-  — same single pass, no restriction.)
+  ``keep_corrupt=True`` keeps them with their raw text in
+  ``_corrupt_record`` for audit; ``strict=True`` switches to FAILFAST
+  for pipelines that prefer to die loudly.
 * **Writes are line-delimited, uncompressed-splittable by default**
   (gzip is NOT splittable — one reader per file; zstd/none keep the
   read parallel).
@@ -23,7 +21,6 @@ Scale rules encoded here:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # the documents-table contract (TESTDATA.md); timestamps stay strings
 # at the JSONL boundary — parse downstream with an explicit format
@@ -56,27 +53,6 @@ def read_jsonl(spark: SparkSession, path: str, schema: str,
     else:
         reader = reader.schema(schema)
     return reader.json(path)
-
-
-def corrupt_lines(spark: SparkSession, path: str,
-                  schema: str) -> DataFrame:
-    """The quarantine view: raw text of every line that failed the
-    schema — audit it, fix the producer, never silently drop.
-
-    Implemented as a text scan + ``from_json`` with a corrupt-record
-    field (Spark 4 disallows a json scan that reads only
-    ``_corrupt_record``); blank lines are not records in the json
-    reader and are excluded here too."""
-    full = schema + f", {CORRUPT_COL} STRING"
-    parsed = F.from_json(
-        F.col("value"), full,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL})
-    return (spark.read.text(path)
-            .filter(F.trim(F.col("value")) != "")
-            .select(F.col("value").alias("raw_line"),
-                    parsed[CORRUPT_COL].alias("_bad"))
-            .filter(F.col("_bad").isNotNull())
-            .drop("_bad"))
 
 
 def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite",

@@ -12,33 +12,32 @@ This memo returns the SAME analyzed DataFrame handle for the same
 (session, file-identity) pair.  Nothing about the data is cached:
 
 * the DataFrame is lazy — every action still scans the parquet files;
-* the memo key carries the source fingerprint (size + mtime_ns of the
-  TOP-LEVEL path only, the same invalidation contract as
-  ``graph/tpch.source_fingerprint``) — one stat() per call.  That is
-  safe for single files and for non-partitioned writers that replace
-  the whole directory (``mode("overwrite")``): the replacement moves
-  the directory's mtime, so the next call gets a fresh handle.  A
-  write that only changes files INSIDE a partition subdirectory (an
-  epoch-style append under ``partitionBy``) leaves the top-level stat
-  unchanged, so the memo keeps serving the old file listing — read
-  such directories with ``spark.read.parquet`` instead;
+* the memo key carries the source fingerprint: the relative path,
+  size and mtime_ns of the path and of every entry beneath it, from one
+  ``os.scandir`` walk.  Any write that adds, removes or rewrites a file
+  anywhere in the tree — a whole-directory ``mode("overwrite")``, or a
+  part file landing inside one partition subdirectory of a
+  ``partitionBy`` layout — changes the key, so the next call gets a
+  fresh handle with a fresh file listing;
 * the key carries the JVM application id, so a new SparkSession never
   sees another session's (dead) plan handles.
 
-Self-joins: Spark's analyzer disambiguates two uses of one DataFrame
-handle via per-Dataset ids (verified by test); queries that need
-distinct attribute ids can still call ``spark.read.parquet`` directly.
+Self-joins: when one memoized handle is on both sides of a join, tell
+the sides apart with ``.alias()`` and qualified columns
+(``h.alias("a").join(h.alias("b"), F.col("a.x") == F.col("b.x"))``),
+never with ``h["x"]``, which names the same attribute on both sides.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 from collections import OrderedDict
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# (app_id, realpath, size, mtime_ns) -> DataFrame (lazy plan handle)
+# (app_id, realpath, tree fingerprint) -> DataFrame (lazy plan handle)
 _MEMO: OrderedDict[tuple, DataFrame] = OrderedDict()
 # past this many entries a memo evicts its least-recently-used one:
 # bounds a long session's dead fingerprints (every rewrite of a path
@@ -59,18 +58,33 @@ def _app_id(spark: SparkSession) -> str:
     return app
 
 
+def _fingerprint(path: str) -> tuple:
+    """(relative path, size, mtime_ns) of ``path`` and of every entry
+    beneath it, sorted — one ``os.scandir`` walk, one stat per entry."""
+    st = os.stat(path)
+    out = [("", st.st_size, st.st_mtime_ns)]
+    todo = [("", path)] if stat.S_ISDIR(st.st_mode) else []
+    while todo:
+        rel, d = todo.pop()
+        with os.scandir(d) as it:
+            for e in it:
+                est = e.stat()
+                out.append((rel + e.name, est.st_size, est.st_mtime_ns))
+                if e.is_dir():
+                    todo.append((f"{rel}{e.name}/", e.path))
+    return tuple(sorted(out))
+
+
 def stat_memo(memo: OrderedDict, spark: SparkSession, path: str,
               build: Callable[[], object]):
-    """``build()`` memoized in ``memo`` under the stat key of ``path``
-    (application id, real path, size, mtime_ns), holding at most
-    ``MEMO_BOUND`` entries in least-recently-used order.  A path that
-    cannot be stat'ed is built on every call, uncached."""
+    """``build()`` memoized in ``memo`` under (application id, real
+    path, tree fingerprint of ``path``), holding at most ``MEMO_BOUND``
+    entries in least-recently-used order.  A path that cannot be
+    walked is built on every call, uncached."""
     try:
-        st = os.stat(path)
+        key = (_app_id(spark), os.path.realpath(path), _fingerprint(path))
     except OSError:
         return build()
-    key = (_app_id(spark), os.path.realpath(path),
-           st.st_size, st.st_mtime_ns)
     if key in memo:
         memo.move_to_end(key)
         return memo[key]
@@ -81,7 +95,7 @@ def stat_memo(memo: OrderedDict, spark: SparkSession, path: str,
 
 
 def load_pq(spark: SparkSession, path: str) -> DataFrame:
-    """Memoized ``spark.read.parquet(path)``, keyed on a stat of the
-    top-level path only — see module docstring for when that is safe.
-    An absent path gets Spark's own error from the plain reader."""
+    """Memoized ``spark.read.parquet(path)``, keyed on the fingerprint
+    of the whole tree under ``path`` (module docstring).  An absent
+    path gets Spark's own error from the plain reader."""
     return stat_memo(_MEMO, spark, path, lambda: spark.read.parquet(path))

@@ -122,14 +122,3 @@ def run_stream_to_memory(stream_df: DataFrame, name: str,
     out = spark.table(sink).localCheckpoint(eager=True)
     spark.catalog.dropTempView(sink)
     return out
-
-
-def dedup_events_stream(stream: DataFrame, keys=("event_id",),
-                        watermark: str = "2 hours") -> DataFrame:
-    """Streaming exact dedup: drop repeated keys arriving within the
-    watermark window (at-least-once sources → effectively-once
-    downstream).  State holds one entry per key seen in the window and
-    is evicted by the watermark — bounded, unlike an unbounded
-    dropDuplicates.  Batch twin: ``df.dropDuplicates(keys)``."""
-    return (stream.withWatermark("ts", watermark)
-            .dropDuplicatesWithinWatermark(list(keys)))

@@ -82,21 +82,3 @@ def read_funnel(spark: SparkSession, funnel_dir: str) -> DataFrame:
     w = Window.partitionBy("user").orderBy(F.desc("epoch"))
     return (log.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1).drop("rn", "epoch"))
-
-
-def stream_funnel(event_stream: DataFrame, log_dir: str, funnel_dir: str,
-                  steps: list[str], within_seconds: int | None = None,
-                  checkpoint_dir: str | None = None) -> None:
-    """foreachBatch wiring: land each micro-batch, refresh its users.
-    Runs with availableNow (drain everything, then stop) — the same
-    convention as streaming/dedup_stream.py:stream_neardup_flags."""
-    def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        append_events(batch, epoch_id, log_dir)
-        refresh_funnel(batch.sparkSession, log_dir, funnel_dir,
-                       epoch_id, steps, within_seconds)
-
-    writer = event_stream.writeStream.foreachBatch(on_batch) \
-        .trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.start().awaitTermination()

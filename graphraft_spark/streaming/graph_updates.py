@@ -6,15 +6,13 @@ changing.  This module is the Spark-native continuous analog: events
 become node/edge DELTAS, a Structured Streaming query lands each
 micro-batch append-only into an epoch-partitioned parquet delta log
 (idempotent per epoch — a retried batch overwrites its own partition,
-never double-counts), readers get a merge-on-read view (base ∪ deltas
-aggregated to current state), and compaction folds the log back into
-the base tables.
+never double-counts), and readers get a merge-on-read view (base ∪
+deltas aggregated to current state).
 
 Why this shape at 100 TB: upserting into place would rewrite the whole
 edge table per trigger; an append-only log costs O(batch) per trigger,
-the merge view pushes the aggregate into one shuffle keyed by the edge
-identity (uniform keys — no skew), and compaction amortizes read cost
-on whatever cadence the cluster can afford.
+and the merge view pushes the aggregate into one shuffle keyed by the
+edge identity (uniform keys — no skew).
 
 Derived graph semantics: each user is a ``User`` node, each event type
 an ``EventType`` node (ids offset into a reserved range), and each
@@ -138,17 +136,3 @@ def merged_graph(spark: SparkSession, base_dir: str,
         .withColumn("edgeId", F.xxhash64("src", "dst", "relType"))
     )
     return PropertyGraph(nodes=nodes, edges=edges)
-
-
-def compact_deltas(spark: SparkSession, base_dir: str,
-                   out_dir: str) -> PropertyGraph:
-    """Fold the delta log into compacted base tables (merge-on-write):
-    the merged view materialized once, so subsequent readers scan two
-    compacted tables instead of N epochs.  On a cluster this runs on a
-    cadence; the delta dirs can then be truncated."""
-    g = merged_graph(spark, base_dir)
-    g.nodes.write.mode("overwrite").parquet(os.path.join(out_dir, "nodes"))
-    g.edges.write.mode("overwrite").parquet(os.path.join(out_dir, "edges"))
-    return PropertyGraph(
-        nodes=spark.read.parquet(os.path.join(out_dir, "nodes")),
-        edges=spark.read.parquet(os.path.join(out_dir, "edges")))

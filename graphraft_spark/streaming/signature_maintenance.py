@@ -17,7 +17,7 @@ implemented here is AFFECTED-PARTITION RECOMPUTE:
    merged graph and written to ``epoch=N`` of the signature log
    (overwrite → idempotent replay, same guarantee as the delta log);
 4. readers take each question's rows from its LATEST epoch
-   (merge-on-read; compaction folds the log like compact_deltas).
+   (merge-on-read, like the graph delta log).
 
 Cost per epoch is O(affected questions), not O(all questions): a delta
 touching one paper re-enumerates the handful of questions anchored

@@ -64,21 +64,6 @@ def test_bloom_decontaminate_matches_exact(spark):
     assert any(r[2] for r in exact)  # some contamination actually found
 
 
-def test_lsh_tune_band_planner():
-    from graphraft_spark.ops.dedup import lsh_tune
-
-    # MMDS worked example: 16 perms, threshold .7 -> 4x4 (midpoint .707)
-    assert lsh_tune(0.7, 16) == (4, 4)
-    # low threshold wants many bands of few rows
-    bands, rows = lsh_tune(0.2, 16)
-    assert bands >= 8 and bands * rows == 16
-    # high threshold wants few bands of many rows
-    bands, rows = lsh_tune(0.95, 16)
-    assert bands <= 2 and bands * rows == 16
-    with pytest.raises(ValueError):
-        lsh_tune(1.5, 16)
-
-
 def test_fast_hash_path_no_false_negatives(spark):
     from graphraft_spark.ops.sketches import bloom_build, bloom_probe
     vals = spark.createDataFrame([(f"v{i}",) for i in range(500)],

@@ -142,101 +142,6 @@ def test_bucket_hash_parity(spark):
     assert got == {t: term_bucket_py(t, 64) for t in terms}
 
 
-def test_streaming_append_matches_bulk(corpus, tmp_path):
-    """Bulk-build on half the corpus, stream the rest in micro-batches:
-    the indexed query must equal the direct scan over the FULL corpus,
-    and replaying an epoch must not change the result (idempotence)."""
-    import pyspark.sql.functions as F
-    from graphraft_spark.search.bm25 import (bm25_query_indexed,
-                                             bm25_topk, build_text_index,
-                                             stream_text_ingest,
-                                             text_index_append)
-
-    spark = corpus.sparkSession
-    idx = str(tmp_path / "bm25_stream_idx")
-    old = corpus.filter(F.col("doc_id") < 2)
-    new = corpus.filter(F.col("doc_id") >= 2)
-    build_text_index(old, idx, n_buckets=8)
-
-    stage = str(tmp_path / "incoming")
-    new.coalesce(2).write.parquet(stage)
-    stream = (spark.readStream
-              .schema("doc_id bigint, text string")
-              .option("maxFilesPerTrigger", 1).parquet(stage))
-    stream_text_ingest(stream, idx)
-
-    want = [(r.doc_id, r.bm25)
-            for r in bm25_topk(corpus, ["spark", "tables"], k=5).collect()]
-    got = [(r.doc_id, r.bm25)
-           for r in bm25_query_indexed(spark, idx, ["spark", "tables"],
-                                       k=5).collect()]
-    assert got == want
-
-
-def test_epoch_replay_is_idempotent(corpus, tmp_path):
-    """At-least-once delivery: re-appending the SAME epoch with the
-    same batch must leave query results byte-identical."""
-    import pyspark.sql.functions as F
-    from graphraft_spark.search.bm25 import (bm25_query_indexed,
-                                             bm25_topk, build_text_index,
-                                             text_index_append)
-
-    spark = corpus.sparkSession
-    idx = str(tmp_path / "bm25_replay_idx")
-    build_text_index(corpus.filter(F.col("doc_id") < 2), idx,
-                     n_buckets=8)
-    text_index_append(corpus.filter(F.col("doc_id").isin(2, 3)), idx,
-                      epoch_id=1)
-    text_index_append(corpus.filter(F.col("doc_id") == 4), idx,
-                      epoch_id=2)
-    want = [(r.doc_id, r.bm25)
-            for r in bm25_topk(corpus, ["spark", "tables"], k=5).collect()]
-    first = [(r.doc_id, r.bm25)
-             for r in bm25_query_indexed(spark, idx, ["spark", "tables"],
-                                         k=5).collect()]
-    assert first == want
-    # duplicate delivery of epoch 1
-    text_index_append(corpus.filter(F.col("doc_id").isin(2, 3)), idx,
-                      epoch_id=1)
-    replayed = [(r.doc_id, r.bm25)
-                for r in bm25_query_indexed(spark, idx,
-                                            ["spark", "tables"],
-                                            k=5).collect()]
-    assert replayed == want
-
-
-def test_compaction_preserves_results(corpus, tmp_path):
-    """After bulk + two appended epochs, compaction must collapse to a
-    single epoch 0 with byte-identical query results."""
-    import glob
-
-    import pyspark.sql.functions as F
-    from graphraft_spark.search.bm25 import (bm25_query_indexed,
-                                             build_text_index,
-                                             compact_text_index,
-                                             text_index_append)
-
-    spark = corpus.sparkSession
-    idx = str(tmp_path / "bm25_compact_idx")
-    build_text_index(corpus.filter(F.col("doc_id") < 2), idx,
-                     n_buckets=8)
-    text_index_append(corpus.filter(F.col("doc_id").isin(2, 3)), idx, 1)
-    text_index_append(corpus.filter(F.col("doc_id") == 4), idx, 2)
-    before = [(r.doc_id, r.bm25)
-              for r in bm25_query_indexed(spark, idx, ["spark", "tables"],
-                                          k=5).collect()]
-    compact_text_index(spark, idx)
-    epochs = {p.rsplit("epoch=", 1)[1].split("/")[0]
-              for p in glob.glob(f"{idx}/postings/bucket=*/epoch=*")}
-    assert epochs == {"0"}
-    after = [(r.doc_id, r.bm25)
-             for r in bm25_query_indexed(spark, idx, ["spark", "tables"],
-                                         k=5).collect()]
-    assert after == before
-    [stats] = spark.read.parquet(f"{idx}/stats").collect()
-    assert stats.n_docs == 5
-
-
 def test_snapshot_meta_memo_is_bounded(corpus, tmp_path, monkeypatch):
     """The snapshot-mode meta memo holds at most the pq_cache bound: a
     new index's meta evicts the least-recently-used entry, so a long

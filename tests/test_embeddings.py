@@ -9,11 +9,7 @@ import math
 import numpy as np
 import pytest
 
-from graphraft_spark.graph.embeddings import (
-    init_embeddings,
-    node2vec_embeddings,
-    train_sgns,
-)
+from graphraft_spark.graph.embeddings import init_embeddings, train_sgns
 
 
 def h60(s: str) -> int:
@@ -111,16 +107,6 @@ def test_training_pulls_cooccurring_nodes_together(spark):
               for a in grp for b in grp if a < b]
     across = [cos(a, b) for a in cliq1 for b in cliq2]
     assert np.mean(within) > np.mean(across) + 0.1
-
-
-def test_node2vec_end_to_end_shape(spark):
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (4, 5)], "src bigint, dst bigint")
-    out = node2vec_embeddings(edges, dim=4, walk_length=3,
-                              epochs=1).collect()
-    nodes = {r.node for r in out}
-    assert nodes == {1, 2, 3, 4, 5}
-    assert all(len(r.emb) == 4 for r in out)
 
 
 def test_empty_weight_column_name_respected(spark):

@@ -74,40 +74,3 @@ def test_epoch_replay_is_idempotent(spark, tmp_path):
 
 def test_empty_funnel_dir_reads_empty(spark, tmp_path):
     assert read_funnel(spark, str(tmp_path / "nope")).count() == 0
-
-
-def test_real_stream_run_equals_batch(spark, tmp_path):
-    """Drive stream_funnel through an actual Structured Streaming query
-    (file source, one file per micro-batch): the merged state must
-    equal the one-shot batch funnel, with a user whose history spans
-    micro-batches re-anchored correctly."""
-    import glob
-    import os
-    import shutil
-
-    from graphraft_spark.streaming.funnel_stream import stream_funnel
-
-    b0 = _ev(spark, [(1, 5, 0, "A"), (1, 6, 0, "B"), (2, 5, 0, "A")])
-    b1 = _ev(spark, [(1, 2, 0, "A"), (1, 3, 0, "B"), (2, 6, 0, "B")])
-    stage = tmp_path / "stage"
-    stage.mkdir()
-    b0.coalesce(1).write.parquet(str(stage / "raw0"))
-    b1.coalesce(1).write.parquet(str(stage / "raw1"))
-    for i, f in enumerate(sorted(glob.glob(str(stage / "raw*" / "part-*")))):
-        shutil.copy(f, stage / f"{i:02d}.parquet")
-    shutil.rmtree(stage / "raw0")
-    shutil.rmtree(stage / "raw1")
-
-    log_dir, funnel_dir = _dirs(tmp_path)
-    stream = (spark.readStream
-              .schema("user_id bigint, ts timestamp_ntz, event_type string")
-              .option("maxFilesPerTrigger", 1).parquet(str(stage)))
-    stream_funnel(stream, log_dir, funnel_dir, STEPS,
-                  checkpoint_dir=str(tmp_path / "ckpt"))
-
-    epochs = {d for d in os.listdir(funnel_dir) if d.startswith("epoch=")}
-    assert len(epochs) >= 2, epochs      # state really crossed batches
-
-    want = {r["user"]: (r["t1"], r["t2"], r["converted"])
-            for r in funnel(b0.unionByName(b1), STEPS).collect()}
-    assert _state(spark, funnel_dir) == want

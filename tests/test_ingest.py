@@ -88,33 +88,3 @@ def test_parquet_roundtrip(spark, tiny_graph, tmp_path):
     assert g2.nodes.count() == tiny_graph.nodes.count()
     assert g2.edges.count() == tiny_graph.edges.count()
     g2.validate()
-
-
-def test_bucketed_write_avoids_edge_shuffle(spark, tiny_graph, tmp_path):
-    """write_bucketed -> hop join on src shows no Exchange on the edge
-    side (bucketing satisfied the join's distribution requirement)."""
-    import io
-    from contextlib import redirect_stdout
-
-    from graphraft_spark.graph.model import read_bucketed, write_bucketed
-
-    import shutil
-
-    for t in ("tgb_nodes", "tgb_edges", "tgb_undirected"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    write_bucketed(tiny_graph, "tgb", buckets=4)
-    g = read_bucketed(spark, "tgb")
-    assert g.undirected_edges.count() == tiny_graph.undirected_edges.count()
-
-    und = g.undirected_edges
-    j = und.alias("a").join(
-        und.alias("b"),
-        F.col("a.dst") == F.col("b.src"))  # b side keyed on bucket col
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        j.explain("formatted")
-    plan = buf.getvalue()
-    # the b side (joined on its bucket column src) must not re-shuffle:
-    # exactly one Exchange (for the a side keyed on dst)
-    assert plan.count("Exchange hashpartitioning") <= 1, plan

@@ -4,14 +4,11 @@ explicit-schema contract."""
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
-from graphraft_spark.sources.jsonl import (DOCUMENTS_DDL, corrupt_lines,
-                                           read_jsonl, write_jsonl)
+from graphraft_spark.sources.jsonl import (DOCUMENTS_DDL, read_jsonl,
+                                           write_jsonl)
 
 SF = "/root/testdata/sf0.001"
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), ".scratch", "jsonl_test")
 
 
 def test_roundtrip_documents(spark, tmp_path):
@@ -25,6 +22,8 @@ def test_roundtrip_documents(spark, tmp_path):
 
 
 def test_corrupt_lines_quarantined(spark, tmp_path):
+    """The default read drops a malformed line; ``keep_corrupt`` keeps
+    it with its raw text in ``_corrupt_record``."""
     path = str(tmp_path / "mixed")
     os.makedirs(path)
     with open(os.path.join(path, "part-0.json"), "w") as fh:
@@ -35,9 +34,10 @@ def test_corrupt_lines_quarantined(spark, tmp_path):
                  '"source": "s", "n_chars": 7}\n')
     good = read_jsonl(spark, path, DOCUMENTS_DDL)
     assert {r.doc_id for r in good.collect()} == {1, 2}
-    bad = corrupt_lines(spark, path, DOCUMENTS_DDL)
-    assert [r.raw_line for r in bad.collect()] \
-        == ["this is not json at all"]
+    rows = read_jsonl(spark, path, DOCUMENTS_DDL, keep_corrupt=True) \
+        .select("doc_id", "_corrupt_record").collect()
+    assert [r._corrupt_record for r in rows
+            if r._corrupt_record is not None] == ["this is not json at all"]
 
 
 def test_strict_mode_raises(spark, tmp_path):

@@ -1,17 +1,12 @@
 """Z-order layout (ops/layout.py): Morton-key correctness vs a bit-level
-Python reference, the n=3 generic path, and the property the operator
-exists for — z-ordered files carry tight per-file min/max on EVERY
-interleaved column."""
+Python reference, the n=3 generic path and the SQL twin the oracle
+replays."""
 
-import glob
-
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from graphraft_spark.ops.layout import (
     with_zorder_key,
-    write_zordered,
     zorder_key,
     zorder_key_sql,
 )
@@ -64,41 +59,3 @@ def test_zorder_validation():
         zorder_key([F.col("a")])
     with pytest.raises(ValueError):
         zorder_key([F.col("a")] * 2, bits=32)
-
-
-def test_write_zordered_tightens_both_columns(spark, tmp_path):
-    """vs a single-column sort: z-ordered files must prune on BOTH
-    dims.  Metric: sum over files of per-file (max-min) range on each
-    column — smaller = tighter skipping.  On a uniform grid, sorting by
-    `a` alone leaves b's per-file range at full width in every file;
-    z-order must beat it on b by a wide margin while staying far
-    tighter than full width on a."""
-    n, files = 4096, 16
-    grid = spark.range(n).select(
-        (F.col("id") % 64).alias("a"), (F.col("id") / 64).cast("bigint").alias("b"))
-
-    zdir, sdir = str(tmp_path / "z"), str(tmp_path / "s")
-    write_zordered(grid, zdir, ["a", "b"], num_files=files, bits=6)
-    (grid.repartitionByRange(files, "a").sortWithinPartitions("a")
-     .write.mode("overwrite").parquet(sdir))
-
-    def ranges(path, col):
-        total = 0
-        for f in glob.glob(f"{path}/part-*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            lo = min(md.row_group(i).column(
-                {"a": 0, "b": 1}[col]).statistics.min
-                for i in range(md.num_row_groups))
-            hi = max(md.row_group(i).column(
-                {"a": 0, "b": 1}[col]).statistics.max
-                for i in range(md.num_row_groups))
-            total += hi - lo
-        return total
-
-    full_width = 63 * files  # every file spanning the whole domain
-    # sorted-by-a: tight on a, useless on b
-    assert ranges(sdir, "a") < 0.15 * full_width
-    assert ranges(sdir, "b") > 0.9 * full_width
-    # z-ordered: usefully tight on BOTH
-    assert ranges(zdir, "a") < 0.5 * full_width
-    assert ranges(zdir, "b") < 0.5 * full_width

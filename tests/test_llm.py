@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 from graphraft_spark.llm import (
     EchoGenerator,
     LexicographicRanker,
-    SupervisedOrderRanker,
     TrieConstrainedRanker,
     parse_labeled_entities,
     parse_unlabeled_entities,
@@ -66,13 +65,6 @@ def test_trie_ranker_invariants():
     shared = ["MATCH a b c", "MATCH a b d", "MATCH a x"]
     got = r.rank("q", shared, k=3)
     assert sorted(got) == sorted(shared)
-
-
-def test_supervised_ranker_order():
-    scores = {"a": (3, 10), "b": (3, 2), "c": (5, 99), "d": (0, 1)}
-    r = SupervisedOrderRanker(scores)
-    assert r.rank("q", ["a", "b", "c", "d"], k=4) == ["c", "b", "a", "d"]
-    assert r.rank("q", ["a", "b", "c", "d"], k=2) == ["c", "b"]
 
 
 def test_pipeline_end_to_end(spark, tiny_graph):

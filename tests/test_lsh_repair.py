@@ -138,47 +138,15 @@ def test_jaccard_values_survive_repair(corpus):
     assert j[(101, 102)] == pytest.approx(1.0)
 
 
-def _truth_components(pairs):
-    return _components(set(pairs))
-
-
-def test_bistar_matches_union_find_on_random_graph(spark):
-    from graphraft_spark.ops.dedup import connected_components_bistar
-
-    import random
-    rng = random.Random(7)
-    pairs = sorted({tuple(sorted(rng.sample(range(1, 120), 2)))
-                    for _ in range(150)})
-    df = spark.createDataFrame(pairs, "id_a bigint, id_b bigint")
-    out = connected_components_bistar(df).collect()
-    got = {}
-    for r in out:
-        got.setdefault(r.comp, set()).add(r.id)
-    assert {frozenset(c) for c in got.values()} == _components(set(pairs))
-    # component label is the min id, sizes are consistent
-    for comp, members in got.items():
-        assert comp == min(members)
-    sizes = {r.comp: r.cluster_size for r in out}
-    for comp, members in got.items():
-        assert sizes[comp] == len(members)
-
-
-def test_bistar_handles_long_chain_beyond_propagation_budget(spark):
-    """A 150-node chain (diameter 149) converges in O(log n) bistar
-    rounds; min-label propagation must refuse (non-convergence) rather
-    than silently return wrong labels."""
-    import pytest as _pytest
-
-    from graphraft_spark.ops.dedup import (
-        connected_components, connected_components_bistar)
+def test_components_refuse_chain_beyond_iteration_budget(spark):
+    """A 150-node chain (diameter 149) needs more min-label propagation
+    rounds than ``max_iter`` allows: the operator must refuse
+    (non-convergence) rather than silently return wrong labels."""
+    from graphraft_spark.ops.dedup import connected_components
 
     chain = [(i, i + 1) for i in range(1, 150)]
     df = spark.createDataFrame(chain, "id_a bigint, id_b bigint")
-    out = connected_components_bistar(df).collect()
-    assert {r.comp for r in out} == {1}
-    assert len(out) == 150 and all(r.cluster_size == 150 for r in out)
-
-    with _pytest.raises(RuntimeError, match="did not converge"):
+    with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(df, max_iter=10)
 
 
@@ -253,3 +221,4 @@ def test_semantic_dedup_no_sampled_centroid(spark):
     assert {r["id"] for r in out} == {1, 2, 3, 4}
     kept = {r["id"]: r["is_kept"] for r in out}
     assert kept == {1: True, 2: False, 3: True, 4: True}
+

@@ -142,18 +142,6 @@ def test_validate_passes_and_catches(spark, tiny_graph):
         dangling.validate()
 
 
-def test_primary_label(spark):
-    from graphraft_spark.graph.model import primary_label
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(["Paper", "_Entity_"],), (["_Entity_", "Author"],)],
-        "labels array<string>")
-    got = [r["l"] for r in
-           df.select(primary_label(F.col("labels")).alias("l")).collect()]
-    assert got == ["Paper", "Author"]
-
-
 # two questions sharing the anchor "Ada": Bob and P-alpha have a common
 # neighbour (P-beta), so a qid leak would pair them in a 2path row
 TWO_Q = {1: ["Ada", "Bob"], 2: ["Ada", "P-alpha"]}

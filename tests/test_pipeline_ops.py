@@ -38,16 +38,20 @@ def test_lsh_bucket_cap_star_links_preserve_components(spark):
     """max_bucket_size: a dup group bigger than the cap must still come
     out fully connected through its star edges (root = min id), even
     though the quadratic all-pairs inside the bucket is skipped."""
-    from graphraft_spark.ops.dedup import (minhash_lsh_candidates,
-                                           minhash_lsh_dedup)
+    from graphraft_spark.ops.dedup import (_h60, candidates_from_hashes,
+                                           minhash_lsh_dedup, shingles)
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     docs = spark.createDataFrame(
         [(i, f"{base} v{i}") for i in range(12)]
         + [(99, "unrelated words entirely disjoint from the group")],
         "doc_id bigint, text string")
-    cand = {(r["id_a"], r["id_b"]) for r in minhash_lsh_candidates(
-        docs, num_perm=12, bands=4, max_bucket_size=5).collect()}
+    # the md5 shingle hashes minhash_lsh_dedup bands on
+    hashed = docs.select(
+        F.col("doc_id").alias("id"),
+        F.transform(shingles(F.col("text"), 3), _h60).alias("hs"))
+    cand = {(r["id_a"], r["id_b"]) for r in candidates_from_hashes(
+        hashed, num_perm=12, bands=4, max_bucket_size=5).collect()}
     # star edges from the group root reach every sibling
     assert {(0, i) for i in range(1, 12)} <= cand
     # capped: nowhere near the 66 all-pairs of an uncapped 12-bucket
@@ -182,8 +186,8 @@ def test_incremental_graph_update_stream_equals_batch(spark, tmp_path):
     from graphraft_spark.streaming import read_events_stream
     from graphraft_spark.streaming.events import load_events
     from graphraft_spark.streaming.graph_updates import (
-        apply_delta_batch, compact_deltas, event_graph_deltas,
-        merged_graph, stream_graph_updates)
+        apply_delta_batch, event_graph_deltas, merged_graph,
+        stream_graph_updates)
 
     stage = tmp_path / "events"
     stage.mkdir()
@@ -213,10 +217,6 @@ def test_incremental_graph_update_stream_equals_batch(spark, tmp_path):
     got_n = {(r["src"], r["dst"], r["relType"]): r["n_events"]
              for r in g2.edges.collect()}
     assert got_n == {k: 2 * v for k, v in base_n.items()}
-
-    # compaction preserves the merged state
-    gc = compact_deltas(spark, out, str(tmp_path / "compacted"))
-    assert key(gc.edges) == key(g2.edges)
 
 
 def test_multimodal_feature_extraction_deterministic(spark):
@@ -372,25 +372,6 @@ def test_connected_components_cluster_star_capped_group(spark):
                    20: (20, 2), 21: (20, 2)}
 
 
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    """dropDuplicatesWithinWatermark over a staged file with every event
-    duplicated: streamed output matches the batch dropDuplicates."""
-    from graphraft_spark.streaming import read_events_stream, run_stream_to_memory
-    from graphraft_spark.streaming.events import dedup_events_stream, load_events
-
-    ev = load_events(spark, SF)
-    stage = tmp_path / "dup"
-    # one staged file containing each event twice -> one micro-batch,
-    # duplicates inside it
-    ev.unionByName(ev).coalesce(1).write.parquet(str(stage))
-    stream = read_events_stream(spark, str(stage))
-    got = run_stream_to_memory(
-        dedup_events_stream(stream, keys=("event_id",)),
-        "test_dedup_sink", output_mode="append")
-    assert got.count() == ev.count()
-    assert got.select("event_id").distinct().count() == ev.count()
-
-
 def test_stream_neardup_equals_batch_lsh(spark, tmp_path):
     """Incremental LSH dedup: documents streamed in TWO micro-batches
     (originals first, near-copies second) must produce exactly the
@@ -455,86 +436,6 @@ def test_embedding_neardup_unbucketed_gate(spark):
                         bucket_col="bk").explain()
 
 
-def test_embedding_neardup_srp_blocking(spark):
-    """SRP-bucketed embedding near-dup: exact-duplicate vectors are
-    always recovered (identical signature), verified pairs carry exact
-    cosine, and nothing below threshold leaks through."""
-    from graphraft_spark.ops.dedup import embedding_neardup, embedding_neardup_srp
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(200)
-    dups = emb.filter(F.col("vec_id") % 20 == 0) \
-        .select((F.col("vec_id") + 100000).alias("vec_id"), "embedding",
-                "label")
-    corpus = emb.unionByName(dups)
-    dim = len(emb.first()["embedding"])
-
-    got = embedding_neardup_srp(corpus, dim=dim, threshold=0.999999)
-    rows = got.collect()
-    pairs = {(r.id_a, r.id_b) for r in rows}
-    want_exact = {(r.vec_id, r.vec_id + 100000)
-                  for r in emb.filter(F.col("vec_id") % 20 == 0).collect()}
-    assert want_exact <= pairs                      # recall 1.0 on exact dups
-    assert all(r.cosine >= 0.999999 for r in rows)  # verify is exact
-    # subset of the all-pairs ground truth (blocking adds nothing false)
-    truth = {(r.id_a, r.id_b) for r in
-             embedding_neardup(corpus, threshold=0.999999).collect()}
-    assert pairs <= truth
-
-
-def test_chunk_and_reassemble_payload_roundtrip(spark):
-    """Binary chunking: fixed-size chunks with correct counts, and the
-    order-safe reassembly restores every payload byte-for-byte."""
-    import os
-
-    from graphraft_spark.ops.multimodal import chunk_payload, reassemble_payload
-
-    blobs = [(i, os.urandom(1000 * i + 7)) for i in range(1, 6)] + [(99, b"")]
-    media = spark.createDataFrame(blobs, "media_id bigint, payload binary")
-    chunks = chunk_payload(media, chunk_bytes=1024)
-    rows = chunks.collect()
-    for r in rows:
-        assert len(r.chunk) <= 1024
-    n_by_id = {r.media_id: r.n_chunks for r in rows}
-    assert n_by_id[1] == 1 and n_by_id[5] == 5  # 5007 bytes -> 5 chunks
-    assert n_by_id[99] == 1                     # empty payload: one empty chunk
-
-    back = {r.media_id: bytes(r.payload)
-            for r in reassemble_payload(chunks).collect()}
-    want = {i: b for i, b in blobs}
-    assert back == want
-
-
-def test_ivf_saved_index_prunes_partitions_and_matches(spark, tmp_path):
-    """save/load IVF index: the pruned search must (a) return exactly
-    the in-memory ivf_search results and (b) show the centroid IN
-    filter as a PartitionFilter in the parquet scan — scan cost is the
-    probed partitions only."""
-    from graphraft_spark.ops.similarity import (
-        ivf_assign, ivf_centroids, ivf_search, ivf_search_pruned,
-        load_ivf_index, save_ivf_index)
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cents = ivf_centroids(emb, every=50)
-    assigned = ivf_assign(emb, cents)
-    index_dir = str(tmp_path / "ivf")
-    save_ivf_index(assigned, cents, index_dir)
-
-    queries = (emb.filter(F.col("vec_id") % 100 == 1)
-               .select(F.col("vec_id").alias("qid"),
-                       F.col("embedding").alias("q_emb")))
-    got_df = ivf_search_pruned(spark, index_dir, queries, k=5, nprobe=2)
-    p = got_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in p and "centroid_id" in p.split(
-        "PartitionFilters")[1].split("]")[0], \
-        "probe must prune index partitions at the scan"
-
-    got = {(r.qid, r.vec_id, r.rn) for r in got_df.collect()}
-    loaded_assigned, loaded_cents = load_ivf_index(spark, index_dir)
-    want = {(r.qid, r.vec_id, r.rn) for r in ivf_search(
-        loaded_assigned, loaded_cents, queries, k=5, nprobe=2).collect()}
-    assert got == want and len(got) > 0
-
-
 def test_pack_bins_scalable_matches_global_window(spark):
     """The distributed two-pass prefix-sum packing must reproduce the
     single-window pack_bins exactly, for any partition count."""
@@ -553,52 +454,6 @@ def test_pack_bins_scalable_matches_global_window(spark):
                            partitions=8)
     plan = p._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
-
-
-def test_stream_ivf_ingest_matches_batch_index(spark, tmp_path):
-    """Vectors streamed into the IVF index across micro-batches must be
-    searchable identically to a batch-built index, and an epoch replay
-    must not duplicate rows (idempotent overwrite)."""
-    from graphraft_spark.ops.similarity import (
-        ivf_assign, ivf_centroids, ivf_index_append, ivf_search,
-        ivf_search_pruned, stream_ivf_ingest)
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cents = ivf_centroids(emb, every=50)
-
-    stage = tmp_path / "vecs"
-    stage.mkdir()
-    import glob
-    import shutil
-    emb.filter(F.col("vec_id") % 2 == 0).coalesce(1) \
-        .write.parquet(str(stage / "t0"))
-    emb.filter(F.col("vec_id") % 2 == 1).coalesce(1) \
-        .write.parquet(str(stage / "t1"))
-    for i, f in enumerate(sorted(glob.glob(str(stage / "t*" / "part-*")))):
-        shutil.copy(f, stage / f"{i:02d}.parquet")
-    shutil.rmtree(stage / "t0")
-    shutil.rmtree(stage / "t1")
-
-    index_dir = str(tmp_path / "ivf_stream")
-    stream = (spark.readStream.schema(emb.schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(stage)))
-    stream_ivf_ingest(stream, cents, index_dir)
-
-    queries = (emb.filter(F.col("vec_id") % 100 == 1)
-               .select(F.col("vec_id").alias("qid"),
-                       F.col("embedding").alias("q_emb")))
-    got = {(r.qid, r.vec_id, r.rn) for r in ivf_search_pruned(
-        spark, index_dir, queries, k=5, nprobe=2).collect()}
-    want = {(r.qid, r.vec_id, r.rn) for r in ivf_search(
-        ivf_assign(emb, cents), cents, queries, k=5, nprobe=2).collect()}
-    assert got == want and len(got) > 0
-
-    # replay epoch 0: same rows, no duplicates
-    batch0 = spark.read.parquet(str(stage / "00.parquet"))
-    from graphraft_spark.ops.similarity import load_ivf_index
-    n_before = load_ivf_index(spark, index_dir)[0].count()
-    ivf_index_append(batch0, cents, index_dir, 0)
-    assert load_ivf_index(spark, index_dir)[0].count() == n_before
 
 
 def test_dedup_index_epoch_replay_idempotent(spark, tmp_path):
@@ -630,70 +485,24 @@ def test_dedup_index_epoch_replay_idempotent(spark, tmp_path):
     assert spark.read.parquet(f"{index_dir}/hashes").count() == n_hashes
 
 
-def test_ivf_save_then_append_composes(spark, tmp_path):
-    """A bulk-saved index (epoch 0) must accept streaming appends
-    (epoch >= 1) — uniform partition depth — and serve the union."""
-    from graphraft_spark.ops.similarity import (
-        ivf_assign, ivf_centroids, ivf_index_append, ivf_search,
-        ivf_search_pruned, save_ivf_index)
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cents = ivf_centroids(emb, every=50)
-    bulk = emb.filter(F.col("vec_id") % 2 == 0)
-    late = emb.filter(F.col("vec_id") % 2 == 1)
-
-    index_dir = str(tmp_path / "ivf_mixed")
-    save_ivf_index(ivf_assign(bulk, cents), cents, index_dir)
-    ivf_index_append(late, cents, index_dir, epoch_id=1)
-
-    queries = (emb.filter(F.col("vec_id") % 100 == 1)
-               .select(F.col("vec_id").alias("qid"),
-                       F.col("embedding").alias("q_emb")))
-    got = {(r.qid, r.vec_id, r.rn) for r in ivf_search_pruned(
-        spark, index_dir, queries, k=5, nprobe=2).collect()}
-    want = {(r.qid, r.vec_id, r.rn) for r in ivf_search(
-        ivf_assign(emb, cents), cents, queries, k=5, nprobe=2).collect()}
-    assert got == want and len(got) > 0
-
-
-def test_mix_rates_temperature_math():
-    """τ=1 → proportional rates scaled to the target; τ→∞ flattens
-    toward uniform sampling; rates cap at 1 for tiny sources."""
-    from graphraft_spark.ops.text_analysis import mix_rates
-
-    counts = {"big": 8000, "small": 1000, "tiny": 10}
-    r1 = mix_rates(counts, tau=1.0, target_total=901)
-    # τ=1: expected take ∝ n -> every source keeps the same rate
-    assert abs(r1["big"] - r1["small"]) < 1e-12
-    assert abs(r1["big"] - 901 / 9010) < 1e-12
-    r5 = mix_rates(counts, tau=5.0, target_total=901)
-    # upweights small sources: small keeps a larger share than big
-    assert r5["small"] > r1["small"] and r5["big"] < r1["big"]
-    # tiny source rate caps at 1
-    rbig = mix_rates(counts, tau=100.0, target_total=9000)
-    assert rbig["tiny"] == 1.0
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        mix_rates(counts, tau=0, target_total=100)
-
-
 def test_temperature_mix_deterministic_and_rate_accurate(spark):
     from pyspark.sql import functions as F
 
-    from graphraft_spark.ops.text_analysis import mix_rates, temperature_mix
+    from graphraft_spark.ops.text_analysis import temperature_mix
 
     df = spark.range(0, 4000).select(
         F.col("id").alias("doc_id"),
         F.concat(F.lit("s"), (F.col("id") % 4).cast("string"))
         .alias("source"))
-    counts = {f"s{i}": 1000 for i in range(4)}
-    rates = mix_rates(counts, tau=1.0, target_total=2000)
+    rates = {"s0": 0.5, "s1": 0.5, "s2": 0.1, "s3": 1.0}
     out = temperature_mix(df, rates)
     got = {r["source"]: r["n"] for r in
            out.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    # each source keeps ~50% (hash-thinning, binomial tolerance)
-    for s in counts:
-        assert 400 < got[s] < 600, got
+    # each source keeps ~rate·1000 rows (hash-thinning, binomial
+    # tolerance); rate 1 keeps every row
+    assert 400 < got["s0"] < 600 and 400 < got["s1"] < 600, got
+    assert 50 < got["s2"] < 150, got
+    assert got["s3"] == 1000, got
     # deterministic: identical on re-run and under repartitioning
     again = temperature_mix(df.repartition(13), rates)
     assert sorted(r["doc_id"] for r in out.collect()) \
@@ -720,41 +529,6 @@ def test_dsir_weights_prefer_target_like_docs(spark):
     out = {r["doc_id"]: r["dsir_weight"]
            for r in dsir_weights(raw, target).collect()}
     assert out[1] > out[2]
-
-
-def test_compact_ivf_index_preserves_search(spark, tmp_path):
-    """Compaction folds every ingested epoch into epoch 0: search
-    results must be byte-identical before and after, and the vectors
-    tree must hold ONLY epoch=0 directories afterwards."""
-    import glob
-
-    from graphraft_spark.ops.similarity import (
-        compact_ivf_index, ivf_centroids, ivf_index_append,
-        ivf_search_pruned, save_ivf_index, ivf_assign)
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cents = ivf_centroids(emb, every=50)
-    index_dir = str(tmp_path / "ivf")
-    save_ivf_index(ivf_assign(emb.filter(F.col("vec_id") % 3 == 0),
-                              cents), cents, index_dir)
-    ivf_index_append(emb.filter(F.col("vec_id") % 3 == 1), cents,
-                     index_dir, 1)
-    ivf_index_append(emb.filter(F.col("vec_id") % 3 == 2), cents,
-                     index_dir, 2)
-
-    queries = (emb.filter(F.col("vec_id") % 100 == 1)
-               .select(F.col("vec_id").alias("qid"),
-                       F.col("embedding").alias("q_emb")))
-    before = {(r.qid, r.vec_id, r.rn) for r in ivf_search_pruned(
-        spark, index_dir, queries, k=5, nprobe=2).collect()}
-    assert len(before) > 0
-    compact_ivf_index(spark, index_dir)
-    after = {(r.qid, r.vec_id, r.rn) for r in ivf_search_pruned(
-        spark, index_dir, queries, k=5, nprobe=2).collect()}
-    assert after == before
-    epochs = {d.rsplit("epoch=", 1)[-1] for d in glob.glob(
-        f"{index_dir}/vectors/centroid_id=*/epoch=*")}
-    assert epochs == {"0"}
 
 
 def test_stream_memory_sink_dropped_after_run(spark, tmp_path):

@@ -98,39 +98,6 @@ def test_dim_not_divisible_raises(corpus):
         pq_train(corpus, m=5, k=8, iters=1)
 
 
-def test_ivfpq_prunes_and_finds_cluster(spark, corpus, trained):
-    """IVF x PQ: probed-cell search returns the query's cluster members;
-    with generous nprobe it matches plain PQ search."""
-    from graphraft_spark.ops.pq import ivfpq_search, pq_search
-    from graphraft_spark.ops.similarity import ivf_assign, ivf_centroids_kmeans
-
-    books, codes = trained
-    cents = ivf_centroids_kmeans(corpus, k=8, iters=3)
-    assigned = (ivf_assign(corpus, cents)
-                .select("vec_id", "centroid_id")
-                .join(codes, "vec_id"))
-    q_rows = corpus.filter(F.col("vec_id").isin(5, 125)).collect()
-    qdf = spark.createDataFrame(
-        [(r["vec_id"], r["embedding"]) for r in q_rows],
-        "qid bigint, q_emb array<double>")
-    cluster_of = {r["vec_id"]: r["cluster"] for r in corpus.collect()}
-    got = ivfpq_search(assigned, cents, books, qdf, k=5, nprobe=2).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r["qid"], []).append(r["vec_id"])
-    for r in q_rows:
-        assert r["vec_id"] in by_q[r["vec_id"]]
-        assert all(cluster_of[h] == r["cluster"]
-                   for h in by_q[r["vec_id"]])
-    # nprobe == all cells -> identical to full PQ search
-    full = {(r["qid"], r["rank"]): r["vec_id"]
-            for r in pq_search(codes, books, qdf, k=5).collect()}
-    wide = {(r["qid"], r["rank"]): r["vec_id"]
-            for r in ivfpq_search(assigned, cents, books, qdf,
-                                  k=5, nprobe=8).collect()}
-    assert wide == full
-
-
 def test_rerank_recovers_exact_topk(spark, corpus, trained):
     """Coarse top-C (PQ) -> exact re-rank == brute-force exact top-k
     when C is generous (here C = the whole cluster)."""

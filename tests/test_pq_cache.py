@@ -1,10 +1,10 @@
 """load_pq: memoized parquet HANDLES — lazy plans, fingerprint-keyed.
 
-Pins the three contract points the r14 optimization relies on:
-same-fingerprint calls share one analyzed handle (the ~0.1-0.2 s
-footer/listing cost is paid once), any rewrite of the file invalidates
-the memo (no stale plans), and no DATA is ever cached (a new action
-after a rewrite sees the new rows)."""
+Pins the contract points the memo relies on: same-fingerprint calls
+share one analyzed handle (the ~0.1-0.2 s footer/listing cost is paid
+once), any write anywhere in the path's tree invalidates the memo (no
+stale plans), and no DATA is ever cached (a new action after a rewrite
+sees the new rows)."""
 
 import os
 import time
@@ -78,3 +78,28 @@ def test_hot_handle_survives_bound_overflow(spark, tmp_path, monkeypatch):
         load_pq(spark, p)
         assert load_pq(spark, paths[0]) is hot
         assert len(pq_cache._MEMO) <= 2
+
+
+def test_part_file_added_inside_partition_invalidates(spark, tmp_path):
+    """A part file landing inside an existing partition subdirectory
+    leaves the top-level entries untouched; the tree fingerprint still
+    moves, so the next load_pq lists the new file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "parted")
+    spark.createDataFrame([(1, 0), (2, 0), (3, 1)], "x int, part int") \
+        .write.mode("overwrite").partitionBy("part").parquet(p)
+    a = load_pq(spark, p)
+    assert a.count() == 3
+    top = sorted(os.listdir(p))
+    top_mtime = os.stat(p).st_mtime_ns
+    pq.write_table(pa.table({"x": pa.array([7, 8], pa.int32())}),
+                   os.path.join(p, "part=0", "part-extra.parquet"))
+    assert sorted(os.listdir(p)) == top
+    assert os.stat(p).st_mtime_ns == top_mtime
+    b = load_pq(spark, p)
+    assert b is not a
+    assert b.count() == 5
+    assert sorted(r.x for r in b.filter(F.col("part") == 0).collect()) \
+        == [1, 2, 7, 8]

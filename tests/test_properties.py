@@ -389,28 +389,6 @@ sizes_lists = st.lists(st.integers(1, 15), min_size=1, max_size=25)
 
 
 @settings(**SETTINGS)
-@given(sizes=sizes_lists)
-def test_greedy_packing_matches_python_oracle(spark, sizes):
-    """pack_bins_greedy == the sequential greedy algorithm, and no bin
-    exceeds the budget unless it holds a single oversized document."""
-    from graphraft_spark.ops.text_analysis import pack_bins_greedy
-
-    budget = 10
-    df = spark.createDataFrame(list(enumerate(sizes)),
-                               "doc_id bigint, n bigint")
-    got = {r["doc_id"]: r["bin_id"]
-           for r in pack_bins_greedy(df, budget, size_col="n").collect()}
-
-    want, cur, used = {}, 0, 0
-    for i, s in enumerate(sizes):
-        if used > 0 and used + s > budget:
-            cur, used = cur + 1, 0
-        want[i] = cur
-        used += s
-    assert got == want
-
-
-@settings(**SETTINGS)
 @given(sizes=sizes_lists, cap=st.integers(1, 5))
 def test_source_quota_keeps_first_cap_per_source(spark, sizes, cap):
     from graphraft_spark.ops.text_analysis import source_quota
@@ -424,22 +402,6 @@ def test_source_quota_keeps_first_cap_per_source(spark, sizes, cap):
         per.setdefault(src, []).append(i)
     want = sorted(i for ids in per.values() for i in sorted(ids)[:cap])
     assert got == want
-
-
-@settings(**SETTINGS)
-@given(blobs=st.lists(st.binary(min_size=0, max_size=5000),
-                      min_size=1, max_size=6),
-       chunk=st.integers(1, 1500))
-def test_chunk_reassemble_roundtrip_any_bytes(spark, blobs, chunk):
-    """chunk_payload/reassemble_payload round-trip arbitrary payloads
-    at arbitrary chunk sizes, byte-for-byte."""
-    from graphraft_spark.ops.multimodal import chunk_payload, reassemble_payload
-
-    media = spark.createDataFrame(
-        list(enumerate(blobs)), "media_id bigint, payload binary")
-    back = {r.media_id: bytes(r.payload) for r in reassemble_payload(
-        chunk_payload(media, chunk_bytes=chunk)).collect()}
-    assert back == {i: b for i, b in enumerate(blobs)}
 
 
 @settings(**SETTINGS)

@@ -44,22 +44,6 @@ def test_adaptive_cap_work_within_budget_or_floor(hist, bands, ppd):
         raise AssertionError("cap not maximal")
 
 
-@settings(max_examples=200, deadline=None)
-@given(threshold=st.floats(0.05, 0.95),
-       num_perm=st.sampled_from([4, 8, 12, 16, 24, 32]))
-def test_lsh_tune_midpoint_is_closest(threshold, num_perm):
-    from graphraft_spark.ops.dedup import lsh_tune
-
-    bands, rows = lsh_tune(threshold, num_perm)
-    assert bands * rows == num_perm
-    best_gap = abs((1.0 / bands) ** (1.0 / rows) - threshold)
-    for b in range(1, num_perm + 1):
-        if num_perm % b:
-            continue
-        r = num_perm // b
-        assert best_gap <= abs((1.0 / b) ** (1.0 / r) - threshold) + 1e-12
-
-
 # ---------- Spark round-trip properties ----------
 
 events_st = st.lists(

@@ -126,72 +126,6 @@ def test_trie_ranker_token_granularity_invariants():
     assert sorted(bpe.rank("which?", cands, k=10)) == sorted(cands)
 
 
-def test_upsert_graph_merge_by_id(spark):
-    """Batch MERGE semantics across runs: delta rows replace base rows
-    sharing an id, new ids append (stark_neo4j_loading.py:20-61)."""
-    from graphraft_spark.graph.ingest import upsert_graph
-    from graphraft_spark.graph.model import PropertyGraph
-
-    base = PropertyGraph(
-        nodes=spark.createDataFrame(
-            [(1, "A", "old"), (2, "A", "keep")],
-            "nodeId bigint, label string, name string"),
-        edges=spark.createDataFrame(
-            [(10, 1, 2, "R")], "edgeId bigint, src bigint, dst bigint,"
-                               " relType string"))
-    delta = PropertyGraph(
-        nodes=spark.createDataFrame(
-            [(1, "A", "new"), (3, "B", "added")],
-            "nodeId bigint, label string, name string"),
-        edges=spark.createDataFrame(
-            [(10, 1, 3, "R"), (11, 3, 2, "S")],
-            "edgeId bigint, src bigint, dst bigint, relType string"))
-    g = upsert_graph(base, delta)
-    nodes = {r["nodeId"]: r["name"] for r in g.nodes.collect()}
-    assert nodes == {1: "new", 2: "keep", 3: "added"}
-    edges = {r["edgeId"]: (r["src"], r["dst"], r["relType"])
-             for r in g.edges.collect()}
-    assert edges == {10: (1, 3, "R"), 11: (3, 2, "S")}
-    g.validate()  # merged graph keeps unique keys + referential integrity
-
-
-def test_greedy_packing_respects_budget(spark):
-    from graphraft_spark.ops.text_analysis import pack_bins_greedy
-
-    rows = [(i, s) for i, s in enumerate([4, 4, 4, 9, 2, 10, 1])]
-    df = spark.createDataFrame(rows, "doc_id bigint, n bigint")
-    out = {r["doc_id"]: r["bin_id"]
-           for r in pack_bins_greedy(df, budget=10, size_col="n").collect()}
-    # greedy: [4,4]=8 | [4]=4? no — 4+4=8, +4=12>10 → new bin
-    assert out == {0: 0, 1: 0, 2: 1, 3: 2, 4: 3, 5: 4, 6: 5}
-    # every bin total ≤ budget except single-oversized-doc bins
-    sizes = dict(rows)
-    totals = {}
-    for d, b in out.items():
-        totals[b] = totals.get(b, 0) + sizes[d]
-    for b, t in totals.items():
-        members = [d for d in out if out[d] == b]
-        assert t <= 10 or len(members) == 1
-
-
-def test_sql_views_match_dataframe_plan(spark, tiny_graph):
-    from graphraft_spark.graph.views import register_graph_views
-    from graphraft_spark.patterns import onehop
-    from graphraft_spark.patterns.compiler import run_pattern
-
-    register_graph_views(spark, tiny_graph)
-    sql_names = {r["name"] for r in spark.sql("""
-        SELECT DISTINCT n2.name FROM nodes n1
-        JOIN undirected_edges e ON e.src = n1.nodeId
-             AND e.relType = 'WRITES'
-        JOIN nodes n2 ON n2.nodeId = e.dst AND n2.label = 'Paper'
-        WHERE n1.label = 'Author' AND n1.name = 'Ada'
-    """).collect()}
-    df_names = {r["name"] for r in run_pattern(
-        tiny_graph, onehop("Author", "Ada", "WRITES", "Paper")).collect()}
-    assert sql_names == df_names and sql_names
-
-
 def test_trie_ranker_prefix_candidate_under_merge_tokenizer():
     """A candidate whose merged-token sequence is a strict prefix of
     another's must still be emittable (forced EOS at candidate end,
@@ -201,24 +135,3 @@ def test_trie_ranker_prefix_candidate_under_merge_tokenizer():
     cands = ["q 129", "q 1299"]   # ('q','129') is a prefix of ('q','129','9')
     out = TrieConstrainedRanker(tokenizer=_bpe_ish).rank("?", cands, k=2)
     assert sorted(out) == sorted(cands)
-
-
-def test_sketches_within_tolerance_of_exact(spark):
-    """HLL++ distinct and GK quantiles stay within their documented
-    error bounds of the exact operators on the documents corpus."""
-    from graphraft_spark.ops.sketches import approx_distinct, approx_quantiles
-
-    d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    exact_n = d.select("doc_id").distinct().count()
-    approx_n = approx_distinct(d, "doc_id", rsd=0.02).collect()[0][0]
-    assert abs(approx_n - exact_n) / exact_n <= 3 * 0.02
-
-    exact_p50 = d.selectExpr(
-        "percentile(n_chars, 0.5) AS p").collect()[0]["p"]
-    got = approx_quantiles(d, "n_chars", [0.5],
-                           accuracy=10_000).collect()[0][0][0]
-    # GK with high accuracy on 500 rows is rank-exact; allow tiny slack
-    ranked = sorted(r["n_chars"] for r in d.select("n_chars").collect())
-    idx = ranked.index(got)
-    assert abs(idx - len(ranked) // 2) <= max(1, len(ranked) // 100)
-    assert abs(got - exact_p50) / max(exact_p50, 1) < 0.1

@@ -1,11 +1,20 @@
-"""Every graphraft_spark module must be reachable from a registered
-query, the pipeline, the API facade or the session factory.
+"""Every graphraft_spark module, and every top-level function and class
+in it, must be reachable from a registered query, the pipeline, the API
+facade or the session factory.
 
-AST only (no Spark session, no imports executed): compute the import
-closure of the roots, following package ``__init__`` files the way the
-interpreter does, and fail naming any module outside it.  A module that
-only its own tests import is dead weight — delete it, or wire it into a
-registered query or pipeline stage.
+AST only (no Spark session, no imports executed).  Modules: compute the
+import closure of the roots, following package ``__init__`` files the
+way the interpreter does, and fail naming any module outside it.
+Definitions: compute the name closure of the roots (below) and fail
+naming any top-level def or class outside it.  Code that only its own
+tests reach is dead weight — delete it, or wire it into a registered
+query or pipeline stage.
+
+Deleting it must not strand a caller: every ``from graphraft_spark...
+import name`` in the tools, the bench, perfbench and the tests
+(function-local imports included) resolves, and every package
+``__all__`` entry is defined — so a deletion that breaks one of them
+fails here, not when the tool or the benchmark next runs.
 """
 
 import ast
@@ -13,22 +22,53 @@ import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "graphraft_spark"
+CALLERS = ("tools", "bench.py", "perfbench", "tests")
 
 ROOTS = ("graphraft_spark.registry.*", "graphraft_spark.api",
          "graphraft_spark.pipeline", "graphraft_spark.session")
 
 # Modules that no root reaches but that stay on purpose.
 ALLOWED = {
-    # the one documented reference-interop shim: loads a Neo4j CSV
-    # export into a PropertyGraph (MIGRATION.md)
-    "graphraft_spark.graph.neo4j_csv",
-    # the driver-side pyarrow reader the distributed HF writer/reader
-    # tests compare against
-    "graphraft_spark.data.hf_arrow",
-    # the real char n-gram scorer the trie-ranker tests drive
-    "graphraft_spark.llm.ngram_lm",
-    # parses the reference's stored Cypher strings for reference replay
-    "graphraft_spark.patterns.cypher_parse",
+    "graphraft_spark.graph.neo4j_csv":
+        "the one documented reference-interop shim: loads a Neo4j CSV "
+        "export into a PropertyGraph (MIGRATION.md)",
+    "graphraft_spark.data.hf_arrow":
+        "the driver-side pyarrow reader the distributed HF writer/reader "
+        "tests compare against",
+    "graphraft_spark.llm.ngram_lm":
+        "the real char n-gram scorer the trie-ranker tests drive",
+    "graphraft_spark.patterns.cypher_parse":
+        "parses the reference's stored Cypher strings for reference replay",
+}
+
+# Top-level definitions that no root reaches but that stay on purpose;
+# a module entry allows every definition in that module.
+ALLOWED_DEFS = {
+    **ALLOWED,
+    "graphraft_spark.sources.hf_arrow_source":
+        "reads and writes the reference's HF save_to_disk layout",
+    "graphraft_spark.graph.ingest.build_graph":
+        "STaRK SKB -> property graph (stark_neo4j_loading.py)",
+    "graphraft_spark.graph.ingest.ingest_nodes":
+        "STaRK SKB -> property graph: node MERGE semantics",
+    "graphraft_spark.graph.ingest.ingest_edges":
+        "STaRK SKB -> property graph: edge MERGE semantics",
+    "graphraft_spark.llm.prompts.build_ner_messages":
+        "the reference's NER prompt (ner.py)",
+    "graphraft_spark.llm.prompts.load_ner_instructions":
+        "the reference's NER instruction file (ner.py)",
+    "graphraft_spark.llm.prompts.llm2_instruction":
+        "the reference's LLM2 answer prompt (llm2.py)",
+    "graphraft_spark.llm.sft.llm2_sft_table":
+        "the reference's LLM2 SFT export (llm2.py)",
+    "graphraft_spark.search.vector.knn_pseudo_entities":
+        "the reference's kNN-NER ablation (ner.py)",
+    "graphraft_spark.ops.avi.avi_decode":
+        "the decoder the encoder's round-trip tests compare against",
+    "graphraft_spark.patterns.compiler.run_pattern_nodes":
+        "perfbench wraps it by name (ROADMAP Direction 1 removes it)",
+    "graphraft_spark.llm.sft.write_sft":
+        "perfbench calls it by name",
 }
 
 
@@ -47,12 +87,33 @@ def _modules() -> dict[str, str]:
     return out
 
 
+def _parse(path: str) -> ast.Module:
+    with open(path) as f:
+        return ast.parse(f.read(), path)
+
+
+def _is_all(node: ast.stmt) -> bool:
+    """``__all__ = [...]``"""
+    return isinstance(node, ast.Assign) and any(
+        isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets)
+
+
+def _root_modules(modules: dict[str, str]) -> set[str]:
+    out = set()
+    for root in ROOTS:
+        if root.endswith(".*"):
+            pkg = root[:-2]
+            out |= {m for m in modules
+                    if m == pkg or m.startswith(pkg + ".")}
+        else:
+            out.add(root)
+    return out
+
+
 def _imports(path: str, modules: dict[str, str]) -> set[str]:
     """Package modules one file imports, anywhere in its body."""
-    with open(path) as f:
-        tree = ast.parse(f.read(), path)
     names = set()
-    for node in ast.walk(tree):
+    for node in ast.walk(_parse(path)):
         if isinstance(node, ast.Import):
             names.update(a.name for a in node.names)
         elif isinstance(node, ast.ImportFrom):
@@ -71,14 +132,7 @@ def _imports(path: str, modules: dict[str, str]) -> set[str]:
 
 
 def _closure(modules: dict[str, str]) -> set[str]:
-    todo = []
-    for root in ROOTS:
-        if root.endswith(".*"):
-            pkg = root[:-2]
-            todo += [m for m in modules
-                     if m == pkg or m.startswith(pkg + ".")]
-        else:
-            todo.append(root)
+    todo = list(_root_modules(modules))
     seen = set()
     while todo:
         m = todo.pop()
@@ -91,7 +145,7 @@ def _closure(modules: dict[str, str]) -> set[str]:
 
 def test_every_module_is_reached():
     modules = _modules()
-    unreached = sorted(set(modules) - _closure(modules) - ALLOWED)
+    unreached = sorted(set(modules) - _closure(modules) - ALLOWED.keys())
     assert not unreached, (
         "modules no registered query, pipeline stage or API path "
         f"reaches: {unreached}")
@@ -102,3 +156,157 @@ def test_allowlist_is_current():
     reached = _closure(modules)
     stale = sorted(m for m in ALLOWED if m not in modules or m in reached)
     assert not stale, f"allowlist entries gone or now reached: {stale}"
+
+
+def _defs(modules: dict[str, str]):
+    """Top-level defs as ``module.name`` -> (module, node), plus the
+    statements that run at import (everything else except imports and
+    ``__all__``) and each module's import aliases."""
+    defs, module_code, aliases = {}, [], {}
+    for m, path in modules.items():
+        for node in _parse(path).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                defs[f"{m}.{node.name}"] = (m, node)
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                for a in node.names:
+                    if a.asname:
+                        aliases.setdefault(m, {})[a.asname] = \
+                            a.name.rsplit(".", 1)[-1]
+            elif not _is_all(node):
+                module_code.append((m, node))
+    return defs, module_code, aliases
+
+
+def _names(m: str, node: ast.AST, aliases: dict) -> set[str]:
+    """Every name one piece of code mentions: Name ids, Attribute attrs
+    and (function-local) import aliases, with ``as`` aliases resolved."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out | {aliases.get(m, {}).get(x) for x in out} - {None}
+
+
+def _unreached_defs(modules: dict[str, str]) -> set[str]:
+    """Definitions outside the name closure of every definition in a
+    ROOTS module plus every module's import-time code.  Resolution is by
+    bare name across the package, so it only ever over-approximates
+    what is reached."""
+    defs, module_code, aliases = _defs(modules)
+    by_name = {}
+    for key, (_, node) in defs.items():
+        by_name.setdefault(node.name, []).append(key)
+    roots = _root_modules(modules)
+    todo = [k for k, (m, _) in defs.items() if m in roots]
+    for m, node in module_code:
+        todo += [k for x in _names(m, node, aliases)
+                 for k in by_name.get(x, ())]
+    seen = set()
+    while todo:
+        key = todo.pop()
+        if key in seen:
+            continue
+        seen.add(key)
+        m, node = defs[key]
+        todo += [k for x in _names(m, node, aliases)
+                 for k in by_name.get(x, ()) if k not in seen]
+    return set(defs) - seen
+
+
+def _allowed_def(key: str) -> bool:
+    return key in ALLOWED_DEFS or key.rsplit(".", 1)[0] in ALLOWED_DEFS
+
+
+def test_every_def_is_reached():
+    unreached = sorted(k for k in _unreached_defs(_modules())
+                       if not _allowed_def(k))
+    assert not unreached, (
+        "top-level definitions no registered query, pipeline stage or "
+        f"API path reaches: {unreached}")
+
+
+def test_def_allowlist_is_current():
+    modules = _modules()
+    unreached = _unreached_defs(modules)
+    covers = {entry: {k for k in unreached
+                      if k == entry or k.rsplit(".", 1)[0] == entry}
+              for entry in ALLOWED_DEFS}
+    stale = sorted(e for e, ks in covers.items() if not ks)
+    assert not stale, f"allowlist entries gone or now reached: {stale}"
+    assert all(reason.strip() for reason in ALLOWED_DEFS.values())
+
+
+def _py_files(rel: str) -> list[str]:
+    path = os.path.join(REPO, rel)
+    if path.endswith(".py"):
+        return [path]
+    return sorted(os.path.join(d, f) for d, _, files in os.walk(path)
+                  for f in files if f.endswith(".py"))
+
+
+def _module_names(tree: ast.Module) -> set[str]:
+    """Names a module binds at import: defs, classes, assignment
+    targets and imports, including those under module-level if/try."""
+    out = set()
+    todo = list(tree.body)
+    while todo:
+        node = todo.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            out.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = (node.targets if isinstance(node, ast.Assign)
+                       else [node.target])
+            out |= {n.id for t in targets for n in ast.walk(t)
+                    if isinstance(n, ast.Name)}
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            out |= {(a.asname or a.name).split(".")[0] for a in node.names}
+        elif isinstance(node, (ast.If, ast.Try, ast.With)):
+            todo += [c for c in ast.iter_child_nodes(node)
+                     if isinstance(c, ast.stmt)]
+            if isinstance(node, ast.Try):
+                todo += [s for h in node.handlers for s in h.body]
+    return out
+
+
+def test_caller_imports_resolve():
+    modules = _modules()
+    names = {m: _module_names(_parse(p)) for m, p in modules.items()}
+    broken = []
+    for rel in CALLERS:
+        for path in _py_files(rel):
+            for node in ast.walk(_parse(path)):
+                if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                    continue
+                where = f"{os.path.relpath(path, REPO)}:{node.lineno}"
+                if isinstance(node, ast.Import):
+                    broken += [f"{where} import {a.name}" for a in node.names
+                               if a.name.split(".")[0] == PKG
+                               and a.name not in modules]
+                elif not node.level and node.module.split(".")[0] == PKG:
+                    if node.module not in modules:
+                        broken.append(f"{where} from {node.module}")
+                        continue
+                    broken += [
+                        f"{where} from {node.module} import {a.name}"
+                        for a in node.names
+                        if a.name not in names[node.module]
+                        and f"{node.module}.{a.name}" not in modules]
+    assert not broken, f"imports naming nothing in {PKG}: {broken}"
+
+
+def test_package_all_entries_are_defined():
+    undefined = []
+    for m, path in _modules().items():
+        tree = _parse(path)
+        defined = _module_names(tree)
+        for node in tree.body:
+            if _is_all(node):
+                undefined += [f"{m}.{e.value}" for e in node.value.elts
+                              if e.value not in defined]
+    assert not undefined, f"__all__ entries never defined: {undefined}"
