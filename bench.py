@@ -284,7 +284,7 @@ def main() -> None:
     # best seen (cap 6); stable lines still settle in 2.
     times, spread, medians, errors = {}, {}, {}, {}
     outliers = []
-    stall_retries = {}
+    stall_retries, pre_retry_min = {}, {}
     for name in names:
         try:
             warm = [run(name), run(name)]
@@ -304,9 +304,13 @@ def main() -> None:
             # warmups are the same full noop executions, so a timed min
             # far above the warm min measures the STALL, not the plan:
             # retry (up to 3) until a run lands within 1.3x of the warm
-            # best.  Still min-of-timed, same protocol; retries recorded
-            # per line so the artifact shows when the window was dirty.
+            # best.  Still min-of-timed, same protocol; the retry count
+            # and the timed min before the first retry are recorded per
+            # line, so the artifact shows when the window was dirty and
+            # by how much.
             best_warm = min(warm)
+            if min(timed) > 1.3 * best_warm:
+                pre_retry_min[name] = min(timed)
             while min(timed) > 1.3 * best_warm \
                     and stall_retries.get(name, 0) < 3:
                 stall_retries[name] = stall_retries.get(name, 0) + 1
@@ -364,6 +368,7 @@ def main() -> None:
         "sf": sf_val,
         "outliers": outliers,
         "stall_retries": stall_retries,
+        "pre_retry_min": pre_retry_min,
         "errors": errors,
         "ambient_control": control,
         "ambient_drift": ambient_drift,

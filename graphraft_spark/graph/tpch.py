@@ -14,6 +14,7 @@ Any drift between them is caught by tools/check_oracle.py.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,6 +46,13 @@ _GRAPH_CACHE: dict[str, tuple[str, PropertyGraph]] = {}
 
 
 def _materialize_dir(sf_dir: str) -> str:
+    """Where ``tpch_graph`` materializes ``sf_dir``'s graph: next to a
+    source under the system temp directory, so it goes when that temp
+    tree goes; under the checkout's ``.graph_cache/`` otherwise."""
+    src = os.path.realpath(sf_dir)
+    tmp = os.path.realpath(tempfile.gettempdir())
+    if src != tmp and os.path.commonpath([src, tmp]) == tmp:
+        return f"{src}.graph"
     repo = os.path.dirname(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
     tag = sf_dir.strip("/").replace("/", "_")

@@ -16,9 +16,6 @@ END_OF_GENERATION = "<eos>"
 INSTRUCTION_TEMPLATE = "<|start_header_id|>user<|end_header_id|>\n"
 RESPONSE_TEMPLATE = "<|start_header_id|>model<|end_header_id|>\n"
 ANSWER_SEPARATOR = "|"
-LLM2_INSTRUCTION = ("Given the information below, return the correct nodes "
-                    "for the following question: {question}\n"
-                    "Retrieved information:\n{info}\n")
 
 
 def llm1_prompt(question: Column, gold_query: Column | None = None) -> Column:

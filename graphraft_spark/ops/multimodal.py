@@ -23,23 +23,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
-
-MEDIA_SCHEMA = StructType([
-    StructField("media_id", LongType()),
-    StructField("kind", StringType()),       # image | audio | video
-    StructField("payload", BinaryType()),    # opaque encoded bytes
-    StructField("mime", StringType()),
-    StructField("width", LongType()),        # nullable typed metadata
-    StructField("height", LongType()),
-    StructField("duration_ms", LongType()),
-])
 
 FEATURE_SCHEMA = StructType([
     StructField("media_id", LongType()),

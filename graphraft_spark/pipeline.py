@@ -144,7 +144,7 @@ def run_pipeline(
 
     # Stage 5: budgeted accumulation across all questions in one job.
     kept = budgeted_accumulate(local_frame(spark, results, schema),
-                               max_nodes=max_nodes,
+                               budget=max_nodes,
                                prop_cols=("name",) + tuple(prop_cols))
     rows = sorted(kept.collect(),
                   key=lambda r: (r["qid"], r["queryIdx"], r["rank"]))

@@ -17,9 +17,6 @@ from graphraft_spark.registry.retrieval_queries import (
 )
 from graphraft_spark.sources.pq_cache import load_pq
 
-METRICS = ["precision", "recall", "f1", "hit@1", "hit@5", "recall@20",
-           "mrr", "num_nodes"]
-
 _QA_SQL = """
 qa AS (
     SELECT l_orderkey AS id,

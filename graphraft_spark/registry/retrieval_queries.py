@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from graphraft_spark.registry import register
 from graphraft_spark.retrieve import budgeted_accumulate, retrieve_data
-from graphraft_spark.retrieve.budget import token_budgeted_accumulate
 from graphraft_spark.sources.pq_cache import load_pq
 
 MAX_NODES = 12
@@ -236,47 +235,6 @@ def r_retrieve_data(spark, sf_dir):
 
 
 @register(
-    "r_token_budget", extra=True,  # demoted r7: superseded by the exact variant below
-    oracle=f"""
-WITH {_RESULTS_SQL.strip()},
-ranked AS (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid, queryIdx
-                                 ORDER BY similarity DESC, nodeId) AS rank,
-           CAST(nodeId % 7 + 1 AS BIGINT) AS tok
-    FROM results
-),
-first_seen AS (
-    SELECT qid, nodeId, MIN(queryIdx * 1000000 + rank) AS fkey,
-           MIN(similarity) AS similarity, MIN(tok) AS tok
-    FROM ranked GROUP BY qid, nodeId
-),
-ordered AS (
-    SELECT qid, nodeId, similarity,
-           fkey // 1000000 AS queryIdx, fkey % 1000000 AS rank,
-           SUM(tok) OVER (PARTITION BY qid ORDER BY fkey
-                          ROWS UNBOUNDED PRECEDING) AS cum_tok
-    FROM first_seen
-)
-SELECT qid, nodeId, ROUND(similarity, 6) AS similarity,
-       CAST(queryIdx AS INT) AS queryIdx, CAST(rank AS INT) AS rank,
-       CAST(cum_tok AS BIGINT) AS cum_tok
-FROM ordered WHERE cum_tok < 40
-""")
-def r_token_budget(spark, sf_dir):
-    """D5: token-count budget — running sum over consumption order,
-    keep while cum < max_tokens (retriever.py:66-69).  Token length
-    here is a deterministic per-node stand-in (nodeId%7+1); production
-    passes a tokenizer pandas_udf column."""
-    out = token_budgeted_accumulate(
-        _results(spark, sf_dir), max_tokens=40,
-        token_len=(F.col("nodeId") % 7 + 1).cast("bigint"))
-    return out.select(
-        "qid", "nodeId", F.round("similarity", 6).alias("similarity"),
-        F.col("queryIdx").cast("int").alias("queryIdx"),
-        F.col("rank").cast("int").alias("rank"), "cum_tok")
-
-
-@register(
     "r_token_budget_exact",  # promoted r7: the reference-exact D5 semantics
     oracle=f"""
 WITH {_RESULTS_SQL.strip()},
@@ -337,13 +295,10 @@ def r_token_budget_exact(spark, sf_dir):
     crossing deletes the last newly-added node.  Deterministic
     first/append token lengths (nodeId%7+1 / nodeId%3+1); the oracle
     replays the crossing logic with window sums + FILTER aggregates."""
-    from graphraft_spark.retrieve.budget import (
-        token_budgeted_accumulate_exact)
-
-    out = token_budgeted_accumulate_exact(
-        _results(spark, sf_dir), max_tokens=40,
-        first_len=(F.col("nodeId") % 7 + 1).cast("bigint"),
-        append_len=(F.col("nodeId") % 3 + 1).cast("bigint"))
+    out = budgeted_accumulate(
+        _results(spark, sf_dir), 40,
+        first_cost=(F.col("nodeId") % 7 + 1).cast("bigint"),
+        append_cost=(F.col("nodeId") % 3 + 1).cast("bigint"))
     return out.select(
         "qid", "nodeId", F.round("similarity", 6).alias("similarity"),
         F.col("queryIdx").cast("int").alias("queryIdx"),

@@ -331,7 +331,7 @@ def s_bm25_indexed(spark, sf_dir):
     from graphraft_spark.search.bm25 import bm25_query_indexed
 
     return bm25_query_indexed(spark, _bm25_index_dir(spark, sf_dir),
-                              _BM25_TERMS, k=20, snapshot=True)
+                              _BM25_TERMS, k=20)
 
 
 _RRF_K = 60
@@ -384,7 +384,7 @@ def s_hybrid_rrf(spark, sf_dir):
 
     lex = with_rank(
         bm25_query_indexed(spark, _bm25_index_dir(spark, sf_dir),
-                           _BM25_TERMS, k=20, snapshot=True),
+                           _BM25_TERMS, k=20),
         [F.desc("bm25"), F.asc("doc_id")], "doc_id")
     knn = (_scored(spark, sf_dir)
            .orderBy(F.desc("similarity"), F.asc("vec_id"))

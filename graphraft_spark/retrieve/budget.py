@@ -3,47 +3,48 @@ retriever.py:71-109).
 
 The reference streams each ranked query's rows in similarity order,
 deduping by nodeId (first-seen wins), accumulating provenance patterns,
-and stopping when the node budget is crossed — *dropping the node that
-crossed the line* (retriever.py:87-90), then topping up from a global
-vector index under the same stop rule (retriever.py:96-107).
+and stopping when the budget is reached — deleting the last newly added
+node (retriever.py:87-90) — then tops up from a global vector index
+under the node rule (retriever.py:96-107).
 
 Batch-first design: the operator is a pure DataFrame transform over a
 ``results`` frame covering MANY questions at once —
-``(qid, queryIdx, nodeId, similarity, pattern, <props...>)`` — with every
-window partitioned by ``qid``.  That is the 100 TB shape: one shuffle by
-question id, per-question state never leaves its partition, no driver
-loop.  The reference's single-question REPL call is the 1-row case.
+``(qid, queryIdx, nodeId, similarity, pattern, <props...>)``.
 
-Exact consumption-order semantics (SURVEY §7.5), derived from the
-sequential loop:
+``budgeted_accumulate`` is that one consumption loop (retriever.py:78-90
+plus stop_retrieval:63-69), with the budget's unit given as per-row
+costs:
 
-* rows of query ``i`` are consumed in (similarity DESC, nodeId) order;
-  queries in index order — global order = (queryIdx, rank);
-* a node's owner row is its first appearance; later re-encounters only
-  append their pattern string (flat append — the *intended* semantics of
-  the reference's nested-list append bug, retriever.py:83 / SURVEY §7.6);
-* let B = ceil(pattern_rate * max_nodes); consumption stops at the row
-  that first makes the distinct-node count reach B, and that row's node
-  is deleted ⇒ kept nodes are exactly those with first-seen order < B,
-  and pattern provenance only accumulates from rows strictly before the
-  crossing row;
-* vector top-up: candidates are the global top-``ef`` by similarity
-  *first*, then already-found ids are excluded (retriever.py:14-17);
-  the same stop rule at rate 1 ⇒ the final set has at most
-  ``max_nodes - 1`` nodes whenever the budget fires.
+* per ``qid``, rows are consumed in (queryIdx, similarity DESC, nodeId)
+  order;
+* a running total adds ``first_cost`` on a node's first row and
+  ``append_cost`` on a repeat, which appends its pattern to the node
+  (flat append — the *intended* semantics of the reference's nested-list
+  append bug, retriever.py:83 / SURVEY §7.6);
+* the first row whose running total is ``>= budget`` stops consumption:
+  that row is consumed, and the last newly added node is deleted.  When
+  the row is first-seen, that is its own node; when it is an append, the
+  append lands and the most recent new node before it goes.
 
-``budgeted_accumulate`` derives all of that in one pass over its input:
-one ``groupBy(qid, nodeId)`` yields each node's first-seen row and its
-occurrences sorted by (queryIdx, rank); one window over ``qid`` numbers
-the nodes by first appearance (``seen_order``) and finds the crossing
-row; the kept nodes' occurrence lists are cut to the rows strictly
-before it.  ``results`` is referenced once in the plan, so whatever
-computes it (the pipeline's pattern joins) runs once.
+The node budget (D2-D4) is costs ``(1, 0)`` with
+``budget = pattern_rate * max_nodes``: the total is the distinct-node
+count, which is ``>= x`` exactly when it is ``>= ceil(x)``, and the
+crossing row is always first-seen — drop-the-crosser.  The token budget
+(D5) passes the formatted token deltas as the two costs.
+
+Plan shape: one hash exchange on ``qid``.  The rank, first-seen and
+running-total windows, the crossing aggregate and the final
+``(qid, nodeId)`` grouping all reuse it, so per-question state never
+leaves its partition, and ``results`` is referenced once: whatever
+computes it runs once.
+
+Vector top-up: candidates are the global top-``ef`` by similarity
+*first*, then already-found ids are excluded (retriever.py:14-17); the
+same stop rule at rate 1 ⇒ the final set has at most ``max_nodes - 1``
+nodes whenever the budget fires.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -51,64 +52,64 @@ from pyspark.sql import functions as F
 _Q = "qid"
 
 
-def _ranked(results: DataFrame) -> DataFrame:
-    w = (Window.partitionBy(_Q, "queryIdx")
-         .orderBy(F.desc("similarity"), F.asc("nodeId")))
-    return results.select("*", F.row_number().over(w).alias("rank"))
+def budgeted_accumulate(results: DataFrame, budget: float,
+                        prop_cols: tuple[str, ...] = (),
+                        first_cost: Column | float = 1,
+                        append_cost: Column | float = 0) -> DataFrame:
+    """D2-D5: first-seen dedup + provenance accumulation + budget stop
+    over per-question result streams, in one pass over ``results``.
 
-
-def budgeted_accumulate(results: DataFrame, max_nodes: int,
-                        pattern_rate: float = 1.0,
-                        prop_cols: tuple[str, ...] = ()) -> DataFrame:
-    """D2+D3+D4: first-seen dedup + provenance accumulation + node-budget
-    stop over per-question result streams, in one pass over ``results``.
-
-    Returns one row per kept node:
+    ``first_cost`` / ``append_cost`` are numbers or Columns over an
+    input row: what the row adds to the running total when it adds a
+    new node / appends to a known one.  Returns one row per kept node:
     ``(qid, nodeId, queryIdx, rank, similarity, <props...>,
     patterns ARRAY<STRING>)`` where queryIdx/rank locate the first-seen
     row and patterns are in consumption order.
     """
-    budget = math.ceil(pattern_rate * max_nodes)
-    ranked = _ranked(results)
+    pos = ("queryIdx", "rank")
+    ranked = results.repartition(_Q).select(
+        "*", F.row_number().over(
+            Window.partitionBy(_Q, "queryIdx")
+            .orderBy(F.desc("similarity"), F.asc("nodeId"))).alias("rank"))
+    is_first = F.row_number().over(
+        Window.partitionBy(_Q, "nodeId").orderBy(*pos)) == 1
+    occ = ranked.select("*", is_first.alias("is_first"))
 
-    # One aggregate per (qid, nodeId) holds both sides of the node.  The
-    # (queryIdx, rank) prefix is unique within each group, so the
-    # min-struct IS the first-seen row and its payload (similarity +
-    # props) is selected by construction — exact even when a caller
-    # supplies per-row-varying props (retriever.py:82-86 semantics).
-    # The sorted list is every occurrence's pattern in consumption order.
-    nodes = (
-        ranked.groupBy(_Q, "nodeId")
-        .agg(F.min(F.struct("queryIdx", "rank", "similarity",
-                            *prop_cols)).alias("fp"),
-             F.array_sort(F.collect_list(
-                 F.struct("queryIdx", "rank", "pattern"))).alias("pp"))
-        .select(_Q, "nodeId", F.col("fp.queryIdx").alias("queryIdx"),
-                F.col("fp.rank").alias("rank"),
-                F.col("fp.similarity").alias("similarity"),
-                *[F.col(f"fp.{c}").alias(c) for c in prop_cols], "pp")
-    )
-    # seen_order and the crossing row (the B-th first-seen row, null if
-    # the budget never fires) share the qid partitioning and its sort.
-    seen = Window.partitionBy(_Q).orderBy("queryIdx", "rank")
-    nodes = nodes.select("*", F.row_number().over(seen).alias("seen_order"))
-    crossing = F.max(F.when(F.col("seen_order") == budget,
-                            F.struct("queryIdx", "rank"))
-                     ).over(Window.partitionBy(_Q))
-    nodes = nodes.select("*", crossing.alias("cross"))
+    # Consumption order, running total and the most recent new node,
+    # all as of each row.
+    order = Window.partitionBy(_Q).orderBy(*pos)
+    upto = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    occ = occ.select(
+        "*", F.row_number().over(order).alias("o"),
+        F.sum(F.when(F.col("is_first"), first_cost).otherwise(append_cost))
+        .over(upto).alias("total"),
+        F.max(F.when(F.col("is_first"), F.struct(*pos, "nodeId")))
+        .over(upto)["nodeId"].alias("last_new"))
+    # The crossing row (null when the budget never fires) and the node it
+    # deletes: everything after it, and that node, go unconsumed.
+    cross = F.min(F.when(F.col("total") >= budget,
+                         F.struct("o", "last_new"))).over(
+        order.rowsBetween(Window.unboundedPreceding,
+                          Window.unboundedFollowing))
+    occ = occ.select("*", cross.alias("cross"))
+    consumed = F.col("cross").isNull() | (
+        (F.col("o") <= F.col("cross.o"))
+        & (F.col("nodeId") != F.col("cross.last_new")))
 
-    # kept nodes: first seen strictly before the crossing row; their
-    # provenance: occurrences strictly before it
-    def consumed(x: Column) -> Column:
-        cq, cr = F.col("cross.queryIdx"), F.col("cross.rank")
-        return (F.col("cross").isNull() | (x["queryIdx"] < cq)
-                | ((x["queryIdx"] == cq) & (x["rank"] < cr)))
-
+    # The (queryIdx, rank) prefix is unique within each (qid, nodeId)
+    # group, so the min-struct IS the first-seen row and its payload
+    # (similarity + props) is selected by construction — exact even when
+    # a caller supplies per-row-varying props (retriever.py:82-86).
     return (
-        nodes.filter(F.col("seen_order") < budget)
-        .select(_Q, "nodeId", "queryIdx", "rank", "similarity", *prop_cols,
-                F.transform(F.filter("pp", consumed),
-                            lambda x: x["pattern"]).alias("patterns"))
+        occ.filter(consumed)
+        .groupBy(_Q, "nodeId")
+        .agg(F.min(F.struct(*pos, "similarity", *prop_cols)).alias("fp"),
+             F.array_sort(F.collect_list(F.struct(*pos, "pattern")))
+             .alias("pp"))
+        .select(_Q, "nodeId",
+                *[F.col(f"fp.{c}").alias(c)
+                  for c in (*pos, "similarity", *prop_cols)],
+                F.transform("pp", lambda x: x["pattern"]).alias("patterns"))
     )
 
 
@@ -143,129 +144,10 @@ def retrieve_data(results: DataFrame, candidates: DataFrame,
     """D1-D7 end-to-end: budgeted pattern accumulation + vector top-up,
     unioned — per question, ≤ max_nodes-1 nodes whenever the budget
     fires, each carrying similarity, props, and provenance patterns."""
-    kept = budgeted_accumulate(results, max_nodes, pattern_rate, prop_cols)
+    kept = budgeted_accumulate(results, pattern_rate * max_nodes, prop_cols)
     up = vector_topup(candidates, kept, max_nodes, prop_cols)
     return (
         kept.select(_Q, "nodeId", "similarity", *prop_cols, "patterns",
                     F.lit("pattern").alias("source"))
         .unionByName(up.select("*", F.lit("vector").alias("source")))
     )
-
-
-def token_budgeted_accumulate(results: DataFrame, max_tokens: int,
-                              token_len: Column | None = None,
-                              rate: float = 1.0) -> DataFrame:
-    """D5: token-count budget variant (retriever.py:32-46,66-69): stop
-    when the formatted node data reaches ``rate * max_tokens`` tokens.
-
-    ``token_len`` is a Column over the input row giving that node's
-    formatted token count (default: whitespace token count of
-    ``pattern`` + ``node_text`` if present — callers pass a tokenizer
-    pandas_udf for model-exact counts).  Simplification vs reference:
-    counted text is the node's first-seen formatting (the reference
-    re-formats after each pattern append; counts differ slightly but
-    monotonicity and the drop-the-crosser rule are preserved).
-    """
-    if token_len is None:
-        src = F.col("node_text") if "node_text" in results.columns else F.col("pattern")
-        token_len = F.size(F.split(src, r"\s+"))
-    ranked = _ranked(results).withColumn("tok", token_len)
-    first = (
-        ranked.groupBy(_Q, "nodeId")
-        .agg(F.min(F.struct("queryIdx", "rank", "similarity", "tok"))
-             .alias("fp"))
-        .select(_Q, "nodeId", F.col("fp.queryIdx").alias("queryIdx"),
-                F.col("fp.rank").alias("rank"),
-                F.col("fp.similarity").alias("similarity"),
-                F.col("fp.tok").alias("tok"))
-    )
-    w = (Window.partitionBy(_Q).orderBy("queryIdx", "rank")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return (
-        first.withColumn("cum_tok", F.sum("tok").over(w))
-        .filter(F.col("cum_tok") < rate * max_tokens)
-        .drop("tok")
-    )
-
-
-def token_budgeted_accumulate_exact(results: DataFrame, max_tokens: int,
-                                    first_len: Column,
-                                    append_len: Column,
-                                    rate: float = 1.0) -> DataFrame:
-    """D5 with the reference's EXACT per-occurrence semantics
-    (retriever.py:78-90 + stop_retrieval:63-69): the budget is
-    re-checked after EVERY consumed row — a repeat occurrence's pattern
-    append also grows the formatted text — and when the total reaches
-    ``rate * max_tokens``, consumption stops and the LAST NEWLY ADDED
-    node is deleted (``del retrieved_data[last_new_node]``,
-    retriever.py:87-89 — not necessarily the node of the crossing row,
-    which may have been a pattern append to an older node).
-
-    ``first_len`` / ``append_len`` are Columns over an occurrence row
-    giving the token-count delta when the row adds a new node /
-    appends to a known one (the formatter joins node blocks and
-    pattern entries with whitespace, so deltas are additive; pass
-    tokenizer pandas_udfs for model-exact counts).
-
-    One shuffle by qid + two window passes — per-question state never
-    leaves its partition.  Returns kept nodes with the patterns
-    accumulated from occurrences strictly before the crossing row.
-    """
-    ranked = _ranked(results)
-    seen = Window.partitionBy(_Q, "nodeId").orderBy("queryIdx", "rank")
-    order = Window.partitionBy(_Q).orderBy("queryIdx", "rank")
-    cum = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    occ = (ranked
-           .withColumn("is_first",
-                       F.row_number().over(seen) == 1)
-           .withColumn("delta", F.when(F.col("is_first"), first_len)
-                       .otherwise(append_len))
-           .withColumn("cum_tok", F.sum("delta").over(cum))
-           .withColumn("o", F.row_number().over(order)))
-    budget = rate * max_tokens
-    # crossing occurrence (first with cum >= budget) and the order
-    # position of the last first-seen row before it, per question
-    stats = (occ.groupBy(_Q).agg(
-        F.min(F.when(F.col("cum_tok") >= budget,
-                     F.struct("o", "is_first")))
-        .alias("cr"))
-        .select(_Q, F.col("cr.o").alias("cross_o"),
-                F.col("cr.is_first").alias("cross_is_first")))
-    occ = occ.join(F.broadcast(stats), _Q, "left")
-    # retriever.py:82-89 applies the crossing row's pattern append
-    # BEFORE the stop check, so when the crossing row appends to an
-    # already-retrieved node that append is consumed — keep it.  Only
-    # a first-seen crossing row is excluded (its node is the last_new
-    # that gets deleted anyway).
-    kept_occ = occ.filter(F.col("cross_o").isNull()
-                          | (F.col("o") < F.col("cross_o"))
-                          | ((F.col("o") == F.col("cross_o"))
-                             & ~F.col("cross_is_first")))
-    # retriever.py:87-89 deletes last_new at the crossing.  When the
-    # crossing row is itself first-seen, last_new IS that node — already
-    # outside kept_occ, nothing more to drop.  When the crossing row
-    # appends to an older node, last_new is the most recent
-    # first-seen node BEFORE the crossing — delete it entirely (if the
-    # append landed on last_new itself, the whole node goes with it).
-    last_new = (kept_occ.filter("is_first")
-                .groupBy(_Q)
-                .agg(F.max(F.struct("o", "nodeId")).alias("ln"))
-                .join(F.broadcast(
-                    stats.filter(F.col("cross_o").isNotNull()
-                                 & ~F.col("cross_is_first"))
-                    .select(_Q)), _Q)
-                .select(_Q, F.col("ln.nodeId").alias("drop_id")))
-    nodes = (kept_occ.groupBy(_Q, "nodeId").agg(
-        F.min(F.struct("queryIdx", "rank", "similarity")).alias("fp"),
-        F.array_sort(F.collect_list(F.struct("o", "pattern")))
-        .alias("pp"))
-        .select(_Q, "nodeId",
-                F.col("fp.queryIdx").alias("queryIdx"),
-                F.col("fp.rank").alias("rank"),
-                F.col("fp.similarity").alias("similarity"),
-                F.transform("pp", lambda p: p["pattern"]).alias("patterns")))
-    return (nodes.join(F.broadcast(last_new), [_Q], "left")
-            .filter(F.col("drop_id").isNull()
-                    | (F.col("nodeId") != F.col("drop_id")))
-            .drop("drop_id"))

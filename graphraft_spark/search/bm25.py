@@ -179,8 +179,7 @@ def _index_meta(spark, index_dir: str):
 
 def bm25_query_indexed(spark, index_dir: str, query_terms: list[str],
                        k: int = 20, id_col: str = "doc_id",
-                       k1: float = 1.2, b: float = 0.75,
-                       snapshot: bool = False) -> DataFrame:
+                       k1: float = 1.2, b: float = 0.75) -> DataFrame:
     """Top-k by BM25 against a persisted index: reads only the queried
     terms' postings partitions.  Result is identical (at the rounded-6
     output precision) to :func:`bm25_topk` over the indexed corpus.
@@ -189,23 +188,18 @@ def bm25_query_indexed(spark, index_dir: str, query_terms: list[str],
     themselves (a term's posting count IS its df), so no separate df
     table has to stay in sync.
 
-    ``snapshot=True`` memoizes the meta row and the postings/stats
-    table handles via load_pq, skipping the per-query footer/listing
-    cost; the memo is keyed on each table's tree fingerprint, so a
-    rebuilt index gets fresh handles."""
+    The meta row and the postings/stats table handles are memoized
+    (``_index_meta``, ``load_pq``), skipping the per-query footer and
+    listing cost; the memo is keyed on each table's tree fingerprint,
+    so a rebuilt index gets fresh handles."""
+    from graphraft_spark.sources.pq_cache import load_pq
+
     if not query_terms or len(query_terms) > 64:
         raise ValueError("query_terms must be a non-empty list of at "
                          f"most 64 terms, got {len(query_terms)}")
-    if snapshot:
-        from graphraft_spark.sources.pq_cache import load_pq
-
-        meta = _index_meta(spark, index_dir)
-        postings = load_pq(spark, f"{index_dir}/postings")
-        stats_src = load_pq(spark, f"{index_dir}/stats")
-    else:
-        [meta] = spark.read.parquet(f"{index_dir}/meta").collect()
-        postings = spark.read.parquet(f"{index_dir}/postings")
-        stats_src = spark.read.parquet(f"{index_dir}/stats")
+    meta = _index_meta(spark, index_dir)
+    postings = load_pq(spark, f"{index_dir}/postings")
+    stats_src = load_pq(spark, f"{index_dir}/stats")
     n_buckets = meta.n_buckets
     buckets = sorted({term_bucket_py(t, n_buckets) for t in query_terms})
     cand = (postings

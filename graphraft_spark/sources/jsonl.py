@@ -22,11 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-# the documents-table contract (TESTDATA.md); timestamps stay strings
-# at the JSONL boundary — parse downstream with an explicit format
-DOCUMENTS_DDL = ("doc_id BIGINT, text STRING, lang STRING, "
-                 "source STRING, n_chars BIGINT")
-
 CORRUPT_COL = "_corrupt_record"
 
 

@@ -143,7 +143,7 @@ def test_bucket_hash_parity(spark):
 
 
 def test_snapshot_meta_memo_is_bounded(corpus, tmp_path, monkeypatch):
-    """The snapshot-mode meta memo holds at most the pq_cache bound: a
+    """The index meta memo holds at most the pq_cache bound: a
     new index's meta evicts the least-recently-used entry, so a long
     session of rebuilt indexes cannot grow it without limit, and the
     query still reads the right meta."""
@@ -158,8 +158,7 @@ def test_snapshot_meta_memo_is_bounded(corpus, tmp_path, monkeypatch):
     monkeypatch.setattr(bm25, "_META_MEMO", memo)
     spark = corpus.sparkSession
     direct = bm25.bm25_topk(corpus, ["spark"], k=5).collect()
-    indexed = bm25.bm25_query_indexed(spark, idx, ["spark"], k=5,
-                                      snapshot=True).collect()
+    indexed = bm25.bm25_query_indexed(spark, idx, ["spark"], k=5).collect()
     assert len(memo) == MEMO_BOUND
     assert ("dead", 0) not in memo and ("dead", 1) in memo
     assert [(r.doc_id, r.bm25) for r in direct] == \

@@ -29,7 +29,7 @@ def _results(spark):
 
 
 def test_budget_never_fires(spark):
-    out = budgeted_accumulate(_results(spark), max_nodes=10).collect()
+    out = budgeted_accumulate(_results(spark), budget=10).collect()
     assert {r["nodeId"] for r in out} == {1, 2, 3, 4, 5}
     pat = {r["nodeId"]: r["patterns"] for r in out}
     assert pat[2] == ["p0", "p1"]  # re-encounter appends FLAT (SURVEY §7.6)
@@ -40,7 +40,7 @@ def test_budget_drop_the_crosser(spark):
     # consumption order: n1 n2 n3 (q0), then q1: n2(re-enc) n4 n5.
     # max_nodes=4 → n4 is the 4th distinct node → stop fires when n4 is
     # added, n4 deleted (retriever.py:87-90) → kept {1,2,3}.
-    out = budgeted_accumulate(_results(spark), max_nodes=4).collect()
+    out = budgeted_accumulate(_results(spark), budget=4).collect()
     assert {r["nodeId"] for r in out} == {1, 2, 3}
     pat = {r["nodeId"]: r["patterns"] for r in out}
     # n2's re-encounter row (q1 rank1) is consumed BEFORE the crossing
@@ -51,7 +51,7 @@ def test_budget_drop_the_crosser(spark):
 def test_budget_crosser_mid_query_cuts_provenance(spark):
     # max_nodes=2 → crossing row is n2 in q0 (2nd distinct) → only rows
     # strictly before it are consumed → n2's q1 re-encounter NOT seen.
-    out = budgeted_accumulate(_results(spark), max_nodes=2).collect()
+    out = budgeted_accumulate(_results(spark), budget=2).collect()
     assert {r["nodeId"] for r in out} == {1}
     assert out[0]["patterns"] == ["p0"]
 
@@ -60,14 +60,13 @@ def test_budget_reads_its_input_once(spark):
     """First-seen rows and provenance come from one aggregate, so the
     optimized plan references the input once: whatever computes the
     results (the pipeline's pattern joins) runs once."""
-    out = budgeted_accumulate(_results(spark), max_nodes=4,
-                              pattern_rate=0.5)
+    out = budgeted_accumulate(_results(spark), budget=0.5 * 4)
     leaves = out._jdf.queryExecution().optimizedPlan().collectLeaves()
     assert leaves.size() == 1, leaves.toString()
 
 
 def test_vector_topup_exclusion_and_cap(spark):
-    kept = budgeted_accumulate(_results(spark), max_nodes=4)
+    kept = budgeted_accumulate(_results(spark), budget=4)
     cands = spark.createDataFrame(
         [(1, 2, 0.99), (1, 7, 0.95), (1, 8, 0.90), (1, 9, 0.85)],
         "qid bigint, nodeId bigint, similarity double")
@@ -94,13 +93,13 @@ def test_multi_question_isolation(spark):
     base = _results(spark)
     shifted = base.withColumn("qid", F.lit(2)).withColumn(
         "nodeId", F.col("nodeId") + 100)
-    out = budgeted_accumulate(base.unionByName(shifted), max_nodes=4)
+    out = budgeted_accumulate(base.unionByName(shifted), budget=4)
     got = {(r["qid"], r["nodeId"]) for r in out.collect()}
     assert got == {(1, 1), (1, 2), (1, 3), (2, 101), (2, 102), (2, 103)}
 
 
 def test_token_budget_exact_matches_reference_loop(spark):
-    """token_budgeted_accumulate_exact vs a verbatim port of the
+    """budgeted_accumulate with token costs vs a verbatim port of the
     reference's consumption loop (retriever.py:78-90 + stop check
     :63-69): appends count toward the budget, the stop deletes the LAST
     NEWLY ADDED node (which may differ from the crossing row's node),
@@ -108,9 +107,6 @@ def test_token_budget_exact_matches_reference_loop(spark):
     Fuzzed over seeded random streams including multi-question frames.
     """
     import random
-
-    from graphraft_spark.retrieve.budget import (
-        token_budgeted_accumulate_exact)
 
     def ref_loop(occs, budget):
         data, total, last_new = {}, 0, None
@@ -146,9 +142,8 @@ def test_token_budget_exact_matches_reference_loop(spark):
         df = spark.createDataFrame(
             rows, "qid bigint, queryIdx int, nodeId bigint, "
                   "similarity double, pattern string, flen int, alen int")
-        out = token_budgeted_accumulate_exact(
-            df, max_tokens=budget, first_len=F.col("flen"),
-            append_len=F.col("alen"))
+        out = budgeted_accumulate(
+            df, budget, first_cost=F.col("flen"), append_cost=F.col("alen"))
         got = {}
         for r in out.collect():
             got.setdefault(r["qid"], {})[r["nodeId"]] = list(r["patterns"])
@@ -164,9 +159,6 @@ def test_token_budget_exact_crossing_append_kept(spark):
     last_new_node.  Stream: n1 new (3), n2 new (3), n1 append (2),
     budget 7 → cum 3,6,8; crossing row is n1's append → n1 keeps
     ['a','c'], n2 (last_new) is dropped."""
-    from graphraft_spark.retrieve.budget import (
-        token_budgeted_accumulate_exact)
-
     rows = [
         (1, 0, 1, 0.9, "a", 3, 2),
         (1, 0, 2, 0.8, "b", 3, 2),
@@ -175,7 +167,6 @@ def test_token_budget_exact_crossing_append_kept(spark):
     df = spark.createDataFrame(
         rows, "qid bigint, queryIdx int, nodeId bigint, "
               "similarity double, pattern string, flen int, alen int")
-    out = token_budgeted_accumulate_exact(
-        df, max_tokens=7, first_len=F.col("flen"),
-        append_len=F.col("alen")).collect()
+    out = budgeted_accumulate(
+        df, 7, first_cost=F.col("flen"), append_cost=F.col("alen")).collect()
     assert {r["nodeId"]: list(r["patterns"]) for r in out} == {1: ["a", "c"]}

@@ -141,7 +141,7 @@ def test_retrieval_allowances_are_exact(spark):
     lookup = dict(registry.EXTRA_QUERIES)
     lookup.update(registry.QUERIES)
     names = ("p_full_pipeline", "r_budget_accumulate", "r_retrieve_data",
-             "m_retrieval_eval")
+             "r_token_budget_exact", "m_retrieval_eval")
     got = {}
     for name in names:
         plan = lookup[name](spark, SF_SMOKE)._jdf \

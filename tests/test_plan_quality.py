@@ -69,6 +69,35 @@ def test_enumeration_collect_job_count(spark, graph):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 9
 
 
+def test_retrieval_collect_job_count(spark):
+    """The pipeline's retrieval collect, one question's k·B = 5×20 rows
+    as an Arrow local frame through budgeted_accumulate, launches at
+    most 2 Spark jobs: the map stage of the one exchange on qid and the
+    result stage.  Every window and the final (qid, nodeId) grouping
+    reuse that exchange; a second shuffle adds a job here."""
+    from pyspark.sql.types import StructType
+
+    from graphraft_spark.retrieve import budgeted_accumulate
+    from graphraft_spark.session import local_frame
+
+    rows = [{"qid": 1, "queryIdx": q, "nodeId": (7 * q + 3 * i) % 60,
+             "similarity": (37 * i % 11) / 11.0, "name": f"n{i}",
+             "pattern": f"p{q}"} for q in range(5) for i in range(20)]
+    results = local_frame(spark, rows, StructType.fromDDL(
+        "qid bigint, queryIdx int, nodeId bigint, similarity double, "
+        "name string, pattern string"))
+    df = budgeted_accumulate(results, budget=20, prop_cols=("name",))
+    sc, group = spark.sparkContext, "retrieval-job-count"
+    sc.setJobGroup(group, group)
+    try:
+        kept = df.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    # 60 distinct nodes: the budget fires at the 20th and drops it
+    assert len(kept) == 19
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
 def test_node_scan_prunes_columns(spark, graph):
     """A projection that only needs nodeId/label must not read name or
     detail from parquet."""

@@ -282,7 +282,7 @@ def test_budget_matches_sequential_consumption(spark, rows, max_nodes,
     got = {(r["qid"], r["nodeId"], r["queryIdx"], r["rank"],
             r["similarity"], tuple(r["patterns"]))
            for r in budgeted_accumulate(
-               df, max_nodes, pattern_rate=pattern_rate).collect()}
+               df, budget=pattern_rate * max_nodes).collect()}
     assert got == _sequential_budget(rows, max_nodes, pattern_rate)
 
 

@@ -22,28 +22,9 @@ def test_budget_first_seen_prop_varies_within_group(spark):
         rows, "qid bigint, queryIdx int, nodeId bigint, similarity double,"
               " pattern string, tag string")
     out = {r["nodeId"]: r["tag"]
-           for r in budgeted_accumulate(df, max_nodes=10,
+           for r in budgeted_accumulate(df, budget=10,
                                         prop_cols=("tag",)).collect()}
     assert out == {100: "from-q0", 101: "low"}
-
-
-def test_token_budget_first_seen_tok(spark):
-    """token_budgeted_accumulate counts the FIRST-SEEN row's token
-    length even when later re-encounters carry different counts."""
-    from graphraft_spark.retrieve.budget import token_budgeted_accumulate
-
-    rows = [
-        (0, 0, 100, 0.9, "pA"),
-        (0, 1, 100, 0.9, "pB pB pB pB pB pB pB pB"),  # longer re-encounter
-        (0, 1, 101, 0.8, "pB"),
-    ]
-    df = spark.createDataFrame(
-        rows, "qid bigint, queryIdx int, nodeId bigint, similarity double,"
-              " pattern string")
-    out = {r["nodeId"]: r["cum_tok"]
-           for r in token_budgeted_accumulate(df, max_tokens=100).collect()}
-    # node 100 first seen in queryIdx 0 with 1 token, not 8
-    assert out[100] == 1 and out[101] == 2
 
 
 def test_kmeans_ivf_beats_modulo_centroids(spark):

@@ -1,14 +1,15 @@
-"""Every graphraft_spark module, and every top-level function and class
-in it, must be reachable from a registered query, the pipeline, the API
-facade or the session factory.
+"""Every graphraft_spark module, and every top-level function, class and
+UPPER_CASE constant in it, must be reachable from a registered query,
+the pipeline, the API facade or the session factory.
 
 AST only (no Spark session, no imports executed).  Modules: compute the
 import closure of the roots, following package ``__init__`` files the
 way the interpreter does, and fail naming any module outside it.
 Definitions: compute the name closure of the roots (below) and fail
-naming any top-level def or class outside it.  Code that only its own
-tests reach is dead weight — delete it, or wire it into a registered
-query or pipeline stage.
+naming any top-level def, class or constant outside it; a constant is
+reached only when reached code names it, even in a root module.  Code
+that only its own tests reach is dead weight — delete it, or wire it
+into a registered query or pipeline stage.
 
 Deleting it must not strand a caller: every ``from graphraft_spark...
 import name`` in the tools, the bench, perfbench and the tests
@@ -19,10 +20,12 @@ fails here, not when the tool or the benchmark next runs.
 
 import ast
 import os
+import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "graphraft_spark"
 CALLERS = ("tools", "bench.py", "perfbench", "tests")
+_CONST = re.compile(r"_?[A-Z][A-Z0-9_]*")
 
 ROOTS = ("graphraft_spark.registry.*", "graphraft_spark.api",
          "graphraft_spark.pipeline", "graphraft_spark.session")
@@ -61,6 +64,12 @@ ALLOWED_DEFS = {
         "the reference's LLM2 answer prompt (llm2.py)",
     "graphraft_spark.llm.sft.llm2_sft_table":
         "the reference's LLM2 SFT export (llm2.py)",
+    "graphraft_spark.llm.prompts.INSTRUCTION_TEMPLATE":
+        "the LLM2 SFT export's prompt framing (llm2_sft_table)",
+    "graphraft_spark.llm.prompts.RESPONSE_TEMPLATE":
+        "the LLM2 SFT export's prompt framing (llm2_sft_table)",
+    "graphraft_spark.llm.prompts.ANSWER_SEPARATOR":
+        "the LLM2 SFT export's answer joiner (llm2_sft_table)",
     "graphraft_spark.search.vector.knn_pseudo_entities":
         "the reference's kNN-NER ablation (ner.py)",
     "graphraft_spark.ops.avi.avi_decode":
@@ -158,16 +167,36 @@ def test_allowlist_is_current():
     assert not stale, f"allowlist entries gone or now reached: {stale}"
 
 
+def _constants(node: ast.stmt) -> list[str]:
+    """The names a top-level UPPER_CASE assignment (``X = ...``,
+    ``X: T = ...``, ``X, Y = ...``) binds; [] for any other statement."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        targets = [node.target]
+    else:
+        return []
+    names = [n for t in targets
+             for n in (t.elts if isinstance(t, ast.Tuple) else [t])]
+    if names and all(isinstance(n, ast.Name) and _CONST.fullmatch(n.id)
+                     for n in names):
+        return [n.id for n in names]
+    return []
+
+
 def _defs(modules: dict[str, str]):
-    """Top-level defs as ``module.name`` -> (module, node), plus the
-    statements that run at import (everything else except imports and
-    ``__all__``) and each module's import aliases."""
+    """Top-level defs, classes and UPPER_CASE constants as
+    ``module.name`` -> (module, node), plus the statements that run at
+    import (everything else except imports and ``__all__``) and each
+    module's import aliases."""
     defs, module_code, aliases = {}, [], {}
     for m, path in modules.items():
         for node in _parse(path).body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
                                  ast.ClassDef)):
                 defs[f"{m}.{node.name}"] = (m, node)
+            elif consts := _constants(node):
+                defs.update((f"{m}.{c}", (m, node)) for c in consts)
             elif isinstance(node, (ast.Import, ast.ImportFrom)):
                 for a in node.names:
                     if a.asname:
@@ -199,10 +228,11 @@ def _unreached_defs(modules: dict[str, str]) -> set[str]:
     what is reached."""
     defs, module_code, aliases = _defs(modules)
     by_name = {}
-    for key, (_, node) in defs.items():
-        by_name.setdefault(node.name, []).append(key)
+    for key in defs:
+        by_name.setdefault(key.rsplit(".", 1)[1], []).append(key)
     roots = _root_modules(modules)
-    todo = [k for k, (m, _) in defs.items() if m in roots]
+    todo = [k for k, (m, node) in defs.items()
+            if m in roots and not _constants(node)]
     for m, node in module_code:
         todo += [k for x in _names(m, node, aliases)
                  for k in by_name.get(x, ())]

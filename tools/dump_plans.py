@@ -30,8 +30,9 @@ FLAGSHIPS = [
      "Instantiated pattern: anchor name filter PUSHED into the "
      "label-partitioned node parquet scan; broadcast joins only."),
     ("r_retrieve_data",
-     "Budgeted retrieval: windows partitioned by qid (per-question "
-     "state never leaves its partition); no driver loop."),
+     "Budgeted retrieval: one exchange on qid, reused by every window "
+     "and by the (qid, nodeId) grouping (per-question state never "
+     "leaves its partition); no driver loop."),
     ("d_minhash_lsh",
      "LSH dedup: band explode → shuffle by (band,bucket) → bounded "
      "self-join; never all-pairs."),

@@ -64,11 +64,13 @@ ALLOWED: dict[str, int] = {
     "s_entity_match_fallback": 2,
     # walks/triangles/adamic: duplication fixed round 10 via lazy
     # checkpoints — 0 duplicated refs expected (ratchet).
-    # retrieval: budgeted_accumulate reads its input once.  The fixture
-    # results read customer once per query stream (q0 ∪ q1: 1);
-    # m_retrieval_eval adds the gold-label read of customer (2).
+    # retrieval: budgeted_accumulate reads its input once, node or token
+    # costs alike.  The fixture results read customer once per query
+    # stream (q0 ∪ q1: 1); m_retrieval_eval adds the gold-label read of
+    # customer (2).
     "m_retrieval_eval": 2, "p_curate_corpus": 3,
-    "r_budget_accumulate": 1, "r_negative_samples": 1,
+    "r_budget_accumulate": 1, "r_token_budget_exact": 1,
+    "r_negative_samples": 1,
     # p_full_pipeline: 0 — run_pipeline returns a local relation over
     # its collected rows, and its budget reads the ranked queries'
     # targets from the enumeration instead of re-running the joins.
@@ -77,8 +79,7 @@ ALLOWED: dict[str, int] = {
     # consumer of the kept rows (the pattern branch, the top-up
     # exclusion, the kept count), and subset keying merges the pruned
     # 4-col read of the persisted candidates into that group (3)
-    "r_retrieve_data": 3, "r_token_budget": 1,
-    "r_token_budget_exact": 9, "e_entity_resolution": 5,
+    "r_retrieve_data": 3, "e_entity_resolution": 5,
     # OLAP shapes where the second reference IS the semantics
     # (set ops, nation pairs both directions, semi+main).
     # benchmark slice re-scanned as the planted-leak union AND the

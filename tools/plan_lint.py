@@ -38,8 +38,7 @@ sys.path.insert(0, REPO)
 BNLJ_OK = {
     "s_entity_match_fallback", "s_knn_topk", "s_knn_excluding",
     "s_cosine_pair", "ann_bruteforce_topk", "ann_ivf_search",
-    "r_retrieve_data", "r_budget_accumulate", "r_token_budget",
-    "r_token_budget_exact",
+    "r_retrieve_data", "r_budget_accumulate", "r_token_budget_exact",
     "m_retrieval_eval", "e_embedding_join", "q_dormant_rich_customers",
     "d_ngram_jaccard",
     # centroid assignment / per-group KNN / MMR first stage /
